@@ -32,8 +32,12 @@ endif
 gate:
 	SPARK_GRAFT_ENFORCE_FRESHNESS=1 $(PY) -m pytest tests/test_oracle_parity.py -q -k artifact
 
+# The tier-1 command (ROADMAP.md): no -x, so an error (e.g. TestGolden
+# without the external WikiData file) does not stop the rest of the
+# suite; the timeout bounds a hang.
 test:
-	$(PY) -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # ROUND pins the BENCH_LOCAL_r{N}.json name explicitly (r9 ADVICE:
 # the max(CORRECTNESS_r*)+1 inference mislabels a bench run executed

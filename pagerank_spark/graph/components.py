@@ -12,24 +12,16 @@ the message key plus one scalar convergence collect.
 
 from __future__ import annotations
 
-from contextlib import contextmanager, nullcontext
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from pagerank_spark.graph.loop import VertexLoop
-from pagerank_spark.graph.pagerank import materialize_or_release, vertices
-
-# Below this many edges a loop's per-iteration stages are sub-second:
-# AQE's runtime replanning costs more than it saves (measured on the
-# PageRank loop: 21.8s → 9.7s on WikiData with AQE off) and 32 reduce
-# partitions put 32 near-empty tasks in every stage. Above it, AQE's
-# skew-join splitting is worth the replanning and the session sizing
-# stands.
-SMALL_LOOP_EDGE_LIMIT = 64_000_000
-LOOP_ROWS_PER_PARTITION = 2_000_000
-LOOP_PARTS_FLOOR = 4
+from pagerank_spark.graph.loop import (
+    VertexLoop,
+    loop_conf,
+    materialize_or_release,
+)
+from pagerank_spark.graph.pagerank import vertices
 
 # Below this bound on the loop's STATE rows (vertex-table-sized; the
 # wrappers bound it by the edge count they already compute), the
@@ -54,34 +46,6 @@ LABEL_FALLBACK_ROUNDS = 30
 
 def _bc(df: DataFrame, broadcast_state: bool) -> DataFrame:
     return F.broadcast(df) if broadcast_state else df
-
-
-@contextmanager
-def _iterative_loop_conf(spark, approx_rows: int):
-    """Size the shuffle to the loop's data and disable AQE for small
-    iterative graph jobs; restore the session confs on exit. A no-op
-    above ``SMALL_LOOP_EDGE_LIMIT`` rows. Session-global flips (like
-    the PageRank loop's) — safe for a dedicated job session, not one
-    shared with concurrent queries."""
-    if approx_rows > SMALL_LOOP_EDGE_LIMIT:
-        yield
-        return
-    aqe_key = "spark.sql.adaptive.enabled"
-    parts_key = "spark.sql.shuffle.partitions"
-    aqe_before = spark.conf.get(aqe_key)
-    parts_before = spark.conf.get(parts_key)
-    session_parts = int(parts_before)
-    loop_parts = max(
-        LOOP_PARTS_FLOOR,
-        min(session_parts, -(-approx_rows // LOOP_ROWS_PER_PARTITION)),
-    )
-    spark.conf.set(aqe_key, "false")
-    spark.conf.set(parts_key, str(loop_parts))
-    try:
-        yield
-    finally:
-        spark.conf.set(aqe_key, aqe_before)
-        spark.conf.set(parts_key, parts_before)
 
 
 def aggregate_messages(
@@ -180,7 +144,7 @@ def connected_components(
       long-chain components (e.g. near-dup pair chains) exhaust it
       and pay one label-budget's cost before the star restart.
 
-    Small-graph loops run under ``_iterative_loop_conf`` (AQE off,
+    Small-graph loops run under ``loop_conf`` (AQE off,
     right-sized shuffle) — the same measured tuning the PageRank loop
     applies; a no-op above ``SMALL_LOOP_EDGE_LIMIT`` edges. Pass
     ``tune=False`` (mirroring ``pagerank(tune_aqe=False)``) in sessions
@@ -192,8 +156,7 @@ def connected_components(
     spark = edges.sparkSession
     approx = 2 * edges.count()
     small = approx <= BROADCAST_STATE_ROW_LIMIT
-    ctx = _iterative_loop_conf(spark, approx) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, approx, enabled=tune):
         if algorithm == "auto":
             budget = min(LABEL_FALLBACK_ROUNDS, max_iterations)
             try:
@@ -469,13 +432,12 @@ def shortest_paths(
     ``dst``, one anti join against the reached set. The reached set's
     union lineage is checkpoint-truncated on the same cadence as the
     other iterative loops. Small graphs run under
-    ``_iterative_loop_conf`` (AQE off, right-sized shuffle);
+    ``loop_conf`` (AQE off, right-sized shuffle);
     ``tune=False`` opts out for shared sessions.
     """
     spark = edges.sparkSession
     ec = edges.count()
-    ctx = _iterative_loop_conf(spark, ec) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, ec, enabled=tune):
         return _shortest_paths_impl(
             edges,
             sources,
@@ -603,8 +565,7 @@ def multi_source_shortest_paths(
     spark = edges.sparkSession
     ec = edges.count()
     n_seeds = max(1, seeds.select("node").distinct().count())
-    ctx = _iterative_loop_conf(spark, ec) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, ec, enabled=tune):
         return _multi_source_sp_impl(
             edges,
             seeds,
@@ -766,8 +727,7 @@ def label_propagation(
     """
     spark = edges.sparkSession
     approx = 2 * edges.count()
-    ctx = _iterative_loop_conf(spark, approx) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, approx, enabled=tune):
         return _label_propagation_impl(
             edges,
             n_iterations,
@@ -907,13 +867,12 @@ def weighted_shortest_paths(
     the round it improved). Per round: one shuffle join on ``src``
     sized by the frontier, one partial-combined min-agg on ``dst``, one
     join against the distance table to keep strict improvements.
-    Small graphs run under ``_iterative_loop_conf``; ``tune=False``
+    Small graphs run under ``loop_conf``; ``tune=False``
     opts out for shared sessions.
     """
     spark = edges.sparkSession
     ec = edges.count()
-    ctx = _iterative_loop_conf(spark, ec) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, ec, enabled=tune):
         return _weighted_shortest_paths_impl(
             edges,
             sources,
@@ -1333,8 +1292,7 @@ def strongly_connected_components(
     """
     spark = edges.sparkSession
     ec = edges.count()
-    ctx = _iterative_loop_conf(spark, ec) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, ec, enabled=tune):
         return _scc_impl(
             edges,
             max_rounds,
@@ -1654,8 +1612,7 @@ def betweenness_centrality(
     spark = edges.sparkSession
     ec = edges.count()
     n_seeds = max(1, seeds.select("node").distinct().count())
-    ctx = _iterative_loop_conf(spark, ec) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, ec, enabled=tune):
         return _betweenness_impl(
             edges,
             seeds,

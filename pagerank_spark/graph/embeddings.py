@@ -111,7 +111,7 @@ def svd_topk(
     Only ``rank`` scalars are collected; all vectors stay distributed.
 
     ``tune`` runs the iteration under the engine's shared small-loop
-    conf (``_iterative_loop_conf``): below the 64M-row cut the
+    conf (``loop_conf``): below the 64M-row cut the
     matvec/projection shuffles are sized to nnz(M) and AQE is
     disabled — the per-round relations are nnz- and vocab-sized, so
     default session partitioning pays pure scheduler overhead per
@@ -168,9 +168,7 @@ def svd_topk(
             .select(F.col("c").alias("node"), "y")
         )
 
-    from contextlib import nullcontext
-
-    from pagerank_spark.graph.components import _iterative_loop_conf
+    from pagerank_spark.graph.loop import loop_conf
 
     spark = matrix.sparkSession
     comps: list[tuple[DataFrame, float]] = []
@@ -180,8 +178,7 @@ def svd_topk(
         if nctx == 0:
             raise ValueError("svd_topk: matrix has no positive entries")
         init = 1.0 / math.sqrt(float(nctx))
-        ctx = _iterative_loop_conf(spark, nnz) if tune else nullcontext()
-        with ctx:
+        with loop_conf(spark, nnz, enabled=tune):
             comps = _svd_loop(
                 m, rank, iterations, init, round_dp, big_matvec,
                 delta=delta, iterations_out=iterations_out,
@@ -677,11 +674,9 @@ def sgns_train(
         .persist()
     )
 
-    from contextlib import nullcontext
-
-    from pagerank_spark.graph.components import _iterative_loop_conf
     from pagerank_spark.graph.loop import (
         checkpoint_reset_stats,
+        loop_conf,
         release_checkpoint,
     )
 
@@ -699,12 +694,7 @@ def sgns_train(
         mass = float(ex.agg(F.sum("m")).collect()[0][0])
         if lr is None:
             lr = 0.1 * mass  # O(1) steps against the mean loss
-        ctx = (
-            _iterative_loop_conf(spark, n_ex * dim)
-            if tune
-            else nullcontext()
-        )
-        with ctx:
+        with loop_conf(spark, n_ex * dim, enabled=tune):
 
             def _start_plan(
                 nodes: DataFrame, tag: str, prior

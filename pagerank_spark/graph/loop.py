@@ -1,4 +1,19 @@
-"""The shared iteration lifecycle for message-passing vertex loops.
+"""The shared engine idioms of the iterative operators.
+
+This module is the single home of five idioms every loop needs, so a
+fix lands once:
+
+- ``VertexLoop``: the iteration lifecycle of the message-passing
+  vertex loops (below);
+- ``loop_conf``: the small-loop conf scope (AQE off, loop-sized
+  ``spark.sql.shuffle.partitions``, both restored on exit) and the
+  measurements behind it;
+- ``plan_size_bytes``: Catalyst's size estimate of a plan, read
+  without running a job;
+- ``materialize_or_release``: materialize a fresh persist, dropping
+  the mark if the job fails;
+- ``checkpoint_reset_stats`` / ``release_checkpoint``: checkpoint
+  pins that reset Catalyst statistics and release their blocks.
 
 PageRank, Katz, HITS, connected components, shortest paths, and label
 propagation are all the same loop wearing different algebra: cached
@@ -8,9 +23,7 @@ on a cadence, exactly ONE driver scalar per round (the aggregation
 that also materializes the cache/checkpoint), and a finally-sweep that
 releases every pinned generation on any exit path. That discipline
 took two rounds to harden (persist-before-track windows, mid-loop
-non-convergence paths, one-generation-late releases) and previously
-lived copy-pasted in five loop bodies — this module is the single
-engine-level home (round-9 verdict #5), so a future fix lands once.
+non-convergence paths, one-generation-late releases).
 
 ``VertexLoop`` owns the LIFECYCLE only; each algorithm keeps its
 message algebra (the joins and aggregates) in its own loop body. The
@@ -38,8 +51,105 @@ Invariants preserved from the hand-written loops (and locked in by
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.storagelevel import StorageLevel
+
+AQE_KEY = "spark.sql.adaptive.enabled"
+PARTS_KEY = "spark.sql.shuffle.partitions"
+
+# ``loop_conf`` defaults: the size gate (rows) above which the session
+# sizing stands, the reduce-side rows per partition, and the partition
+# floor. See ``loop_conf`` for the measurements.
+SMALL_LOOP_EDGE_LIMIT = 64_000_000
+LOOP_ROWS_PER_PARTITION = 2_000_000
+LOOP_PARTS_FLOOR = 4
+
+
+@contextmanager
+def loop_conf(
+    spark: SparkSession,
+    size: int | None,
+    *,
+    enabled: bool = True,
+    limit: int = SMALL_LOOP_EDGE_LIMIT,
+    per_part: int = LOOP_ROWS_PER_PARTITION,
+) -> Iterator[int]:
+    """Run a small iterative job with AQE off and the shuffle sized to
+    it; yield the partition count its exchanges should use.
+
+    When ``enabled`` and ``size`` (rows, or bytes with a byte
+    ``per_part``) is at most ``limit``, sets
+    ``spark.sql.adaptive.enabled=false`` and
+    ``spark.sql.shuffle.partitions`` to ``max(LOOP_PARTS_FLOOR,
+    min(session, ceil(size / per_part)))`` and restores both in
+    ``finally``, so a failed job cannot leave the session tuned.
+    Otherwise (disabled, unknown size, or above the limit) it touches
+    nothing and yields the session's own partition count.
+
+    Why, measured on the PageRank loop over WikiData (7k vertices):
+
+    - AQE re-plans every stage at runtime; when each iteration is a
+      sub-second job the replanning more than doubles the wall
+      (21.8 s → 9.7 s with AQE off). At scale its skew-join splitting
+      is worth the replanning, hence the size gate.
+    - Turning AQE off also loses its partition coalescing, so the
+      loop sizes the reduce side itself: 32 → 4 partitions measured
+      13.2 s → ~7 s. The floor of 4 keeps a few cores busy on tiny
+      graphs without paying per-task scheduling across all of them.
+    - The setup aggregations (vertex distinct, degree join, counts)
+      carry the same per-stage fixed costs: running them untuned while
+      only the loop was tuned measured 6.3 s vs 4.4 s end to end.
+
+    These are session-global flips: safe for a dedicated job session,
+    not for one shared with concurrent queries: operators with a
+    ``tune``/``tune_aqe`` flag pass it as ``enabled``.
+    """
+    parts_before = spark.conf.get(PARTS_KEY)
+    if not enabled or size is None or size > limit:
+        yield int(parts_before)
+        return
+    aqe_before = spark.conf.get(AQE_KEY)
+    parts = max(
+        LOOP_PARTS_FLOOR, min(int(parts_before), -(-size // per_part))
+    )
+    spark.conf.set(AQE_KEY, "false")
+    spark.conf.set(PARTS_KEY, str(parts))
+    try:
+        yield parts
+    finally:
+        spark.conf.set(AQE_KEY, aqe_before)
+        spark.conf.set(PARTS_KEY, parts_before)
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate for ``df``'s optimized plan (the
+    statistic the optimizer itself uses for broadcast decisions) — no
+    job is run. None when the estimate is unavailable (Spark Connect,
+    API drift)."""
+    try:
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        return None
+
+
+def materialize_or_release(df: DataFrame) -> DataFrame:
+    """Materialize a FRESHLY persisted frame, releasing its lazy
+    persist mark if the job fails. The fresh mark is in no shared
+    release list yet (a loop's finally sweeps only its tracked
+    generations), so a failed materializing count would otherwise pin
+    the relation past every caller's cleanup — the last gap in the
+    try/finally release discipline."""
+    try:
+        df.count()
+    except Exception:
+        df.unpersist()
+        raise
+    return df
 
 
 def checkpoint_reset_stats(df: DataFrame) -> DataFrame:

@@ -65,17 +65,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from pagerank_spark.graph.loop import VertexLoop
-
-# Reduce-side partition floor for the tuned iteration loop (the sizing
-# target is ~2M vertices/partition, capped by the session setting).
-# Floor of 4 keeps a few cores busy on tiny graphs without paying
-# per-task scheduling overhead across all 32.
-LOOP_PARTS_FLOOR = 4
+from pagerank_spark.graph.loop import (
+    VertexLoop,
+    loop_conf,
+    materialize_or_release,
+    plan_size_bytes,
+)
 
 # Below this vertex count the co-partitioned shuffle join beats the
 # broadcast join even though the rank vector trivially fits in memory:
@@ -88,17 +87,15 @@ LOOP_PARTS_FLOOR = 4
 # amortizes, and the SMJ's per-iteration edge-side sort grows with E).
 TINY_VERTEX_LIMIT = 100_000
 
-# Setup-phase tuning gate: when Catalyst's size estimate of the edge
-# plan is below this (64 MiB ≈ 4M edges at 16 bytes/row), the setup
-# aggregations (vertex distinct, degree join, counts) run under the
-# same AQE-off/small-partition confs as the loop — running setup
-# untuned while only the loop was tuned measured 6.3s vs 4.4s
-# end-to-end on WikiData. The estimate costs no job (it is the same
-# statistic the optimizer uses for broadcast decisions). Deliberately
-# conservative: tuning the setup of a 10M-edge graph down to 5
-# partitions measured 3.5s SLOWER (under-parallelized distinct+join),
-# so above the gate setup keeps the session's full parallelism.
+# Setup-phase tuning gate (``loop_conf`` on bytes): the setup
+# aggregations run tuned when Catalyst's size estimate of the edge plan
+# is at most 64 MiB (≈ 4M edges at 16 bytes/row), one partition per
+# 32 MiB. Deliberately conservative: tuning the setup of a 10M-edge
+# graph down to 5 partitions measured 3.5s SLOWER (under-parallelized
+# distinct+join), so above the gate setup keeps the session's full
+# parallelism.
 SETUP_TUNE_SIZE_BYTES = 64 << 20
+SETUP_BYTES_PER_PARTITION = 32 << 20
 
 
 @dataclass
@@ -112,21 +109,6 @@ class PageRankResult:
 
     def top(self, k: int = 100) -> DataFrame:
         return top_k(self.ranks, k)
-
-
-def materialize_or_release(df: DataFrame) -> DataFrame:
-    """Materialize a FRESHLY persisted frame, releasing its lazy
-    persist mark if the job fails. The fresh mark is in no shared
-    release list yet (a loop's finally sweeps only its tracked
-    generations), so a failed materializing count would otherwise pin
-    the relation past every caller's cleanup — the last gap in the
-    try/finally release discipline."""
-    try:
-        df.count()
-    except Exception:
-        df.unpersist()
-        raise
-    return df
 
 
 def vertices(edges: DataFrame) -> DataFrame:
@@ -216,7 +198,6 @@ def pagerank(
     if edge_semantics not in ("bag", "reference"):
         raise ValueError(f"unknown edge_semantics: {edge_semantics!r}")
     spark = edges.sparkSession
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if reliable_checkpoint == "auto":
         reliable_checkpoint = (
             spark.sparkContext.getCheckpointDir() is not None
@@ -232,124 +213,113 @@ def pagerank(
         # amortize over 3 iterations there.
         checkpoint_every = 3 if reliable_checkpoint else 1
 
-    # AQE re-plans every stage at runtime; on a small graph each
-    # iteration is a sub-second job and replanning overhead more than
-    # doubles wall time (measured 21.8s → 9.7s on WikiData) — so it's
-    # disabled for any graph under the broadcast limit (whichever join
-    # strategy runs), which also loses AQE's partition coalescing; we
-    # size the loop's reduce-side partitions ourselves (~2M rows /
-    # partition, floor 4, never above the session setting; measured
-    # 13.2s → ~7s on WikiData at 32 → 4 partitions). At scale AQE's
-    # skew-join splitting is worth the replanning and stays on.
-    #
-    # The flip happens BEFORE the setup aggregations (vertex distinct,
-    # degree join, counts): running setup under AQE + session
-    # partitions while only the loop is tuned measured 6.3s vs 4.4s
-    # end-to-end on WikiData — the setup jobs carry the same per-stage
-    # fixed costs the loop does. Since the vertex count isn't known
-    # yet at that point, the setup flip is gated on Catalyst's own
-    # size estimate of the edge plan (the same statistic the optimizer
-    # uses for broadcast decisions — no extra job); the loop flip is
-    # then re-decided from the exact vertex count.
-    # NOTE: these are session-global conf flips (restored in ``finally``)
-    # — safe for a dedicated job session, not for a session shared with
-    # concurrent queries; pass ``tune_aqe=False`` there.
-    aqe_key = "spark.sql.adaptive.enabled"
-    parts_key = "spark.sql.shuffle.partitions"
-    aqe_before = spark.conf.get(aqe_key)
-    parts_before = spark.conf.get(parts_key)
-    loop_parts = shuffle_parts
-    conf_flipped = False
-    if tune_aqe:
-        est_bytes = _plan_size_bytes(edges)
-        if est_bytes <= SETUP_TUNE_SIZE_BYTES:
-            conf_flipped = True
-            spark.conf.set(aqe_key, "false")
-            loop_parts = max(
-                LOOP_PARTS_FLOOR,
-                min(shuffle_parts, -(-est_bytes // (32 << 20))),
-            )
-            spark.conf.set(parts_key, str(loop_parts))
-
     # Shared release lists (the components.py discipline): setup
     # appends its loop-lifetime caches (init_state, edge_deg, warm
     # start) to ``pinned`` and the loop appends state generations to
     # ``gens`` (cleared in place at checkpoints), so a failed job at
     # ANY point — setup collects included — releases everything in the
-    # same finally that restores the session confs. The returned ranks
-    # frame is a fresh persist, never in either list.
+    # finally. The returned ranks frame is a fresh persist, never in
+    # either list.
     pinned: list[DataFrame] = []
     gens: list[DataFrame] = []
     try:
-        return _setup_and_iterate(
+        # Two small-loop conf scopes (``loop_conf``; tune_aqe=False opts
+        # out in a session shared with concurrent queries). The vertex
+        # count isn't known before setup, so the setup scope is gated on
+        # Catalyst's size estimate of the edge plan (no job); the loop
+        # scope is then decided from the exact vertex count, so a
+        # big-vertex graph loops with AQE's skew handling even when the
+        # estimate was small.
+        with loop_conf(
             spark,
-            edges,
-            beta=beta,
-            delta=delta,
-            max_iterations=max_iterations,
-            checkpoint_every=checkpoint_every,
-            strategy=strategy,
-            broadcast_vertex_limit=broadcast_vertex_limit,
-            edge_semantics=edge_semantics,
-            reliable_checkpoint=reliable_checkpoint,
-            tune_aqe=tune_aqe,
-            init_ranks=init_ranks,
-            shuffle_parts=shuffle_parts,
-            loop_parts=loop_parts,
-            conf_flipped=conf_flipped,
-            aqe_before=aqe_before,
-            parts_before=parts_before,
-            pinned=pinned,
-            gens=gens,
-        )
+            plan_size_bytes(edges) if tune_aqe else None,
+            enabled=tune_aqe,
+            limit=SETUP_TUNE_SIZE_BYTES,
+            per_part=SETUP_BYTES_PER_PARTITION,
+        ):
+            deg, state, counts = _setup(edges, edge_semantics, pinned)
+        n = counts["n"]
+        if n == 0:
+            empty = state.withColumn("rank", F.lit(0.0)).select(
+                "node", "rank"
+            )
+            return PageRankResult(empty, 0, [], strategy)
+
+        if strategy == "auto":
+            if n <= TINY_VERTEX_LIMIT:
+                # Tiny tier: co-partitioned shuffle — broadcast's
+                # per-iteration driver collect costs more than the tiny
+                # rank exchange (see TINY_VERTEX_LIMIT measurements).
+                strategy = "shuffle"
+            elif n <= broadcast_vertex_limit:
+                strategy = "broadcast"
+            else:
+                strategy = "shuffle"
+
+        with loop_conf(
+            spark, n, enabled=tune_aqe, limit=broadcast_vertex_limit
+        ) as loop_parts:
+            # Loop-invariant: edges decorated with the source's
+            # out-degree (reference builds this once too — M_block_list
+            # at pageRank.py:159). Built INSIDE the loop scope: it
+            # materializes inside the first iteration, so its cached
+            # partitioning must match the loop's sizing (a 32-partition
+            # cache would put 32 map tasks in every iteration).
+            contributing = (
+                edges.distinct() if edge_semantics == "reference" else edges
+            )
+            edge_deg = contributing.join(
+                deg.select("src", "deg"), on="src", how="inner"
+            )
+            if strategy == "shuffle":
+                # Pre-partition by src so each iteration's rank join
+                # shuffles only the rank vector, reusing this cached
+                # exchange for the edge side. Tuned small graphs use the
+                # loop's partition sizing so every per-iteration
+                # exchange (rank side, contribs agg) aligns.
+                edge_deg = edge_deg.repartition(loop_parts, "src")
+            edge_deg = edge_deg.persist(StorageLevel.MEMORY_AND_DISK)
+            pinned.append(edge_deg)
+
+            if init_ranks is None:
+                state = state.withColumn("rank", F.lit(1.0 / n))
+                # Distributed mass of the uniform init:
+                # Σ_{deg(u)>0} (1/n)·dfrac(u). In bag mode sdfrac ==
+                # n_src, giving the classic n_src/n.
+                m = (counts["sdfrac"] or 0.0) / n
+            else:
+                state, m = _warm_start(state, init_ranks, n, gens)
+
+            return _iterate(
+                spark,
+                edge_deg,
+                state,
+                n,
+                m,
+                beta=beta,
+                delta=delta,
+                teleport=(1.0 - beta) / n,
+                max_iterations=max_iterations,
+                checkpoint_every=checkpoint_every,
+                strategy=strategy,
+                shuffle_parts=loop_parts,
+                trajectory=[],
+                cached=gens,
+                reliable_checkpoint=reliable_checkpoint,
+            )
     finally:
-        if tune_aqe:
-            spark.conf.set(aqe_key, aqe_before)
-            spark.conf.set(parts_key, parts_before)
         for df in gens:
             df.unpersist()
         for df in pinned:
             df.unpersist()
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a plan (the statistic the optimizer
-    itself uses for broadcast decisions) — no job is run. Falls back to
-    'huge' when the estimate is unavailable (e.g. Spark Connect), which
-    just means the setup phase runs untuned."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 1 << 62
-
-
-def _setup_and_iterate(
-    spark,
-    edges: DataFrame,
-    *,
-    beta: float,
-    delta: float,
-    max_iterations: int,
-    checkpoint_every: int,
-    strategy: str,
-    broadcast_vertex_limit: int,
-    edge_semantics: str,
-    reliable_checkpoint: bool,
-    tune_aqe: bool,
-    init_ranks: DataFrame | None,
-    shuffle_parts: int,
-    loop_parts: int,
-    conf_flipped: bool,
-    aqe_before: str,
-    parts_before: str,
-    pinned: list,
-    gens: list,
-) -> PageRankResult:
-    aqe_key = "spark.sql.adaptive.enabled"
-    parts_key = "spark.sql.shuffle.partitions"
-
+def _setup(
+    edges: DataFrame, edge_semantics: str, pinned: list[DataFrame]
+) -> tuple[DataFrame, DataFrame, Row]:
+    """Out-degrees (with ``dfrac``), the persisted vertex state
+    ``(node, deg, dfrac)`` (appended to ``pinned``), and its counts
+    row ``(n, n_src, sdfrac)``."""
     # Out-degrees are computed ONCE and reused for both the decorated edge
     # relation and the state init (was: two scans+aggs of the edge table).
     deg = degrees(edges)
@@ -373,127 +343,56 @@ def _setup_and_iterate(
 
     # G1: uniform init over the full vertex set, with out-degree attached
     # (deg NULL ⇔ dangling vertex). One cached state relation per iterate.
-    init_state = (
+    state = (
         vertices(edges)
         .join(deg, on=[F.col("node") == F.col("src")], how="left")
         .select("node", "deg", "dfrac")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    pinned.append(init_state)
-    state = init_state
+    pinned.append(state)
     counts = state.agg(
         F.count("*").alias("n"),
         F.count("deg").alias("n_src"),
         F.sum("dfrac").alias("sdfrac"),
     ).collect()[0]
-    n, n_src = counts["n"], counts["n_src"]
-    if n == 0:
-        empty = state.withColumn("rank", F.lit(0.0)).select("node", "rank")
-        return PageRankResult(empty, 0, [], strategy)
+    return deg, state, counts
 
-    if strategy == "auto":
-        if n <= TINY_VERTEX_LIMIT:
-            # Tiny tier: co-partitioned shuffle — broadcast's
-            # per-iteration driver collect costs more than the tiny
-            # rank exchange (see TINY_VERTEX_LIMIT measurements).
-            strategy = "shuffle"
-        elif n <= broadcast_vertex_limit:
-            strategy = "broadcast"
-        else:
-            strategy = "shuffle"
 
-    # Re-decide the loop tuning from the EXACT vertex count: small
-    # graphs get (or keep) the flip with partitions sized to vertices;
-    # big-vertex graphs restore the session confs so the loop runs
-    # with AQE's skew handling even if the setup estimate was small.
-    if tune_aqe and n <= broadcast_vertex_limit:
-        if not conf_flipped:
-            conf_flipped = True
-            spark.conf.set(aqe_key, "false")
-        loop_parts = max(
-            LOOP_PARTS_FLOOR, min(shuffle_parts, -(-n // 2_000_000))
+def _warm_start(
+    state: DataFrame, init_ranks: DataFrame, n: int, gens: list[DataFrame]
+) -> tuple[DataFrame, float]:
+    """Previous vector onto the current vertex set (new vertices →
+    uniform share), renormalized to sum exactly 1 so the analytic
+    dangling correction stays valid from iteration 1. Returns the
+    state and its distributed mass."""
+    warm = (
+        state.join(
+            init_ranks.select("node", F.col("rank").alias("__r0")),
+            on="node",
+            how="left",
         )
-        spark.conf.set(parts_key, str(loop_parts))
-    elif conf_flipped:
-        spark.conf.set(aqe_key, aqe_before)
-        spark.conf.set(parts_key, parts_before)
-        conf_flipped = False
-        loop_parts = shuffle_parts
-
-    # Loop-invariant: edges decorated with the source's out-degree
-    # (reference builds this once too — M_block_list at pageRank.py:159).
-    # Built AFTER the conf flip: it materializes inside the first
-    # iteration, so its cached partitioning must match the loop's sizing
-    # (a 32-partition cache would put 32 map tasks in every iteration).
-    contributing = edges.distinct() if edge_semantics == "reference" else edges
-    edge_deg = contributing.join(deg.select("src", "deg"), on="src", how="inner")
-    if strategy == "shuffle":
-        # Pre-partition by src so each iteration's rank join shuffles only
-        # the rank vector, reusing this cached exchange for the edge side.
-        # Tuned small graphs use the loop's partition sizing so every
-        # per-iteration exchange (rank side, contribs agg) aligns.
-        edge_deg = edge_deg.repartition(loop_parts, "src")
-    edge_deg = edge_deg.persist(StorageLevel.MEMORY_AND_DISK)
-    pinned.append(edge_deg)
-
-    teleport = (1.0 - beta) / n
-    if init_ranks is None:
-        state = state.withColumn("rank", F.lit(1.0 / n))
-        # Distributed mass of the uniform init: Σ_{deg(u)>0} (1/n)·dfrac(u).
-        # In bag mode sdfrac == n_src, giving the classic n_src/n.
-        m = (counts["sdfrac"] or 0.0) / n
-    else:
-        # Warm start: previous vector onto the current vertex set (new
-        # vertices → uniform share), renormalized to sum exactly 1 so
-        # the analytic dangling correction stays valid from iteration 1.
-        warm = (
-            state.join(
-                init_ranks.select("node", F.col("rank").alias("__r0")),
-                on="node",
-                how="left",
-            )
-            .select(
-                "node",
-                "deg",
-                "dfrac",
-                F.coalesce(F.col("__r0"), F.lit(1.0 / n)).alias("rank"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(
+            "node",
+            "deg",
+            "dfrac",
+            F.coalesce(F.col("__r0"), F.lit(1.0 / n)).alias("rank"),
         )
-        # Rides the loop's cache-eviction cycle: released at the first
-        # checkpoint sweep like any other state generation.
-        gens.append(warm)
-        row0 = warm.agg(
-            F.sum("rank").alias("t"),
-            F.sum(
-                F.when(
-                    F.col("deg").isNotNull(), F.col("rank") * F.col("dfrac")
-                ).otherwise(0.0)
-            ).alias("mraw"),
-        ).collect()[0]
-        total = row0["t"] or 1.0
-        state = warm.withColumn("rank", F.col("rank") / F.lit(float(total)))
-        m = (row0["mraw"] or 0.0) / total
-
-    trajectory: list[float] = []
-
-    return _iterate(
-        spark,
-        edge_deg,
-        state,
-        n,
-        m,
-        beta=beta,
-        delta=delta,
-        teleport=teleport,
-        max_iterations=max_iterations,
-        checkpoint_every=checkpoint_every,
-        strategy=strategy,
-        shuffle_parts=loop_parts,
-        trajectory=trajectory,
-        cached=gens,
-        reliable_checkpoint=reliable_checkpoint,
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # Rides the loop's cache-eviction cycle: released at the first
+    # checkpoint sweep like any other state generation.
+    gens.append(warm)
+    row0 = warm.agg(
+        F.sum("rank").alias("t"),
+        F.sum(
+            F.when(
+                F.col("deg").isNotNull(), F.col("rank") * F.col("dfrac")
+            ).otherwise(0.0)
+        ).alias("mraw"),
+    ).collect()[0]
+    total = row0["t"] or 1.0
+    state = warm.withColumn("rank", F.col("rank") / F.lit(float(total)))
+    return state, (row0["mraw"] or 0.0) / total
 
 
 def _iterate(
@@ -525,12 +424,8 @@ def _iterate(
         rank_side = state.where(F.col("deg").isNotNull()).select(
             F.col("node").alias("src"), "rank"
         )
-        import os as _os
-        _ab = _os.environ.get("SPARK_PR_AB", "")
-        if strategy == "broadcast" or _ab == "bcast":
+        if strategy == "broadcast":
             rank_side = F.broadcast(rank_side)
-        elif _ab == "free":
-            pass
         else:
             rank_side = rank_side.repartition(shuffle_parts, "src")
 
@@ -975,7 +870,6 @@ def _hits_loop(
     one layout and accept one edge shuffle per round.
     """
     spark = edges.sparkSession
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst")
     verts = vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
@@ -983,59 +877,28 @@ def _hits_loop(
         return verts.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
         )
-    # Same per-iteration tuning as the PageRank loop: AQE's runtime
+    # Same small-loop tuning as the PageRank loop: AQE's runtime
     # coalescing re-plans every round (breaking reuse of the cached
     # edge partitioning) and the session's shuffle sizing is far too
-    # wide for a small graph's vertex-sized exchanges — flip both for
-    # the loop's duration, restore after.
-    aqe_key = "spark.sql.adaptive.enabled"
-    parts_key = "spark.sql.shuffle.partitions"
-    aqe_before = spark.conf.get(aqe_key)
-    parts_before = spark.conf.get(parts_key)
-    tuned = n <= TINY_VERTEX_LIMIT
-    parts = shuffle_parts
-    if tuned:
-        spark.conf.set(aqe_key, "false")
-        parts = max(
-            LOOP_PARTS_FLOOR, min(shuffle_parts, -(-n // 2_000_000))
+    # wide for a small graph's vertex-sized exchanges.
+    with loop_conf(spark, n, limit=TINY_VERTEX_LIMIT) as parts:
+        e_src = e.repartition(parts, "src").persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        spark.conf.set(parts_key, str(parts))
-    try:
-        return _hits_loop_body(
-            e, verts, n, parts, max_iterations, delta
+        e_dst = e.repartition(parts, "dst").persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-    finally:
-        # restore SESSION-GLOBAL confs even when a mid-loop job dies —
-        # a skipped restore leaves every later query in the session on
-        # AQE-off / tiny-shuffle settings (the PageRank loop's
-        # discipline).
-        if tuned:
-            spark.conf.set(aqe_key, aqe_before)
-            spark.conf.set(parts_key, parts_before)
-
-
-def _hits_loop_body(
-    e: DataFrame,
-    verts: DataFrame,
-    n: int,
-    parts: int,
-    max_iterations: int,
-    delta: float,
-) -> DataFrame:
-    e_src = e.repartition(parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    e_dst = e.repartition(parts, "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    # try/finally below: a mid-loop job failure must still release the
-    # two full edge-table caches and the vertex cache — without it they
-    # stay pinned for the session lifetime (the conf restore in the
-    # caller already has this discipline).
-    try:
-        return _hits_iterate(
-            e_src, e_dst, verts, n, parts, max_iterations, delta
-        )
-    finally:
-        e_src.unpersist()
-        e_dst.unpersist()
-        verts.unpersist()
+        # a mid-loop job failure must still release the two full
+        # edge-table caches and the vertex cache — without it they stay
+        # pinned for the session lifetime
+        try:
+            return _hits_iterate(
+                e_src, e_dst, verts, n, parts, max_iterations, delta
+            )
+        finally:
+            e_src.unpersist()
+            e_dst.unpersist()
+            verts.unpersist()
 
 
 def _hits_iterate(
@@ -1264,92 +1127,63 @@ def _katz_loop(
     ``max_iterations`` rounds, matching the unrolled DAG up to float
     summation order."""
     spark = edges.sparkSession
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     base = edges.select("src", "dst")
     verts = vertices(base).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
-    aqe_key = "spark.sql.adaptive.enabled"
-    parts_key = "spark.sql.shuffle.partitions"
-    aqe_before = spark.conf.get(aqe_key)
-    parts_before = spark.conf.get(parts_key)
-    tuned = 0 < n <= TINY_VERTEX_LIMIT
-    parts = shuffle_parts
-    if tuned:
-        spark.conf.set(aqe_key, "false")
-        parts = max(
-            LOOP_PARTS_FLOOR, min(shuffle_parts, -(-n // 2_000_000))
+    # an empty graph runs untuned
+    with loop_conf(spark, n, enabled=n > 0, limit=TINY_VERTEX_LIMIT) as parts:
+        e = base.repartition(parts, "src").persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        spark.conf.set(parts_key, str(parts))
-    try:
-        return _katz_loop_body(
-            base, verts, alpha, parts, max_iterations, delta
-        )
-    finally:
-        # restore SESSION-GLOBAL confs even when a mid-loop collect
-        # dies (same discipline as the PageRank and HITS loops).
-        if tuned:
-            spark.conf.set(aqe_key, aqe_before)
-            spark.conf.set(parts_key, parts_before)
-
-
-def _katz_loop_body(
-    base: DataFrame,
-    verts: DataFrame,
-    alpha: float,
-    parts: int,
-    max_iterations: int,
-    delta: float,
-) -> DataFrame:
-    e = base.repartition(parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    # try/finally: a mid-loop job failure must not leave the cached
-    # edge layout and vertex relation pinned for the session lifetime
-    # (same discipline as the HITS loop body).
-    try:
-        state = verts.select("node", F.lit(0.0).alias("katz"))
-        # cadence 1 + a metric every round: the shared primitive's
-        # lazy checkpoint materializes inside the L1 aggregation — the
-        # loop never persists a generation, so the shared ``cached``
-        # list stays empty and the sweep is a no-op (same plan as the
-        # hand-written loop; graph/loop.py VertexLoop).
-        loop = VertexLoop([], checkpoint_every=1)
-        iteration = 0
-        while iteration < max_iterations:
-            iteration += 1
-            raw = (
-                e.join(
-                    state.select(
-                        F.col("node").alias("src"), "katz"
-                    ).repartition(parts, "src"),
-                    on="src",
+        # try/finally: a mid-loop job failure must not leave the cached
+        # edge layout and vertex relation pinned for the session lifetime
+        # (same discipline as the HITS loop).
+        try:
+            state = verts.select("node", F.lit(0.0).alias("katz"))
+            # cadence 1 + a metric every round: the shared primitive's
+            # lazy checkpoint materializes inside the L1 aggregation —
+            # the loop never persists a generation, so the shared
+            # ``cached`` list stays empty and the sweep is a no-op
+            # (graph/loop.py VertexLoop).
+            loop = VertexLoop([], checkpoint_every=1)
+            iteration = 0
+            while iteration < max_iterations:
+                iteration += 1
+                raw = (
+                    e.join(
+                        state.select(
+                            F.col("node").alias("src"), "katz"
+                        ).repartition(parts, "src"),
+                        on="src",
+                    )
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(F.sum("katz").alias("__v"))
                 )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("katz").alias("__v"))
-            )
-            nxt = (
-                state.select("node", F.col("katz").alias("__old"))
-                .join(raw, on="node", how="left")
-                .select(
-                    "node",
-                    "__old",
-                    (
-                        F.lit(1.0)
-                        + F.lit(alpha)
-                        * F.coalesce(F.col("__v"), F.lit(0.0))
-                    ).alias("katz"),
+                nxt = (
+                    state.select("node", F.col("katz").alias("__old"))
+                    .join(raw, on="node", how="left")
+                    .select(
+                        "node",
+                        "__old",
+                        (
+                            F.lit(1.0)
+                            + F.lit(alpha)
+                            * F.coalesce(F.col("__v"), F.lit(0.0))
+                        ).alias("katz"),
+                    )
                 )
+                nxt, row = loop.advance(
+                    nxt,
+                    metrics={
+                        "l1": F.sum(F.abs(F.col("katz") - F.col("__old")))
+                    },
+                )
+                state = nxt.select("node", "katz")
+                if delta > 0 and (row["l1"] or 0.0) <= delta:
+                    break
+            return materialize_or_release(
+                state.persist(StorageLevel.MEMORY_AND_DISK)
             )
-            nxt, row = loop.advance(
-                nxt,
-                metrics={
-                    "l1": F.sum(F.abs(F.col("katz") - F.col("__old")))
-                },
-            )
-            state = nxt.select("node", "katz")
-            if delta > 0 and (row["l1"] or 0.0) <= delta:
-                break
-        return materialize_or_release(
-            state.persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    finally:
-        e.unpersist()
-        verts.unpersist()
+        finally:
+            e.unpersist()
+            verts.unpersist()

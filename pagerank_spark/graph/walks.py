@@ -168,18 +168,13 @@ def node2vec_walks(
                     "valid but not guaranteed hash-reproducible across "
                     "engines"
                 )
-    from contextlib import nullcontext
-
-    from pagerank_spark.graph.components import (
-        BROADCAST_STATE_ROW_LIMIT,
-        _iterative_loop_conf,
-    )
+    from pagerank_spark.graph.components import BROADCAST_STATE_ROW_LIMIT
+    from pagerank_spark.graph.loop import loop_conf
 
     spark = edges.sparkSession
     ec = edges.count()
     bcs = 2 * ec <= BROADCAST_STATE_ROW_LIMIT
-    ctx = _iterative_loop_conf(spark, ec) if tune else nullcontext()
-    with ctx:
+    with loop_conf(spark, ec, enabled=tune):
         return _node2vec_body(edges, steps, p, q, bcs)
 
 

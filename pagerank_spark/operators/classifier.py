@@ -197,10 +197,7 @@ def logreg_train(
     # multi-second per-action driver gaps on the fixture trainers.
     # The co-partitioning repartition happens INSIDE the conf so the
     # pins and every per-round exchange share the loop sizing.
-    from contextlib import nullcontext
-
-    from pagerank_spark.graph.components import _iterative_loop_conf
-    from pagerank_spark.graph.loop import release_checkpoint
+    from pagerank_spark.graph.loop import loop_conf, release_checkpoint
 
     n_rows = xb_ck.count()
     xb = lab = None
@@ -208,11 +205,7 @@ def logreg_train(
         # ``tune=False`` opts shared-session callers out of the
         # session-global AQE/partition flip (r14 ADVICE — mirrors
         # node2vec_walks(tune=) / pagerank(tune_aqe=))
-        ctx = _iterative_loop_conf(spark, n_rows) if tune else nullcontext()
-        with ctx:
-            shuffle_p = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
+        with loop_conf(spark, n_rows, enabled=tune) as shuffle_p:
             xb = xb_ck.repartition(shuffle_p, id_col).persist()
             lab = lab_ck.repartition(shuffle_p, id_col).persist()
             n = float(lab.count())
@@ -441,10 +434,7 @@ def softmax_train(
     )
     # checkpoint-below-repartition + small-loop conf — the
     # logreg_train rationale verbatim
-    from contextlib import nullcontext
-
-    from pagerank_spark.graph.components import _iterative_loop_conf
-    from pagerank_spark.graph.loop import release_checkpoint
+    from pagerank_spark.graph.loop import loop_conf, release_checkpoint
 
     # lazy — the logreg_train rationale verbatim
     xb_ck = xb.localCheckpoint(eager=False)
@@ -452,11 +442,7 @@ def softmax_train(
     n_rows = xb_ck.count()
     xb = lab = None
     try:
-        ctx = _iterative_loop_conf(spark, n_rows) if tune else nullcontext()
-        with ctx:
-            shuffle_p = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32")
-            )
+        with loop_conf(spark, n_rows, enabled=tune) as shuffle_p:
             xb = xb_ck.repartition(shuffle_p, id_col).persist()
             lab = lab_ck.repartition(shuffle_p, id_col).persist()
             n = float(lab.count())

@@ -622,12 +622,12 @@ _SPREAD_ROW_LIMIT = _SPREAD_SIZE_LIMIT // 16
 
 def _spread_df(df: DataFrame) -> DataFrame:
     """The spread itself, for synth inputs that carry extra columns."""
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+    from pagerank_spark.graph.loop import plan_size_bytes
+
+    est = plan_size_bytes(df)
+    if est is not None:
         small = est <= _SPREAD_SIZE_LIMIT
-    except Exception:  # pragma: no cover - connect-mode fallback
+    else:  # connect-mode fallback
         # r15 (r14 verdict #9): don't silently drop the optimization —
         # gate on an actual row count instead, and say so once.
         import sys

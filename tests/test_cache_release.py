@@ -65,10 +65,21 @@ def _poisoned_edges(spark):
     )
 
 
+def _loop_confs(spark) -> tuple[str, str]:
+    return (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+
+
 def _expect_failure_then_drain(spark, fn):
+    """The failed call releases its pins AND restores the session's
+    loop confs (AQE flag, shuffle partitions)."""
     baseline = _storage_entries(spark)
+    confs = _loop_confs(spark)
     with pytest.raises(Exception, match="poisoned edge"):
         fn()
+    assert _loop_confs(spark) == confs
     _assert_drains(spark, baseline)
 
 
@@ -220,7 +231,7 @@ def test_materialize_or_release_unpins_on_failed_count(spark):
     # Direct unit test of the helper every loop's trailing persist now
     # goes through: a failed materializing count must drop the fresh
     # persist mark (it is in no shared release list).
-    from pagerank_spark.graph.pagerank import materialize_or_release
+    from pagerank_spark.graph.loop import materialize_or_release
 
     baseline = _storage_entries(spark)
     boom = F.raise_error(F.lit("poisoned edge")).cast("long")
