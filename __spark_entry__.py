@@ -2429,14 +2429,14 @@ def q124_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     reinforcement recursion on the sparse derived graph — the other
     classic link-analysis fixed point beside the reference's PageRank.
     Fixed iterations ⇒ exact unrolled-CTE twin (q92's pattern); 9dp
-    rounding absorbs summation-order ulps. The declared engine is the
-    checkpointed LOOP (the scale shape per GRAPH_LOOP_AB.json, and
-    ~1.2x faster than the unrolled DAG even at k=2); the DAG engine
-    stays pinned equal by test_hits_loop_matches_dag."""
+    rounding absorbs summation-order ulps. The engine is the
+    checkpointed loop (the scale shape per GRAPH_LOOP_AB.json, and
+    ~1.2x faster than an unrolled DAG even at k=2); a pure-Python
+    L1-normalized HITS oracle pins it in test_hits_loop_matches_oracle."""
     from pagerank_spark.graph.pagerank import hits
 
     e = _sparse_weighted_edges(spark, sf_dir).select("src", "dst")
-    out = hits(e, iterations=2, mode="loop")
+    out = hits(e, iterations=2)
     return out.select(
         "node",
         F.round("hub", 9).alias("hub"),
@@ -9458,7 +9458,10 @@ WHERE (b.o_orderstatus, b.tp) IS DISTINCT FROM (a.o_orderstatus, a.tp)
 
 # q169 twin: three Luby rounds unrolled — symmetrized live subgraph,
 # fixed-width string priorities (16-hex hash || 8-digit id), winners
-# where the priority beats every live neighbor's MIN.
+# where the priority beats every live neighbor's MIN. Each round's CTEs
+# are MATERIALIZED: round r reads round r-1's several times, and DuckDB
+# inlines a plain CTE at every reference, so three unrolled rounds cost
+# 120+ s at sf0.001 inlined and 0.04 s materialized (same rows).
 def _mis_pri_sql(expr: str, r: int) -> str:
     return (
         f"lpad(hex(CAST('0x' || substr(md5(CAST({expr} AS VARCHAR) "
@@ -9471,42 +9474,42 @@ def _mis_sql(rounds: int) -> str:
     parts = [
         SQL_EDGES.rstrip(),
         """,
-und AS (
+und AS MATERIALIZED (
   SELECT DISTINCT src, dst FROM (
     SELECT src, dst FROM edges WHERE src <> dst
     UNION ALL
     SELECT dst AS src, src AS dst FROM edges WHERE src <> dst
   )
 ),
-alive0 AS (SELECT DISTINCT src AS node FROM und),
-live0 AS (SELECT src, dst FROM und)""",
+alive0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM und),
+live0 AS MATERIALIZED (SELECT src, dst FROM und)""",
     ]
     for r in range(1, rounds + 1):
         parts.append(
             f""",
-nm{r} AS (
+nm{r} AS MATERIALIZED (
   SELECT src AS node, MIN({_mis_pri_sql('dst', r)}) AS mn
   FROM live{r - 1} GROUP BY src
 ),
-w{r} AS (
+w{r} AS MATERIALIZED (
   SELECT a.node FROM alive{r - 1} a
   LEFT JOIN nm{r} m ON a.node = m.node
   WHERE m.mn IS NULL OR {_mis_pri_sql('a.node', r)} < m.mn
 ),
-d{r} AS (
+d{r} AS MATERIALIZED (
   SELECT DISTINCT e.dst AS node
   FROM live{r - 1} e JOIN w{r} w ON e.src = w.node
   WHERE e.dst NOT IN (SELECT node FROM w{r})
 ),
-gone{r} AS (
+gone{r} AS MATERIALIZED (
   SELECT node FROM w{r} UNION ALL SELECT node FROM d{r}
 ),
-live{r} AS (
+live{r} AS MATERIALIZED (
   SELECT src, dst FROM live{r - 1}
   WHERE src NOT IN (SELECT node FROM gone{r})
     AND dst NOT IN (SELECT node FROM gone{r})
 ),
-alive{r} AS (
+alive{r} AS MATERIALIZED (
   SELECT node FROM alive{r - 1}
   WHERE node NOT IN (SELECT node FROM gone{r})
 )"""
@@ -13642,6 +13645,10 @@ def _unigram_sql(
     list_reduce (the bpe-twin sentinel-prefix idiom: elements are
     one-element lists so the accumulator can be a growing DOUBLE[]),
     expected counts per edge, renormalize; finally prune + renormalize.
+    Each round's vocabulary ``v{r}`` is MATERIALIZED: DuckDB inlines a
+    plain CTE at every reference, so the unrolled rounds re-derive
+    every earlier round (q257: 13 s inlined, 0.3 s materialized; same
+    rows).
     """
     def sum_alpha_terms() -> str:
         return " + ".join(
@@ -13700,7 +13707,7 @@ selp AS (
   )
 ),
 sel0 AS (SELECT p.piece, p.wf FROM pw p JOIN selp USING (piece)),
-v0 AS (SELECT piece, wf / (SELECT SUM(wf) FROM sel0) AS prob
+v0 AS MATERIALIZED (SELECT piece, wf / (SELECT SUM(wf) FROM sel0) AS prob
        FROM sel0)"""
     ]
     for r in range(1, rounds + 1):
@@ -13732,7 +13739,7 @@ cnts{r} AS (
   GROUP BY u.pc['piece']
   HAVING SUM(u.pc['c']) > 0
 ),
-v{r} AS (SELECT piece, cnt / (SELECT SUM(cnt) FROM cnts{r}) AS prob
+v{r} AS MATERIALIZED (SELECT piece, cnt / (SELECT SUM(cnt) FROM cnts{r}) AS prob
          FROM cnts{r})"""
         )
     parts.append(

@@ -77,16 +77,10 @@ def aggregate_messages(
     )
 
 
-def triangle_count(edges: DataFrame) -> DataFrame:
-    """Global triangle count via the canonical two-join plan.
-
-    Canonicalize to distinct undirected (src < dst) edges, then count
-    paths src→mid→dst closed by a (src, dst) edge — each triangle
-    (a<b<c) is counted exactly once. Both joins are equi-joins on node
-    keys (shuffle or broadcast per Catalyst); no enumeration of
-    wedges beyond the join itself. Returns one row: (n_triangles).
-    """
-    und = (
+def undirected_edges(edges: DataFrame) -> DataFrame:
+    """The distinct undirected edge set of ``edges``: self-loops
+    dropped, each edge once as ``(src, dst)`` with ``src < dst``."""
+    return (
         edges.where(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("src"),
@@ -94,13 +88,31 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         )
         .distinct()
     )
+
+
+def triangles(und: DataFrame) -> DataFrame:
+    """Every triangle of the undirected edge set ``und`` (as returned
+    by ``undirected_edges``) exactly once, as ``(a, b, c)`` with
+    ``a < b < c``.
+
+    The canonical two-join plan: paths a→b→c over the ``src < dst``
+    edges, closed by an (a, c) edge. Both joins are equi-joins on node
+    keys (shuffle or broadcast per Catalyst); no enumeration of wedges
+    beyond the join itself.
+    """
     e1 = und.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = und.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     e3 = und.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    return (
-        e1.join(e2, on="b")
-        .join(e3, on=["a", "c"])
-        .agg(F.count("*").alias("n_triangles"))
+    return e1.join(e2, on="b").join(e3, on=["a", "c"]).select("a", "b", "c")
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Global triangle count of the distinct undirected graph: each
+    triangle counted once (``triangles``). Returns one row:
+    (n_triangles).
+    """
+    return triangles(undirected_edges(edges)).agg(
+        F.count("*").alias("n_triangles")
     )
 
 
@@ -218,13 +230,10 @@ def _star_rounds(
     max_iterations: int,
     broadcast_state: bool,
 ) -> DataFrame:
+    # child → smaller parent orientation
     cur = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
+        undirected_edges(edges)
+        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         .localCheckpoint(eager=True)
     )
 
@@ -738,14 +747,7 @@ def label_propagation(
 def _label_propagation_impl(
     edges: DataFrame, n_iterations: int, broadcast_state: bool = False
 ) -> DataFrame:
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .distinct()
-    )
+    und = undirected_edges(edges)
     adj = und.unionAll(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1002,31 +1004,23 @@ def kcore_peel(
     broadcast-or-shuffle semi joins — the surviving-node set shrinks
     monotonically, so later rounds are cheap).
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    e = und
-    deg = None
+    e = undirected_edges(edges)
     for _ in range(rounds):
         deg = (
-            e.select(F.col("a").alias("node"))
-            .unionAll(e.select(F.col("b").alias("node")))
+            e.select(F.col("src").alias("node"))
+            .unionAll(e.select(F.col("dst").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
         keep = deg.where(F.col("deg") >= k).select("node")
-        e = (
-            e.join(keep.select(F.col("node").alias("a")), on="a", how="left_semi")
-            .join(keep.select(F.col("node").alias("b")), on="b", how="left_semi")
+        e = e.join(
+            keep.select(F.col("node").alias("src")), on="src", how="left_semi"
+        ).join(
+            keep.select(F.col("node").alias("dst")), on="dst", how="left_semi"
         )
     out = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
+        e.select(F.col("src").alias("node"))
+        .unionAll(e.select(F.col("dst").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
@@ -1042,24 +1036,17 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     (broadcastable when the vertex set is small relative to edges);
     ``corr`` is a single-pass mergeable moment aggregate.
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = undirected_edges(edges)
     deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
+        und.select(F.col("src").alias("node"))
+        .unionAll(und.select(F.col("dst").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
+    da = deg.select(F.col("node").alias("src"), F.col("deg").alias("deg_a"))
+    db = deg.select(F.col("node").alias("dst"), F.col("deg").alias("deg_b"))
     return (
-        und.join(da, on="a").join(db, on="b")
+        und.join(da, on="src").join(db, on="dst")
         .agg(
             F.count("*").cast("long").alias("n_edges"),
             F.round(F.corr("deg_a", "deg_b"), 6).alias("assortativity"),
@@ -1071,35 +1058,19 @@ def local_clustering(edges: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient on the distinct undirected
     graph: triangles_at(v) / C(deg(v), 2); nodes with deg < 2 get 0.
 
-    The triangle enumeration reuses the canonical two-join plan of
-    ``triangle_count`` (each triangle found once as a<b<c), then each
+    The triangle enumeration is the canonical two-join plan of
+    ``triangles`` (each triangle found once as a<b<c), then each
     triangle credits its three corners — an explode + count, never a
     per-node neighborhood materialization.
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = undirected_edges(edges)
     deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
+        und.select(F.col("src").alias("node"))
+        .unionAll(und.select(F.col("dst").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
-    e2 = und.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = und.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    tri = (
-        und.join(e2, on="b")
-        .join(
-            e3,
-            (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")),
-        )
-        .select("a", "b", "c")
-    )
+    tri = triangles(und)
     corner = (
         tri.select(F.col("a").alias("node"))
         .unionAll(tri.select(F.col("b").alias("node")))
@@ -1147,17 +1118,12 @@ def adamic_adar(
     WEIGHT use the true uncapped degree. The adjacency exclusion is a
     left-anti join; top-k is TakeOrdered, never a global sort.
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = undirected_edges(edges)
     nbr = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).unionAll(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
+        F.col("src").alias("node"), F.col("dst").alias("nbr")
+    ).unionAll(
+        und.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
+    )
     deg = nbr.groupBy("node").agg(F.count("*").alias("deg"))
     wn = (
         nbr.join(deg, on="node")
@@ -1177,7 +1143,7 @@ def adamic_adar(
     )
     nonadj = sc.join(
         und,
-        (F.col("u") == F.col("a")) & (F.col("v") == F.col("b")),
+        (F.col("u") == F.col("src")) & (F.col("v") == F.col("dst")),
         how="left_anti",
     )
     return nonadj.orderBy(
@@ -1498,8 +1464,8 @@ def ktruss(
     §5.3 determinism rule — an exact SQL twin can unroll fixed
     rounds; pass more rounds for a tighter fixpoint). Each round
     computes per-edge triangle support on the surviving subgraph via
-    the canonical two-join wedge closure (``triangle_count``'s plan,
-    kept per-edge instead of globally summed) and drops edges with
+    the canonical two-join wedge closure (``triangles``, kept
+    per-edge instead of globally summed) and drops edges with
     support < k-2. Returns the surviving canonical undirected edges
     ``(src, dst, support)`` with the LAST round's support.
 
@@ -1516,21 +1482,10 @@ def ktruss(
         raise ValueError(f"ktruss: k must be >= 2, got {k}")
     if rounds < 1:
         raise ValueError(f"ktruss: rounds must be >= 1, got {rounds}")
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .distinct()
-    )
-    surv = und
+    surv = undirected_edges(edges)
     out = None
     for r in range(rounds):
-        e1 = surv.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        e2 = surv.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-        e3 = surv.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-        tri = e1.join(e2, on="b").join(e3, on=["a", "c"])
+        tri = triangles(surv)
         # each triangle supports its three edges
         sup = (
             tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))

@@ -59,10 +59,33 @@ Scale design (the part that matters at 100 TB):
   growing plan dominates any plan reuse. (Reliable ``checkpoint()``
   writes state to the checkpoint dir — real I/O per truncation — so
   that mode amortizes over 3 iterations.)
+
+One recurrence serves the whole PageRank family:
+
+    x'[v] = (a + b·dm)·s[v] + c·Σ_{u→v} x[u]·w(u,v)
+
+with ``dm`` the mass on dangling vertices (skipped when b = 0):
+
+    variant                  a     b   s[v]            c    w(u,v)
+    pagerank (uniform)       1−β   β   1/N             β    1/deg(u)
+    personalized_pagerank    1−β   β   1/|S| on seeds  β    1/deg(u)
+    weighted_pagerank        1−β   β   1/N             β    w(u,v)/W(u)
+    katz_centrality          1     0   1               α    1
+
+It runs in two shapes. ``_fixed_k`` unrolls k rounds into one lazy DAG
+(per-round scalars ride broadcast one-row joins, nothing collects):
+the declared fixed-k queries and their SQL twins. ``_iterate`` is the
+checkpointed loop body (cached edge layout, one job per round, an L1
+stop), shared by ``pagerank`` and Katz's loop; there the per-edge term
+``c·x[u]·w(u,v)`` and the per-round constant ``(a + b·dm)·s`` come in
+as data. HITS alternates A and Aᵀ with a normalization per half-step,
+so it keeps its own loop.
 """
 
 from __future__ import annotations
 
+import math
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Row
@@ -290,23 +313,49 @@ def pagerank(
             else:
                 state, m = _warm_start(state, init_ranks, n, gens)
 
-            return _iterate(
-                spark,
+            # G2-G4: the shared loop body. The per-round constant is
+            # the teleport plus the renormalization β·(1−m)/n from the
+            # previous iterate's distributed mass m (module docstring;
+            # in reference mode m is Σ rank·dfrac, so multigraph
+            # sources' partial distribution is accounted for), which
+            # the same one aggregation per round also returns.
+            state, iterations, trajectory = _iterate(
+                VertexLoop(
+                    gens,
+                    checkpoint_every=checkpoint_every,
+                    reliable=reliable_checkpoint,
+                ),
                 edge_deg,
                 state,
-                n,
-                m,
-                beta=beta,
-                delta=delta,
-                teleport=(1.0 - beta) / n,
-                max_iterations=max_iterations,
-                checkpoint_every=checkpoint_every,
+                {"m": m},
+                value="rank",
+                senders=F.col("deg").isNotNull(),
+                contrib=F.lit(beta) * F.col("rank") / F.col("deg"),
+                const=lambda row: (
+                    (1.0 - beta) / n + beta * (1.0 - row["m"]) / n
+                ),
+                metrics={
+                    "m": F.sum(
+                        F.when(
+                            F.col("deg").isNotNull(),
+                            F.col("rank") * F.col("dfrac"),
+                        ).otherwise(0.0)
+                    )
+                },
                 strategy=strategy,
-                shuffle_parts=loop_parts,
-                trajectory=[],
-                cached=gens,
-                reliable_checkpoint=reliable_checkpoint,
+                parts=loop_parts,
+                delta=delta,
+                max_iterations=max_iterations,
             )
+            # The setup-lifetime caches and any live state generations
+            # are released by the finally below; the returned ranks
+            # frame is a fresh persist, untouched by that sweep.
+            final = materialize_or_release(
+                state.select("node", "rank").persist(
+                    StorageLevel.MEMORY_AND_DISK
+                )
+            )
+            return PageRankResult(final, iterations, trajectory, strategy)
     finally:
         for df in gens:
             df.unpersist()
@@ -396,105 +445,87 @@ def _warm_start(
 
 
 def _iterate(
-    spark,
-    edge_deg: DataFrame,
+    loop: VertexLoop,
+    edges: DataFrame,
     state: DataFrame,
-    n: int,
-    m: float,
+    row: Row | dict | None,
     *,
-    beta: float,
-    delta: float,
-    teleport: float,
-    max_iterations: int,
-    checkpoint_every: int,
+    value: str,
+    senders: Column,
+    contrib: Column,
+    const: Callable[[Row | dict | None], float],
+    metrics: dict[str, Column],
     strategy: str,
-    shuffle_parts: int,
-    trajectory: list[float],
-    cached: list[DataFrame],
-    reliable_checkpoint: bool,
-) -> PageRankResult:
-    loop = VertexLoop(
-        cached,
-        checkpoint_every=checkpoint_every,
-        reliable=reliable_checkpoint,
-    )
+    parts: int,
+    delta: float,
+    max_iterations: int,
+) -> tuple[DataFrame, int, list[float]]:
+    """The loop shape of the shared recurrence: rounds of
+
+        x'[v] = const(row) + Σ_{u→v} contrib
+
+    over the cached edge layout ``edges`` until the round's L1 change
+    is ``<= delta`` or ``max_iterations`` rounds ran.
+
+    ``state`` is ``(node, *carried, value)``; ``senders`` picks the
+    state rows joined as sources; ``contrib`` is the per-edge term,
+    evaluated over ``edges`` joined to the sources' ``(src, value)``;
+    ``const`` maps the previous round's metrics row (``row`` before the
+    first round) to this round's scalar; ``metrics`` are extra
+    aggregates of the round's ONE job, beside ``l1``. ``strategy``
+    "broadcast" hints the source side, anything else repartitions it
+    to ``parts`` on ``src``, aligned with a ``src``-partitioned edge
+    layout so only the vertex-sized side moves. Lineage is truncated
+    by ``loop`` (graph/loop.py ``VertexLoop.advance``): the lazy
+    checkpoint materializes inside the round's one aggregation.
+
+    Returns ``(state, rounds run, L1 per round)``.
+    """
+    carried = [c for c in state.columns if c not in ("node", value)]
+    trajectory: list[float] = []
     iteration = 0
     while iteration < max_iterations:
         iteration += 1
-        rank_side = state.where(F.col("deg").isNotNull()).select(
-            F.col("node").alias("src"), "rank"
+        side = state.where(senders).select(F.col("node").alias("src"), value)
+        side = (
+            F.broadcast(side)
+            if strategy == "broadcast"
+            else side.repartition(parts, "src")
         )
-        if strategy == "broadcast":
-            rank_side = F.broadcast(rank_side)
-        else:
-            rank_side = rank_side.repartition(shuffle_parts, "src")
-
-        # G2 power step: J1 join + A4 group-sum, then left-join back to the
-        # full vertex set so in-edge-less vertices keep the teleport term
-        # (the reference gets that via dict re-init at pageRank.py:125).
-        contribs = (
-            edge_deg.join(rank_side, on="src", how="inner")
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(beta) * F.col("rank") / F.col("deg")).alias("contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib").alias("contrib"))
+        # One equi-join + partial-agg group-sum, then a left join back
+        # to the full vertex set so in-edge-less vertices keep the
+        # constant term (the reference gets that via dict re-init at
+        # pageRank.py:125).
+        sums = (
+            edges.join(side, on="src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(contrib).alias("__c"))
         )
-        # G3: renormalization constant from the previous iterate's
-        # distributed mass (see module docstring for the algebra; in
-        # reference mode m is Σ rank·dfrac so multigraph sources' partial
-        # distribution is accounted for and ranks still sum to 1).
-        correction = beta * (1.0 - m) / n
         pre = (
-            state.select(
-                "node", "deg", "dfrac", F.col("rank").alias("old_rank")
-            )
-            .join(contribs, on="node", how="left")
+            state.select("node", *carried, F.col(value).alias("__old"))
+            .join(sums, on="node", how="left")
             .select(
                 "node",
-                "deg",
-                "dfrac",
-                "old_rank",
+                *carried,
+                "__old",
                 (
-                    F.lit(teleport + correction)
-                    + F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
+                    F.lit(const(row)) + F.coalesce(F.col("__c"), F.lit(0.0))
+                ).alias(value),
             )
         )
-        # G4 + lineage control via the shared engine primitive
-        # (graph/loop.py VertexLoop — SURVEY §7.5.1): lazy checkpoint
-        # on the cadence materializing inside the ONE per-round
-        # aggregation (L1 convergence metric + next iteration's
-        # distributed mass), persisted generations tracked before the
-        # agg and swept after each checkpoint.
         pre, row = loop.advance(
             pre,
             metrics={
-                "l1": F.sum(F.abs(F.col("rank") - F.col("old_rank"))),
-                "m": F.sum(
-                    F.when(
-                        F.col("deg").isNotNull(),
-                        F.col("rank") * F.col("dfrac"),
-                    ).otherwise(0.0)
-                ),
+                "l1": F.sum(F.abs(F.col(value) - F.col("__old"))),
+                **metrics,
             },
         )
-        l1, m = row["l1"], row["m"]
+        l1 = row["l1"] or 0.0
         trajectory.append(l1)
-
-        state = pre.select("node", "deg", "dfrac", "rank")
+        state = pre.select("node", *carried, value)
         if l1 <= delta:
             break
-
-    # The setup-lifetime caches (edge_deg, init_state) and any live
-    # state generations are released by pagerank()'s finally right
-    # after this returns — the returned ranks frame is a fresh persist,
-    # untouched by that sweep (and self-releasing on a failed count).
-    final = materialize_or_release(
-        state.select("node", "rank").persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return PageRankResult(final, iteration, trajectory, strategy)
+    return state, iteration, trajectory
 
 
 def compare_teleports(
@@ -575,71 +606,39 @@ def personalized_pagerank(
     mass Σ_{deg(u)=0} r[u] of the previous iterate — ranks sum to 1
     every iteration.
 
-    Scale shape: the whole computation is ONE lazy DAG — the per-
-    iteration scalars (|S|, dm) are single-row aggregates attached by
-    broadcast cross join, never collected to the driver, so the
-    operator composes inside a larger declared query. For high
-    iteration counts prefer the convergence-looped ``pagerank`` shape
-    (per-iteration checkpointing); this fixed-k form targets k ≤ ~4.
+    Scale shape: ``_fixed_k``'s one lazy DAG — |S| and dm are
+    single-row aggregates attached by broadcast cross join, never
+    collected to the driver, so the operator composes inside a larger
+    declared query. For high iteration counts prefer the
+    convergence-looped ``pagerank`` shape (per-iteration
+    checkpointing); this fixed-k form targets k ≤ ~4.
     """
-    deg = degrees(edges)
     seed_set = seeds.select("node").distinct()
     n_seeds = F.broadcast(seed_set.agg(F.count("*").alias("__ns")))
-
-    state = (
+    base = (
         vertices(edges)
-        .join(deg, on=[F.col("node") == F.col("src")], how="left")
-        .select("node", "deg")
+        .join(degrees(edges), on=[F.col("node") == F.col("src")], how="left")
         .join(
             seed_set.withColumn("__is_seed", F.lit(1)), on="node", how="left"
         )
         .crossJoin(n_seeds)
         .select(
             "node",
-            "deg",
+            F.col("deg").alias("out"),
             (
                 F.coalesce(F.col("__is_seed"), F.lit(0)) / F.col("__ns")
             ).alias("s"),
         )
     )
-    state = state.withColumn("rank", F.col("s"))
-
-    for _ in range(iterations):
-        dm = F.broadcast(
-            state.where(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-            )
-        )
-        contribs = (
-            edges.join(
-                state.select(
-                    F.col("node").alias("src"), "rank", F.col("deg").alias("d")
-                ),
-                on="src",
-            )
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(beta) * F.col("rank") / F.col("d")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        state = (
-            state.select("node", "deg", "s")
-            .join(contribs, on="node", how="left")
-            .crossJoin(dm)
-            .select(
-                "node",
-                "deg",
-                "s",
-                (
-                    (F.lit(1.0 - beta) + F.lit(beta) * F.col("__dm"))
-                    * F.col("s")
-                    + F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-    return state.select("node", "rank")
+    return _fixed_k(
+        edges.select("src", "dst"),
+        base,
+        F.col("s"),
+        F.lit(beta) * F.col("x") / F.col("out"),
+        a=1.0 - beta,
+        b=beta,
+        iterations=iterations,
+    ).select("node", F.col("x").alias("rank"))
 
 
 def weighted_pagerank(
@@ -659,7 +658,7 @@ def weighted_pagerank(
     with ``W(u)`` the sum of u's outgoing weights and ``dm`` the
     dangling mass — ranks sum to 1 every iteration. Fixed-iteration
     synchronous form so a k-step declared query has an exact SQL twin
-    (same pattern as ``personalized_pagerank``); swap in the
+    (same ``_fixed_k`` DAG as ``personalized_pagerank``); swap in the
     convergence-looped shape of ``pagerank`` for large k.
 
     Scale shape: one weight-sum aggregation up front (reused every
@@ -667,61 +666,81 @@ def weighted_pagerank(
     shuffle join + one partial-agg sum; the scalars (n, dm) ride along
     as broadcast single-row joins — nothing collects to the driver.
     """
-    wsum = edges.groupBy(F.col("src").alias("node")).agg(
-        F.sum(weight_col).alias("wsum")
-    )
-    verts = vertices(edges)
+    e = edges.select("src", "dst", F.col(weight_col).alias("w"))
+    wsum = e.groupBy(F.col("src").alias("node")).agg(F.sum("w").alias("out"))
+    verts = vertices(e)
     n = F.broadcast(verts.agg(F.count("*").alias("__n")))
-
-    state = (
+    base = (
         verts.join(wsum, on="node", how="left")
         .crossJoin(n)
-        .select("node", "wsum", "__n", (1.0 / F.col("__n")).alias("rank"))
+        .select("node", "out", (1.0 / F.col("__n")).alias("s"))
     )
+    return _fixed_k(
+        e,
+        base,
+        F.col("s"),
+        F.lit(beta) * F.col("x") * F.col("w") / F.col("out"),
+        a=1.0 - beta,
+        b=beta,
+        iterations=iterations,
+    ).select("node", F.col("x").alias("rank"))
 
+
+def _fixed_k(
+    edges: DataFrame,
+    base: DataFrame,
+    x0: Column,
+    contrib: Column,
+    *,
+    a: float,
+    b: float,
+    iterations: int,
+) -> DataFrame:
+    """The DAG shape of the shared recurrence: ``iterations`` unrolled
+    synchronous rounds of
+
+        x'[v] = (a + b·dm)·s[v] + Σ_{u→v} contrib
+
+    from ``x = x0``, built as ONE lazy DAG that runs no job.
+
+    ``base`` is the static vertex relation ``(node, s, *carried)``;
+    ``contrib`` is the per-edge term, evaluated over ``edges`` joined
+    to the sources' ``(src, x, *carried)``. ``dm`` is Σ x over the
+    dangling vertices (``out`` NULL, so b ≠ 0 needs an ``out`` column
+    in ``base``), a one-row aggregate riding a broadcast cross join;
+    b = 0 plans no such aggregation.
+
+    Each round's left side is the static ``base``; the previous round
+    is read once as the source side, plus once for dm when b ≠ 0. The
+    plan therefore stays linear in k for b = 0 and doubles per round
+    otherwise — fine for the declared k ≤ ~4. Returns ``(node, x)``.
+    """
+    carried = [c for c in base.columns if c not in ("node", "s")]
+    state = base.withColumn("x", x0)
     for _ in range(iterations):
-        dm = F.broadcast(
-            state.where(F.col("wsum").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-            )
-        )
-        contribs = (
+        sums = (
             edges.join(
-                state.select(
-                    F.col("node").alias("src"),
-                    "rank",
-                    F.col("wsum").alias("__ws"),
-                ),
+                state.select(F.col("node").alias("src"), "x", *carried),
                 on="src",
             )
-            .select(
-                F.col("dst").alias("node"),
-                (
-                    F.lit(beta)
-                    * F.col("rank")
-                    * F.col(weight_col)
-                    / F.col("__ws")
-                ).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(contrib).alias("__c"))
         )
-        state = (
-            state.select("node", "wsum", "__n")
-            .join(contribs, on="node", how="left")
-            .crossJoin(dm)
-            .select(
-                "node",
-                "wsum",
-                "__n",
-                (
-                    (F.lit(1.0 - beta) + F.lit(beta) * F.col("__dm"))
-                    / F.col("__n")
-                    + F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
+        nxt = base.join(sums, on="node", how="left")
+        k = F.lit(a)
+        if b:
+            dm = state.where(F.col("out").isNull()).agg(
+                F.coalesce(F.sum("x"), F.lit(0.0)).alias("__dm")
             )
+            nxt = nxt.crossJoin(F.broadcast(dm))
+            k = k + F.lit(b) * F.col("__dm")
+        state = nxt.select(
+            *base.columns,
+            (k * F.col("s") + F.coalesce(F.col("__c"), F.lit(0.0))).alias(
+                "x"
+            ),
         )
-    return state.select("node", "rank")
+    return state.select("node", "x")
 
 
 def hits(
@@ -730,7 +749,6 @@ def hits(
     *,
     delta: float | None = None,
     max_iterations: int | None = None,
-    mode: str = "auto",
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999): the other classic
     link-analysis fixed point beside PageRank. Returns
@@ -743,96 +761,27 @@ def hits(
     algebra rational, so a declared k-step query has an exact SQL
     twin; the classical L2 norm only rescales the ranking).
 
-    Two execution shapes, selected by ``mode``:
-
-    - ``"dag"``: the whole k-step computation is ONE lazy DAG — per
-      half-step one equi-join against the edge table + one
-      partial-combined aggregation, normalization constants riding
-      broadcast single-row cross joins; nothing collects to the
-      driver. The edge and vertex relations are deliberately NOT
-      cached: the DAG references each ~2k times, but Catalyst's size
-      estimates on the raw plan keep every half-step join a
-      broadcast — caching replaces them with InMemoryRelations whose
-      stats flip the joins to sort-merge, which A/B-measured 3×
-      SLOWER (17s vs 5s at sf0.1, k=2) despite the repeated upstream
-      scans. Only shape with a pure-SQL oracle twin (q124).
-    - ``"loop"``: the ``pagerank`` checkpoint pattern for large k or
-      ``delta``-convergence — edges cached once, per-iteration lazy
-      localCheckpoint truncating lineage, per-iteration scalar aggs
-      for the two L1-normalization constants and the convergence
-      metric ``L1(auth)+L1(hub)``. Cost is linear in k (the DAG shape
-      re-scans edges ~2k times and its analyzed plan grows per step).
-    - ``"auto"``: loop when ``delta`` is set or ``iterations > 2``,
-      else dag. Measured at sf0.1 (derived 20k-node graph, warm
-      best-of-2): k=2 dag 3.6s vs loop 3.1s (within noise — dag kept
-      for its collect-free single-DAG shape and SQL-twin parity),
-      k=4 dag 110.8s vs loop 5.6s, k=10 dag DNF (>560s, one run) vs
-      loop 14.7s — the unrolled plan's Catalyst analysis grows
-      super-linearly with k, so the cut sits right after the last
-      measured point where the dag is competitive.
-
-    With ``delta`` set, iterates until the combined L1 change of both
+    Runs as the checkpointed loop ``_hits_loop``: edges cached once,
+    per-round lazy localCheckpoint truncating lineage, plan-side
+    normalization constants, cost linear in k. Without ``delta`` it
+    runs ``max_iterations`` rounds (default ``iterations``); with
+    ``delta`` set, it iterates until the combined L1 change of both
     vectors is ≤ delta (capped by ``max_iterations``, default 100).
 
     Extension tier: same family as the reference's PageRank loop
     (``pageRank.py:116-145``) but the two-sided mutual-reinforcement
-    recursion.
+    recursion, so it does not run on the shared recurrence.
     """
     if delta is None and iterations < 1:
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
-    if mode not in ("auto", "dag", "loop"):
-        raise ValueError(f"hits: unknown mode {mode!r}")
-    if mode == "auto":
-        mode = "loop" if (delta is not None or iterations > 2) else "dag"
-    if mode == "loop":
-        return _hits_loop(
-            edges,
-            delta=0.0 if delta is None else delta,
-            max_iterations=(
-                max_iterations
-                if max_iterations is not None
-                else (iterations if delta is None else 100)
-            ),
-        )
-    verts = vertices(edges)
-    n = F.broadcast(verts.agg(F.count("*").alias("__n")))
-    state = verts.crossJoin(n).select(
-        "node", (F.lit(1.0) / F.col("__n")).alias("hub")
-    )
-
-    auth = None
-    for _ in range(iterations):
-        a_raw = (
-            edges.join(
-                state.select(F.col("node").alias("src"), "hub"), on="src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("__v"))
-        )
-        a_full = verts.join(a_raw, on="node", how="left").select(
-            "node", F.coalesce(F.col("__v"), F.lit(0.0)).alias("__v")
-        )
-        a_sum = F.broadcast(a_full.agg(F.sum("__v").alias("__s")))
-        auth = a_full.crossJoin(a_sum).select(
-            "node", (F.col("__v") / F.col("__s")).alias("auth")
-        )
-        h_raw = (
-            edges.join(
-                auth.select(F.col("node").alias("dst"), "auth"), on="dst"
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("__v"))
-        )
-        h_full = verts.join(h_raw, on="node", how="left").select(
-            "node", F.coalesce(F.col("__v"), F.lit(0.0)).alias("__v")
-        )
-        h_sum = F.broadcast(h_full.agg(F.sum("__v").alias("__s")))
-        state = h_full.crossJoin(h_sum).select(
-            "node", (F.col("__v") / F.col("__s")).alias("hub")
-        )
-
-    return state.join(auth, on="node", how="inner").select(
-        "node", "hub", "auth"
+    return _hits_loop(
+        edges,
+        delta=0.0 if delta is None else delta,
+        max_iterations=(
+            max_iterations
+            if max_iterations is not None
+            else (iterations if delta is None else 100)
+        ),
     )
 
 
@@ -852,8 +801,8 @@ def _hits_loop(
     shape paid three: s_a collect, s_h+l1a collect, l1h collect).
     Measured A/B in GRAPH_LOOP_AB.json. The convergence metric is
     ``L1(auth_t - auth_{t-1}) + L1(hub_t - hub_{t-1})`` (delta=0 → run
-    exactly ``max_iterations`` rounds, bit-compatible with the
-    unrolled DAG up to float summation order).
+    exactly ``max_iterations`` rounds, equal to q124's unrolled SQL
+    twin up to float summation order).
 
     Hub contributions aggregate the UNNORMALIZED authority vector: the
     hub normalization divides by the sum anyway, so the s_a factor
@@ -1051,23 +1000,25 @@ def katz_centrality(
     inverse spectral radius). Returns (node, katz).
 
     Extension tier — the damped-path cousin of PageRank that does NOT
-    divide by out-degree, so prolific linkers transfer full weight.
-    ``mode="dag"`` (auto default for fixed k): one-DAG scale shape
-    like ``hits`` — per round one edge join + one partial-combined
-    aggregation, no driver collects, no normalization scalars at all;
-    edges and vertices uncached for the same broadcast-preserving
-    reason as ``hits``. Unlike HITS (whose two-sided recursion
-    references each intermediate twice and blows up analysis
-    super-linearly — DNF at k=10), Katz references its state ONCE per
-    round, so the unrolled plan stays linear: measured at sf0.1 (warm
-    best-of-2) dag wins at every tested k — k=3 1.6s vs loop 3.4s,
-    k=10 3.2 vs 6.8, k=40 20.9 vs 24.1 (converging slopes; the
-    loop's per-round scalar-collect overhead dominates at this
-    scale). ``mode="loop"`` (auto when ``delta`` is set): cached
-    edges + lazy localCheckpoint per round + one scalar agg driving
-    the ``L1(x_t - x_{t-1}) <= delta`` stop. On a cluster where the
-    edge table exceeds page cache, the dag's k cold re-scans dominate
-    and the loop's one cached scan wins far earlier — force
+    divide by out-degree, so prolific linkers transfer full weight:
+    the shared recurrence with a = 1, b = 0, s = 1, c = α, w = 1.
+    ``mode="dag"`` (auto default for fixed k): ``_fixed_k``'s one lazy
+    DAG — per round one edge join + one partial-combined aggregation,
+    no driver collects, no scalar aggregation at all. Edges and
+    vertices stay uncached: Catalyst's size estimates on the raw plan
+    keep every round's join a broadcast, while caching swaps in
+    InMemoryRelation stats that flip the joins to sort-merge (measured
+    3× SLOWER on an unrolled HITS DAG, 17s vs 5s at sf0.1, k=2). Katz
+    references its state ONCE per round, so the unrolled plan stays
+    linear: measured at sf0.1 (warm best-of-2) dag wins at every
+    tested k — k=3 1.6s vs loop 3.4s, k=10 3.2 vs 6.8, k=40 20.9 vs
+    24.1 (converging slopes; the loop's per-round scalar-collect
+    overhead dominates at this scale). ``mode="loop"`` (auto when
+    ``delta`` is set): the shared loop body over cached edges, lazy
+    localCheckpoint per round, one scalar agg driving the
+    ``L1(x_t - x_{t-1}) <= delta`` stop. On a cluster where the edge
+    table exceeds page cache, the dag's k cold re-scans dominate and
+    the loop's one cached scan wins far earlier — force
     ``mode="loop"`` there.
     """
     if delta is None and iterations < 1:
@@ -1082,31 +1033,24 @@ def katz_centrality(
         return _katz_loop(
             edges,
             alpha,
-            delta=0.0 if delta is None else delta,
+            # no delta: never stop on L1, run exactly the rounds asked
+            delta=-math.inf if delta is None else delta,
             max_iterations=(
                 max_iterations
                 if max_iterations is not None
                 else (iterations if delta is None else 100)
             ),
         )
-    verts = vertices(edges)
-    state = verts.select("node", F.lit(0.0).alias("katz"))
-    for _ in range(iterations):
-        raw = (
-            edges.join(
-                state.select(F.col("node").alias("src"), "katz"), on="src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("katz").alias("__v"))
-        )
-        state = verts.join(raw, on="node", how="left").select(
-            "node",
-            (
-                F.lit(1.0)
-                + F.lit(alpha) * F.coalesce(F.col("__v"), F.lit(0.0))
-            ).alias("katz"),
-        )
-    return state
+    e = edges.select("src", "dst")
+    return _fixed_k(
+        e,
+        vertices(e).select("node", F.lit(1.0).alias("s")),
+        F.lit(0.0),
+        F.lit(alpha) * F.col("x"),
+        a=1.0,
+        b=0.0,
+        iterations=iterations,
+    ).select("node", F.col("x").alias("katz"))
 
 
 def _katz_loop(
@@ -1116,16 +1060,16 @@ def _katz_loop(
     delta: float,
     max_iterations: int,
 ) -> DataFrame:
-    """Convergence-loop Katz on the ``pagerank`` checkpoint pattern:
+    """Convergence-loop Katz on the shared loop body (``_iterate``):
     cached SRC-PARTITIONED edges (per-round exchanges move only the
     vertex-sized state, never the edge table — Catalyst would
     otherwise broadcast the edges each round, since the checkpointed
     state has unknown stats), per round ONE job (edge join + partial
     agg + the L1 scalar, materializing the lazy localCheckpoint),
     lineage truncated every round; small graphs get the PageRank
-    loop's AQE-off + vertex-sized partition tuning. delta=0 → exactly
-    ``max_iterations`` rounds, matching the unrolled DAG up to float
-    summation order."""
+    loop's AQE-off + vertex-sized partition tuning. delta=-inf →
+    exactly ``max_iterations`` rounds, matching the unrolled DAG up to
+    float summation order."""
     spark = edges.sparkSession
     base = edges.select("src", "dst")
     verts = vertices(base).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1139,48 +1083,24 @@ def _katz_loop(
         # edge layout and vertex relation pinned for the session lifetime
         # (same discipline as the HITS loop).
         try:
-            state = verts.select("node", F.lit(0.0).alias("katz"))
-            # cadence 1 + a metric every round: the shared primitive's
-            # lazy checkpoint materializes inside the L1 aggregation —
-            # the loop never persists a generation, so the shared
-            # ``cached`` list stays empty and the sweep is a no-op
-            # (graph/loop.py VertexLoop).
-            loop = VertexLoop([], checkpoint_every=1)
-            iteration = 0
-            while iteration < max_iterations:
-                iteration += 1
-                raw = (
-                    e.join(
-                        state.select(
-                            F.col("node").alias("src"), "katz"
-                        ).repartition(parts, "src"),
-                        on="src",
-                    )
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.sum("katz").alias("__v"))
-                )
-                nxt = (
-                    state.select("node", F.col("katz").alias("__old"))
-                    .join(raw, on="node", how="left")
-                    .select(
-                        "node",
-                        "__old",
-                        (
-                            F.lit(1.0)
-                            + F.lit(alpha)
-                            * F.coalesce(F.col("__v"), F.lit(0.0))
-                        ).alias("katz"),
-                    )
-                )
-                nxt, row = loop.advance(
-                    nxt,
-                    metrics={
-                        "l1": F.sum(F.abs(F.col("katz") - F.col("__old")))
-                    },
-                )
-                state = nxt.select("node", "katz")
-                if delta > 0 and (row["l1"] or 0.0) <= delta:
-                    break
+            # cadence 1 + a metric every round: the lazy checkpoint
+            # materializes inside the L1 aggregation — the loop never
+            # persists a generation, so its ``cached`` list stays empty.
+            state, _, _ = _iterate(
+                VertexLoop([], checkpoint_every=1),
+                e,
+                verts.select("node", F.lit(0.0).alias("katz")),
+                None,
+                value="katz",
+                senders=F.lit(True),
+                contrib=F.lit(alpha) * F.col("katz"),
+                const=lambda _: 1.0,
+                metrics={},
+                strategy="shuffle",
+                parts=parts,
+                delta=delta,
+                max_iterations=max_iterations,
+            )
             return materialize_or_release(
                 state.persist(StorageLevel.MEMORY_AND_DISK)
             )

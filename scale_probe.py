@@ -117,7 +117,7 @@ def main() -> None:
     from pagerank_spark.graph.pagerank import hits
 
     t0 = time.perf_counter()
-    hdf = hits(e, iterations=4, mode="loop")
+    hdf = hits(e, iterations=4)
     hdf.write.format("noop").mode("overwrite").save()
     results["hits_loop_4it"] = round(time.perf_counter() - t0, 2)
     hdf.unpersist()

@@ -92,16 +92,11 @@ def test_pagerank_releases_on_failure(spark):
 
 
 def test_hits_releases_on_failure(spark):
-    # mode="loop" — the auto cut picks the LAZY unrolled DAG at small
-    # k, which persists nothing (and so cannot leak); the convergence
-    # loop is the shape with pinned edge layouts to release.
+    # The HITS loop pins two edge layouts and the vertex set.
     from pagerank_spark.graph.pagerank import hits
 
     _expect_failure_then_drain(
-        spark,
-        lambda: hits(
-            _poisoned_edges(spark), max_iterations=3, mode="loop"
-        ),
+        spark, lambda: hits(_poisoned_edges(spark), max_iterations=3)
     )
 
 

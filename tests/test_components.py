@@ -62,14 +62,26 @@ def test_empty_graph_terminates(spark):
 
 
 def test_triangle_count_known_graph(spark):
-    from pagerank_spark.graph.components import triangle_count
+    from pagerank_spark.graph.components import (
+        triangle_count,
+        triangles,
+        undirected_edges,
+    )
 
     # K4 minus one edge: triangles {1,2,3} and {1,2,4} only.
     edges = [(1, 2), (2, 3), (3, 1), (1, 4), (4, 2), (2, 1), (3, 3)]
-    out = triangle_count(
-        spark.createDataFrame(edges, "src LONG, dst LONG")
-    ).collect()
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    out = triangle_count(df).collect()
     assert out[0]["n_triangles"] == 2
+    # The shared pieces: the self-loop and the 2->1 duplicate drop out,
+    # every edge keeps src < dst, every triangle comes once as a < b < c.
+    und = undirected_edges(df)
+    assert sorted(map(tuple, und.collect())) == [
+        (1, 2), (1, 3), (1, 4), (2, 3), (2, 4)
+    ]
+    assert sorted(map(tuple, triangles(und).collect())) == [
+        (1, 2, 3), (1, 2, 4)
+    ]
 
 
 def test_aggregate_messages_primitive(spark):
@@ -276,18 +288,46 @@ def test_weighted_sssp_hop_bound(spark):
     assert three[3] == 3.0
 
 
+def _weighted_pagerank_oracle(rows, beta=0.85, iterations=4):
+    # Direct driver-side computation of the same fixed-point steps.
+    nodes = sorted({s for s, _, _ in rows} | {d for _, d, _ in rows})
+    wsum: dict[int, float] = {}
+    for s, _, w in rows:
+        wsum[s] = wsum.get(s, 0.0) + w
+    rank = dict.fromkeys(nodes, 1.0 / len(nodes))
+    for _ in range(iterations):
+        dm = sum(rank[n] for n in nodes if n not in wsum)
+        new = dict.fromkeys(nodes, (1 - beta + beta * dm) / len(nodes))
+        for s, d, w in rows:
+            new[d] += beta * rank[s] * w / wsum[s]
+        rank = new
+    return rank
+
+
 def test_weighted_pagerank_sums_to_one_and_prefers_heavy_edges(spark):
     from pagerank_spark.graph.pagerank import weighted_pagerank
 
     # 1 -> 2 (w=9), 1 -> 3 (w=1): node 2 must outrank node 3.
-    edges = spark.createDataFrame(
-        [(1, 2, 9.0), (1, 3, 1.0), (2, 1, 1.0), (3, 1, 1.0)],
-        "src long, dst long, w double",
-    )
+    rows = [(1, 2, 9.0), (1, 3, 1.0), (2, 1, 1.0), (3, 1, 1.0)]
+    edges = spark.createDataFrame(rows, "src long, dst long, w double")
     ranks = {r["node"]: r["rank"]
              for r in weighted_pagerank(edges, iterations=4).collect()}
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
     assert ranks[2] > ranks[3]
+    # Every node equals the oracle, here and on a graph with a dangling
+    # vertex (4), whose mass returns uniformly.
+    want = _weighted_pagerank_oracle(rows)
+    assert set(ranks) == set(want)
+    for n, r in want.items():
+        assert ranks[n] == pytest.approx(r, abs=1e-12), n
+    rows = [(1, 2, 9.0), (1, 3, 1.0), (2, 1, 1.0), (3, 4, 2.0)]
+    edges = spark.createDataFrame(rows, "src long, dst long, w double")
+    ranks = {r["node"]: r["rank"]
+             for r in weighted_pagerank(edges, iterations=4).collect()}
+    want = _weighted_pagerank_oracle(rows)
+    assert set(ranks) == set(want)
+    for n, r in want.items():
+        assert ranks[n] == pytest.approx(r, abs=1e-12), n
 
 
 def test_local_clustering_triangle_plus_pendant(spark):

@@ -47,17 +47,24 @@ def _relation(spark):
     )
 
 
-def test_svd_topk_matches_numpy(spark):
+@pytest.fixture(scope="module")
+def svd40(spark):
+    """``svd_topk(_relation, rank=2, iterations=40)`` as ``(rows,
+    lams)``, run once for the tests that check that same result."""
+    v, lams = svd_topk(_relation(spark), rank=2, iterations=40)
+    try:
+        return v.collect(), lams
+    finally:
+        v.unpersist()
+
+
+def test_svd_topk_matches_numpy(svd40):
     """40 power rounds on a gapped 6×5 matrix: singular values within
     1e-6 of NumPy's, right singular vectors aligned to |cos| > 1-1e-6
     (sign is iteration-determined, so compare up to sign)."""
     m = np.array(M_ROWS)
     _, s_np, vh_np = np.linalg.svd(m)
-    v, lams = svd_topk(_relation(spark), rank=2, iterations=40)
-    try:
-        rows = v.collect()
-    finally:
-        v.unpersist()
+    rows, lams = svd40
     for k in range(2):
         assert math.sqrt(lams[k]) == pytest.approx(s_np[k], abs=1e-6)
         vk = np.zeros(5)
@@ -357,7 +364,7 @@ def test_checkpoint_reset_stats_caps_join_size_estimate(spark):
     assert sorted(r["value"] for r in reset.collect()) == [9.0, 32.0]
 
 
-def test_svd_delta_stopping_matches_fixed_rounds(spark):
+def test_svd_delta_stopping_matches_fixed_rounds(spark, svd40):
     """delta=0.0 stops a component when two consecutive 9dp-rounded
     iterates are identical — an exact fixed point, so any LONGER
     fixed-round run returns bit-identical vectors. Pins: early stop
@@ -371,7 +378,7 @@ def test_svd_delta_stopping_matches_fixed_rounds(spark):
     v_delta, lams_delta = svd_topk(
         m, rank=2, iterations=40, delta=0.0, iterations_out=out
     )
-    v_fixed, lams_fixed = svd_topk(m, rank=2, iterations=40)
+    rows_fixed, lams_fixed = svd40  # svd_topk(m, rank=2, iterations=40)
     try:
         assert len(out) == 2
         assert all(1 <= k <= 40 for k in out)
@@ -379,15 +386,12 @@ def test_svd_delta_stopping_matches_fixed_rounds(spark):
         got = {
             (r["node"], r["component"]): r["x"] for r in v_delta.collect()
         }
-        ref = {
-            (r["node"], r["component"]): r["x"] for r in v_fixed.collect()
-        }
+        ref = {(r["node"], r["component"]): r["x"] for r in rows_fixed}
         assert got == ref  # bit-identical trajectories
         for a, b in zip(lams_delta, lams_fixed):
             assert a == pytest.approx(b, rel=1e-12)
     finally:
         v_delta.unpersist()
-        v_fixed.unpersist()
 
 
 def test_sgns_warm_start_continuation_exact(spark):

@@ -39,7 +39,7 @@ def _pagerank(edges, tune):
 def _hits(edges, tune):
     from pagerank_spark.graph.pagerank import hits
 
-    hits(edges, max_iterations=3, mode="loop").unpersist()
+    hits(edges, max_iterations=3).unpersist()
 
 
 def _katz(edges, tune):

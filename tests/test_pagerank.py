@@ -165,31 +165,41 @@ class TestProperties:
         import os
 
         ckpt = tmp_path / "ckpt"
-        spark.sparkContext.setCheckpointDir(str(ckpt))
-        edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]
-        a = _ranks_dict(
-            pagerank(_edges_df(spark, edges), reliable_checkpoint=False)
-        )
-        b = _ranks_dict(
-            pagerank(
-                _edges_df(spark, edges),
-                reliable_checkpoint=True,
-                checkpoint_every=2,
+        sc = spark.sparkContext
+        prior = sc._jsc.sc().checkpointDir()
+        sc.setCheckpointDir(str(ckpt))
+        try:
+            edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]
+            a = _ranks_dict(
+                pagerank(_edges_df(spark, edges), reliable_checkpoint=False)
             )
-        )
-        for node, rank in a.items():
-            assert b[node] == pytest.approx(rank, abs=1e-12)
+            b = _ranks_dict(
+                pagerank(
+                    _edges_df(spark, edges),
+                    reliable_checkpoint=True,
+                    checkpoint_every=2,
+                )
+            )
+            for node, rank in a.items():
+                assert b[node] == pytest.approx(rank, abs=1e-12)
 
-        # "auto" (the default) must pick the fault-tolerant mode when a
-        # checkpoint dir is configured: new RDD checkpoint files appear.
-        def n_ckpt_files():
-            return sum(len(fs) for _, _, fs in os.walk(ckpt))
+            # "auto" (the default) must pick the fault-tolerant mode when
+            # a checkpoint dir is configured: new RDD checkpoint files
+            # appear.
+            def n_ckpt_files():
+                return sum(len(fs) for _, _, fs in os.walk(ckpt))
 
-        before = n_ckpt_files()
-        c = _ranks_dict(pagerank(_edges_df(spark, edges), checkpoint_every=2))
-        assert n_ckpt_files() > before
-        for node, rank in a.items():
-            assert c[node] == pytest.approx(rank, abs=1e-12)
+            before = n_ckpt_files()
+            c = _ranks_dict(
+                pagerank(_edges_df(spark, edges), checkpoint_every=2)
+            )
+            assert n_ckpt_files() > before
+            for node, rank in a.items():
+                assert c[node] == pytest.approx(rank, abs=1e-12)
+        finally:
+            # A set dir turns "auto" reliable in every later pagerank()
+            # of the session: put the prior setting (none) back.
+            getattr(sc._jsc.sc(), "checkpointDir_$eq")(prior)
 
     def test_shuffle_strategy_same_result(self, spark):
         edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (5, 1)]
@@ -287,7 +297,9 @@ def test_hits_hand_graph(spark):
     from pagerank_spark.graph.pagerank import hits
 
     e = _edges_df(spark, [(1, 4), (2, 4), (3, 4), (4, 5)])
-    out = {r["node"]: r for r in hits(e, iterations=2).collect()}
+    res = hits(e, iterations=2)
+    out = {r["node"]: r for r in res.collect()}
+    res.unpersist()
     assert len(out) == 5
     import pytest as _pt
 
@@ -315,22 +327,33 @@ def test_katz_truncated_series(spark):
     assert out[3] == 1.0 + a * (1.0 + a)      # length-1 and length-2
 
 
-def test_hits_loop_matches_dag(spark):
-    # Loop engine == unrolled DAG at the same iteration count (the
-    # auto cut flips hits to the loop past 2 iterations).
+def test_hits_loop_matches_oracle(spark):
+    # The loop against a pure-Python L1-normalized HITS at the same
+    # iteration count (the unrolled algebra of q124's SQL twin).
     from pagerank_spark.graph.pagerank import hits
 
     random.seed(7)
     edges = list({(random.randrange(30), random.randrange(30))
                   for _ in range(80)})
-    e = _edges_df(spark, edges)
-    dag = {r["node"]: r for r in hits(e, iterations=3, mode="dag").collect()}
-    loop = hits(e, iterations=3, mode="loop")
+    nodes = {s for s, _ in edges} | {d for _, d in edges}
+    hub = dict.fromkeys(nodes, 1.0 / len(nodes))
+    for _ in range(3):
+        auth = dict.fromkeys(nodes, 0.0)
+        for s, d in edges:
+            auth[d] += hub[s]
+        total = sum(auth.values())
+        auth = {v: x / total for v, x in auth.items()}
+        hub = dict.fromkeys(nodes, 0.0)
+        for s, d in edges:
+            hub[s] += auth[d]
+        total = sum(hub.values())
+        hub = {v: x / total for v, x in hub.items()}
+    loop = hits(_edges_df(spark, edges), iterations=3)
     got = {r["node"]: r for r in loop.collect()}
-    assert set(got) == set(dag)
-    for node in dag:
-        assert got[node]["hub"] == pytest.approx(dag[node]["hub"], abs=1e-9)
-        assert got[node]["auth"] == pytest.approx(dag[node]["auth"], abs=1e-9)
+    assert set(got) == nodes
+    for node in nodes:
+        assert got[node]["hub"] == pytest.approx(hub[node], abs=1e-12)
+        assert got[node]["auth"] == pytest.approx(auth[node], abs=1e-12)
     loop.unpersist()
 
 
@@ -374,6 +397,33 @@ def test_katz_loop_matches_dag_and_converges(spark):
     conv.unpersist()
 
 
+def test_fixed_k_builders_run_no_job(spark):
+    # Personalized and weighted PageRank and Katz's DAG mode only build
+    # a lazy plan: no Spark job runs until the caller acts on it.
+    from pagerank_spark.graph.pagerank import (
+        katz_centrality,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    e = _edges_df(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
+    w = e.withColumn("w", F.lit(1.0))
+    seeds = spark.createDataFrame([(1,)], "node LONG")
+    sc = spark.sparkContext
+    sc.setJobGroup("fixed-k-build", "fixed-k-build")
+    try:
+        built = [
+            personalized_pagerank(e, seeds, iterations=3),
+            weighted_pagerank(w, iterations=3),
+            katz_centrality(e, iterations=3, mode="dag"),
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("fixed-k-build")) == []
+    assert [df.count() for df in built] == [4, 4, 4]
+
+
 def test_hits_katz_validate_iterations(spark):
     from pagerank_spark.graph.pagerank import hits, katz_centrality
 
@@ -383,4 +433,4 @@ def test_hits_katz_validate_iterations(spark):
     with pytest.raises(ValueError, match="iterations"):
         katz_centrality(e, iterations=-1)
     with pytest.raises(ValueError, match="mode"):
-        hits(e, iterations=2, mode="nope")
+        katz_centrality(e, iterations=2, mode="nope")

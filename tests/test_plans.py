@@ -8,20 +8,11 @@ shuffles, and no accidental cartesian products.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 
-from tests.test_oracle_parity import ENTRY
+from tests.test_oracle_parity import ENTRY, plan
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_q12_broadcasts_dimensions(spark):
@@ -787,28 +778,6 @@ def test_q215_kaplan_meier_windows_over_times_not_units(spark):
     assert "Window" in p
     assert "BatchEvalPython" not in p
     assert "CartesianProduct" not in p
-
-
-def test_all_declared_queries_no_cartesian_no_rowpython(spark):
-    """Blanket plan-quality gate over the FULL declared surface: no
-    query may plan a CartesianProduct (unbounded pair blow-up) or a
-    BatchEvalPython (row-at-a-time Python UDF) — the two plan nodes
-    that are never acceptable at 100 TB. Arrow-batched Python
-    (ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas) stays
-    allowed where declared; BroadcastNestedLoopJoin is not gated here
-    because two queries use it deliberately (q28's exact-ANN contract,
-    q94's banded theta join) and their own plan tests pin that choice.
-    ~2 min: builds every plan at sf0.01 without executing the queries
-    (beyond the few bounded scalar collects inside operator setup)."""
-    offenders = {}
-    for name, fn in sorted(ENTRY.queries().items()):
-        p = plan(fn(spark, SF_DIR))
-        marks = [
-            m for m in ("CartesianProduct", "BatchEvalPython") if m in p
-        ]
-        if marks:
-            offenders[name] = marks
-    assert not offenders, offenders
 
 
 def test_q236_q237_media_walks_zero_shuffle_arrow_only(spark):

@@ -12,6 +12,7 @@ from pagerank_spark.streaming.stateful import (
     running_user_stats_batch,
     running_user_stats_stream,
 )
+from tests.stream_wait import process_all_available
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -69,7 +70,7 @@ def test_stateful_stream_converges_to_batch(spark, event_dir):
         .start()
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         rows = spark.sql("SELECT * FROM user_state_test").collect()
     finally:
         q.stop()

@@ -16,6 +16,7 @@ from pagerank_spark.streaming.stateful2 import (
     user_profile_batch,
     user_profile_stream,
 )
+from tests.stream_wait import process_all_available
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -86,7 +87,7 @@ def test_tws_stream_converges_to_batch(spark, event_dir):
             .start()
         )
         try:
-            q.processAllAvailable()
+            process_all_available(q)
             rows = spark.sql("SELECT * FROM tws_profile_test").collect()
         finally:
             q.stop()
@@ -390,7 +391,7 @@ def test_tws_event_time_timers_and_watermark(spark, tmp_path):
             .start()
         )
         try:
-            q.processAllAvailable()
+            process_all_available(q)
             rows = spark.sql("SELECT * FROM tws_event_time").collect()
         finally:
             q.stop()

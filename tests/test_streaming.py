@@ -23,6 +23,7 @@ from pagerank_spark.streaming import (
     sliding_window_agg,
     tumbling_window_agg,
 )
+from tests.stream_wait import process_all_available
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -88,7 +89,7 @@ def test_stream_matches_batch_twin(spark, event_dir):
     stream = read_event_stream(spark, event_dir, max_files_per_trigger=1)
     q = run_stream_to_memory(stream, "stream_tumbling_test")
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         got = _final_per_key(spark, "stream_tumbling_test")
     finally:
         q.stop()
@@ -133,7 +134,7 @@ def test_watermark_bounds_state(spark, event_dir):
     stream = read_event_stream(spark, event_dir, max_files_per_trigger=1)
     q = run_stream_to_memory(stream, "stream_watermark_test", watermark="1 hour")
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         emitted = spark.sql(
             "SELECT count(DISTINCT window_id, event_type) AS n "
             "FROM stream_watermark_test"
@@ -169,7 +170,7 @@ def test_dedup_stream_drops_in_watermark_duplicates(spark, tmp_path):
         .start()
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         got = spark.sql(
             "SELECT COUNT(*) AS n, COUNT(DISTINCT event_id) AS d "
             "FROM dedup_stream_test"
@@ -216,7 +217,7 @@ def test_stream_stream_interval_join_matches_batch_twin(spark, event_dir):
         .start()
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         got = {
             (r["event_id"], r["r_ts"], r["r_value"])
             for r in spark.sql("SELECT * FROM ss_join_test").collect()
@@ -237,7 +238,7 @@ def test_foreachbatch_parquet_sink(spark, event_dir, tmp_path):
     ckpt = str(tmp_path / "fb_ckpt")
     q = stream_to_parquet_foreachbatch(agg, out, ckpt)
     try:
-        q.processAllAvailable()
+        process_all_available(q)
     finally:
         q.stop()
 
@@ -296,7 +297,7 @@ def test_stream_static_enrichment_matches_batch_join(spark, event_dir):
         .start()
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         got = sorted(
             (r["event_id"], r["tier"])
             for r in spark.sql("SELECT * FROM enrich_test").collect()
@@ -344,7 +345,7 @@ def test_stream_upsert_into_versioned_table(spark, event_dir, tmp_path):
         agg, root, str(tmp_path / "ckpt"), keys=["window_id", "event_type"]
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
     finally:
         q.stop()
 
@@ -400,7 +401,7 @@ def test_curate_stream_matches_batch(spark, tmp_path):
         stream, root, str(tmp_path / "ckpt"), min_words=20
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
     finally:
         q.stop()
 
@@ -436,7 +437,7 @@ def test_cms_stream_matches_batch_sketch(spark, tmp_path):
         depth=4,
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
     finally:
         q.stop()
 
@@ -522,7 +523,7 @@ def test_stream_stream_left_outer_interval_join(spark, event_dir):
         .start()
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         rows = spark.sql("SELECT * FROM ss_louter_test").collect()
     finally:
         q.stop()
@@ -577,7 +578,7 @@ def test_ahash_stream_matches_batch(spark, tmp_path):
         .start()
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
     finally:
         q.stop()
     got = {
@@ -637,7 +638,7 @@ def test_session_stream_matches_batch_twin(spark, event_dir):
         stream, "stream_session_test", watermark="1 hour"
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
         rows = spark.sql(
             "SELECT user_id, session_start, n_events, sum_value "
             "FROM stream_session_test"
@@ -692,7 +693,7 @@ def test_hll_stream_matches_batch_registers(spark, tmp_path):
         group_cols=["g"],
     )
     try:
-        q.processAllAvailable()
+        process_all_available(q)
     finally:
         q.stop()
 
@@ -718,3 +719,32 @@ def test_hll_stream_matches_batch_registers(spark, tmp_path):
         ).collect()
     }
     assert est_stream == est_batch
+
+
+def test_stream_wait_fails_one_test_on_a_hang():
+    # A drain that never returns stops its query and fails only the
+    # calling test; an error raised by the drain reaches the test.
+    import threading
+
+    class Hung:
+        name = "hung"
+
+        def __init__(self):
+            self.stopped = threading.Event()
+
+        def processAllAvailable(self):
+            self.stopped.wait()
+
+        def stop(self):
+            self.stopped.set()
+
+    class Broken(Hung):
+        def processAllAvailable(self):
+            raise RuntimeError("boom")
+
+    q = Hung()
+    with pytest.raises(pytest.fail.Exception, match="did not drain"):
+        process_all_available(q, timeout=0.2)
+    assert q.stopped.is_set()
+    with pytest.raises(RuntimeError, match="boom"):
+        process_all_available(Broken(), timeout=5)
