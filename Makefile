@@ -34,10 +34,11 @@ gate:
 
 # The tier-1 command (ROADMAP.md): no -x, so an error (e.g. TestGolden
 # without the external WikiData file) does not stop the rest of the
-# suite; the timeout bounds a hang.
+# suite; the timeout bounds a hang. --durations=10 only reports the
+# slowest tests, so every full run shows where the time budget goes.
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
-		timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+		timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider --durations=10
 
 # ROUND pins the BENCH_LOCAL_r{N}.json name explicitly (r9 ADVICE:
 # the max(CORRECTNESS_r*)+1 inference mislabels a bench run executed

@@ -31,6 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pagerank_spark.graph.loop import Pins
 from pagerank_spark.graph.pagerank import pagerank, top_k
 from pagerank_spark.io import csv_download_payload, read_edge_list
 from pagerank_spark.operators.relational import (
@@ -214,7 +215,7 @@ def _build_payload_body(
             iterations=res.iterations,
         )
     finally:
-        res.ranks.unpersist()
+        Pins().release(res.ranks)
 
 
 def run_streamlit_app(edge_path: str) -> None:  # pragma: no cover

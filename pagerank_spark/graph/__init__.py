@@ -4,7 +4,7 @@ from pagerank_spark.graph.components import (
     shortest_paths,
     triangle_count,
 )
-from pagerank_spark.graph.loop import VertexLoop
+from pagerank_spark.graph.loop import Pins, VertexLoop
 from pagerank_spark.graph.pagerank import (
     PageRankResult,
     compare_teleports,
@@ -16,6 +16,7 @@ from pagerank_spark.graph.pagerank import (
 
 __all__ = [
     "PageRankResult",
+    "Pins",
     "VertexLoop",
     "aggregate_messages",
     "connected_components",

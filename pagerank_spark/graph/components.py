@@ -14,13 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from pagerank_spark.graph.loop import (
-    VertexLoop,
-    loop_conf,
-    materialize_or_release,
-)
+from pagerank_spark.graph.loop import Pins, VertexLoop, loop_conf
 from pagerank_spark.graph.pagerank import vertices
 
 # Below this bound on the loop's STATE rows (vertex-table-sized; the
@@ -172,31 +167,20 @@ def connected_components(
         if algorithm == "auto":
             budget = min(LABEL_FALLBACK_ROUNDS, max_iterations)
             try:
-                return _connected_components_impl(
-                    edges, budget, checkpoint_every, broadcast_state=small
-                )
+                return _cc_rounds(edges, budget, checkpoint_every, small)
             except RuntimeError:
                 # label budget exhausted: high-diameter component —
                 # restart with the diameter-independent contraction
-                return _connected_components_star(
-                    edges, max_iterations, broadcast_state=small
-                )
+                return _star_rounds(edges, max_iterations, small)
         if algorithm == "star":
-            return _connected_components_star(
-                edges, max_iterations, broadcast_state=small
-            )
-        return _connected_components_impl(
-            edges,
-            max_iterations,
-            checkpoint_every,
-            broadcast_state=small,
-        )
+            return _star_rounds(edges, max_iterations, small)
+        return _cc_rounds(edges, max_iterations, checkpoint_every, small)
 
 
-def _connected_components_star(
+def _star_rounds(
     edges: DataFrame,
     max_iterations: int,
-    broadcast_state: bool = False,
+    broadcast_state: bool,
 ) -> DataFrame:
     """Alternating large-star/small-star (Kiveris et al.): contract the
     edge list toward a star forest where every node points at its
@@ -214,211 +198,168 @@ def _connected_components_star(
     round's edge set with an anti join (exact, order-free); a stable
     set IS the star forest. Output matches the label algorithm exactly:
     (node, component) over the full vertex set, component = min id.
+    Every pin is eager: each is read by two plan branches.
     """
-    verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    # try/finally: a mid-round job failure must still release the
-    # vertex cache (the loop-body split pagerank.py's HITS/Katz use).
-    try:
-        return _star_rounds(edges, verts, max_iterations, broadcast_state)
-    finally:
-        verts.unpersist()
-
-
-def _star_rounds(
-    edges: DataFrame,
-    verts: DataFrame,
-    max_iterations: int,
-    broadcast_state: bool,
-) -> DataFrame:
-    # child → smaller parent orientation
-    cur = (
-        undirected_edges(edges)
-        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-
-    iteration = 0
-    while iteration < max_iterations:
-        iteration += 1
-        sym = cur.unionAll(
-            cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    with Pins() as pins:
+        verts = pins.hold(vertices(edges))
+        # child → smaller parent orientation
+        cur = pins.truncate(
+            undirected_edges(edges).select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
+            ),
+            eager=True,
         )
-        # m(u) = min over neighborhood incl. self.
-        mn = sym.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-        big = (
-            sym.where(F.col("dst") > F.col("src"))
-            .join(_bc(mn, broadcast_state), on="src")
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # small-star over the (child → smaller parent) list.
-        pm = big.groupBy("src").agg(F.min("dst").alias("m"))
-        small_edges = (
-            big.join(_bc(pm, broadcast_state), on="src")
-            .where(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionAll(
-                pm.select(F.col("src"), F.col("m").alias("dst"))
+
+        iteration = 0
+        while iteration < max_iterations:
+            iteration += 1
+            sym = cur.unionAll(
+                cur.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
             )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            small_edges.join(cur, on=["src", "dst"], how="left_anti")
-            .unionAll(
-                cur.join(small_edges, on=["src", "dst"], how="left_anti")
+            # m(u) = min over neighborhood incl. self.
+            mn = sym.groupBy("src").agg(
+                F.least(F.min("dst"), F.first("src")).alias("m")
             )
-            .limit(1)
-            .count()
-        )
-        cur = small_edges
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            "star contraction did not converge within "
-            f"max_iterations={max_iterations} — unexpected (rounds are "
-            "O(log² component size)); raise max_iterations"
-        )
+            big = pins.truncate(
+                sym.where(F.col("dst") > F.col("src"))
+                .join(_bc(mn, broadcast_state), on="src")
+                .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+                .where(F.col("src") != F.col("dst"))
+                .distinct(),
+                eager=True,
+            )
+            # small-star over the (child → smaller parent) list.
+            pm = big.groupBy("src").agg(F.min("dst").alias("m"))
+            small_edges = pins.truncate(
+                big.join(_bc(pm, broadcast_state), on="src")
+                .where(F.col("dst") != F.col("m"))
+                .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+                .unionAll(pm.select(F.col("src"), F.col("m").alias("dst")))
+                .where(F.col("src") != F.col("dst"))
+                .distinct(),
+                eager=True,
+            )
+            changed = (
+                small_edges.join(cur, on=["src", "dst"], how="left_anti")
+                .unionAll(
+                    cur.join(small_edges, on=["src", "dst"], how="left_anti")
+                )
+                .limit(1)
+                .count()
+            )
+            pins.sweep(small_edges)  # this round's cur and big
+            cur = small_edges
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                "star contraction did not converge within "
+                f"max_iterations={max_iterations} — unexpected (rounds are "
+                "O(log² component size)); raise max_iterations"
+            )
 
-    return materialize_or_release(
-        verts.join(
-            cur.select(F.col("src").alias("node"), F.col("dst").alias("__c")),
-            on="node",
-            how="left",
+        return pins.result(
+            verts.join(
+                cur.select(
+                    F.col("src").alias("node"), F.col("dst").alias("__c")
+                ),
+                on="node",
+                how="left",
+            ).select(
+                "node", F.coalesce("__c", F.col("node")).alias("component")
+            )
         )
-        .select(
-            "node", F.coalesce("__c", F.col("node")).alias("component")
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-
-def _connected_components_impl(
-    edges: DataFrame,
-    max_iterations: int,
-    checkpoint_every: int,
-    broadcast_state: bool = False,
-) -> DataFrame:
-    und = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    und = und.persist(StorageLevel.MEMORY_AND_DISK)
-    # Shared-list + try/finally: the rounds body appends every persisted
-    # state generation to ``cached`` (and clears it in place at each
-    # checkpoint), so a mid-round job failure releases the edge cache
-    # AND whatever generations were pinned when it died. unpersist on
-    # an already-released frame is a no-op, so the sweep composes with
-    # the body's own in-loop releases; the returned frame is never in
-    # the list.
-    cached: list[DataFrame] = []
-    try:
-        return _cc_rounds(
-            und, edges, max_iterations, checkpoint_every,
-            broadcast_state, cached,
-        )
-    finally:
-        for df in cached:
-            df.unpersist()
-        und.unpersist()
 
 
 def _cc_rounds(
-    und: DataFrame,
     edges: DataFrame,
     max_iterations: int,
     checkpoint_every: int,
     broadcast_state: bool,
-    cached: list,
 ) -> DataFrame:
-    state = (
-        vertices(edges)
-        .withColumn("comp", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cached.append(state)
-
-    loop = VertexLoop(cached, checkpoint_every=checkpoint_every)
-    iteration = 0
-    while iteration < max_iterations:
-        iteration += 1
-        nbr_min = aggregate_messages(
-            und,
-            state,
-            msg=F.col("comp"),
-            agg=F.min("__msg"),
-            broadcast_state=broadcast_state,
-        )
-        # NOTE on pointer jumping: measured twice, rejected twice.
-        # (a) Small graphs (sf0.01): halves iterations (30 → 14) but
-        # nearly triples per-iteration cost — net LOSS (18.5s → 26.5s).
-        # (b) Long-diameter graphs: a post-round comp←comp[comp]
-        # self-join on the lazily checkpointed state re-derives the
-        # doubly-referenced chain (geometric blowup, 2.2s → 200s/round
-        # by round 23), and the safe in-plan variant against the
-        # PREVIOUS state only shortcuts by a constant factor — path
-        # components still need ~diameter rounds. The principled
-        # O(log²) alternative is large-star/small-star (Kiveris et
-        # al.), a different loop body; until that's needed, the cap
-        # below raises instead of silently returning non-converged
-        # labels.
-        new_state = (
-            state.select("node", F.col("comp").alias("old_comp"))
-            .join(_bc(nbr_min, broadcast_state), on="node", how="left")
-            .select(
-                "node",
-                "old_comp",
-                F.least(
-                    F.col("old_comp"),
-                    F.coalesce(F.col("msg_agg"), F.col("old_comp")),
-                ).alias("comp"),
+    with VertexLoop(checkpoint_every=checkpoint_every) as loop:
+        und = loop.hold(
+            edges.select("src", "dst").unionAll(
+                edges.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
             )
         )
-        # Lifecycle via the shared engine primitive (graph/loop.py
-        # VertexLoop): lazy checkpoint on cadence materializing inside
-        # the one convergence-check aggregation, persist generations
-        # tracked before it, earlier generations swept after it.
-        # sum() over an empty relation is NULL — treat as converged.
-        new_state, row = loop.advance(
-            new_state,
-            metrics={
-                "n": F.sum(
-                    F.when(
-                        F.col("comp") != F.col("old_comp"), 1
-                    ).otherwise(0)
+        state = loop.persist(
+            vertices(edges).withColumn("comp", F.col("node"))
+        )
+        iteration = 0
+        while iteration < max_iterations:
+            iteration += 1
+            nbr_min = aggregate_messages(
+                und,
+                state,
+                msg=F.col("comp"),
+                agg=F.min("__msg"),
+                broadcast_state=broadcast_state,
+            )
+            # NOTE on pointer jumping: measured twice, rejected twice.
+            # (a) Small graphs (sf0.01): halves iterations (30 → 14) but
+            # nearly triples per-iteration cost — net LOSS (18.5s → 26.5s).
+            # (b) Long-diameter graphs: a post-round comp←comp[comp]
+            # self-join on the lazily checkpointed state re-derives the
+            # doubly-referenced chain (geometric blowup, 2.2s → 200s/round
+            # by round 23), and the safe in-plan variant against the
+            # PREVIOUS state only shortcuts by a constant factor — path
+            # components still need ~diameter rounds. The principled
+            # O(log²) alternative is large-star/small-star (Kiveris et
+            # al.), a different loop body; until that's needed, the cap
+            # below raises instead of silently returning non-converged
+            # labels.
+            new_state = (
+                state.select("node", F.col("comp").alias("old_comp"))
+                .join(_bc(nbr_min, broadcast_state), on="node", how="left")
+                .select(
+                    "node",
+                    "old_comp",
+                    F.least(
+                        F.col("old_comp"),
+                        F.coalesce(F.col("msg_agg"), F.col("old_comp")),
+                    ).alias("comp"),
                 )
-            },
-        )
-        changed = row["n"] or 0
+            )
+            # One round of the shared lifecycle (graph/loop.py). sum()
+            # over an empty relation is NULL — treat as converged.
+            new_state, row = loop.advance(
+                new_state,
+                metrics={
+                    "n": F.sum(
+                        F.when(
+                            F.col("comp") != F.col("old_comp"), 1
+                        ).otherwise(0)
+                    )
+                },
+            )
+            changed = row["n"] or 0
 
-        state = new_state.select("node", "comp")
-        if changed == 0:
-            break
-    else:
-        # Exhausting the cap without a changed==0 round means the
-        # labels are NOT components yet (min-label needs ~the distance
-        # from each node to its component's min-id node — long path
-        # components legitimately need thousands of rounds). Silently
-        # returning partial labels corrupts every downstream dedup /
-        # canonicalization decision, so fail loudly instead.
-        raise RuntimeError(
-            "connected_components did not converge within "
-            f"max_iterations={max_iterations} (last round still "
-            f"changed {changed} labels); raise max_iterations — "
-            "propagation rounds scale with the graph's label "
-            "propagation distance, not just its size"
-        )
+            state = new_state.select("node", "comp")
+            if changed == 0:
+                break
+        else:
+            # Exhausting the cap without a changed==0 round means the
+            # labels are NOT components yet (min-label needs ~the distance
+            # from each node to its component's min-id node — long path
+            # components legitimately need thousands of rounds). Silently
+            # returning partial labels corrupts every downstream dedup /
+            # canonicalization decision, so fail loudly instead.
+            raise RuntimeError(
+                "connected_components did not converge within "
+                f"max_iterations={max_iterations} (last round still "
+                f"changed {changed} labels); raise max_iterations — "
+                "propagation rounds scale with the graph's label "
+                "propagation distance, not just its size"
+            )
 
-    return materialize_or_release(
-        state.select("node", F.col("comp").alias("component")).persist(
-            StorageLevel.MEMORY_AND_DISK
+        return loop.result(
+            state.select("node", F.col("comp").alias("component"))
         )
-    )
 
 
 def shortest_paths(
@@ -447,7 +388,7 @@ def shortest_paths(
     spark = edges.sparkSession
     ec = edges.count()
     with loop_conf(spark, ec, enabled=tune):
-        return _shortest_paths_impl(
+        return _sp_rounds(
             edges,
             sources,
             max_iterations,
@@ -456,97 +397,61 @@ def shortest_paths(
         )
 
 
-def _shortest_paths_impl(
+def _sp_rounds(
     edges: DataFrame,
     sources: DataFrame,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool = False,
-) -> DataFrame:
-    e = edges.select("src", "dst").distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    # Shared lists + try/finally (the _connected_components_impl
-    # discipline): a mid-round job failure releases the edge cache and
-    # every frontier/state generation still pinned; on success the
-    # sweep spares only the returned frame (which the non-checkpoint
-    # branch does leave in ``cached``).
-    cached: list[DataFrame] = []
-    pending: list[DataFrame] = []
-    out: DataFrame | None = None
-    try:
-        out = _sp_rounds(
-            e, sources, max_iterations, checkpoint_every,
-            broadcast_state, cached, pending,
-        )
-        return out
-    finally:
-        for df in pending:
-            df.unpersist()
-        for df in cached:
-            if df is not out:
-                df.unpersist()
-        e.unpersist()
-
-
-def _sp_rounds(
-    e: DataFrame,
-    sources: DataFrame,
-    max_iterations: int,
-    checkpoint_every: int,
     broadcast_state: bool,
-    cached: list,
-    pending: list,
 ) -> DataFrame:
-    # The frontier variant of the shared loop (graph/loop.py
-    # VertexLoop): ``track`` pins each generation BEFORE its
-    # materializing count, and a lazily checkpointed ``reached``
-    # materializes only in the NEXT round's anti-join — so on
-    # checkpoint rounds the superseded generations move to the
-    # DEFERRED list (defer_all_but) and are released one round late
-    # (flush_deferred), never under a still-lazy checkpoint.
-    loop = VertexLoop(
-        cached, checkpoint_every=checkpoint_every, deferred=pending
-    )
-    frontier = loop.track(
-        sources.select("node").distinct().withColumn("dist", F.lit(0))
-    )
-    reached = frontier
-
-    iteration = 0
-    while iteration < max_iterations:
-        iteration += 1
-        msgs = aggregate_messages(
-            e,
-            frontier,
-            msg=F.col("dist") + 1,
-            agg=F.min("__msg"),
-            broadcast_state=broadcast_state,
+    # The frontier variant of the shared loop (graph/loop.py): each
+    # generation is tracked BEFORE its materializing count, and a
+    # lazily checkpointed ``reached`` materializes only in the NEXT
+    # round's anti-join — so on checkpoint rounds the superseded
+    # generations are deferred and released one round late, never
+    # under a still-lazy checkpoint. The new frontier is a (lazy)
+    # checkpoint, not a persist: its plan reads ``reached``, so in
+    # ``reached ∪ new_frontier`` Spark deduplicates that relation and
+    # then misses the frontier's cache, recomputing the whole frontier
+    # history through released generations.
+    with VertexLoop(checkpoint_every=checkpoint_every) as loop:
+        e = loop.hold(edges.select("src", "dst").distinct())
+        frontier = loop.persist(
+            sources.select("node").distinct().withColumn("dist", F.lit(0))
         )
-        new_frontier = loop.track(
-            msgs.join(
-                _bc(reached, broadcast_state), on="node", how="left_anti"
-            ).select("node", F.col("msg_agg").alias("dist"))
-        )
-        n_new = new_frontier.count()
-        # The count's anti join scanned ``reached`` fully — any lazy
-        # checkpoint from last round is now materialized; its upstream
-        # caches are safe to drop (in place — the caller's finally
-        # shares both lists).
-        loop.flush_deferred()
-        if n_new == 0:
-            new_frontier.unpersist()
-            break
-        merged = reached.unionByName(new_frontier)
-        if iteration % checkpoint_every == 0:
-            reached = loop.truncate(merged)
-            loop.defer_all_but(new_frontier)
-        else:
-            reached = loop.track(merged)
-        frontier = new_frontier
+        reached = frontier
 
-    return materialize_or_release(
-        reached.persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        iteration = 0
+        while iteration < max_iterations:
+            iteration += 1
+            msgs = aggregate_messages(
+                e,
+                frontier,
+                msg=F.col("dist") + 1,
+                agg=F.min("__msg"),
+                broadcast_state=broadcast_state,
+            )
+            new_frontier = loop.truncate(
+                msgs.join(
+                    _bc(reached, broadcast_state), on="node", how="left_anti"
+                ).select("node", F.col("msg_agg").alias("dist"))
+            )
+            n_new = new_frontier.count()
+            # the count's anti join scanned ``reached`` fully: last
+            # round's lazy checkpoint is materialized
+            loop.flush()
+            if n_new == 0:
+                loop.release(new_frontier)
+                break
+            merged = reached.unionByName(new_frontier)
+            if iteration % checkpoint_every == 0:
+                reached = loop.truncate(merged)
+                loop.defer(new_frontier, reached)
+            else:
+                reached = loop.persist(merged)
+            frontier = new_frontier
+
+        return loop.result(reached)
 
 
 def multi_source_shortest_paths(
@@ -575,7 +480,7 @@ def multi_source_shortest_paths(
     ec = edges.count()
     n_seeds = max(1, seeds.select("node").distinct().count())
     with loop_conf(spark, ec, enabled=tune):
-        return _multi_source_sp_impl(
+        return _multi_sp_rounds(
             edges,
             seeds,
             max_iterations,
@@ -586,101 +491,67 @@ def multi_source_shortest_paths(
         )
 
 
-def _multi_source_sp_impl(
+def _multi_sp_rounds(
     edges: DataFrame,
     seeds: DataFrame,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool = False,
-) -> DataFrame:
-    e = edges.select("src", "dst").distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    # Shared lists + try/finally — see _shortest_paths_impl.
-    cached: list[DataFrame] = []
-    pending: list[DataFrame] = []
-    out: DataFrame | None = None
-    try:
-        out = _multi_sp_rounds(
-            e, seeds, max_iterations, checkpoint_every,
-            broadcast_state, cached, pending,
-        )
-        return out
-    finally:
-        for df in pending:
-            df.unpersist()
-        for df in cached:
-            if df is not out:
-                df.unpersist()
-        e.unpersist()
-
-
-def _multi_sp_rounds(
-    e: DataFrame,
-    seeds: DataFrame,
-    max_iterations: int,
-    checkpoint_every: int,
     broadcast_state: bool,
-    cached: list,
-    pending: list,
 ) -> DataFrame:
-    # (seed, node)-keyed frontier variant of the shared loop — same
-    # track / defer-one-round-late lifecycle as _sp_rounds
-    # (graph/loop.py VertexLoop).
-    loop = VertexLoop(
-        cached, checkpoint_every=checkpoint_every, deferred=pending
-    )
-    frontier = loop.track(
-        seeds.select(F.col("node").alias("seed"))
-        .distinct()
-        .select("seed", F.col("seed").alias("node"))
-        .withColumn("dist", F.lit(0))
-    )
-    reached = frontier
+    # (seed, node)-keyed frontier variant of the shared loop — the
+    # same defer-one-round-late lifecycle as _sp_rounds
+    with VertexLoop(checkpoint_every=checkpoint_every) as loop:
+        e = loop.hold(edges.select("src", "dst").distinct())
+        frontier = loop.persist(
+            seeds.select(F.col("node").alias("seed"))
+            .distinct()
+            .select("seed", F.col("seed").alias("node"))
+            .withColumn("dist", F.lit(0))
+        )
+        reached = frontier
 
-    iteration = 0
-    while iteration < max_iterations:
-        iteration += 1
-        msgs = (
-            e.join(
-                _bc(
-                    frontier.select(
-                        F.col("node").alias("src"), "seed", "dist"
+        iteration = 0
+        while iteration < max_iterations:
+            iteration += 1
+            msgs = (
+                e.join(
+                    _bc(
+                        frontier.select(
+                            F.col("node").alias("src"), "seed", "dist"
+                        ),
+                        broadcast_state,
                     ),
-                    broadcast_state,
-                ),
-                on="src",
+                    on="src",
+                )
+                .select(
+                    "seed",
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + 1).alias("dist"),
+                )
+                .groupBy("seed", "node")
+                .agg(F.min("dist").alias("dist"))
             )
-            .select(
-                "seed",
-                F.col("dst").alias("node"),
-                (F.col("dist") + 1).alias("dist"),
+            new_frontier = loop.truncate(
+                msgs.join(
+                    _bc(reached.select("seed", "node"), broadcast_state),
+                    on=["seed", "node"],
+                    how="left_anti",
+                )
             )
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        new_frontier = loop.track(
-            msgs.join(
-                _bc(reached.select("seed", "node"), broadcast_state),
-                on=["seed", "node"],
-                how="left_anti",
-            )
-        )
-        n_new = new_frontier.count()
-        loop.flush_deferred()
-        if n_new == 0:
-            new_frontier.unpersist()
-            break
-        merged = reached.unionByName(new_frontier)
-        if iteration % checkpoint_every == 0:
-            reached = loop.truncate(merged)
-            loop.defer_all_but(new_frontier)
-        else:
-            reached = loop.track(merged)
-        frontier = new_frontier
+            n_new = new_frontier.count()
+            loop.flush()
+            if n_new == 0:
+                loop.release(new_frontier)
+                break
+            merged = reached.unionByName(new_frontier)
+            if iteration % checkpoint_every == 0:
+                reached = loop.truncate(merged)
+                loop.defer(new_frontier, reached)
+            else:
+                reached = loop.persist(merged)
+            frontier = new_frontier
 
-    return materialize_or_release(
-        reached.persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        return loop.result(reached)
 
 
 def harmonic_centrality(
@@ -737,84 +608,71 @@ def label_propagation(
     spark = edges.sparkSession
     approx = 2 * edges.count()
     with loop_conf(spark, approx, enabled=tune):
-        return _label_propagation_impl(
+        return _label_prop_rounds(
             edges,
             n_iterations,
             broadcast_state=approx <= BROADCAST_STATE_ROW_LIMIT,
         )
 
 
-def _label_propagation_impl(
-    edges: DataFrame, n_iterations: int, broadcast_state: bool = False
-) -> DataFrame:
-    und = undirected_edges(edges)
-    adj = und.unionAll(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # try/finally: the adjacency cache must not outlive a mid-round
-    # failure. Labels themselves are only ever eagerly checkpointed
-    # (never persisted), so the adjacency is the one pinned relation.
-    try:
-        return _label_prop_rounds(
-            adj, edges, n_iterations, broadcast_state
-        )
-    finally:
-        adj.unpersist()
-
-
 def _label_prop_rounds(
-    adj: DataFrame,
-    edges: DataFrame,
-    n_iterations: int,
-    broadcast_state: bool,
+    edges: DataFrame, n_iterations: int, broadcast_state: bool
 ) -> DataFrame:
-    labels = vertices(edges).withColumn("label", F.col("node"))
     # Fixed-round variant of the shared loop: no per-round scalar, so
-    # lineage truncation is EAGER on its cadence (graph/loop.py;
-    # sweeping under a lazy checkpoint would recompute through
-    # released caches — the invariant the primitive encodes).
-    loop = VertexLoop([])
-    for i in range(1, n_iterations + 1):
-        counts = (
-            adj.join(
-                _bc(
-                    labels.select(F.col("node").alias("src"), "label"),
-                    broadcast_state,
-                ),
-                on="src",
-            )
-            .groupBy(F.col("dst").alias("node"), "label")
-            .agg(F.count("*").alias("n"))
-        )
-        # Mode with smallest-label tie break as a hash aggregation:
-        # min of (-n, label) orders first by larger count then by
-        # smaller label — negating the COUNT (always numeric) keeps the
-        # label column untouched, so string node ids order correctly
-        # too. A row_number window over the same (node) key would add a
-        # full in-partition SORT after the shuffle; min_by keeps the
-        # second stage a partial-combined hash agg.
-        picked = counts.groupBy("node").agg(
-            F.min_by(
-                "label", F.struct((-F.col("n")).alias("nn"), F.col("label"))
-            ).alias("new_label")
-        )
-        labels = (
-            labels.select("node", "label")
-            .join(_bc(picked, broadcast_state), on="node", how="left")
-            .select(
-                "node",
-                F.coalesce("new_label", "label").alias("label"),
+    # each cut is EAGER (graph/loop.py), and the adjacency is the one
+    # relation held for the scope.
+    with Pins() as pins:
+        und = undirected_edges(edges)
+        adj = pins.hold(
+            und.unionAll(
+                und.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
             )
         )
-        if i % 3 == 0:
-            labels = loop.truncate(labels, eager=True)
-    # Materialize the final labels while still inside the caller's
-    # tuning context — otherwise (e.g. the default n_iterations=2,
-    # which never hits the i%3 checkpoint) the whole loop would plan
-    # lazily and execute only after the confs were restored.
-    if n_iterations % 3 != 0:
-        labels = loop.truncate(labels, eager=True)
-    return labels
+        labels = vertices(edges).withColumn("label", F.col("node"))
+        for i in range(1, n_iterations + 1):
+            counts = (
+                adj.join(
+                    _bc(
+                        labels.select(F.col("node").alias("src"), "label"),
+                        broadcast_state,
+                    ),
+                    on="src",
+                )
+                .groupBy(F.col("dst").alias("node"), "label")
+                .agg(F.count("*").alias("n"))
+            )
+            # Mode with smallest-label tie break as a hash aggregation:
+            # min of (-n, label) orders first by larger count then by
+            # smaller label — negating the COUNT (always numeric) keeps
+            # the label column untouched, so string node ids order
+            # correctly too. A row_number window over the same (node)
+            # key would add a full in-partition SORT after the shuffle;
+            # min_by keeps the second stage a partial-combined hash agg.
+            picked = counts.groupBy("node").agg(
+                F.min_by(
+                    "label",
+                    F.struct((-F.col("n")).alias("nn"), F.col("label")),
+                ).alias("new_label")
+            )
+            labels = (
+                labels.select("node", "label")
+                .join(_bc(picked, broadcast_state), on="node", how="left")
+                .select(
+                    "node",
+                    F.coalesce("new_label", "label").alias("label"),
+                )
+            )
+            # Materialize the final labels while still inside the
+            # caller's tuning context — otherwise (e.g. the default
+            # n_iterations=2, which never hits the i%3 cut) the whole
+            # loop would plan lazily and execute only after the confs
+            # were restored.
+            if i % 3 == 0 or i == n_iterations:
+                labels = pins.truncate(labels, eager=True)
+                pins.sweep(labels)
+        return pins.keep(labels)
 
 
 def twohop_recommendations(edges: DataFrame, k: int = 20) -> DataFrame:
@@ -875,7 +733,7 @@ def weighted_shortest_paths(
     spark = edges.sparkSession
     ec = edges.count()
     with loop_conf(spark, ec, enabled=tune):
-        return _weighted_shortest_paths_impl(
+        return _weighted_sp_rounds(
             edges,
             sources,
             weight_col,
@@ -885,109 +743,78 @@ def weighted_shortest_paths(
         )
 
 
-def _weighted_shortest_paths_impl(
+def _weighted_sp_rounds(
     edges: DataFrame,
     sources: DataFrame,
     weight_col: str,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool = False,
-) -> DataFrame:
-    e = edges.select("src", "dst", F.col(weight_col).alias("__w")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # Shared lists + try/finally — see _shortest_paths_impl.
-    cached: list[DataFrame] = []
-    pending: list[DataFrame] = []
-    out: DataFrame | None = None
-    try:
-        out = _weighted_sp_rounds(
-            e, sources, max_iterations, checkpoint_every,
-            broadcast_state, cached, pending,
-        )
-        return out
-    finally:
-        for df in pending:
-            df.unpersist()
-        for df in cached:
-            if df is not out:
-                df.unpersist()
-        e.unpersist()
-
-
-def _weighted_sp_rounds(
-    e: DataFrame,
-    sources: DataFrame,
-    max_iterations: int,
-    checkpoint_every: int,
     broadcast_state: bool,
-    cached: list,
-    pending: list,
 ) -> DataFrame:
-    # See _sp_rounds: the frontier variant of the shared loop
-    # (graph/loop.py VertexLoop) — a lazily checkpointed ``dist``
-    # materializes in the NEXT round's improved-count join, so
-    # superseded generations are deferred one round.
-    loop = VertexLoop(
-        cached, checkpoint_every=checkpoint_every, deferred=pending
-    )
-    dist = loop.track(
-        sources.select("node").distinct().withColumn("dist", F.lit(0.0))
-    )
-    frontier = dist
+    # See _sp_rounds: the frontier variant of the shared loop — a
+    # lazily checkpointed ``dist`` materializes in the NEXT round's
+    # improved-count join, so superseded generations are deferred one
+    # round.
+    with VertexLoop(checkpoint_every=checkpoint_every) as loop:
+        e = loop.hold(
+            edges.select("src", "dst", F.col(weight_col).alias("__w"))
+        )
+        dist = loop.persist(
+            sources.select("node").distinct().withColumn("dist", F.lit(0.0))
+        )
+        frontier = dist
 
-    iteration = 0
-    while iteration < max_iterations:
-        iteration += 1
-        msgs = (
-            e.join(
-                _bc(
-                    frontier.select(F.col("node").alias("src"), "dist"),
-                    broadcast_state,
-                ),
-                on="src",
+        iteration = 0
+        while iteration < max_iterations:
+            iteration += 1
+            msgs = (
+                e.join(
+                    _bc(
+                        frontier.select(F.col("node").alias("src"), "dist"),
+                        broadcast_state,
+                    ),
+                    on="src",
+                )
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + F.col("__w")).alias("cand"),
+                )
+                .groupBy("node")
+                .agg(F.min("cand").alias("cand"))
             )
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("__w")).alias("cand"),
+            improved = loop.truncate(
+                msgs.join(_bc(dist, broadcast_state), on="node", how="left")
+                .where(
+                    F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
+                )
+                .select("node", F.col("cand").alias("dist"))
             )
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        improved = loop.track(
-            msgs.join(_bc(dist, broadcast_state), on="node", how="left")
-            .where(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-            .select("node", F.col("cand").alias("dist"))
-        )
-        n_improved = improved.count()
-        # The count's left join scanned ``dist`` fully — last round's
-        # lazy checkpoint is materialized; drop its deferred upstream
-        # caches (in place — the caller's finally shares both lists).
-        loop.flush_deferred()
-        if n_improved == 0:
-            improved.unpersist()
-            break
-        merged = (
-            dist.join(
-                improved.select("node", F.col("dist").alias("better")),
-                on="node",
-                how="full",
+            n_improved = improved.count()
+            # the count's left join scanned ``dist`` fully: last round's
+            # lazy checkpoint is materialized
+            loop.flush()
+            if n_improved == 0:
+                loop.release(improved)
+                break
+            merged = (
+                dist.join(
+                    improved.select("node", F.col("dist").alias("better")),
+                    on="node",
+                    how="full",
+                )
+                .select(
+                    "node",
+                    F.coalesce(F.col("better"), F.col("dist")).alias("dist"),
+                )
             )
-            .select(
-                "node",
-                F.coalesce(F.col("better"), F.col("dist")).alias("dist"),
-            )
-        )
-        if iteration % checkpoint_every == 0:
-            dist = loop.truncate(merged)
-            loop.defer_all_but(improved)
-        else:
-            dist = loop.track(merged)
-        frontier = improved
+            if iteration % checkpoint_every == 0:
+                dist = loop.truncate(merged)
+                loop.defer(improved, dist)
+            else:
+                dist = loop.persist(merged)
+            frontier = improved
 
-    return materialize_or_release(
-        dist.persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        return loop.result(dist)
 
 
 def kcore_peel(
@@ -1151,88 +978,60 @@ def adamic_adar(
     ).limit(k)
 
 
-def _min_label_fixpoint(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iterations: int,
-    checkpoint_every: int = 1,
-    broadcast_state: bool = False,
-) -> DataFrame:
-    """Directed min-label propagation to fixpoint: for each node, the
-    minimum node id among its ancestors (nodes that can reach it,
-    itself included). Labels flow ALONG edge direction (src → dst)."""
-    # Shared list + try/finally — see _connected_components_impl. The
-    # returned frame is an eager checkpoint, never in the list.
-    cached: list[DataFrame] = []
-    try:
-        return _min_label_rounds(
-            edges, nodes, max_iterations, checkpoint_every,
-            broadcast_state, cached,
-        )
-    finally:
-        for df in cached:
-            df.unpersist()
-
-
 def _min_label_rounds(
     edges: DataFrame,
     nodes: DataFrame,
     max_iterations: int,
-    checkpoint_every: int,
     broadcast_state: bool,
-    cached: list,
 ) -> DataFrame:
-    state = nodes.withColumn("lab", F.col("node")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cached.append(state)
-    # Same shared-lifecycle shape as _cc_rounds (graph/loop.py
-    # VertexLoop): lazy checkpoint on cadence inside the one
-    # convergence aggregation, tracked persists swept after it.
-    loop = VertexLoop(cached, checkpoint_every=checkpoint_every)
-    iteration = 0
-    while iteration < max_iterations:
-        iteration += 1
-        nbr = aggregate_messages(
-            edges, state.select("node", "lab"), msg=F.col("lab"),
-            agg=F.min("__msg"), broadcast_state=broadcast_state,
-        )
-        new_state = (
-            state.select("node", F.col("lab").alias("old"))
-            .join(_bc(nbr, broadcast_state), on="node", how="left")
-            .select(
-                "node",
-                "old",
-                F.least(
-                    F.col("old"), F.coalesce("msg_agg", F.col("old"))
-                ).alias("lab"),
+    """Directed min-label propagation to fixpoint: for each node, the
+    minimum node id among its ancestors (nodes that can reach it,
+    itself included). Labels flow ALONG edge direction (src → dst).
+    Returns an eager checkpoint the caller owns."""
+    # the _cc_rounds lifecycle (graph/loop.py)
+    with VertexLoop() as loop:
+        state = loop.persist(nodes.withColumn("lab", F.col("node")))
+        iteration = 0
+        while iteration < max_iterations:
+            iteration += 1
+            nbr = aggregate_messages(
+                edges, state.select("node", "lab"), msg=F.col("lab"),
+                agg=F.min("__msg"), broadcast_state=broadcast_state,
             )
-        )
-        new_state, row = loop.advance(
-            new_state,
-            metrics={
-                "n": F.sum(
-                    F.when(F.col("lab") != F.col("old"), 1).otherwise(0)
+            new_state = (
+                state.select("node", F.col("lab").alias("old"))
+                .join(_bc(nbr, broadcast_state), on="node", how="left")
+                .select(
+                    "node",
+                    "old",
+                    F.least(
+                        F.col("old"), F.coalesce("msg_agg", F.col("old"))
+                    ).alias("lab"),
                 )
-            },
-        )
-        changed = row["n"] or 0
-        state = new_state.select("node", "lab")
-        if changed == 0:
-            break
-    else:
-        # SCC correctness REQUIRES the fixpoint: with partial labels,
-        # F(v) == B(v) can coincide spuriously and settle nodes into
-        # the wrong SCC. Fail loudly like connected_components.
-        raise RuntimeError(
-            "min-label propagation did not reach its fixpoint within "
-            f"max_iterations={max_iterations} (last round changed "
-            f"{changed} labels); raise max_label_iterations"
-        )
-    out = state.select("node", "lab")
-    if hasattr(out, "localCheckpoint"):
-        out = out.localCheckpoint(eager=True)
-    return out
+            )
+            new_state, row = loop.advance(
+                new_state,
+                metrics={
+                    "n": F.sum(
+                        F.when(F.col("lab") != F.col("old"), 1).otherwise(0)
+                    )
+                },
+            )
+            changed = row["n"] or 0
+            state = new_state.select("node", "lab")
+            if changed == 0:
+                break
+        else:
+            # SCC correctness REQUIRES the fixpoint: with partial
+            # labels, F(v) == B(v) can coincide spuriously and settle
+            # nodes into the wrong SCC. Fail loudly like
+            # connected_components.
+            raise RuntimeError(
+                "min-label propagation did not reach its fixpoint within "
+                f"max_iterations={max_iterations} (last round changed "
+                f"{changed} labels); raise max_label_iterations"
+            )
+        return loop.keep(loop.truncate(state, eager=True))
 
 
 def strongly_connected_components(
@@ -1259,7 +1058,7 @@ def strongly_connected_components(
     spark = edges.sparkSession
     ec = edges.count()
     with loop_conf(spark, ec, enabled=tune):
-        return _scc_impl(
+        return _scc_rounds(
             edges,
             max_rounds,
             max_label_iterations,
@@ -1267,81 +1066,79 @@ def strongly_connected_components(
         )
 
 
-def _scc_impl(
+def _scc_rounds(
     edges: DataFrame,
     max_rounds: int,
     max_label_iterations: int,
-    broadcast_state: bool = False,
+    broadcast_state: bool,
 ) -> DataFrame:
-    residual_edges = edges.select("src", "dst").distinct().persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    residual_nodes = vertices(residual_edges)
-    settled: DataFrame | None = None
-
-    # try/finally around the peel loop: `residual_edges` is re-pinned
-    # each round (the finally sees the CURRENT binding), so a failed
-    # round — including one inside _min_label_fixpoint — releases the
-    # live residual cache instead of pinning it for the session.
-    try:
+    # Each round's pins are eager (two plan branches read each) and are
+    # released once the next round's replacements have materialized;
+    # the settled pieces live until the result has.
+    with Pins() as pins:
+        residual_edges = pins.hold(edges.select("src", "dst").distinct())
+        residual_nodes = vertices(residual_edges)
+        settled: DataFrame | None = None
         for _ in range(max_rounds):
             if residual_nodes.isEmpty():
                 break
-            fwd = _min_label_fixpoint(
-                residual_edges,
-                residual_nodes,
-                max_label_iterations,
-                broadcast_state=broadcast_state,
-            ).withColumnRenamed("lab", "f")
-            bwd = _min_label_fixpoint(
-                residual_edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
+            fwd = pins.adopt(
+                _min_label_rounds(
+                    residual_edges,
+                    residual_nodes,
+                    max_label_iterations,
+                    broadcast_state,
+                )
+            )
+            bwd = pins.adopt(
+                _min_label_rounds(
+                    residual_edges.select(
+                        F.col("dst").alias("src"), F.col("src").alias("dst")
+                    ),
+                    residual_nodes,
+                    max_label_iterations,
+                    broadcast_state,
+                )
+            )
+            both = fwd.withColumnRenamed("lab", "f").join(
+                bwd.withColumnRenamed("lab", "b"), on="node"
+            )
+            done = pins.truncate(
+                both.where(F.col("f") == F.col("b")).select(
+                    "node", F.col("f").alias("component")
                 ),
-                residual_nodes,
-                max_label_iterations,
-                broadcast_state=broadcast_state,
-            ).withColumnRenamed("lab", "b")
-            both = fwd.join(bwd, on="node")
-            done = (
-                both.where(F.col("f") == F.col("b"))
-                .select("node", F.col("f").alias("component"))
-                .localCheckpoint(eager=True)
+                eager=True,
             )
-            settled = (
-                done if settled is None else settled.unionByName(done)
-            )
-            residual_nodes = (
-                both.where(F.col("f") != F.col("b"))
-                .select("node")
-                .localCheckpoint(eager=True)
+            settled = done if settled is None else settled.unionByName(done)
+            next_nodes = pins.truncate(
+                both.where(F.col("f") != F.col("b")).select("node"),
+                eager=True,
             )
             keep_src = _bc(
-                residual_nodes.select(F.col("node").alias("src")),
+                next_nodes.select(F.col("node").alias("src")),
                 broadcast_state,
             )
             keep_dst = _bc(
-                residual_nodes.select(F.col("node").alias("dst")),
+                next_nodes.select(F.col("node").alias("dst")),
                 broadcast_state,
             )
-            new_edges = (
-                residual_edges.join(keep_src, on="src", how="left_semi")
-                .join(keep_dst, on="dst", how="left_semi")
-                .localCheckpoint(eager=True)
+            next_edges = pins.hold(
+                pins.truncate(
+                    residual_edges.join(keep_src, on="src", how="left_semi")
+                    .join(keep_dst, on="dst", how="left_semi"),
+                    eager=True,
+                )
             )
-            residual_edges.unpersist()
-            residual_edges = new_edges.persist(
-                StorageLevel.MEMORY_AND_DISK
+            pins.release(fwd, bwd, residual_edges, residual_nodes)
+            residual_edges, residual_nodes = next_edges, next_nodes
+        if not residual_nodes.isEmpty():
+            raise RuntimeError(
+                "SCC peeling did not converge within max_rounds="
+                f"{max_rounds}; raise max_rounds (each round settles "
+                "every current min-pivot SCC, so adversarial id "
+                "orderings can need up to #SCC rounds)"
             )
-    finally:
-        residual_edges.unpersist()
-    if not residual_nodes.isEmpty():
-        raise RuntimeError(
-            "SCC peeling did not converge within max_rounds="
-            f"{max_rounds}; raise max_rounds (each round settles every "
-            "current min-pivot SCC, so adversarial id orderings can need "
-            "up to #SCC rounds)"
-        )
-    return settled
+        return settled if settled is None else pins.result(settled)
 
 
 def maximal_independent_set(
@@ -1554,9 +1351,8 @@ def betweenness_centrality(
       never materialized as a DAG). Per level: one join of the edge
       table against the (level-filtered, broadcast-gated) successor
       deltas, one partial-combined SUM. Each level's delta relation
-      is lazily checkpointed and materialized by its own count — the
-      VertexLoop cadence-1 shape — so lineage never compounds across
-      levels.
+      is eagerly checkpointed (one job per level), so lineage never
+      compounds across levels.
 
     Scale shape: state is |pivots| × reached-nodes rows, same as the
     landmark BFS (the broadcast-vs-shuffle cut accounts for the
@@ -1568,7 +1364,7 @@ def betweenness_centrality(
     ec = edges.count()
     n_seeds = max(1, seeds.select("node").distinct().count())
     with loop_conf(spark, ec, enabled=tune):
-        return _betweenness_impl(
+        return _betweenness_rounds(
             edges,
             seeds,
             max_iterations,
@@ -1579,7 +1375,7 @@ def betweenness_centrality(
         )
 
 
-def _betweenness_impl(
+def _betweenness_rounds(
     edges: DataFrame,
     seeds: DataFrame,
     max_iterations: int,
@@ -1588,184 +1384,150 @@ def _betweenness_impl(
     n_seeds: int,
     scaled: bool,
 ) -> DataFrame:
-    e = edges.select("src", "dst").distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    # Shared lists + try/finally — the _shortest_paths_impl discipline.
-    cached: list[DataFrame] = []
-    pending: list[DataFrame] = []
-    out: DataFrame | None = None
-    try:
-        out = _betweenness_rounds(
-            e, seeds, max_iterations, checkpoint_every,
-            broadcast_state, n_seeds, scaled, cached, pending,
-        )
-        return out
-    finally:
-        for df in pending:
-            df.unpersist()
-        for df in cached:
-            if df is not out:
-                df.unpersist()
-        e.unpersist()
-
-
-def _betweenness_rounds(
-    e: DataFrame,
-    seeds: DataFrame,
-    max_iterations: int,
-    checkpoint_every: int,
-    broadcast_state: bool,
-    n_seeds: int,
-    scaled: bool,
-    cached: list,
-    pending: list,
-) -> DataFrame:
-    # ---- forward: sigma-carrying multi-source BFS -------------------
-    loop = VertexLoop(
-        cached, checkpoint_every=checkpoint_every, deferred=pending
-    )
-    frontier = loop.track(
-        seeds.select(F.col("node").alias("seed"))
-        .distinct()
-        .select(
-            "seed",
-            F.col("seed").alias("node"),
-            F.lit(0).alias("dist"),
-            F.lit(1.0).alias("sigma"),
-        )
-    )
-    reached = frontier
-
-    iteration = 0
-    while iteration < max_iterations:
-        iteration += 1
-        msgs = (
-            e.join(
-                _bc(
-                    frontier.select(
-                        F.col("node").alias("src"), "seed", "dist", "sigma"
-                    ),
-                    broadcast_state,
-                ),
-                on="src",
-            )
+    with VertexLoop(checkpoint_every=checkpoint_every) as loop:
+        e = loop.hold(edges.select("src", "dst").distinct())
+        # ---- forward: sigma-carrying multi-source BFS (the
+        # _multi_sp_rounds lifecycle) ---------------------------------
+        frontier = loop.persist(
+            seeds.select(F.col("node").alias("seed"))
+            .distinct()
             .select(
                 "seed",
-                F.col("dst").alias("node"),
-                (F.col("dist") + 1).alias("dist"),
-                "sigma",
-            )
-            # every shortest-path predecessor of a round-d node sits in
-            # round d-1's frontier, so this SUM is the full sigma
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"), F.sum("sigma").alias("sigma"))
-        )
-        new_frontier = loop.track(
-            msgs.join(
-                _bc(reached.select("seed", "node"), broadcast_state),
-                on=["seed", "node"],
-                how="left_anti",
+                F.col("seed").alias("node"),
+                F.lit(0).alias("dist"),
+                F.lit(1.0).alias("sigma"),
             )
         )
-        n_new = new_frontier.count()
-        loop.flush_deferred()
-        if n_new == 0:
-            new_frontier.unpersist()
-            break
-        merged = reached.unionByName(new_frontier)
-        if iteration % checkpoint_every == 0:
-            reached = loop.truncate(merged)
-            loop.defer_all_but(new_frontier)
-        else:
-            reached = loop.track(merged)
-        frontier = new_frontier
+        reached = frontier
 
-    reached = materialize_or_release(
-        reached.persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cached.append(reached)
-
-    # one scalar between phases: the deepest observed level (the
-    # Brandes–Pich factor below wants |V| over ALL graph vertices, not
-    # the reached count, so nothing else is needed here — r11 ADVICE
-    # dropped a dead countDistinct from this collect)
-    row = reached.agg(F.max("dist").alias("maxd")).collect()[0]
-    max_dist = row["maxd"] if row["maxd"] is not None else 0
-
-    if scaled:
-        # Brandes–Pich estimator over |V| (all graph vertices, not just
-        # reached ones — matches the exact-betweenness limit)
-        n_vertices = vertices(e).count()
-        factor = n_vertices / n_seeds
-    else:
-        factor = 1.0
-
-    # ---- backward: level-synchronous dependency accumulation --------
-    # cadence-1 sub-loop on its OWN generation list: every level's
-    # delta is a lazy localCheckpoint materialized by its count, so
-    # the accumulated union reads only checkpointed pieces — and the
-    # sub-loop's sweep can never release ``reached`` (still needed for
-    # the remaining levels) out of the caller's shared list.
-    back = VertexLoop([], checkpoint_every=1)
-    spark = e.sparkSession
-    acc: list[DataFrame] = []
-    delta_prev: DataFrame | None = None
-    for d in range(max_dist, 0, -1):
-        w = reached.where(F.col("dist") == d).select(
-            "seed", F.col("node").alias("dst"), F.col("sigma").alias("sigma_w")
-        )
-        if delta_prev is not None:
-            w = w.join(
-                _bc(
-                    delta_prev.select(
-                        "seed", F.col("node").alias("dst"),
-                        F.col("delta").alias("delta_w"),
+        iteration = 0
+        while iteration < max_iterations:
+            iteration += 1
+            msgs = (
+                e.join(
+                    _bc(
+                        frontier.select(
+                            F.col("node").alias("src"), "seed", "dist", "sigma"
+                        ),
+                        broadcast_state,
                     ),
-                    broadcast_state,
-                ),
-                on=["seed", "dst"],
-                how="left",
-            ).fillna(0.0, subset=["delta_w"])
-        else:
-            w = w.withColumn("delta_w", F.lit(0.0))
-        v = reached.where(F.col("dist") == d - 1).select(
-            "seed", "node", F.col("sigma").alias("sigma_v")
-        )
-        contrib = (
-            e.join(_bc(w, broadcast_state), on="dst")
-            .select(
-                "seed",
-                F.col("src").alias("node"),
-                ((1.0 + F.col("delta_w")) / F.col("sigma_w")).alias("ratio"),
+                    on="src",
+                )
+                .select(
+                    "seed",
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + 1).alias("dist"),
+                    "sigma",
+                )
+                # every shortest-path predecessor of a round-d node sits
+                # in round d-1's frontier, so this SUM is the full sigma
+                .groupBy("seed", "node")
+                .agg(
+                    F.min("dist").alias("dist"),
+                    F.sum("sigma").alias("sigma"),
+                )
             )
-            # inner join against level d-1 keeps only shortest-path DAG
-            # edges and attaches the predecessor's sigma
-            .join(_bc(v, broadcast_state), on=["seed", "node"])
-            .groupBy("seed", "node")
-            .agg(F.sum(F.col("sigma_v") * F.col("ratio")).alias("delta"))
+            new_frontier = loop.truncate(
+                msgs.join(
+                    _bc(reached.select("seed", "node"), broadcast_state),
+                    on=["seed", "node"],
+                    how="left_anti",
+                )
+            )
+            n_new = new_frontier.count()
+            loop.flush()
+            if n_new == 0:
+                loop.release(new_frontier)
+                break
+            merged = reached.unionByName(new_frontier)
+            if iteration % checkpoint_every == 0:
+                reached = loop.truncate(merged)
+                loop.defer(new_frontier, reached)
+            else:
+                reached = loop.persist(merged)
+            frontier = new_frontier
+
+        # one scalar between phases: the deepest observed level (the
+        # Brandes–Pich factor below wants |V| over ALL graph vertices,
+        # not the reached count, so nothing else is needed here). It
+        # also materializes the held ``reached``, after which every
+        # forward generation is dead. Held as a checkpoint: each level
+        # below reads it twice, and the deduplicated copy misses the
+        # cache and recomputes from the plan's leaves.
+        reached = loop.hold(loop.truncate(reached))
+        row = reached.agg(F.max("dist").alias("maxd")).collect()[0]
+        loop.sweep()
+        max_dist = row["maxd"] if row["maxd"] is not None else 0
+
+        if scaled:
+            # Brandes–Pich estimator over |V| (all graph vertices, not
+            # just reached ones — matches the exact-betweenness limit)
+            n_vertices = vertices(e).count()
+            factor = n_vertices / n_seeds
+        else:
+            factor = 1.0
+
+        # ---- backward: level-synchronous dependency accumulation ----
+        # every level's delta is an eager checkpoint (one job per
+        # level), kept until the final aggregate has read them all
+        spark = e.sparkSession
+        acc: list[DataFrame] = []
+        delta_prev: DataFrame | None = None
+        for d in range(max_dist, 0, -1):
+            w = reached.where(F.col("dist") == d).select(
+                "seed",
+                F.col("node").alias("dst"),
+                F.col("sigma").alias("sigma_w"),
+            )
+            if delta_prev is not None:
+                w = w.join(
+                    _bc(
+                        delta_prev.select(
+                            "seed", F.col("node").alias("dst"),
+                            F.col("delta").alias("delta_w"),
+                        ),
+                        broadcast_state,
+                    ),
+                    on=["seed", "dst"],
+                    how="left",
+                ).fillna(0.0, subset=["delta_w"])
+            else:
+                w = w.withColumn("delta_w", F.lit(0.0))
+            v = reached.where(F.col("dist") == d - 1).select(
+                "seed", "node", F.col("sigma").alias("sigma_v")
+            )
+            contrib = (
+                e.join(_bc(w, broadcast_state), on="dst")
+                .select(
+                    "seed",
+                    F.col("src").alias("node"),
+                    ((1.0 + F.col("delta_w")) / F.col("sigma_w")).alias(
+                        "ratio"
+                    ),
+                )
+                # inner join against level d-1 keeps only shortest-path
+                # DAG edges and attaches the predecessor's sigma
+                .join(_bc(v, broadcast_state), on=["seed", "node"])
+                .groupBy("seed", "node")
+                .agg(F.sum(F.col("sigma_v") * F.col("ratio")).alias("delta"))
+            )
+            delta_prev = loop.truncate(contrib, eager=True)
+            acc.append(delta_prev)
+
+        if not acc:
+            return spark.createDataFrame([], "node BIGINT, betweenness DOUBLE")
+
+        alldelta = acc[0]
+        for piece in acc[1:]:
+            alldelta = alldelta.unionByName(piece)
+        # The final (node-bounded) relation is cut eagerly so it no
+        # longer reads the per-level checkpoints, which the owner
+        # releases on exit.
+        return loop.keep(
+            loop.truncate(
+                alldelta.where(F.col("node") != F.col("seed"))
+                .groupBy("node")
+                .agg((F.sum("delta") * F.lit(factor)).alias("betweenness")),
+                eager=True,
+            )
         )
-        contrib, _ = back.advance(contrib, metrics={"n": F.count("*")})
-        acc.append(contrib)
-        delta_prev = contrib
-
-    if not acc:
-        return spark.createDataFrame([], "node BIGINT, betweenness DOUBLE")
-
-    alldelta = acc[0]
-    for piece in acc[1:]:
-        alldelta = alldelta.unionByName(piece)
-    result = (
-        alldelta.where(F.col("node") != F.col("seed"))
-        .groupBy("node")
-        .agg((F.sum("delta") * F.lit(factor)).alias("betweenness"))
-    )
-    # Eagerly checkpoint the final (node-bounded) relation so it no
-    # longer reads through the per-level delta checkpoints, then destroy
-    # those blocks deterministically — previously all max_dist levels
-    # lingered until ContextCleaner GC (r11 ADVICE). Safe only in this
-    # order: the eager materialization completes before any block it
-    # read from is released.
-    result = result.localCheckpoint(eager=True)
-    for piece in acc:
-        piece.unpersist()
-    return result

@@ -49,8 +49,8 @@ how many raw walk windows produced it — so doubling the walk corpus
 does not grow the per-step join inputs (SVD_PROBE.json measures
 this). Per component per iteration: two shuffles of at most
 nnz(M)-many rows plus c vocabulary-sized projection joins; iterates
-are eagerly localCheckpoint-ed each step (the VertexLoop discipline)
-so neither lineage nor analyzer cost ever compounds.
+are checkpoint-truncated each step (graph/loop.py ``Pins``) so
+neither lineage nor analyzer cost ever compounds.
 """
 
 from __future__ import annotations
@@ -134,45 +134,43 @@ def svd_topk(
         (row_col, col_col, value_col) == ("r", "c", "w")
         and getattr(matrix, "_pagerank_spark_svd_prepared", False)
     )
-    if _prepared:
-        m = matrix
-    else:
-        # checkpoint-then-persist: leaf plan for cheap per-action
-        # analysis, exact cached stats for join planning (see
-        # ppmi_svd_embeddings for the measurement)
-        m = (
-            matrix.select(
-                F.col(row_col).alias("r"),
-                F.col(col_col).alias("c"),
-                F.round(
-                    F.col(value_col).cast("double"), round_dp
-                ).alias("w"),
-            )
-            .where(F.col("w") > 0)
-            # lazy: the nnz count below is the strictly-next reader
-            .localCheckpoint(eager=False)
-            .persist()
-        )
-
-    def big_matvec(v: DataFrame) -> DataFrame:
-        """y = Mᵀ(M v): two sparse joins, two partial-combined aggs."""
-        t = (
-            m.join(v.select(F.col("node").alias("c"), "x"), on="c")
-            .groupBy("r")
-            .agg(F.sum(F.col("w") * F.col("x")).alias("t"))
-        )
-        return (
-            m.join(t, on="r")
-            .groupBy("c")
-            .agg(F.sum(F.col("w") * F.col("t")).alias("y"))
-            .select(F.col("c").alias("node"), "y")
-        )
-
-    from pagerank_spark.graph.loop import loop_conf
+    from pagerank_spark.graph.loop import Pins, loop_conf
 
     spark = matrix.sparkSession
-    comps: list[tuple[DataFrame, float]] = []
-    try:
+    with Pins() as pins:
+        if _prepared:
+            m = matrix
+        else:
+            # checkpoint-then-persist: leaf plan for cheap per-action
+            # analysis, exact cached stats for join planning (see
+            # ppmi_svd_embeddings for the measurement); lazy: the nnz
+            # count below is the strictly-next reader
+            m = pins.hold(
+                pins.truncate(
+                    matrix.select(
+                        F.col(row_col).alias("r"),
+                        F.col(col_col).alias("c"),
+                        F.round(
+                            F.col(value_col).cast("double"), round_dp
+                        ).alias("w"),
+                    ).where(F.col("w") > 0)
+                )
+            )
+
+        def big_matvec(v: DataFrame) -> DataFrame:
+            """y = Mᵀ(M v): two sparse joins, two partial-combined aggs."""
+            t = (
+                m.join(v.select(F.col("node").alias("c"), "x"), on="c")
+                .groupBy("r")
+                .agg(F.sum(F.col("w") * F.col("x")).alias("t"))
+            )
+            return (
+                m.join(t, on="r")
+                .groupBy("c")
+                .agg(F.sum(F.col("w") * F.col("t")).alias("y"))
+                .select(F.col("c").alias("node"), "y")
+            )
+
         nnz = m.count()  # materialize the pin before the loop reuses it
         nctx = m.select("c").distinct().count()
         if nctx == 0:
@@ -180,7 +178,7 @@ def svd_topk(
         init = 1.0 / math.sqrt(float(nctx))
         with loop_conf(spark, nnz, enabled=tune):
             comps = _svd_loop(
-                m, rank, iterations, init, round_dp, big_matvec,
+                pins, m, rank, iterations, init, round_dp, big_matvec,
                 delta=delta, iterations_out=iterations_out,
             )
         out = None
@@ -194,16 +192,16 @@ def svd_topk(
         # caller's first action instead of a dedicated count job
         out = out.persist()
         return out, [lam for _, lam in comps]
-    finally:
-        if not _prepared:
-            m.unpersist()
 
 
 def _svd_loop(
-    m, rank, iterations, init, round_dp, big_matvec,
+    pins, m, rank, iterations, init, round_dp, big_matvec,
     delta=None, iterations_out=None,
 ):
     """The component loop proper — runs under svd_topk's loop conf.
+    Each iterate's checkpoint is released once the next iterate has
+    read it; a component's last one is handed to the caller (the
+    returned lazy vectors read it).
 
     Deflation is CLASSICAL Gram–Schmidt against the found factors
     (all dots taken on the raw iterate, subtracted as one summed
@@ -239,14 +237,12 @@ def _svd_loop(
             # per-group reduction inputs, and the per-node adjustment
             # sums at most rank−1 ≤ 2 terms, where float addition is
             # order-exact.)
-            # LAZY checkpoint (r15): the plan is a leaf either way —
-            # laziness only moves the materialization INSIDE the next
-            # reader (the dots collect for deflated components, the
-            # norm otherwise), deleting the dedicated checkpoint job
-            # each iteration paid (~0.2 s/job driver floor × rank ×
-            # iterations). Readers are strictly sequential driver
-            # actions, so no branch ever races the materialization.
-            yc = big_matvec(v).localCheckpoint(eager=False)
+            # LAZY checkpoint (r15; graph/loop.py's rule): it
+            # materializes INSIDE the next reader (the dots collect for
+            # deflated components, the norm otherwise), deleting the
+            # dedicated checkpoint job each iteration paid (~0.2 s/job
+            # driver floor × rank × iterations).
+            yc = pins.truncate(big_matvec(v))
             if factors_u is not None:
                 # all k dots in ONE pass over the cached y
                 # (classical GS)
@@ -289,6 +285,7 @@ def _svd_loop(
             v_prev = v
             v = y.select("node", vx.alias("x"))
             rounds_run += 1
+            stop = False
             if delta is not None and rounds_run < iterations:
                 # one scalar L1 between successive iterates, reading
                 # the checkpointed yc (the PageRank δ discipline);
@@ -313,8 +310,11 @@ def _svd_loop(
                     .collect()[0][0]
                     or 0.0
                 )
-                if l1 <= delta:
-                    break
+                stop = l1 <= delta
+            pins.sweep(yc)  # the previous iterate has no reader left
+            if stop:
+                break
+        pins.keep(yc)
         if iterations_out is not None:
             iterations_out.append(rounds_run)
         comps.append(v)
@@ -386,38 +386,40 @@ def ppmi_svd_embeddings(
     # planning. The persist ON TOP keeps materialized exact-size
     # statistics driving the loop's join strategy exactly as before;
     # rows and arithmetic are untouched.
-    m = (
-        ppmi.select(
-            F.col(row_col).alias("r"),
-            F.col(col_col).alias("c"),
-            F.round(F.col(value_col).cast("double"), round_dp).alias("w"),
+    from pagerank_spark.graph.loop import Pins
+
+    with Pins() as pins:
+        # lazy: svd_topk's nnz count is the strictly-next reader
+        m = pins.hold(
+            pins.truncate(
+                ppmi.select(
+                    F.col(row_col).alias("r"),
+                    F.col(col_col).alias("c"),
+                    F.round(F.col(value_col).cast("double"), round_dp).alias(
+                        "w"
+                    ),
+                ).where(F.col("w") > 0)
+            )
         )
-        .where(F.col("w") > 0)
-        # lazy (r15): the plan is a leaf either way; svd_topk's nnz
-        # count is the strictly-next reader and materializes it, so
-        # the dedicated eager-checkpoint job is deleted
-        .localCheckpoint(eager=False)
-        .persist()
-    )
-    # r14 optimization: hand the pinned relation to svd_topk under its
-    # canonical (r, c, w) names with the prepared mark, so the
-    # factorization skips its own (identical) round/filter/persist/
-    # materialize pass — one cache and one materialization instead of
-    # two for the same rows. svd_topk's own count() materializes the
-    # pin, so no separate count here.
-    m._pagerank_spark_svd_prepared = True
-    v, lams = svd_topk(
-        m,
-        rank=rank,
-        iterations=iterations,
-        delta=delta,
-        row_col="r",
-        col_col="c",
-        value_col="w",
-        round_dp=round_dp,
-        tune=tune,
-    )
-    try:
+        # r14 optimization: hand the pinned relation to svd_topk under
+        # its canonical (r, c, w) names with the prepared mark, so the
+        # factorization skips its own (identical) round/filter/persist/
+        # materialize pass — one cache and one materialization instead
+        # of two for the same rows. svd_topk's own count() materializes
+        # the pin, so no separate count here.
+        m._pagerank_spark_svd_prepared = True
+        v, lams = svd_topk(
+            m,
+            rank=rank,
+            iterations=iterations,
+            delta=delta,
+            row_col="r",
+            col_col="c",
+            value_col="w",
+            round_dp=round_dp,
+            tune=tune,
+        )
+        pins.adopt(v)
         out = None
         for k, lam in enumerate(lams):
             scale = lam ** -0.25 if lam > 0 else 0.0
@@ -441,13 +443,8 @@ def ppmi_svd_embeddings(
                 )
             )
             out = part if out is None else out.unionByName(part)
-        # materialize before releasing the factor pin
-        out = out.persist()
-        out.count()
-        return out
-    finally:
-        v.unpersist()
-        m.unpersist()
+        # materialized before the factor pins are released
+        return pins.result(out)
 
 
 def embedding_vectors(
@@ -626,69 +623,61 @@ def sgns_train(
     # exact row stats keep driving the sampler's join planning.
     # Measured (sf0.1, q266 shape, interleaved min-of-2): example
     # build 6.54 → 3.94 s, identical 110627 example rows. The pin is
-    # released as soon as the example relation is materialized — the
-    # last read of ``pairs``.
-    pairs = pairs.localCheckpoint(eager=True).persist()
-    pairs_pin = pairs
-    if negatives is None:
-        from pagerank_spark.graph.walks import negative_samples
+    # eager (four plan branches read it) and is released as soon as
+    # the example relation is materialized — the last read of
+    # ``pairs``.
+    from pagerank_spark.graph.loop import Pins, loop_conf
 
-        negatives = negative_samples(pairs, k=neg_k)
+    with Pins() as pins:
+        pairs = pins.hold(pins.truncate(pairs, eager=True))
+        if negatives is None:
+            from pagerank_spark.graph.walks import negative_samples
 
-    p = pairs.select(
-        F.col("center").alias("c"),
-        F.col("context").alias("w"),
-        F.col("cnt").cast("double").alias("m"),
-    )
-    # negatives carry the pair's multiplicity: k draws per OCCURRENCE
-    # (word2vec semantics), so each draw row weighs the pair's cnt
-    neg = (
-        negatives.where(~F.col("is_collision"))
-        .select("center", "context", "negative")
-        .join(
-            pairs.select("center", "context", "cnt"),
-            on=["center", "context"],
-        )
-        .select(
+            negatives = negative_samples(pairs, k=neg_k)
+
+        p = pairs.select(
             F.col("center").alias("c"),
-            F.col("negative").alias("w"),
+            F.col("context").alias("w"),
             F.col("cnt").cast("double").alias("m"),
         )
-    )
-    # checkpoint-then-persist (the ppmi_svd_embeddings rationale): the
-    # example relation's lineage is the whole pair+negative pipeline,
-    # and every round's score join plus the init distincts re-analyze
-    # it before the cache lookup substitutes the rows — a leaf
-    # LogicalRDD makes each of those plans O(1) to analyze while the
-    # persist keeps exact-size statistics driving the join strategy.
-    ex = (
-        p.withColumn("label", F.lit(1.0))
-        .unionByName(neg.withColumn("label", F.lit(0.0)))
-        .groupBy("c", "w", "label")
-        .agg(F.sum("m").alias("m"))
-        # lazy (r15): ex.count() below is the strictly-next reader —
-        # one less dedicated materialization job; the pair pin above
-        # stays EAGER because the example build reads it from four
-        # plan branches whose stages can race a lazy materialization
-        .localCheckpoint(eager=False)
-        .persist()
-    )
+        # negatives carry the pair's multiplicity: k draws per
+        # OCCURRENCE (word2vec semantics), so each draw row weighs the
+        # pair's cnt
+        neg = (
+            negatives.where(~F.col("is_collision"))
+            .select("center", "context", "negative")
+            .join(
+                pairs.select("center", "context", "cnt"),
+                on=["center", "context"],
+            )
+            .select(
+                F.col("center").alias("c"),
+                F.col("negative").alias("w"),
+                F.col("cnt").cast("double").alias("m"),
+            )
+        )
+        # checkpoint-then-persist (the ppmi_svd_embeddings rationale):
+        # the example relation's lineage is the whole pair+negative
+        # pipeline, and every round's score join plus the init
+        # distincts re-analyze it before the cache lookup substitutes
+        # the rows — a leaf LogicalRDD makes each of those plans O(1)
+        # to analyze while the persist keeps exact-size statistics
+        # driving the join strategy. Lazy (r15): ex.count() below is
+        # the strictly-next reader.
+        ex = pins.hold(
+            pins.truncate(
+                p.withColumn("label", F.lit(1.0))
+                .unionByName(neg.withColumn("label", F.lit(0.0)))
+                .groupBy("c", "w", "label")
+                .agg(F.sum("m").alias("m"))
+            )
+        )
 
-    from pagerank_spark.graph.loop import (
-        checkpoint_reset_stats,
-        loop_conf,
-        release_checkpoint,
-    )
-
-    spark = pairs.sparkSession
-    try:
+        spark = pairs.sparkSession
         n_ex = ex.count()  # materialize the pin
-        # the example relation is a leaf now — the pair pin's last
-        # reader has run, so release its cache AND checkpoint blocks
-        # (r14 ADVICE: checkpoint blocks otherwise stay pinned until
-        # Python+JVM GC)
-        pairs_pin.unpersist()
-        release_checkpoint(pairs_pin)
+        # the example relation is a leaf now: the pair pin's last
+        # reader has run
+        pins.release(pairs)
         if n_ex == 0:
             raise ValueError("sgns_train: no training examples")
         mass = float(ex.agg(F.sum("m")).collect()[0][0])
@@ -720,7 +709,7 @@ def sgns_train(
             # read side-filtered views of the cached checkpoint. Cell
             # arithmetic (init hash, gradient sums, update, rounding)
             # is untouched, so the trajectory is bit-identical.
-            state = (
+            state = pins.truncate(
                 _start_plan(
                     ex.select(F.col("c").alias("node")).distinct(),
                     "sgnsU=",
@@ -733,8 +722,8 @@ def sgns_train(
                         "sgnsV=",
                         iv,
                     ).withColumn("side", F.lit("v"))
-                )
-                .transform(checkpoint_reset_stats)
+                ),
+                reset_stats=True,
             )
             u = state.where(F.col("side") == "u").select(
                 "node", "dim", "value"
@@ -766,18 +755,21 @@ def sgns_train(
                 # residuals feed BOTH gradients — one eager checkpoint
                 # so the score chain is computed once and the plan
                 # truncates (the _svd_loop yc discipline)
-                g = s.select(
-                    "c",
-                    "w",
-                    (
+                g = pins.truncate(
+                    s.select(
+                        "c",
+                        "w",
                         (
-                            F.lit(1.0)
-                            / (F.lit(1.0) + F.exp(-F.col("s")))
-                            - F.col("label")
-                        )
-                        * F.col("m")
-                    ).alias("g"),
-                ).transform(checkpoint_reset_stats)
+                            (
+                                F.lit(1.0)
+                                / (F.lit(1.0) + F.exp(-F.col("s")))
+                                - F.col("label")
+                            )
+                            * F.col("m")
+                        ).alias("g"),
+                    ),
+                    reset_stats=True,
+                )
                 grad_u = (
                     g.join(
                         v.select(
@@ -822,8 +814,7 @@ def sgns_train(
                 grads = grad_u.withColumn(
                     "side", F.lit("u")
                 ).unionByName(grad_v.withColumn("side", F.lit("v")))
-                prev_state = state
-                state = (
+                state = pins.truncate(
                     state.join(
                         grads, on=["side", "node", "dim"], how="left"
                     )
@@ -837,32 +828,21 @@ def sgns_train(
                             * F.coalesce(F.col("__gr"), F.lit(0.0)),
                             round_dp,
                         ).alias("value"),
-                    )
-                    .transform(checkpoint_reset_stats)
+                    ),
+                    reset_stats=True,
                 )
-                # the new state materialized eagerly above — the
-                # previous round's state checkpoint and this round's
-                # residual checkpoint have no readers left (r14 ADVICE:
-                # localCheckpoint blocks otherwise pin one generation
-                # per round until GC)
-                release_checkpoint(prev_state)
-                release_checkpoint(g)
+                # the new state materialized eagerly above: the previous
+                # round's state and this round's residuals have no
+                # readers left
+                pins.sweep(state)
                 u = state.where(F.col("side") == "u").select(
                     "node", "dim", "value"
                 )
                 v = state.where(F.col("side") == "v").select(
                     "node", "dim", "value"
                 )
+        # the returned u and v read the final state: the caller's
+        pins.keep(state)
         return SgnsResult(
             u=u, v=v, rounds=rounds, example_mass=mass, lr=lr
         )
-    finally:
-        # the trainer's last read of ex ran when the final round's
-        # residuals materialized; the returned u/v hang off the final
-        # state checkpoint, not ex. The pair-pin release is a no-op on
-        # the success path (released right after ex materialized) and
-        # the safety net on error paths.
-        pairs_pin.unpersist()
-        release_checkpoint(pairs_pin)
-        ex.unpersist()
-        release_checkpoint(ex)

@@ -1,52 +1,47 @@
 """The shared engine idioms of the iterative operators.
 
-This module is the single home of five idioms every loop needs, so a
-fix lands once:
+Each idiom lives here once, so a fix lands once:
 
-- ``VertexLoop``: the iteration lifecycle of the message-passing
-  vertex loops (below);
+- ``Pins``: the owner of every relation a loop pins (below);
+- ``VertexLoop``: a ``Pins`` that also runs the per-round cadence of
+  the message-passing vertex loops;
 - ``loop_conf``: the small-loop conf scope (AQE off, loop-sized
   ``spark.sql.shuffle.partitions``, both restored on exit) and the
   measurements behind it;
 - ``plan_size_bytes``: Catalyst's size estimate of a plan, read
-  without running a job;
-- ``materialize_or_release``: materialize a fresh persist, dropping
-  the mark if the job fails;
-- ``checkpoint_reset_stats`` / ``release_checkpoint``: checkpoint
-  pins that reset Catalyst statistics and release their blocks.
+  without running a job.
 
 PageRank, Katz, HITS, connected components, shortest paths, and label
 propagation are all the same loop wearing different algebra: cached
 edge layouts, a size-gated broadcast-or-copartitioned state join, a
-vertex-sized state whose lineage is truncated by LAZY localCheckpoint
-on a cadence, exactly ONE driver scalar per round (the aggregation
-that also materializes the cache/checkpoint), and a finally-sweep that
-releases every pinned generation on any exit path. That discipline
-took two rounds to harden (persist-before-track windows, mid-loop
-non-convergence paths, one-generation-late releases).
+vertex-sized state whose lineage is cut by a checkpoint on a cadence,
+and exactly ONE driver scalar per round (the aggregation that also
+materializes the round's pin). Each algorithm keeps its message
+algebra in its own loop body; the pins belong to the owner, opened as
+``with VertexLoop(...) as loop:`` (or ``with Pins() as pins:`` for a
+loop without a cadence). It gives each pin one of three lifetimes:
 
-``VertexLoop`` owns the LIFECYCLE only; each algorithm keeps its
-message algebra (the joins and aggregates) in its own loop body. The
-caller owns the ``cached`` list and sweeps it in a ``finally`` — the
-loop appends to and clears that same list in place, so a mid-round
-job failure releases exactly what was pinned when it died.
+- the scope (``hold``): edge layouts, vertex sets, feature pins;
+- a generation (``persist``, ``truncate``): the loop state, released
+  early by ``sweep`` once a newer generation has materialized, or one
+  action late by ``defer`` + ``flush`` when the newer one is still a
+  lazy checkpoint;
+- the caller's (``keep``, ``result``): the frame the operator returns,
+  with the checkpoints its plan reads; ``Pins().release(frame)``
+  frees them all.
 
-Invariants preserved from the hand-written loops (and locked in by
-``tests/test_cache_release.py`` plus the loop A/B artifacts):
+On exit, on any path, the owner releases everything it still tracks.
+Release means ``unpersist()`` AND freeing the checkpoint's storage
+blocks: ``unpersist()`` alone leaves a ``localCheckpoint``'s blocks
+pinned until both the Python and the JVM frame are garbage-collected.
+Generations are tracked BEFORE the action that materializes them, so a
+failed job cannot strand a fresh pin outside the owner.
 
-- persist generations are tracked BEFORE the materializing action —
-  appending after it leaves a window where a failed job strands the
-  fresh persist outside the caller's finally;
-- on checkpoint rounds the state is checkpointed LAZILY, so it
-  materializes inside the same per-round scalar aggregation — one job
-  per iteration even at cadence 1;
-- earlier generations are swept only AFTER that aggregation ran (the
-  checkpoint is then materialized, so nothing recomputes through the
-  released caches), clearing the shared list in place;
-- a cadence round with NO per-round scalar uses an EAGER checkpoint
-  instead (label-propagation shape): sweeping before a lazy
-  checkpoint materialized would force recompute through released
-  caches.
+Eager or lazy checkpoint, the one rule: LAZY when the next reader is
+one sequential action (the checkpoint then materializes inside it, with
+no job of its own); EAGER when several plan branches read the pin,
+whose stages could race a lazy materialization, or when no action
+materializes it before the pins it reads are released.
 """
 
 from __future__ import annotations
@@ -102,6 +97,10 @@ def loop_conf(
     - The setup aggregations (vertex distinct, degree join, counts)
       carry the same per-stage fixed costs: running them untuned while
       only the loop was tuned measured 6.3 s vs 4.4 s end to end.
+    - Split on perfbench's ``pagerank_ref`` (R-MAT scale 13, local[4],
+      op medians of 6 interleaved rounds): tuned 3.24 s, AQE on with
+      4 partitions 3.95 s, AQE off with 32 partitions 6.54 s, untuned
+      6.61 s — the partition count, not AQE, carries most of the win.
 
     These are session-global flips: safe for a dedicated job session,
     not for one shared with concurrent queries: operators with a
@@ -137,21 +136,6 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def materialize_or_release(df: DataFrame) -> DataFrame:
-    """Materialize a FRESHLY persisted frame, releasing its lazy
-    persist mark if the job fails. The fresh mark is in no shared
-    release list yet (a loop's finally sweeps only its tracked
-    generations), so a failed materializing count would otherwise pin
-    the relation past every caller's cleanup — the last gap in the
-    try/finally release discipline."""
-    try:
-        df.count()
-    except Exception:
-        df.unpersist()
-        raise
-    return df
-
-
 def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint that also RESETS Catalyst size statistics.
 
@@ -184,9 +168,8 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
             qe.toRdd(), jdf.schema(), False
         )
         out = DataFrame(fresh, ck.sparkSession)
-        # stash the PERSISTED checkpoint rdd (the fresh LogicalRDD only
-        # wraps a map over it) so release_checkpoint() can drop the
-        # blocks explicitly once the frame's last reader has run
+        # the fresh LogicalRDD only wraps a map over the PERSISTED
+        # checkpoint rdd: stash that one so a release can free it
         try:
             out._pagerank_spark_ckpt_jrdd = (
                 jdf.queryExecution().analyzed().rdd()
@@ -198,58 +181,186 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
         return ck
 
 
-def release_checkpoint(df: DataFrame) -> None:
-    """Best-effort EXPLICIT release of a localCheckpoint-rooted frame's
-    storage blocks. ``localCheckpoint`` persists the materialized RDD
-    (MEMORY_AND_DISK) and nothing ever unpersists it — the blocks stay
-    pinned until both the Python wrapper and the JVM Dataset are
-    garbage-collected, the long-lived-service leak the round-14 ADVICE
-    flagged (a ``DataFrame.unpersist()`` on top releases only the SQL
-    cache layer, not the checkpoint blocks underneath). The analyzed
-    plan of a checkpointed frame is a ``LogicalRDD`` holding that RDD
-    directly, so its blocks can be dropped the moment the frame's last
-    reader has run. Call ONLY after the last read: the frame is
-    unreadable afterwards (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). No-op
-    on frames that are not checkpoint-rooted or on API drift."""
+def _root_rdd(df: DataFrame):
+    """The RDD of the ``LogicalRDD`` at the root of ``df``'s analyzed
+    plan (a checkpointed frame's plan is exactly that leaf), or None.
+    A projection of a checkpoint is not rooted in it."""
     try:
-        jrdd = getattr(df, "_pagerank_spark_ckpt_jrdd", None)
-        if jrdd is not None:  # checkpoint_reset_stats-wrapped frame
-            jrdd.unpersist(False)
-            return
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # pragma: no cover - version-drift fallback
+            return plan.rdd()
+    except Exception:  # pragma: no cover - version drift
         pass
+    return None
 
 
-class VertexLoop:
-    """Lifecycle manager for one iterative vertex-state loop.
+def _leaf_rdd_ids(df: DataFrame) -> set[int]:
+    """Ids of the RDDs behind every ``LogicalRDD`` leaf of ``df``'s
+    analyzed plan: the checkpoints a recomputation of ``df`` reads."""
+    ids = set()
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        it = leaves.iterator()
+        while it.hasNext():
+            leaf = it.next()
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                ids.add(leaf.rdd().id())
+    except Exception:  # pragma: no cover - version drift
+        pass
+    return ids
 
-    ``cached`` is the CALLER-OWNED generation list, released by the
-    caller's ``finally`` — the loop shares it by reference and never
-    replaces it. ``checkpoint_every`` is the lineage-truncation
-    cadence; ``reliable`` switches the lazy ``localCheckpoint`` to a
-    reliable ``checkpoint`` (fault-tolerant across executor loss).
+
+def _free_blocks(df: DataFrame) -> None:
+    """Drop the storage blocks of a checkpointed frame, which nothing
+    else ever unpersists, and of the checkpoints ``result`` left with
+    it. No-op on frames that are not checkpoint-rooted or on API
+    drift."""
+    rdds = [getattr(df, "_pagerank_spark_ckpt_jrdd", None) or _root_rdd(df)]
+    rdds += getattr(df, "_pagerank_spark_reads", [])
+    for jrdd in rdds:
+        try:
+            if jrdd is not None:
+                jrdd.unpersist(False)
+        except Exception:  # pragma: no cover - version-drift fallback
+            pass
+
+
+class Pins:
+    """Owner of the relations an operator pins; see the module
+    docstring for the three lifetimes. ``reliable`` makes ``truncate``
+    a reliable ``checkpoint`` (fault-tolerant across executor loss)
+    instead of a ``localCheckpoint``.
+
+    Each frame has one lifetime at a time: ``hold`` of a generation
+    moves it to the scope, ``keep`` hands it to the caller. ``release``
+    also takes frames the owner never pinned, e.g. a caller releasing
+    what an operator returned: ``Pins().release(result)``.
     """
 
-    def __init__(
-        self,
-        cached: list[DataFrame],
-        *,
-        checkpoint_every: int = 1,
-        reliable: bool = False,
-        deferred: list[DataFrame] | None = None,
-    ) -> None:
-        self.cached = cached
-        self.checkpoint_every = checkpoint_every
+    def __init__(self, *, reliable: bool = False) -> None:
         self.reliable = reliable
-        # generations whose lazy checkpoint materializes one action
-        # LATE (shortest-paths shape) — released by flush_deferred()
-        self.deferred = deferred if deferred is not None else []
-        self.iteration = 0
+        self._held: list[DataFrame] = []
+        self._gens: list[DataFrame] = []
+        self._late: list[DataFrame] = []
 
-    # -- core cadence step (PageRank / CC / Katz shape) ----------------
+    def __enter__(self) -> Pins:
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self.release(*self._late, *self._gens, *self._held)
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` for the whole scope. A generation passed in
+        (``hold(truncate(df))``: a leaf plan with exact cached stats)
+        moves to the scope and keeps its checkpoint under the cache."""
+        self._untrack(df)
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._held.append(df)
+        return df
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        """Own, for the scope, a frame another owner handed out."""
+        self._held.append(df)
+        return df
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` as a generation."""
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._gens.append(df)
+        return df
+
+    def truncate(
+        self, df: DataFrame, eager: bool = False, reset_stats: bool = False
+    ) -> DataFrame:
+        """Cut ``df``'s lineage with a checkpoint, as a generation.
+        ``reset_stats`` takes ``checkpoint_reset_stats`` (always eager
+        and local)."""
+        if reset_stats:
+            df = checkpoint_reset_stats(df)
+        elif self.reliable:
+            df = df.checkpoint(eager=eager)
+        else:
+            df = df.localCheckpoint(eager=eager)
+        self._gens.append(df)
+        return df
+
+    def sweep(self, *keep: DataFrame) -> None:
+        """Release every generation but ``keep`` now. Call only once
+        the frames that read them have materialized."""
+        self.release(
+            *[df for df in self._late + self._gens if not _among(df, keep)]
+        )
+
+    def defer(self, *keep: DataFrame) -> None:
+        """Release every generation but ``keep`` at the next ``flush``:
+        the shape where the newest generation is a lazy checkpoint that
+        only the next action materializes."""
+        self._late += [df for df in self._gens if not _among(df, keep)]
+        self._gens = [df for df in self._gens if _among(df, keep)]
+
+    def flush(self) -> None:
+        """Release the deferred generations (call right after the
+        action that materialized their successor)."""
+        self.release(*self._late)
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand ``df`` to the caller: the owner no longer releases it."""
+        self._untrack(df)
+        return df
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Persist and materialize the frame the operator returns, then
+        hand it to the caller. Released with the rest if the job
+        fails.
+
+        The checkpoints ``df``'s plan reads go with it (their caches do
+        not): Spark recomputes through them whenever a plan misses
+        ``df``'s cache, e.g. the deduplicated side of a self-join. The
+        caller's release of ``df`` frees them. The frame is persisted
+        as itself, never as a copy: ``unpersist()`` matches cache
+        entries by plan, so releasing a generation would also drop the
+        cache of a copy of it."""
+        df = self.persist(df)
+        df.count()
+        self.keep(df)
+        reads = _leaf_rdd_ids(df)
+        df._pagerank_spark_reads = []
+        for pin in self._held + self._gens + self._late:
+            jrdd = _root_rdd(pin)
+            if jrdd is not None and jrdd.id() in reads:
+                df._pagerank_spark_reads.append(jrdd)
+                pin._pagerank_spark_spared = True
+        return df
+
+    def release(self, *dfs: DataFrame) -> None:
+        """Release ``dfs`` now: unpersist and free checkpoint blocks.
+        A released frame is unreadable if it was checkpoint-rooted."""
+        for df in dfs:
+            self._untrack(df)
+            df.unpersist()
+            if not getattr(df, "_pagerank_spark_spared", False):
+                _free_blocks(df)
+
+    def _untrack(self, df: DataFrame) -> None:
+        for pins in (self._held, self._gens, self._late):
+            pins[:] = [p for p in pins if p is not df]
+
+
+def _among(df: DataFrame, frames: tuple[DataFrame, ...]) -> bool:
+    return any(df is f for f in frames)
+
+
+class VertexLoop(Pins):
+    """A ``Pins`` owner that also runs the per-round lifecycle of one
+    vertex-state loop. ``checkpoint_every`` is the lineage-cut
+    cadence."""
+
+    def __init__(
+        self, *, checkpoint_every: int = 1, reliable: bool = False
+    ) -> None:
+        super().__init__(reliable=reliable)
+        self.checkpoint_every = checkpoint_every
+        self.iteration = 0
 
     def advance(
         self,
@@ -260,71 +371,23 @@ class VertexLoop:
 
         checkpoint-or-persist by cadence, execute the ONE materializing
         scalar aggregation (``metrics``: output name → aggregate
-        Column), then sweep every earlier pinned generation if this
-        round checkpointed. Returns ``(state, row)`` where ``row`` is
-        the metrics Row (None when no metrics were requested).
+        Column), then, on a checkpoint round, release every earlier
+        generation. Returns ``(state, row)`` where ``row`` is the
+        metrics Row (None when no metrics were requested).
         """
         self.iteration += 1
         on_ckpt = self.iteration % self.checkpoint_every == 0
         if on_ckpt:
-            # Lazy: materializes inside the metrics aggregation below —
-            # one job per iteration even at cadence 1. With no metrics
-            # to run, eager — the sweep below must not release caches a
-            # still-lazy checkpoint would recompute through.
-            eager = metrics is None
-            new_state = (
-                new_state.checkpoint(eager=eager)
-                if self.reliable
-                else new_state.localCheckpoint(eager=eager)
-            )
+            # lazy when the metrics aggregation is there to materialize
+            # it (one job per round even at cadence 1)
+            new_state = self.truncate(new_state, eager=metrics is None)
         else:
-            new_state = new_state.persist(StorageLevel.MEMORY_AND_DISK)
-            # tracked BEFORE the materializing agg — see module header
-            self.cached.append(new_state)
+            new_state = self.persist(new_state)
         row = None
         if metrics is not None:
             row = new_state.agg(
                 *[c.alias(name) for name, c in metrics.items()]
             ).collect()[0]
         if on_ckpt:
-            # the agg (or eager checkpoint) materialized this round's
-            # state: every earlier generation is dead weight
-            for df in self.cached:
-                df.unpersist()
-            self.cached.clear()  # in place — the caller's finally shares it
+            self.sweep(new_state)
         return new_state, row
-
-    # -- cadence-free helpers (HITS half-steps, frontier loops) --------
-
-    def truncate(self, df: DataFrame, eager: bool = False) -> DataFrame:
-        """Lineage-truncate ``df`` outside the cadence (mid-round
-        half-steps): lazy by default so the caller's next action
-        materializes it."""
-        return (
-            df.checkpoint(eager=eager)
-            if self.reliable
-            else df.localCheckpoint(eager=eager)
-        )
-
-    def track(self, df: DataFrame) -> DataFrame:
-        """Persist ``df`` and track it for the caller's finally —
-        BEFORE whatever action materializes it."""
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self.cached.append(df)
-        return df
-
-    def defer_all_but(self, keep: DataFrame) -> None:
-        """Move every tracked generation except ``keep`` to the
-        deferred list (released one materializing action LATE — the
-        shortest-paths shape, where a lazy checkpoint only
-        materializes in the NEXT round's anti-join)."""
-        self.deferred.extend(df for df in self.cached if df is not keep)
-        self.cached.clear()
-        self.cached.append(keep)
-
-    def flush_deferred(self) -> None:
-        """Release generations whose lazy checkpoint has now
-        materialized (call right after the action that scanned it)."""
-        for df in self.deferred:
-            df.unpersist()
-        self.deferred.clear()

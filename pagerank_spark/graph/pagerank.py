@@ -90,12 +90,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from pagerank_spark.graph.loop import (
+    Pins,
     VertexLoop,
     loop_conf,
-    materialize_or_release,
     plan_size_bytes,
 )
 
@@ -216,7 +215,9 @@ def pagerank(
     cluster session that set one up never silently runs the
     non-fault-tolerant mode.
 
-    Returns ranks over the full vertex set, summing to 1.
+    Returns ranks over the full vertex set, summing to 1, persisted;
+    ``Pins().release(result.ranks)`` (graph/loop.py) frees them and the
+    last checkpoint they read.
     """
     if edge_semantics not in ("bag", "reference"):
         raise ValueError(f"unknown edge_semantics: {edge_semantics!r}")
@@ -236,16 +237,9 @@ def pagerank(
         # amortize over 3 iterations there.
         checkpoint_every = 3 if reliable_checkpoint else 1
 
-    # Shared release lists (the components.py discipline): setup
-    # appends its loop-lifetime caches (init_state, edge_deg, warm
-    # start) to ``pinned`` and the loop appends state generations to
-    # ``gens`` (cleared in place at checkpoints), so a failed job at
-    # ANY point — setup collects included — releases everything in the
-    # finally. The returned ranks frame is a fresh persist, never in
-    # either list.
-    pinned: list[DataFrame] = []
-    gens: list[DataFrame] = []
-    try:
+    with VertexLoop(
+        checkpoint_every=checkpoint_every, reliable=reliable_checkpoint
+    ) as loop:
         # Two small-loop conf scopes (``loop_conf``; tune_aqe=False opts
         # out in a session shared with concurrent queries). The vertex
         # count isn't known before setup, so the setup scope is gated on
@@ -260,7 +254,7 @@ def pagerank(
             limit=SETUP_TUNE_SIZE_BYTES,
             per_part=SETUP_BYTES_PER_PARTITION,
         ):
-            deg, state, counts = _setup(edges, edge_semantics, pinned)
+            deg, state, counts = _setup(edges, edge_semantics, loop)
         n = counts["n"]
         if n == 0:
             empty = state.withColumn("rank", F.lit(0.0)).select(
@@ -301,8 +295,7 @@ def pagerank(
                 # loop's partition sizing so every per-iteration
                 # exchange (rank side, contribs agg) aligns.
                 edge_deg = edge_deg.repartition(loop_parts, "src")
-            edge_deg = edge_deg.persist(StorageLevel.MEMORY_AND_DISK)
-            pinned.append(edge_deg)
+            edge_deg = loop.hold(edge_deg)
 
             if init_ranks is None:
                 state = state.withColumn("rank", F.lit(1.0 / n))
@@ -311,7 +304,7 @@ def pagerank(
                 # n_src, giving the classic n_src/n.
                 m = (counts["sdfrac"] or 0.0) / n
             else:
-                state, m = _warm_start(state, init_ranks, n, gens)
+                state, m = _warm_start(state, init_ranks, n, loop)
 
             # G2-G4: the shared loop body. The per-round constant is
             # the teleport plus the renormalization β·(1−m)/n from the
@@ -320,11 +313,7 @@ def pagerank(
             # sources' partial distribution is accounted for), which
             # the same one aggregation per round also returns.
             state, iterations, trajectory = _iterate(
-                VertexLoop(
-                    gens,
-                    checkpoint_every=checkpoint_every,
-                    reliable=reliable_checkpoint,
-                ),
+                loop,
                 edge_deg,
                 state,
                 {"m": m},
@@ -347,28 +336,16 @@ def pagerank(
                 delta=delta,
                 max_iterations=max_iterations,
             )
-            # The setup-lifetime caches and any live state generations
-            # are released by the finally below; the returned ranks
-            # frame is a fresh persist, untouched by that sweep.
-            final = materialize_or_release(
-                state.select("node", "rank").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-            )
+            final = loop.result(state.select("node", "rank"))
             return PageRankResult(final, iterations, trajectory, strategy)
-    finally:
-        for df in gens:
-            df.unpersist()
-        for df in pinned:
-            df.unpersist()
 
 
 def _setup(
-    edges: DataFrame, edge_semantics: str, pinned: list[DataFrame]
+    edges: DataFrame, edge_semantics: str, pins: Pins
 ) -> tuple[DataFrame, DataFrame, Row]:
-    """Out-degrees (with ``dfrac``), the persisted vertex state
-    ``(node, deg, dfrac)`` (appended to ``pinned``), and its counts
-    row ``(n, n_src, sdfrac)``."""
+    """Out-degrees (with ``dfrac``), the vertex state ``(node, deg,
+    dfrac)`` (held by ``pins``), and its counts row ``(n, n_src,
+    sdfrac)``."""
     # Out-degrees are computed ONCE and reused for both the decorated edge
     # relation and the state init (was: two scans+aggs of the edge table).
     deg = degrees(edges)
@@ -392,13 +369,11 @@ def _setup(
 
     # G1: uniform init over the full vertex set, with out-degree attached
     # (deg NULL ⇔ dangling vertex). One cached state relation per iterate.
-    state = (
+    state = pins.hold(
         vertices(edges)
         .join(deg, on=[F.col("node") == F.col("src")], how="left")
         .select("node", "deg", "dfrac")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    pinned.append(state)
     counts = state.agg(
         F.count("*").alias("n"),
         F.count("deg").alias("n_src"),
@@ -408,29 +383,25 @@ def _setup(
 
 
 def _warm_start(
-    state: DataFrame, init_ranks: DataFrame, n: int, gens: list[DataFrame]
+    state: DataFrame, init_ranks: DataFrame, n: int, loop: VertexLoop
 ) -> tuple[DataFrame, float]:
     """Previous vector onto the current vertex set (new vertices →
     uniform share), renormalized to sum exactly 1 so the analytic
     dangling correction stays valid from iteration 1. Returns the
     state and its distributed mass."""
-    warm = (
+    # a generation: released at the loop's first checkpoint sweep
+    warm = loop.persist(
         state.join(
             init_ranks.select("node", F.col("rank").alias("__r0")),
             on="node",
             how="left",
-        )
-        .select(
+        ).select(
             "node",
             "deg",
             "dfrac",
             F.coalesce(F.col("__r0"), F.lit(1.0 / n)).alias("rank"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Rides the loop's cache-eviction cycle: released at the first
-    # checkpoint sweep like any other state generation.
-    gens.append(warm)
     row0 = warm.agg(
         F.sum("rank").alias("t"),
         F.sum(
@@ -568,9 +539,12 @@ def compare_teleports(
             .limit(k)
             .withColumn("position", F.row_number().over(w))
             .select("position", F.col("page").alias(f"page_{_beta_tag(beta)}"))
+            # k rows, cut from the ranks: the returned frame is read
+            # after the ranks' pins are released below
+            .localCheckpoint(eager=True)
         )
         tagged.append(t)
-        res.ranks.unpersist()
+        Pins().release(res.ranks)
 
     out = tagged[0]
     for t in tagged[1:]:
@@ -820,37 +794,27 @@ def _hits_loop(
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst")
-    verts = vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    if n == 0:
-        return verts.select(
-            "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
-        )
-    # Same small-loop tuning as the PageRank loop: AQE's runtime
-    # coalescing re-plans every round (breaking reuse of the cached
-    # edge partitioning) and the session's shuffle sizing is far too
-    # wide for a small graph's vertex-sized exchanges.
-    with loop_conf(spark, n, limit=TINY_VERTEX_LIMIT) as parts:
-        e_src = e.repartition(parts, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        e_dst = e.repartition(parts, "dst").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # a mid-loop job failure must still release the two full
-        # edge-table caches and the vertex cache — without it they stay
-        # pinned for the session lifetime
-        try:
-            return _hits_iterate(
-                e_src, e_dst, verts, n, parts, max_iterations, delta
+    with VertexLoop() as loop:
+        verts = loop.hold(vertices(e))
+        n = verts.count()
+        if n == 0:
+            return verts.select(
+                "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
             )
-        finally:
-            e_src.unpersist()
-            e_dst.unpersist()
-            verts.unpersist()
+        # Same small-loop tuning as the PageRank loop: AQE's runtime
+        # coalescing re-plans every round (breaking reuse of the cached
+        # edge partitioning) and the session's shuffle sizing is far
+        # too wide for a small graph's vertex-sized exchanges.
+        with loop_conf(spark, n, limit=TINY_VERTEX_LIMIT) as parts:
+            e_src = loop.hold(e.repartition(parts, "src"))
+            e_dst = loop.hold(e.repartition(parts, "dst"))
+            return _hits_iterate(
+                loop, e_src, e_dst, verts, n, parts, max_iterations, delta
+            )
 
 
 def _hits_iterate(
+    loop: VertexLoop,
     e_src: DataFrame,
     e_dst: DataFrame,
     verts: DataFrame,
@@ -899,10 +863,7 @@ def _hits_iterate(
     # HITS is the TWO-half-step variant of the shared loop: each round
     # truncates lineage twice (after the authority and hub steps), and
     # the per-round scalar is conditional on delta — so it uses the
-    # primitive's cadence-free truncate() rather than advance()
-    # (graph/loop.py; the persist-tracking halves of the discipline
-    # don't apply, HITS never persists mid-loop state).
-    loop = VertexLoop([])
+    # owner's cadence-free truncate() rather than advance().
     iteration = 0
     while iteration < max_iterations:
         iteration += 1
@@ -972,12 +933,14 @@ def _hits_iterate(
                 ),
                 F.sum(F.abs(F.col("hub") - F.col("old_hub"))).alias("l1h"),
             ).collect()[0]
+            # the scan materialized this round's checkpoints: every
+            # earlier one is dead (a fixed-k run has no such scan, so
+            # its checkpoints live until the result materializes)
+            loop.sweep(nxt)
         state = scored.select("node", "hub", "auth")
         if delta > 0 and (row["l1a"] or 0.0) + (row["l1h"] or 0.0) <= delta:
             break
-    return materialize_or_release(
-        state.persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    return loop.result(state)
 
 
 def katz_centrality(
@@ -1072,22 +1035,16 @@ def _katz_loop(
     float summation order."""
     spark = edges.sparkSession
     base = edges.select("src", "dst")
-    verts = vertices(base).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    # an empty graph runs untuned
-    with loop_conf(spark, n, enabled=n > 0, limit=TINY_VERTEX_LIMIT) as parts:
-        e = base.repartition(parts, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # try/finally: a mid-loop job failure must not leave the cached
-        # edge layout and vertex relation pinned for the session lifetime
-        # (same discipline as the HITS loop).
-        try:
-            # cadence 1 + a metric every round: the lazy checkpoint
-            # materializes inside the L1 aggregation — the loop never
-            # persists a generation, so its ``cached`` list stays empty.
+    with VertexLoop() as loop:
+        verts = loop.hold(vertices(base))
+        n = verts.count()
+        # an empty graph runs untuned
+        with loop_conf(
+            spark, n, enabled=n > 0, limit=TINY_VERTEX_LIMIT
+        ) as parts:
+            e = loop.hold(base.repartition(parts, "src"))
             state, _, _ = _iterate(
-                VertexLoop([], checkpoint_every=1),
+                loop,
                 e,
                 verts.select("node", F.lit(0.0).alias("katz")),
                 None,
@@ -1101,9 +1058,4 @@ def _katz_loop(
                 delta=delta,
                 max_iterations=max_iterations,
             )
-            return materialize_or_release(
-                state.persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        finally:
-            e.unpersist()
-            verts.unpersist()
+            return loop.result(state)

@@ -37,8 +37,8 @@ def random_walks(edges: DataFrame, steps: int = 4) -> DataFrame:
     # and the degree agg `steps` times (exchange reuse dedupes only
     # the shuffle BELOW the window — the sort+window above it re-runs
     # per reference). An eager checkpoint makes every step read the
-    # one materialization; the blocks are GC-released (same lifetime
-    # discipline as node2vec's per-step frontier checkpoints).
+    # one materialization. The returned lazy frame reads these pins,
+    # so their lifetime is the caller's (GC-released).
     adj = (
         edges.select(
             "src", "dst", (F.row_number().over(w) - 1).alias("idx")
@@ -175,14 +175,14 @@ def node2vec_walks(
     ec = edges.count()
     bcs = 2 * ec <= BROADCAST_STATE_ROW_LIMIT
     with loop_conf(spark, ec, enabled=tune):
-        return _node2vec_body(edges, steps, p, q, bcs)
+        return _node2vec_steps(edges, steps, p, q, bcs)
 
 
-def _node2vec_body(
+def _node2vec_steps(
     edges: DataFrame, steps: int, p: float, q: float, bcs: bool
 ) -> DataFrame:
     from pagerank_spark.graph.components import _bc
-    from pagerank_spark.graph.loop import release_checkpoint
+    from pagerank_spark.graph.loop import Pins
 
     # r15 optimization (§5: reused AND expensive to recompute): the
     # per-step eager checkpoints split the walk into one job per step,
@@ -190,192 +190,184 @@ def _node2vec_body(
     # over the full edge table), the degree agg, and the distinct edge
     # set — were RE-COMPUTED by every step's job (steps × a 600k-row
     # sort/window + steps × a 600k-row distinct at sf0.1; exchange
-    # reuse never applies across jobs). Pin each once: eager
+    # reuse never applies across jobs). Hold each once: eager
     # checkpoint → every step reads a leaf, persist on top → exact
-    # stats keep the joins' broadcast decisions. Released after the
-    # final step's checkpoint — the last reader — materializes.
+    # stats keep the joins' broadcast decisions.
     w = Window.partitionBy("src").orderBy("dst")
-    adj = (
-        edges.select(
-            "src", "dst", (F.row_number().over(w) - 1).alias("idx")
-        )
-        .localCheckpoint(eager=True)
-        .persist()
-    )
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-        .persist()
-    )
-    eset = (
-        edges.select(
-            F.col("src").alias("p_src"), F.col("dst").alias("p_dst")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-        .persist()
-    )
-    try:
-        return _node2vec_steps(adj, deg, eset, steps, p, q, bcs)
-    finally:
-        for pin in (adj, deg, eset):
-            pin.unpersist()
-            release_checkpoint(pin)
-
-
-def _node2vec_steps(
-    adj: DataFrame,
-    deg: DataFrame,
-    eset: DataFrame,
-    steps: int,
-    p: float,
-    q: float,
-    bcs: bool,
-) -> DataFrame:
-    from pagerank_spark.graph.components import _bc
-
-    # step 1: uniform, no prev — the random_walks rule verbatim. The
-    # distinct sources are exactly the pinned degree relation's keys
-    # (one row per src), so no extra distinct pass over the edges.
-    state = deg.select(
-        F.col("src").alias("start"),
-        F.col("src").alias("cur"),
-        F.col("src").cast("string").alias("path"),
-    )
-    pick1 = F.pmod(
-        portable_hash60(
-            F.concat(F.col("cur").cast("string"), F.lit("#1"))
-        ),
-        F.col("deg"),
-    )
-    state = (
-        _bc(state, bcs).join(deg, state["cur"] == deg["src"], "inner")
-        .withColumn("__pick", pick1)
-        .drop("src", "deg")
-    )
-    state = (
-        _bc(state, bcs).join(
-            adj,
-            (state["cur"] == adj["src"]) & (state["__pick"] == adj["idx"]),
-        )
-        .select(
-            "start",
-            F.col("cur").alias("prev"),
-            F.col("dst").alias("cur"),
-            F.concat(
-                F.col("path"), F.lit("->"), F.col("dst").cast("string")
-            ).alias("path"),
-            F.lit(2).alias("walk_len"),
-        )
-        # eager per-step checkpoint (r14: the pin-re-analysis fix
-        # applied to the walk frontier): composing all steps into one
-        # lazy plan makes the final action's ANALYSIS cost grow with
-        # the product of the per-step subtrees (each step embeds two
-        # joins, two windows and the previous step's whole plan) —
-        # measured as multi-second driver gaps with only ~1s of
-        # executor work. Materializing the walk-count-sized frontier
-        # per step keeps every plan step-shallow; rows are identical,
-        # so the declared trajectory is unchanged.
-        .localCheckpoint(eager=True)
-    )
-
-    win_cum = (
-        Window.partitionBy("start")
-        .orderBy("idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # r15 optimization (§2.4): the partition total used to ride an
-    # UNORDERED spec (partitionBy(start) alone) — a different window
-    # spec than the running sum, so Catalyst stacked TWO Window
-    # operators per step. The same total expressed over the SAME
-    # (partition, order) spec with an unbounded frame folds both
-    # functions into ONE Window operator (one pass over the sorted
-    # candidates; the unbounded frame is computed once per partition).
-    # Float-identical: the total is summed over the identical rows —
-    # and for the strict-parity power-of-two p/q the weights are exact
-    # binary fractions anyway. A HOF-fold rewrite (collect_list +
-    # aggregate) was measured SLOWER (9.5-12.0 s vs 6.9-7.8 s at
-    # sf0.1) and rejected — the object agg + interpreted fold loses to
-    # the codegen'd window even with the extra sort.
-    win_all = (
-        Window.partitionBy("start")
-        .orderBy("idx")
-        .rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-    )
-    for t in range(2, steps + 1):
-        cand = _bc(state, bcs).join(
-            adj.select(
-                F.col("src").alias("__asrc"), "dst", "idx"
-            ),
-            state["cur"] == F.col("__asrc"),
-        ).join(
-            _bc(eset, bcs),
-            (F.col("p_src") == F.col("prev"))
-            & (F.col("p_dst") == F.col("dst")),
-            "left",
-        )
-        wcol = (
-            F.when(F.col("dst") == F.col("prev"), F.lit(1.0 / p))
-            .when(F.col("p_dst").isNotNull(), F.lit(1.0))
-            .otherwise(F.lit(1.0 / q))
-        )
-        u = (
-            F.pmod(
-                portable_hash60(
-                    F.concat(
-                        F.col("prev").cast("string"),
-                        F.lit(">"),
-                        F.col("cur").cast("string"),
-                        F.lit(f"#{t}"),
-                    )
+    with Pins() as pins:
+        adj = pins.hold(
+            pins.truncate(
+                edges.select(
+                    "src", "dst", (F.row_number().over(w) - 1).alias("idx")
                 ),
-                F.lit(1000000),
-            ).cast("double")
-            / F.lit(1000000.0)
+                eager=True,
+            )
         )
-        scored = cand.select(
-            "start",
-            "dst",
-            "idx",
-            F.sum(wcol).over(win_cum).alias("__cum"),
-            (u * F.sum(wcol).over(win_all)).alias("__target"),
+        deg = pins.hold(
+            pins.truncate(
+                edges.groupBy("src").agg(F.count("*").alias("deg")),
+                eager=True,
+            )
         )
-        chosen = (
-            scored.where(F.col("__cum") > F.col("__target"))
-            .groupBy("start")
-            .agg(F.min_by("dst", "idx").alias("__nxt"))
+        eset = pins.hold(
+            pins.truncate(
+                edges.select(
+                    F.col("src").alias("p_src"), F.col("dst").alias("p_dst")
+                ).distinct(),
+                eager=True,
+            )
+        )
+        # step 1: uniform, no prev — the random_walks rule verbatim. The
+        # distinct sources are exactly the pinned degree relation's keys
+        # (one row per src), so no extra distinct pass over the edges.
+        state = deg.select(
+            F.col("src").alias("start"),
+            F.col("src").alias("cur"),
+            F.col("src").cast("string").alias("path"),
+        )
+        pick1 = F.pmod(
+            portable_hash60(
+                F.concat(F.col("cur").cast("string"), F.lit("#1"))
+            ),
+            F.col("deg"),
         )
         state = (
-            state.join(_bc(chosen, bcs), on="start", how="left")
+            _bc(state, bcs).join(deg, state["cur"] == deg["src"], "inner")
+            .withColumn("__pick", pick1)
+            .drop("src", "deg")
+        )
+        state = (
+            _bc(state, bcs).join(
+                adj,
+                (state["cur"] == adj["src"]) & (state["__pick"] == adj["idx"]),
+            )
             .select(
                 "start",
-                F.when(F.col("__nxt").isNotNull(), F.col("cur"))
-                .otherwise(F.col("prev"))
-                .alias("prev"),
-                F.coalesce(F.col("__nxt"), F.col("cur")).alias("cur"),
-                F.when(
-                    F.col("__nxt").isNotNull(),
-                    F.concat(
-                        F.col("path"),
-                        F.lit("->"),
-                        F.col("__nxt").cast("string"),
-                    ),
-                )
-                .otherwise(F.col("path"))
-                .alias("path"),
-                F.when(F.col("__nxt").isNotNull(), F.col("walk_len") + 1)
-                .otherwise(F.col("walk_len"))
-                .alias("walk_len"),
+                F.col("cur").alias("prev"),
+                F.col("dst").alias("cur"),
+                F.concat(
+                    F.col("path"), F.lit("->"), F.col("dst").cast("string")
+                ).alias("path"),
+                F.lit(2).alias("walk_len"),
             )
-            # per-step eager checkpoint — see the step-1 comment
-            .localCheckpoint(eager=True)
         )
-    return state.select(
-        "start", "path", F.col("walk_len").cast("int").alias("walk_len")
-    )
+        # eager per-step checkpoint (r14: the pin-re-analysis fix applied
+        # to the walk frontier): composing all steps into one lazy plan
+        # makes the final action's ANALYSIS cost grow with the product of
+        # the per-step subtrees (each step embeds two joins, two windows
+        # and the previous step's whole plan) — measured as multi-second
+        # driver gaps with only ~1s of executor work. Materializing the
+        # walk-count-sized frontier per step keeps every plan step-shallow;
+        # rows are identical, so the declared trajectory is unchanged.
+        # The last step's checkpoint holds the returned columns, so the
+        # caller's frame is the checkpoint itself (one pin to release).
+        def cut(df: DataFrame, last: bool) -> DataFrame:
+            if last:
+                df = df.select(
+                    "start",
+                    "path",
+                    F.col("walk_len").cast("int").alias("walk_len"),
+                )
+            return pins.truncate(df, eager=True)
+
+        state = cut(state, steps == 1)
+
+        win_cum = (
+            Window.partitionBy("start")
+            .orderBy("idx")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        # r15 optimization (§2.4): the partition total used to ride an
+        # UNORDERED spec (partitionBy(start) alone) — a different window
+        # spec than the running sum, so Catalyst stacked TWO Window
+        # operators per step. The same total expressed over the SAME
+        # (partition, order) spec with an unbounded frame folds both
+        # functions into ONE Window operator (one pass over the sorted
+        # candidates; the unbounded frame is computed once per partition).
+        # Float-identical: the total is summed over the identical rows —
+        # and for the strict-parity power-of-two p/q the weights are exact
+        # binary fractions anyway. A HOF-fold rewrite (collect_list +
+        # aggregate) was measured SLOWER (9.5-12.0 s vs 6.9-7.8 s at
+        # sf0.1) and rejected — the object agg + interpreted fold loses to
+        # the codegen'd window even with the extra sort.
+        win_all = (
+            Window.partitionBy("start")
+            .orderBy("idx")
+            .rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        )
+        for t in range(2, steps + 1):
+            cand = _bc(state, bcs).join(
+                adj.select(
+                    F.col("src").alias("__asrc"), "dst", "idx"
+                ),
+                state["cur"] == F.col("__asrc"),
+            ).join(
+                _bc(eset, bcs),
+                (F.col("p_src") == F.col("prev"))
+                & (F.col("p_dst") == F.col("dst")),
+                "left",
+            )
+            wcol = (
+                F.when(F.col("dst") == F.col("prev"), F.lit(1.0 / p))
+                .when(F.col("p_dst").isNotNull(), F.lit(1.0))
+                .otherwise(F.lit(1.0 / q))
+            )
+            u = (
+                F.pmod(
+                    portable_hash60(
+                        F.concat(
+                            F.col("prev").cast("string"),
+                            F.lit(">"),
+                            F.col("cur").cast("string"),
+                            F.lit(f"#{t}"),
+                        )
+                    ),
+                    F.lit(1000000),
+                ).cast("double")
+                / F.lit(1000000.0)
+            )
+            scored = cand.select(
+                "start",
+                "dst",
+                "idx",
+                F.sum(wcol).over(win_cum).alias("__cum"),
+                (u * F.sum(wcol).over(win_all)).alias("__target"),
+            )
+            chosen = (
+                scored.where(F.col("__cum") > F.col("__target"))
+                .groupBy("start")
+                .agg(F.min_by("dst", "idx").alias("__nxt"))
+            )
+            state = (
+                state.join(_bc(chosen, bcs), on="start", how="left")
+                .select(
+                    "start",
+                    F.when(F.col("__nxt").isNotNull(), F.col("cur"))
+                    .otherwise(F.col("prev"))
+                    .alias("prev"),
+                    F.coalesce(F.col("__nxt"), F.col("cur")).alias("cur"),
+                    F.when(
+                        F.col("__nxt").isNotNull(),
+                        F.concat(
+                            F.col("path"),
+                            F.lit("->"),
+                            F.col("__nxt").cast("string"),
+                        ),
+                    )
+                    .otherwise(F.col("path"))
+                    .alias("path"),
+                    F.when(F.col("__nxt").isNotNull(), F.col("walk_len") + 1)
+                    .otherwise(F.col("walk_len"))
+                    .alias("walk_len"),
+                )
+            )
+            # per-step eager checkpoint — see the step 1 comment; the
+            # previous step's has no reader left
+            state = cut(state, t == steps)
+            pins.sweep(state)
+        return pins.keep(state)
 
 
 def skipgram_pairs(

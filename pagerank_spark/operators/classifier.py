@@ -182,32 +182,31 @@ def logreg_train(
     # repartitioned rows would silently re-add a per-round exchange
     # of the big feature relation — the co-partitioning this pin
     # exists to establish.
-    # lazy (r15): the plan is a leaf either way, and the readers are
-    # strictly sequential driver actions (the n_rows count, then the
-    # repartition-pin materializations) — laziness deletes the two
-    # dedicated checkpoint jobs. The physical plan of a lazy
-    # checkpoint is compiled at creation, so the loop-conf flip below
-    # cannot re-shape it.
-    xb_ck = xb.localCheckpoint(eager=False)
-    lab_ck = lab.localCheckpoint(eager=False)
-    # run the rounds under the engine's shared small-loop conf (the
+    # Lazy (r15): the readers are sequential driver actions (the
+    # n_rows count, then the repartition-pin materializations). The
+    # physical plan of a lazy checkpoint is compiled at creation, so
+    # the loop-conf flip below cannot re-shape it.
+    # Run the rounds under the engine's shared small-loop conf (the
     # SVD/SGNS/node2vec discipline, a no-op above the 64M-row cut):
     # with AQE on, every tiny per-round job re-plans its stages and
     # shuffles into session-count micro-partitions — measured as
     # multi-second per-action driver gaps on the fixture trainers.
     # The co-partitioning repartition happens INSIDE the conf so the
     # pins and every per-round exchange share the loop sizing.
-    from pagerank_spark.graph.loop import loop_conf, release_checkpoint
+    from pagerank_spark.graph.loop import Pins, loop_conf
 
-    n_rows = xb_ck.count()
-    xb = lab = None
-    try:
+    # every pin is released on exit: nothing reads the trainer's
+    # relations after the rounds return their driver-side weights
+    with Pins() as pins:
+        xb_ck = pins.truncate(xb)
+        lab_ck = pins.truncate(lab)
+        n_rows = xb_ck.count()
         # ``tune=False`` opts shared-session callers out of the
         # session-global AQE/partition flip (r14 ADVICE — mirrors
         # node2vec_walks(tune=) / pagerank(tune_aqe=))
         with loop_conf(spark, n_rows, enabled=tune) as shuffle_p:
-            xb = xb_ck.repartition(shuffle_p, id_col).persist()
-            lab = lab_ck.repartition(shuffle_p, id_col).persist()
+            xb = pins.hold(xb_ck.repartition(shuffle_p, id_col))
+            lab = pins.hold(lab_ck.repartition(shuffle_p, id_col))
             n = float(lab.count())
             xb.count()  # materialize the pin before the rounds start
             return _logreg_rounds(
@@ -215,18 +214,6 @@ def logreg_train(
                 id_col=id_col, rounds=rounds, lr=lr, l2=l2, tol=tol,
                 track_loss=track_loss,
             )
-    finally:
-        # release the cache layer AND the eager-checkpoint blocks
-        # underneath (r14 ADVICE: the checkpoints otherwise stay
-        # pinned until Python+JVM GC — a ~2x footprint while only the
-        # repartitioned cache is live; nothing reads the trainer's
-        # relations after the rounds return their driver-side weights)
-        if xb is not None:
-            xb.unpersist()
-        if lab is not None:
-            lab.unpersist()
-        release_checkpoint(xb_ck)
-        release_checkpoint(lab_ck)
 
 
 def _logreg_rounds(
@@ -432,19 +419,17 @@ def softmax_train(
             F.lit(1.0).alias("feature_value"),
         )
     )
-    # checkpoint-below-repartition + small-loop conf — the
-    # logreg_train rationale verbatim
-    from pagerank_spark.graph.loop import loop_conf, release_checkpoint
+    # checkpoint-below-repartition + small-loop conf, with the pins'
+    # lifetimes — the logreg_train rationale verbatim
+    from pagerank_spark.graph.loop import Pins, loop_conf
 
-    # lazy — the logreg_train rationale verbatim
-    xb_ck = xb.localCheckpoint(eager=False)
-    lab_ck = lab.localCheckpoint(eager=False)
-    n_rows = xb_ck.count()
-    xb = lab = None
-    try:
+    with Pins() as pins:
+        xb_ck = pins.truncate(xb)
+        lab_ck = pins.truncate(lab)
+        n_rows = xb_ck.count()
         with loop_conf(spark, n_rows, enabled=tune) as shuffle_p:
-            xb = xb_ck.repartition(shuffle_p, id_col).persist()
-            lab = lab_ck.repartition(shuffle_p, id_col).persist()
+            xb = pins.hold(xb_ck.repartition(shuffle_p, id_col))
+            lab = pins.hold(lab_ck.repartition(shuffle_p, id_col))
             n = float(lab.count())
             xb.count()
             return _softmax_rounds(
@@ -452,14 +437,6 @@ def softmax_train(
                 id_col=id_col, rounds=rounds, lr=lr, kk=kk,
                 classes=classes, track_loss=track_loss,
             )
-    finally:
-        # cache layer + checkpoint blocks, as in logreg_train
-        if xb is not None:
-            xb.unpersist()
-        if lab is not None:
-            lab.unpersist()
-        release_checkpoint(xb_ck)
-        release_checkpoint(lab_ck)
 
 
 def _softmax_rounds(

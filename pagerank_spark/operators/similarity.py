@@ -534,21 +534,25 @@ def pca_top_component(
         pairs.groupBy("i", "j")
         .agg((F.sum(F.col("xi") * F.col("xj")) / n).alias("exy"))
     )
-    cov = (
-        exy.join(means.select(F.col("i"), F.col("mi")), on="i")
-        .join(
-            means.select(F.col("i").alias("j"), F.col("mi").alias("mj")),
-            on="j",
+    from pagerank_spark.graph.loop import Pins
+
+    # the owner releases the dim²-row covariance pin on any exit, a
+    # failed power-iteration job included
+    with Pins() as pins:
+        cov = pins.hold(
+            exy.join(means.select(F.col("i"), F.col("mi")), on="i")
+            .join(
+                means.select(
+                    F.col("i").alias("j"), F.col("mi").alias("mj")
+                ),
+                on="j",
+            )
+            .select(
+                "i",
+                "j",
+                (F.col("exy") - F.col("mi") * F.col("mj")).alias("cov"),
+            )
         )
-        .select(
-            "i", "j", (F.col("exy") - F.col("mi") * F.col("mj")).alias("cov")
-        )
-        .persist()
-    )
-    # try/finally: a failed power-iteration job must still release the
-    # pinned dim²-row covariance relation (the ann_ivf_persisted
-    # discipline).
-    try:
         dim = cov.agg(F.max("i")).collect()[0][0] + 1
         x = [1.0 / math.sqrt(dim)] * dim
         spark = df.sparkSession
@@ -583,8 +587,6 @@ def pca_top_component(
             .agg(F.sum(F.col("xi") * F.col("cov") * F.col("xj")))
             .collect()[0][0]
         )
-    finally:
-        cov.unpersist()
     out = local_relation(spark, 
         [(i, float(c), float(lam)) for i, c in enumerate(x)],
         "pos INT, component DOUBLE, eigenvalue DOUBLE",

@@ -119,18 +119,19 @@ def unigram_lm_train(
     # instead of the whole corpus plan. The checkpoint sits BELOW the
     # repartition+persist pin, which keeps the per-round per-word
     # regroups exchange-free (tests/test_checkpoint_pin.py).
-    words = (
-        toks.groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .localCheckpoint(eager=True)
-    )
-    cand = _candidate_edges(words, L)
-    # cached for the seed pass + every EM round; partitioned on word so
-    # each round's per-word regroup is exchange-free
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    cand = cand.repartition(shuffle_p, "word").persist()
+    from pagerank_spark.graph.loop import Pins
 
-    try:
+    with Pins() as pins:
+        words = pins.truncate(
+            toks.groupBy("word").agg(F.count("*").alias("freq")), eager=True
+        )
+        # cached for the seed pass + every EM round; partitioned on word
+        # so each round's per-word regroup is exchange-free
+        shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        cand = pins.hold(
+            _candidate_edges(words, L).repartition(shuffle_p, "word")
+        )
+
         # ---- seed -------------------------------------------------------
         piece_w = cand.groupBy("piece").agg(
             F.sum("freq").alias("wf"),
@@ -149,26 +150,27 @@ def unigram_lm_train(
         vocab = _scalar_fold(selected, total0).select(
             "piece", (F.col("wf") / F.col("__t")).alias("prob")
         )
-        # Lazy checkpoints (r15) for the seed and every NON-final
-        # round: each is read next by exactly one sequential consumer
-        # (the following round's broadcast build), so laziness deletes
-        # one dedicated materialization job per round. The FINAL
-        # vocabulary stays EAGER: the prune below references it from
-        # three plan branches, and parallel stages racing a lazy
-        # checkpoint would re-run the (cand-sized) EM aggregation.
-        vocab = vocab.localCheckpoint(eager=False)
+        # The eager-vs-lazy rule of graph/loop.py: the seed and every
+        # NON-final round are read next by one sequential consumer (the
+        # following round's broadcast build), so they are lazy; the
+        # FINAL vocabulary is read by the prune below from three plan
+        # branches, so it is eager.
+        vocab = pins.truncate(vocab)
 
         # ---- EM rounds --------------------------------------------------
         for rnd in range(rounds):
             counts = _em_expected_counts(cand, vocab, L)
             total = counts.agg(F.sum("cnt").alias("__t"))
-            vocab = (
-                _scalar_fold(counts, total)
-                .select("piece", (F.col("cnt") / F.col("__t")).alias("prob"))
-                .localCheckpoint(eager=(rnd == rounds - 1))
+            vocab = pins.truncate(
+                _scalar_fold(counts, total).select(
+                    "piece", (F.col("cnt") / F.col("__t")).alias("prob")
+                ),
+                eager=rnd == rounds - 1,
             )
 
         # ---- prune ------------------------------------------------------
+        # the returned frame reads the final vocabulary: the caller's
+        pins.keep(vocab)
         keep = (
             vocab.orderBy(F.desc("prob"), F.asc("piece"))
             .limit(vocab_size)
@@ -183,8 +185,6 @@ def unigram_lm_train(
         return _scalar_fold(keep, totalp).select(
             "piece", (F.col("prob") / F.col("__t")).alias("prob")
         )
-    finally:
-        cand.unpersist()
 
 
 def _lattice_arrays(edges_col, n, L):

@@ -91,15 +91,20 @@ def source_digest(repo: str = REPO) -> str:
     return h.hexdigest()[:16]
 
 
-def _git_head(repo: str = REPO) -> str | None:
+def sources_dirty(repo: str = REPO) -> bool | None:
+    """Whether the files ``source_digest`` hashes differ from git HEAD
+    (edited, added or deleted): the artifact then proves a tree that
+    no commit holds yet — the usual state when parity is refreshed
+    before the commit that carries it. None when git is unavailable."""
     import subprocess
 
     try:
         out = subprocess.run(
-            ["git", "-C", repo, "rev-parse", "HEAD"],
-            capture_output=True, text=True, timeout=10,
+            ["git", "-C", repo, "status", "--porcelain", "--",
+             "pagerank_spark/*.py", "__spark_entry__.py"],
+            capture_output=True, text=True, timeout=10, check=True,
         )
-        return out.stdout.strip() or None
+        return bool(out.stdout.strip())
     except Exception:
         return None
 
@@ -223,7 +228,7 @@ def main(argv=None) -> int:
         # freshness provenance (r11 verdict #2): the exact source this
         # artifact proves, checkable without git archaeology
         "source_digest": source_digest(),
-        "engine_commit": _git_head(),
+        "dirty": sources_dirty(),
     }
     with open(out_path, "w") as f:
         json.dump({"summary": summary, "queries": results}, f, indent=1)

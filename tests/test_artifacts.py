@@ -20,7 +20,7 @@ sys.path.insert(0, REPO)
 
 from bench import infer_round  # noqa: E402
 from parity import _infer_round as parity_next_round  # noqa: E402
-from parity import source_digest  # noqa: E402
+from parity import source_digest, sources_dirty  # noqa: E402
 
 
 def _touch(d, name):
@@ -93,6 +93,35 @@ def test_source_digest_tracks_engine_source(tmp_path):
     assert source_digest(str(tmp_path)) == d2
 
 
+def test_sources_dirty_tracks_uncommitted_engine_edits(tmp_path):
+    """``dirty`` is True exactly when a file the digest covers differs
+    from HEAD; other files do not count."""
+    import subprocess
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-C", str(tmp_path), "-c", "user.name=t",
+             "-c", "user.email=t@t", *args],
+            check=True, capture_output=True,
+        )
+
+    pkg = tmp_path / "pagerank_spark"
+    pkg.mkdir()
+    (pkg / "x.py").write_text("def f(): return 1\n")
+    (tmp_path / "__spark_entry__.py").write_text("# entry\n")
+    git("init", "-q")
+    git("add", "-A")
+    git("commit", "-q", "-m", "seed")
+    assert sources_dirty(str(tmp_path)) is False
+    (tmp_path / "probe.py").write_text("pass\n")
+    assert sources_dirty(str(tmp_path)) is False
+    (pkg / "x.py").write_text("def f(): return 2\n")
+    assert sources_dirty(str(tmp_path)) is True
+    git("commit", "-q", "-am", "edit")
+    (pkg / "y.py").write_text("# new\n")
+    assert sources_dirty(str(tmp_path)) is True
+
+
 def test_newest_parity_artifact_records_provenance():
     """Every parity artifact from round 12 on must carry the freshness
     fields the gate consumes."""
@@ -113,4 +142,7 @@ def test_newest_parity_artifact_records_provenance():
     ][0]
     summary = json.load(open(newest))["summary"]
     assert summary.get("source_digest")
-    assert summary.get("engine_commit")
+    # whether that digest's files differed from HEAD at parity time; a
+    # commit id recorded at run time would name the parent commit
+    assert isinstance(summary.get("dirty"), bool)
+    assert "engine_commit" not in summary

@@ -10,7 +10,9 @@ during the first materializing job, AFTER the setup persists) and
 asserting the block store drains back to empty.
 
 The check polls: ``DataFrame.unpersist()`` is non-blocking, so block
-removal is asynchronous.
+removal is asynchronous. It never forces a garbage collection: every
+loop's pins belong to a ``graph/loop.py`` owner, which releases them
+(checkpoint blocks included) on any exit path.
 """
 
 from __future__ import annotations
@@ -26,19 +28,10 @@ def _storage_entries(spark) -> int:
 
 
 def _assert_drains(spark, baseline: int, timeout: float = 20.0) -> None:
-    import gc
-
     deadline = time.monotonic() + timeout
     while time.monotonic() < deadline:
         if _storage_entries(spark) <= baseline:
             return
-        # Explicit persists are released by unpersist() in the finally
-        # paths; LAZY localCheckpoint blocks are owned by the context
-        # cleaner and drain only after their RDD objects are
-        # garbage-collected on both sides — force that so the poll
-        # distinguishes "cleaner hasn't run yet" from a real leak.
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
         time.sleep(0.5)
     info = [
         str(x) for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -200,13 +193,12 @@ def test_scc_releases_on_mid_loop_nonconvergence(spark):
 
 
 def test_pagerank_success_path_still_releases(spark):
-    """Success path: after unpersisting the returned ranks, the only
-    storage residue is localCheckpoint blocks (owned by the context
-    cleaner, freed on GC) — every explicit loop cache is gone. The
-    convergence run at delta>0 checkpoints each iteration, so assert
-    on EXPLICITLY-persisted leftovers being released rather than an
-    exact baseline: the final ranks unpersist must drain what the run
-    added beyond its checkpoint blocks."""
+    """Success path: after releasing the returned ranks, no storage
+    residue is left — the loop's owner released every cache AND every
+    per-iteration checkpoint's blocks (the run checkpoints each of its
+    iterations), and the ranks' release frees the last checkpoint,
+    which the ranks' lineage reads."""
+    from pagerank_spark.graph.loop import Pins
     from pagerank_spark.graph.pagerank import pagerank
 
     edges = spark.range(20).select(
@@ -216,132 +208,213 @@ def test_pagerank_success_path_still_releases(spark):
     before = _storage_entries(spark)
     res = pagerank(edges, max_iterations=3, delta=0.0)
     assert res.ranks.count() == 20
-    res.ranks.unpersist()
-    # tolerate the run's checkpoint blocks (one per iteration at
-    # cadence 1), nothing else
-    _assert_drains(spark, before + 3)
+    Pins().release(res.ranks)
+    _assert_drains(spark, before)
+    assert _storage_entries(spark) == before
 
 
-def test_materialize_or_release_unpins_on_failed_count(spark):
-    # Direct unit test of the helper every loop's trailing persist now
-    # goes through: a failed materializing count must drop the fresh
-    # persist mark (it is in no shared release list).
-    from pagerank_spark.graph.loop import materialize_or_release
+def test_result_releases_on_failed_count(spark):
+    # The owner's result(): a failed materializing count must drop the
+    # fresh persist mark — the frame is released on exit.
+    from pagerank_spark.graph.loop import Pins
 
     baseline = _storage_entries(spark)
     boom = F.raise_error(F.lit("poisoned edge")).cast("long")
     df = spark.range(10).select(
         F.when(F.col("id") < 5, F.col("id")).otherwise(boom).alias("v")
-    ).persist()
+    )
     with pytest.raises(Exception, match="poisoned edge"):
-        materialize_or_release(df)
+        with Pins() as pins:
+            pins.result(df)
     assert not df.storageLevel.useMemory  # mark dropped synchronously
     _assert_drains(spark, baseline)
 
-    ok = spark.range(5).persist()
-    assert materialize_or_release(ok) is ok
-    assert ok.storageLevel.useMemory
-    ok.unpersist()
+    with Pins() as pins:
+        ok = pins.result(spark.range(5))
+    assert ok.storageLevel.useMemory  # handed to the caller
+    Pins().release(ok)
+    assert not ok.storageLevel.useMemory
+
+
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_vertex_loop_advance_tracks_and_sweeps(spark):
     """Direct contract test for the shared loop primitive
-    (graph/loop.py VertexLoop): non-checkpoint rounds persist and
-    track BEFORE the materializing aggregation; checkpoint rounds
-    sweep every earlier tracked generation in place (the caller's
-    finally shares the list) and return the metrics row."""
+    (graph/loop.py VertexLoop): non-checkpoint rounds persist BEFORE
+    the materializing aggregation; checkpoint rounds release every
+    earlier generation — caches AND checkpoint blocks — and return
+    the metrics row; exit releases the rest."""
     from pagerank_spark.graph.loop import VertexLoop
 
-    cached = []
-    loop = VertexLoop(cached, checkpoint_every=2)
     df = spark.range(10).select(F.col("id").alias("node"),
                                 F.lit(1.0).alias("x"))
+    base = _persistent_ids(spark)
+    with VertexLoop(checkpoint_every=2) as loop:
+        # round 1: not a checkpoint round -> persisted
+        s1, row1 = loop.advance(df, metrics={"n": F.count("*")})
+        assert row1["n"] == 10
+        assert s1.storageLevel.useMemory  # actually persisted
 
-    # round 1: not a checkpoint round -> persisted + tracked
-    s1, row1 = loop.advance(df, metrics={"n": F.count("*")})
-    assert row1["n"] == 10
-    assert len(cached) == 1 and cached[0] is s1
-    assert s1.storageLevel.useMemory  # actually persisted
+        # round 2: checkpoint round -> earlier generation swept,
+        # metrics still returned
+        s2, row2 = loop.advance(s1.select("node", "x"),
+                                metrics={"n": F.count("*")})
+        assert row2["n"] == 10
+        assert not s1.storageLevel.useMemory  # swept
+        # the checkpointed state is plan-truncated to a LogicalRDD scan
+        plan = s2._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in plan
+        assert len(_persistent_ids(spark) - base) == 1  # s2's blocks
 
-    # round 2: checkpoint round -> earlier generation swept, list
-    # cleared IN PLACE (same object), metrics still returned
-    held = cached
-    s2, row2 = loop.advance(s1.select("node", "x"),
-                            metrics={"n": F.count("*")})
-    assert row2["n"] == 10
-    assert cached == [] and held is cached
-    assert not s1.storageLevel.useMemory  # swept
-    # the checkpointed state is plan-truncated to a LogicalRDD scan
-    assert "LogicalRDD" in s2._jdf.queryExecution().optimizedPlan().toString()
+        # rounds 3-4: the next checkpoint frees s2's blocks too
+        s3, _ = loop.advance(s2.select("node", "x"),
+                             metrics={"n": F.count("*")})
+        s4, _ = loop.advance(s3.select("node", "x"),
+                             metrics={"n": F.count("*")})
+        assert not s3.storageLevel.useMemory
+        assert len(_persistent_ids(spark) - base) == 1  # s4's blocks
+    assert _persistent_ids(spark) - base == set()  # exit releases s4
 
     # metrics=None on a checkpoint round must checkpoint EAGERLY (the
     # sweep would otherwise release caches a lazy checkpoint still
     # needs) and return row=None
-    loop2 = VertexLoop([], checkpoint_every=1)
-    s3, row3 = loop2.advance(df)
-    assert row3 is None
-    assert "LogicalRDD" in s3._jdf.queryExecution().optimizedPlan().toString()
-    assert s3.count() == 10
+    with VertexLoop(checkpoint_every=1) as loop2:
+        s5, row5 = loop2.advance(df)
+        assert row5 is None
+        plan = s5._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in plan
+        assert s5.count() == 10
 
 
-def test_vertex_loop_track_defer_flush(spark):
-    """The frontier-loop half of the primitive: track() persists and
-    appends before any action; defer_all_but() rotates superseded
-    generations to the deferred list keeping only the live frontier;
-    flush_deferred() releases them."""
+def test_vertex_loop_persist_defer_flush(spark):
+    """The frontier-loop half of the primitive: persist() pins a
+    generation before any action; defer() holds superseded
+    generations until flush(), keeping only the named live ones;
+    hold() pins for the whole scope."""
     from pagerank_spark.graph.loop import VertexLoop
 
-    cached, pending = [], []
-    loop = VertexLoop(cached, deferred=pending)
-    a = loop.track(spark.range(5).select(F.col("id").alias("node")))
-    b = loop.track(spark.range(3).select(F.col("id").alias("node")))
-    a.count(), b.count()
-    assert cached == [a, b]
-    assert a.storageLevel.useMemory and b.storageLevel.useMemory
+    with VertexLoop() as loop:
+        e = loop.hold(spark.range(7).select(F.col("id").alias("node")))
+        a = loop.persist(spark.range(5).select(F.col("id").alias("node")))
+        b = loop.persist(spark.range(3).select(F.col("id").alias("node")))
+        e.count(), a.count(), b.count()
+        assert a.storageLevel.useMemory and b.storageLevel.useMemory
 
-    loop.defer_all_but(b)
-    assert cached == [b] and pending == [a]
-    assert a.storageLevel.useMemory  # deferred, not yet released
+        loop.defer(b)
+        assert a.storageLevel.useMemory  # deferred, not yet released
 
-    loop.flush_deferred()
-    assert pending == []
-    assert not a.storageLevel.useMemory
-    assert b.storageLevel.useMemory  # the kept frontier survives
-    b.unpersist()
+        loop.flush()
+        assert not a.storageLevel.useMemory
+        assert b.storageLevel.useMemory  # the kept frontier survives
+
+        loop.sweep()
+        assert not b.storageLevel.useMemory
+        assert e.storageLevel.useMemory  # held for the scope
+    assert not e.storageLevel.useMemory
 
 
 def test_release_checkpoint_drops_blocks(spark):
-    """r15: release_checkpoint() explicitly frees a localCheckpoint's
-    storage blocks — both for a plain checkpointed frame and for a
+    """The owner's release frees a localCheckpoint's storage blocks —
+    for a plain checkpointed frame and for a
     checkpoint_reset_stats-wrapped one (whose fresh LogicalRDD hides
     the persisted RDD) — instead of waiting for Python+JVM GC."""
-    from pagerank_spark.graph.loop import (
-        checkpoint_reset_stats,
-        release_checkpoint,
-    )
+    from pagerank_spark.graph.loop import Pins, checkpoint_reset_stats
 
-    jsc = spark.sparkContext._jsc
-
-    def persistent_ids():
-        return set(jsc.getPersistentRDDs().keys())
-
-    base = persistent_ids()
+    base = _persistent_ids(spark)
     plain = spark.range(100).selectExpr("id", "id * 2 AS v")
     ck = plain.localCheckpoint(eager=True)
-    assert persistent_ids() - base  # the checkpoint pinned blocks
-    release_checkpoint(ck)
-    assert persistent_ids() == base
+    assert _persistent_ids(spark) - base  # the checkpoint pinned blocks
+    Pins().release(ck)
+    assert _persistent_ids(spark) == base
 
     wrapped = checkpoint_reset_stats(
         spark.range(50).selectExpr("id", "id + 1 AS v")
     )
     assert wrapped.count() == 50
-    assert persistent_ids() - base
-    release_checkpoint(wrapped)
-    assert persistent_ids() == base
+    assert _persistent_ids(spark) - base
+    Pins().release(wrapped)
+    assert _persistent_ids(spark) == base
 
     # non-checkpointed frames are a safe no-op
-    release_checkpoint(spark.range(3))
+    Pins().release(spark.range(3))
+
+
+def _ring_graph(spark):
+    """60 vertices, two out-edges each: a ring plus a stride-7 chord."""
+    ring = spark.range(60).select(
+        F.col("id").alias("src"),
+        F.pmod(F.col("id") + 1, F.lit(60)).alias("dst"),
+    )
+    chord = spark.range(60).select(
+        F.col("id").alias("src"),
+        F.pmod(F.col("id") * 7 + 3, F.lit(60)).alias("dst"),
+    )
+    return chord.unionByName(ring)
+
+
+def _seeds(spark):
+    return spark.range(3).select(F.col("id").alias("node"))
+
+
+def _op(name):
+    from pagerank_spark.graph.components import (
+        betweenness_centrality,
+        connected_components,
+        shortest_paths,
+        strongly_connected_components,
+    )
+    from pagerank_spark.graph.pagerank import hits, katz_centrality, pagerank
+    from pagerank_spark.graph.walks import node2vec_walks
+
+    return {
+        "pagerank": lambda e, s: pagerank(e).ranks,
+        "hits": lambda e, s: hits(e, delta=1e-9, max_iterations=20),
+        "katz": lambda e, s: katz_centrality(
+            e, max_iterations=5, mode="loop"
+        ),
+        "cc-label": lambda e, s: connected_components(e, algorithm="label"),
+        "cc-star": lambda e, s: connected_components(e, algorithm="star"),
+        "shortest-paths": lambda e, s: shortest_paths(e, s),
+        "scc": lambda e, s: strongly_connected_components(e),
+        "betweenness": lambda e, s: betweenness_centrality(e, s),
+        "node2vec": lambda e, s: node2vec_walks(e),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "name, held",
+    [
+        # the returned frame's cache, plus the one checkpoint its
+        # lineage reads (the last generation; for shortest paths the
+        # returned reached set itself, for scc the one settled piece)
+        ("pagerank", 2),
+        ("hits", 2),
+        ("katz", 2),
+        ("cc-label", 2),
+        ("cc-star", 2),
+        ("shortest-paths", 2),
+        ("scc", 2),
+        # the returned frame is an eager checkpoint
+        ("betweenness", 1),
+        ("node2vec", 1),
+    ],
+)
+def test_operator_release_is_deterministic(spark, name, held):
+    """After the call only the pins its returned frame reads remain
+    (no other loop generation, edge cache or checkpoint block), and
+    the owner's release of that frame returns the block store to its
+    snapshot — no garbage collection involved."""
+    from pagerank_spark.graph.loop import Pins
+
+    edges, seeds = _ring_graph(spark), _seeds(spark)
+    base = _persistent_ids(spark)
+    result = _op(name)(edges, seeds)
+    assert result.count() > 0
+    assert len(_persistent_ids(spark) - base) == held
+    Pins().release(result)
+    assert _persistent_ids(spark) - base == set()
 
 
 def test_trainers_tune_false_matches_and_releases(spark):

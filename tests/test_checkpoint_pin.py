@@ -22,6 +22,11 @@ silent plan regression:
 3. The checkpointed frame's analyzed plan is a leaf (no lineage into
    the pre-checkpoint operators), which is what kills the per-action
    re-analysis cost.
+4. ``DataFrame.unpersist()`` leaves a ``localCheckpoint``'s storage
+   blocks in place, and matches cache entries by plan — which is why
+   the pin owner (``graph/loop.py`` ``Pins``) frees checkpoint blocks
+   itself and persists a returned generation as itself, never as a
+   plan-equivalent copy.
 """
 
 from __future__ import annotations
@@ -105,3 +110,36 @@ def test_local_checkpoint_truncates_lineage_to_leaf(spark):
     assert sorted(tuple(r) for r in ck.collect()) == sorted(
         tuple(r) for r in deep.collect()
     )
+
+
+def test_unpersist_leaves_local_checkpoint_blocks_documented(spark):
+    """What the pin owner's release relies on: ``unpersist()`` on a
+    checkpoint-rooted frame frees none of its blocks (they stay until
+    Python and JVM GC), the owner's release does, and ``unpersist()``
+    of a checkpoint also drops the cache of an equivalent persisted
+    projection. If a Spark upgrade changes any of this, the owner's
+    release logic can simplify."""
+    from pagerank_spark.graph.loop import Pins
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        return set(jsc.getPersistentRDDs().keys())
+
+    base = persistent_ids()
+    ck = spark.range(100).selectExpr("id", "id * 2 AS v").localCheckpoint(
+        eager=True
+    )
+    pinned = persistent_ids() - base
+    assert pinned
+    ck.unpersist()
+    assert persistent_ids() - base == pinned  # the blocks stay
+    Pins().release(ck)
+    assert persistent_ids() - base == set()
+
+    ck = spark.range(10).selectExpr("id").localCheckpoint(eager=True)
+    copy = ck.select("*").persist()
+    copy.count()
+    ck.unpersist()
+    assert not copy.storageLevel.useMemory  # matched by plan
+    Pins().release(ck)
