@@ -4595,15 +4595,19 @@ def q217_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("s_suppkey", "nation")
     )
-    amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) * (
-        1 - F.col("l_tax")
+    # exact money arithmetic: a DOUBLE sum depends on summation order,
+    # which flipped the 4th decimal of one group against the twin at
+    # sf0.1; the decimal product and sum are exact on both engines
+    dec = lambda c: F.col(c).cast("decimal(15,2)")  # noqa: E731
+    amount = dec("l_extendedprice") * (1 - dec("l_discount")) * (
+        1 - dec("l_tax")
     )
     return (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("nation", "o_year")
-        .agg(F.round(F.sum(amount), 4).alias("sum_profit"))
+        .agg(F.round(F.sum(amount), 4).cast("double").alias("sum_profit"))
         .orderBy("nation", F.col("o_year").desc())
     )
 
@@ -12352,7 +12356,9 @@ _oracle(
     """
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS INTEGER) AS o_year,
-       ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 - l_tax)), 4)
+       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))
+                      * (1 - CAST(l_tax AS DECIMAL(15,2)))), 4) AS DOUBLE)
          AS sum_profit
 FROM lineitem
 JOIN part     ON l_partkey = p_partkey

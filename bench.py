@@ -210,6 +210,7 @@ REGRESSION_FACTOR = 1.5
 
 def main() -> None:
     import __spark_entry__ as entry_mod
+    from pagerank_spark.graph.loop import Pins
     from pagerank_spark.graph.pagerank import pagerank, top_k
     from pagerank_spark.io import read_edge_list
     from pagerank_spark.session import get_spark
@@ -422,7 +423,7 @@ def main() -> None:
         timings["pagerank_full"] = min(
             timings.get("pagerank_full", elapsed), elapsed
         )
-        res.ranks.unpersist()
+        Pins().release(res.ranks)
         assert len(top) > 0
         release_session_state()
 
@@ -440,7 +441,7 @@ def main() -> None:
         timings["hits_loop_k10"] = min(
             timings.get("hits_loop_k10", elapsed), elapsed
         )
-        hdf.unpersist()
+        Pins().release(hdf)
         release_session_state()
 
     # q234 split into build vs serve (round-10 verdict #4): the old
@@ -478,7 +479,7 @@ def main() -> None:
             timings["q234_ivf_serve"] = min(
                 timings.get("q234_ivf_serve", el), el
             )
-            served.unpersist()
+            Pins().release(served)
         finally:
             remove_index(spark, root)
         release_session_state()
@@ -504,7 +505,7 @@ def main() -> None:
             res = pagerank(edges)
             top = top_k(res.ranks, 100).collect()
             elapsed = round(time.perf_counter() - t0, 3)
-            res.ranks.unpersist()
+            Pins().release(res.ranks)
             edges.unpersist()
             best = elapsed if best is None else min(best, elapsed)
         timings["pagerank_wikidata"] = best

@@ -39,6 +39,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     args = ap.parse_args(argv)
 
     from pagerank_spark.graph import compare_teleports, pagerank, top_k
+    from pagerank_spark.graph.loop import Pins
     from pagerank_spark.io import read_edge_list, write_csv, write_result_text
     from pagerank_spark.operators.relational import duplicate_rows_report
     from pagerank_spark.session import get_spark
@@ -52,30 +53,33 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     t0 = time.perf_counter()
 
     edges = read_edge_list(spark, args.edges, sample_fraction=args.frac)
-    # Loop-invariant input, scanned by the dup report and three times in
-    # PageRank setup — persist the single text scan for the process life.
-    edges = edges.persist()
-    if args.csv_dump:
-        write_csv(edges, args.csv_dump, single_file=True)
+    with Pins() as pins:
+        # Loop-invariant input, scanned by the dup report and three
+        # times in PageRank setup — persist the single text scan.
+        edges = pins.hold(edges)
+        if args.csv_dump:
+            write_csv(edges, args.csv_dump, single_file=True)
 
-    dupes = duplicate_rows_report(edges, ["src", "dst"]).collect()
-    print(f"duplicate edges: {len(dupes)}")
-    for r in dupes[:20]:
-        print(f"  ({r['src']}, {r['dst']}) x{r['n_occurrences']}")
+        dupes = duplicate_rows_report(edges, ["src", "dst"]).collect()
+        print(f"duplicate edges: {len(dupes)}")
+        for r in dupes[:20]:
+            print(f"  ({r['src']}, {r['dst']}) x{r['n_occurrences']}")
 
-    res = pagerank(edges, beta=args.beta, delta=args.delta)
-    for i, l1 in enumerate(res.l1_trajectory, 1):
-        print(f"iteration {i}: L1 = {l1:.12g}")
-    print(f"converged in {res.iterations} iterations")
+        res = pagerank(edges, beta=args.beta, delta=args.delta)
+        pins.adopt(res.ranks)
+        for i, l1 in enumerate(res.l1_trajectory, 1):
+            print(f"iteration {i}: L1 = {l1:.12g}")
+        print(f"converged in {res.iterations} iterations")
 
-    write_result_text(top_k(res.ranks, args.top), args.output, k=args.top)
-    print(f"top-{args.top} written to {args.output}")
+        write_result_text(top_k(res.ranks, args.top), args.output, k=args.top)
+        print(f"top-{args.top} written to {args.output}")
 
-    if args.compare_teleports:
-        sweep = compare_teleports(edges, k=min(args.top, 100)).collect()
-        n_match = sum(1 for r in sweep if r["all_match"])
-        print(f"compare_teleports: {n_match}/{len(sweep)} positions agree "
-              f"across betas")
+        if args.compare_teleports:
+            sweep = compare_teleports(edges, k=min(args.top, 100))
+            sweep = pins.adopt(sweep).collect()
+            n_match = sum(1 for r in sweep if r["all_match"])
+            print(f"compare_teleports: {n_match}/{len(sweep)} positions agree "
+                  f"across betas")
 
     print(f"total time: {time.perf_counter() - t0:.3f}s")
     if own_session:

@@ -153,46 +153,32 @@ def build_dashboard_payload(
     """
     if edges is None:
         edges = read_edge_list(spark, edge_path, sample_fraction=frac)
-    edges = edges.persist()
-    # try/finally: the dashboard rebuilds the payload on every slider
-    # change — a failed build (bad upload, killed job) must not pin an
-    # edge cache per attempt for the session lifetime.
-    try:
-        return _build_payload_body(spark, edges, beta, k, chart_limit)
-    finally:
-        edges.unpersist()
-
-
-def _build_payload_body(
-    spark: SparkSession,
-    edges: DataFrame,
-    beta: float,
-    k: int,
-    chart_limit: int,
-) -> DashboardPayload:
-    n_edges = edges.count()
-
-    res = pagerank(edges, beta=beta)
-    try:
-        top_df = top_k(res.ranks, k)
+    # One scope: the dashboard rebuilds the payload on every slider
+    # change, so a build, failed or not, must leave no pin behind.
+    with Pins() as pins:
+        edges = pins.hold(edges)
+        n_edges = edges.count()
+        res = pagerank(edges, beta=beta)
+        ranks = pins.adopt(res.ranks)
+        top_df = top_k(ranks, k)
         top_rows = [(r["page"], r["score"]) for r in top_df.collect()]
 
-        sub = induced_subgraph(
-            edges, top_df.select(F.col("page").alias("node"))
-        ).distinct()
-        sub_edges = sorted(
-            (r["src"], r["dst"]) for r in sub.collect()
-        )
+        # the k-node set from the collected rows, as literals: a
+        # top_k(ranks) here would read the ranks on both semi-joins,
+        # and the deduplicated side re-derives them from the loop's
+        # last checkpoint
+        pages = F.array(*[F.lit(page).cast("long") for page, _ in top_rows])
+        top_nodes = spark.range(1).select(F.explode(pages).alias("node"))
+        sub = induced_subgraph(edges, top_nodes).distinct()
+        sub_edges = sorted((r["src"], r["dst"]) for r in sub.collect())
 
         chart = [
             (r["page"], r["score"])
-            for r in top_k(res.ranks, chart_limit).collect()
+            for r in top_k(ranks, chart_limit).collect()
         ]
 
-        q = score_quantiles(
-            res.ranks, "rank", probs=(0.25, 0.5, 0.75)
-        ).collect()[0]
-        lo, hi = res.ranks.agg(
+        q = score_quantiles(ranks, "rank", probs=(0.25, 0.5, 0.75)).collect()[0]
+        lo, hi = ranks.agg(
             F.min("rank").alias("lo"), F.max("rank").alias("hi")
         ).collect()[0]
         box = {
@@ -214,8 +200,6 @@ def _build_payload_body(
             download_b64=csv_download_payload(top_df),
             iterations=res.iterations,
         )
-    finally:
-        Pins().release(res.ranks)
 
 
 def run_streamlit_app(edge_path: str) -> None:  # pragma: no cover

@@ -1072,9 +1072,9 @@ def _scc_rounds(
     max_label_iterations: int,
     broadcast_state: bool,
 ) -> DataFrame:
-    # Each round's pins are eager (two plan branches read each) and are
-    # released once the next round's replacements have materialized;
-    # the settled pieces live until the result has.
+    # Each round's pins are released once the next round's
+    # replacements have materialized; the settled pieces live until
+    # the result has.
     with Pins() as pins:
         residual_edges = pins.hold(edges.select("src", "dst").distinct())
         residual_nodes = vertices(residual_edges)
@@ -1182,74 +1182,74 @@ def maximal_independent_set(
     # to join the set (min_np comes back NULL -> automatic winner)
     live_nodes = nodes
     decided = None  # (node, status)
-    for r in range(1, rounds + 1):
-        # fixed-width string priority: 16-hex-digit hash || 8-digit id
-        # — lexicographic order == numeric order, and a plain MIN over
-        # strings is portable to any engine (no struct-min needed)
-        pri = lambda c: F.concat(  # noqa: E731
-            F.lpad(
-                F.hex(
-                    portable_hash60(
-                        F.concat(F.col(c).cast("string"), F.lit(f"#m{r}"))
-                    )
+    with Pins() as pins:
+        for r in range(1, rounds + 1):
+            # fixed-width string priority: 16-hex-digit hash || 8-digit id
+            # — lexicographic order == numeric order, and a plain MIN over
+            # strings is portable to any engine (no struct-min needed)
+            pri = lambda c: F.concat(  # noqa: E731
+                F.lpad(
+                    F.hex(
+                        portable_hash60(
+                            F.concat(F.col(c).cast("string"), F.lit(f"#m{r}"))
+                        )
+                    ),
+                    16,
+                    "0",
                 ),
-                16,
-                "0",
-            ),
-            F.lpad(F.col(c).cast("string"), 8, "0"),
-        )
-        nbr_min = (
-            live_edges.select(
-                F.col("src").alias("node"), pri("dst").alias("np")
+                F.lpad(F.col(c).cast("string"), 8, "0"),
             )
-            .groupBy("node")
-            .agg(F.min("np").alias("min_np"))
-        )
-        winners = (
-            live_nodes.join(nbr_min, on="node", how="left")
-            .where(
-                F.col("min_np").isNull()
-                | (pri("node") < F.col("min_np"))
+            nbr_min = (
+                live_edges.select(
+                    F.col("src").alias("node"), pri("dst").alias("np")
+                )
+                .groupBy("node")
+                .agg(F.min("np").alias("min_np"))
             )
-            .select("node")
-        )
-        dominated = (
-            live_edges.join(
-                winners.select(F.col("node").alias("src")), on="src"
+            winners = (
+                live_nodes.join(nbr_min, on="node", how="left")
+                .where(
+                    F.col("min_np").isNull()
+                    | (pri("node") < F.col("min_np"))
+                )
+                .select("node")
             )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(winners, on="node", how="left_anti")
-        )
-        new_decided = winners.select(
-            "node", F.lit("in_set").alias("status")
-        ).unionAll(
-            dominated.select("node", F.lit("dominated").alias("status"))
-        )
-        decided = (
-            new_decided
-            if decided is None
-            else decided.unionAll(new_decided)
-        )
-        gone = winners.unionAll(dominated.select("node"))
-        live_edges = (
-            live_edges.join(
-                gone.select(F.col("node").alias("src")), on="src", how="left_anti"
+            dominated = (
+                live_edges.join(
+                    winners.select(F.col("node").alias("src")), on="src"
+                )
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(winners, on="node", how="left_anti")
             )
-            .join(
-                gone.select(F.col("node").alias("dst")), on="dst", how="left_anti"
+            new_decided = winners.select(
+                "node", F.lit("in_set").alias("status")
+            ).unionAll(
+                dominated.select("node", F.lit("dominated").alias("status"))
             )
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
+            decided = (
+                new_decided
+                if decided is None
+                else decided.unionAll(new_decided)
+            )
+            gone = winners.unionAll(dominated.select("node"))
+            live_edges = pins.truncate(
+                live_edges.join(
+                    gone.select(F.col("node").alias("src")), on="src", how="left_anti"
+                )
+                .join(
+                    gone.select(F.col("node").alias("dst")), on="dst", how="left_anti"
+                )
+                .select("src", "dst")
+            )
+            live_nodes = pins.truncate(
+                live_nodes.join(gone, on="node", how="left_anti")
+            )
+        undecided = (
+            nodes.join(decided.select("node"), on="node", how="left_anti")
+            .select("node", F.lit("undecided").alias("status"))
         )
-        live_nodes = live_nodes.join(
-            gone, on="node", how="left_anti"
-        ).localCheckpoint(eager=False)
-    undecided = (
-        nodes.join(decided.select("node"), on="node", how="left_anti")
-        .select("node", F.lit("undecided").alias("status"))
-    )
-    return decided.unionAll(undecided)
+        return pins.keep(decided.unionAll(undecided))
 
 
 def ktruss(
@@ -1280,36 +1280,36 @@ def ktruss(
     if rounds < 1:
         raise ValueError(f"ktruss: rounds must be >= 1, got {rounds}")
     surv = undirected_edges(edges)
-    out = None
-    for r in range(rounds):
-        tri = triangles(surv)
-        # each triangle supports its three edges
-        sup = (
-            tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionAll(
-                tri.select(F.col("b").alias("src"), F.col("c").alias("dst"))
+    with Pins() as pins:
+        for r in range(rounds):
+            tri = triangles(surv)
+            # each triangle supports its three edges
+            sup = (
+                tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+                .unionAll(
+                    tri.select(F.col("b").alias("src"), F.col("c").alias("dst"))
+                )
+                .unionAll(
+                    tri.select(F.col("a").alias("src"), F.col("c").alias("dst"))
+                )
+                .groupBy("src", "dst")
+                .agg(F.count("*").alias("support"))
             )
-            .unionAll(
-                tri.select(F.col("a").alias("src"), F.col("c").alias("dst"))
+            out = (
+                surv.join(sup, on=["src", "dst"], how="left")
+                .select(
+                    "src",
+                    "dst",
+                    F.coalesce("support", F.lit(0)).cast("long").alias("support"),
+                )
+                .where(F.col("support") >= k - 2)
             )
-            .groupBy("src", "dst")
-            .agg(F.count("*").alias("support"))
-        )
-        out = (
-            surv.join(sup, on=["src", "dst"], how="left")
-            .select(
-                "src",
-                "dst",
-                F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-            )
-            .where(F.col("support") >= k - 2)
-        )
-        if r < rounds - 1:
-            # lazy lineage cut, the graph-loop discipline: the next
-            # round re-reads the survivor relation twice per join leg
-            out = out.localCheckpoint(eager=False)
-        surv = out.select("src", "dst")
-    return out
+            if r < rounds - 1:
+                # lineage cut: the next round re-reads the survivor
+                # relation twice per join leg
+                out = pins.truncate(out)
+            surv = out.select("src", "dst")
+        return pins.keep(out)
 
 
 def betweenness_centrality(

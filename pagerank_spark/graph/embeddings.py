@@ -143,8 +143,7 @@ def svd_topk(
         else:
             # checkpoint-then-persist: leaf plan for cheap per-action
             # analysis, exact cached stats for join planning (see
-            # ppmi_svd_embeddings for the measurement); lazy: the nnz
-            # count below is the strictly-next reader
+            # ppmi_svd_embeddings for the measurement)
             m = pins.hold(
                 pins.truncate(
                     matrix.select(
@@ -190,8 +189,7 @@ def svd_topk(
         # lazy persist: every component is checkpoint-rooted (no
         # lineage into the m pin), so materialization can ride the
         # caller's first action instead of a dedicated count job
-        out = out.persist()
-        return out, [lam for _, lam in comps]
+        return pins.keep(pins.persist(out)), [lam for _, lam in comps]
 
 
 def _svd_loop(
@@ -200,8 +198,8 @@ def _svd_loop(
 ):
     """The component loop proper — runs under svd_topk's loop conf.
     Each iterate's checkpoint is released once the next iterate has
-    read it; a component's last one is handed to the caller (the
-    returned lazy vectors read it).
+    read it; a component's last one moves to the scope, and goes to
+    the caller with the returned vectors, which read it.
 
     Deflation is CLASSICAL Gram–Schmidt against the found factors
     (all dots taken on the raw iterate, subtracted as one summed
@@ -237,11 +235,9 @@ def _svd_loop(
             # per-group reduction inputs, and the per-node adjustment
             # sums at most rank−1 ≤ 2 terms, where float addition is
             # order-exact.)
-            # LAZY checkpoint (r15; graph/loop.py's rule): it
-            # materializes INSIDE the next reader (the dots collect for
-            # deflated components, the norm otherwise), deleting the
-            # dedicated checkpoint job each iteration paid (~0.2 s/job
-            # driver floor × rank × iterations).
+            # Lazy (r15): it deleted the dedicated checkpoint job each
+            # iteration paid (~0.2 s/job driver floor × rank ×
+            # iterations).
             yc = pins.truncate(big_matvec(v))
             if factors_u is not None:
                 # all k dots in ONE pass over the cached y
@@ -314,7 +310,7 @@ def _svd_loop(
             pins.sweep(yc)  # the previous iterate has no reader left
             if stop:
                 break
-        pins.keep(yc)
+        pins.adopt(yc)  # the component's vector reads it
         if iterations_out is not None:
             iterations_out.append(rounds_run)
         comps.append(v)
@@ -389,7 +385,6 @@ def ppmi_svd_embeddings(
     from pagerank_spark.graph.loop import Pins
 
     with Pins() as pins:
-        # lazy: svd_topk's nnz count is the strictly-next reader
         m = pins.hold(
             pins.truncate(
                 ppmi.select(
@@ -623,9 +618,8 @@ def sgns_train(
     # exact row stats keep driving the sampler's join planning.
     # Measured (sf0.1, q266 shape, interleaved min-of-2): example
     # build 6.54 → 3.94 s, identical 110627 example rows. The pin is
-    # eager (four plan branches read it) and is released as soon as
-    # the example relation is materialized — the last read of
-    # ``pairs``.
+    # released as soon as the example relation is materialized — the
+    # last read of ``pairs``.
     from pagerank_spark.graph.loop import Pins, loop_conf
 
     with Pins() as pins:
@@ -662,8 +656,7 @@ def sgns_train(
         # distincts re-analyze it before the cache lookup substitutes
         # the rows — a leaf LogicalRDD makes each of those plans O(1)
         # to analyze while the persist keeps exact-size statistics
-        # driving the join strategy. Lazy (r15): ex.count() below is
-        # the strictly-next reader.
+        # driving the join strategy.
         ex = pins.hold(
             pins.truncate(
                 p.withColumn("label", F.lit(1.0))

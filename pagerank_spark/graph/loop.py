@@ -27,8 +27,9 @@ loop without a cadence). It gives each pin one of three lifetimes:
   action late by ``defer`` + ``flush`` when the newer one is still a
   lazy checkpoint;
 - the caller's (``keep``, ``result``): the frame the operator returns,
-  with the checkpoints its plan reads; ``Pins().release(frame)``
-  frees them all.
+  lazy or materialized, with the checkpoints its plan reads;
+  ``Pins().release(frame)`` frees them all, where ``unpersist()``
+  would leave the checkpoints pinned.
 
 On exit, on any path, the owner releases everything it still tracks.
 Release means ``unpersist()`` AND freeing the checkpoint's storage
@@ -210,19 +211,13 @@ def _leaf_rdd_ids(df: DataFrame) -> set[int]:
     return ids
 
 
-def _free_blocks(df: DataFrame) -> None:
-    """Drop the storage blocks of a checkpointed frame, which nothing
-    else ever unpersists, and of the checkpoints ``result`` left with
-    it. No-op on frames that are not checkpoint-rooted or on API
-    drift."""
-    rdds = [getattr(df, "_pagerank_spark_ckpt_jrdd", None) or _root_rdd(df)]
-    rdds += getattr(df, "_pagerank_spark_reads", [])
-    for jrdd in rdds:
-        try:
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        except Exception:  # pragma: no cover - version-drift fallback
-            pass
+def _checkpoint_rdds(df: DataFrame) -> list:
+    """The RDDs holding the checkpoint blocks a release of ``df`` frees,
+    which nothing else ever unpersists: its own when it is
+    checkpoint-rooted, and those ``keep`` left with it."""
+    own = getattr(df, "_pagerank_spark_ckpt_jrdd", None) or _root_rdd(df)
+    reads = getattr(df, "_pagerank_spark_reads", [])
+    return reads if own is None else [own, *reads]
 
 
 class Pins:
@@ -231,8 +226,9 @@ class Pins:
     a reliable ``checkpoint`` (fault-tolerant across executor loss)
     instead of a ``localCheckpoint``.
 
-    Each frame has one lifetime at a time: ``hold`` of a generation
-    moves it to the scope, ``keep`` hands it to the caller. ``release``
+    Each frame has one lifetime at a time: ``hold`` (cached) or
+    ``adopt`` (as is) of a generation moves it to the scope, ``keep``
+    hands it to the caller. ``release``
     also takes frames the owner never pinned, e.g. a caller releasing
     what an operator returned: ``Pins().release(result)``.
     """
@@ -242,6 +238,7 @@ class Pins:
         self._held: list[DataFrame] = []
         self._gens: list[DataFrame] = []
         self._late: list[DataFrame] = []
+        self._spared: set[int] = set()  # RDD ids ``keep`` handed out
 
     def __enter__(self) -> Pins:
         return self
@@ -259,7 +256,9 @@ class Pins:
         return df
 
     def adopt(self, df: DataFrame) -> DataFrame:
-        """Own, for the scope, a frame another owner handed out."""
+        """Own, for the scope, a frame another owner handed out. A
+        generation passed in moves to the scope, uncached."""
+        self._untrack(df)
         self._held.append(df)
         return df
 
@@ -304,42 +303,51 @@ class Pins:
         self.release(*self._late)
 
     def keep(self, df: DataFrame) -> DataFrame:
-        """Hand ``df`` to the caller: the owner no longer releases it."""
+        """Hand ``df`` to the caller, together with every checkpoint its
+        plan reads that the owner tracks, as a pin or through an
+        adopted frame: a lazy ``df`` reads them when it runs, and a
+        persisted one recomputes through them whenever a plan misses
+        its cache, e.g. the deduplicated side of a self-join. The
+        caller's release of ``df`` frees them. Caches stay with the
+        owner: a cached pin ``df`` reads is recomputed after the exit.
+        Only ``df``'s plan is walked, not the lineage of a lazy
+        checkpoint it reads: a checkpoint read only through that
+        lineage is released on exit, which the lazy one survives only
+        if that checkpoint never ran (it is then recomputed)."""
         self._untrack(df)
+        leaves = _leaf_rdd_ids(df)
+        df._pagerank_spark_reads = [
+            jrdd
+            for pin in self._held + self._gens + self._late
+            for jrdd in _checkpoint_rdds(pin)
+            if jrdd.id() in leaves
+        ]
+        self._spared.update(jrdd.id() for jrdd in df._pagerank_spark_reads)
         return df
 
     def result(self, df: DataFrame) -> DataFrame:
         """Persist and materialize the frame the operator returns, then
-        hand it to the caller. Released with the rest if the job
-        fails.
-
-        The checkpoints ``df``'s plan reads go with it (their caches do
-        not): Spark recomputes through them whenever a plan misses
-        ``df``'s cache, e.g. the deduplicated side of a self-join. The
-        caller's release of ``df`` frees them. The frame is persisted
-        as itself, never as a copy: ``unpersist()`` matches cache
-        entries by plan, so releasing a generation would also drop the
-        cache of a copy of it."""
+        ``keep`` it. Released with the rest if the job fails. The frame
+        is persisted as itself, never as a copy: ``unpersist()``
+        matches cache entries by plan, so releasing a generation would
+        also drop the cache of a copy of it."""
         df = self.persist(df)
         df.count()
-        self.keep(df)
-        reads = _leaf_rdd_ids(df)
-        df._pagerank_spark_reads = []
-        for pin in self._held + self._gens + self._late:
-            jrdd = _root_rdd(pin)
-            if jrdd is not None and jrdd.id() in reads:
-                df._pagerank_spark_reads.append(jrdd)
-                pin._pagerank_spark_spared = True
-        return df
+        return self.keep(df)
 
     def release(self, *dfs: DataFrame) -> None:
-        """Release ``dfs`` now: unpersist and free checkpoint blocks.
-        A released frame is unreadable if it was checkpoint-rooted."""
+        """Release ``dfs`` now: unpersist and free checkpoint blocks,
+        except those this owner's ``keep`` handed out. A released frame
+        is unreadable if it was checkpoint-rooted."""
         for df in dfs:
             self._untrack(df)
             df.unpersist()
-            if not getattr(df, "_pagerank_spark_spared", False):
-                _free_blocks(df)
+            for jrdd in _checkpoint_rdds(df):
+                try:
+                    if jrdd.id() not in self._spared:
+                        jrdd.unpersist(False)
+                except Exception:  # pragma: no cover - version drift
+                    pass
 
     def _untrack(self, df: DataFrame) -> None:
         for pins in (self._held, self._gens, self._late):

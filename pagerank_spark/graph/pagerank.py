@@ -523,37 +523,34 @@ def compare_teleports(
 
     score9 = F.round("score", 9)
     w = Window.orderBy(F.desc(score9), F.asc("page"))
-    tagged = []
-    for beta in betas:
-        kwargs = {} if max_iterations is None else {
-            "max_iterations": max_iterations
-        }
-        res = pagerank(
-            edges, beta=beta, delta=delta, tune_aqe=tune_aqe, **kwargs
-        )
-        t = (
-            res.ranks.select(
-                F.col("node").alias("page"), F.col("rank").alias("score")
+    kwargs = {} if max_iterations is None else {"max_iterations": max_iterations}
+    out = None
+    with Pins() as pins:
+        for beta in betas:
+            res = pagerank(
+                edges, beta=beta, delta=delta, tune_aqe=tune_aqe, **kwargs
             )
-            .orderBy(F.desc(score9), F.asc("page"))
-            .limit(k)
-            .withColumn("position", F.row_number().over(w))
-            .select("position", F.col("page").alias(f"page_{_beta_tag(beta)}"))
             # k rows, cut from the ranks: the returned frame is read
-            # after the ranks' pins are released below
-            .localCheckpoint(eager=True)
+            # after the ranks' pins are released
+            t = pins.truncate(
+                pins.adopt(res.ranks).select(
+                    F.col("node").alias("page"), F.col("rank").alias("score")
+                )
+                .orderBy(F.desc(score9), F.asc("page"))
+                .limit(k)
+                .withColumn("position", F.row_number().over(w))
+                .select("position", F.col("page").alias(f"page_{_beta_tag(beta)}")),
+                eager=True,
+            )
+            pins.release(res.ranks)
+            out = t if out is None else out.join(t, on="position", how="inner")
+        page_cols = [c for c in out.columns if c.startswith("page_")]
+        all_match = F.lit(True)
+        for c in page_cols[1:]:
+            all_match = all_match & (F.col(page_cols[0]) == F.col(c))
+        return pins.keep(
+            out.withColumn("all_match", all_match).orderBy("position")
         )
-        tagged.append(t)
-        Pins().release(res.ranks)
-
-    out = tagged[0]
-    for t in tagged[1:]:
-        out = out.join(t, on="position", how="inner")
-    page_cols = [c for c in out.columns if c.startswith("page_")]
-    all_match = F.lit(True)
-    for c in page_cols[1:]:
-        all_match = all_match & (F.col(page_cols[0]) == F.col(c))
-    return out.withColumn("all_match", all_match).orderBy("position")
 
 
 def _beta_tag(beta: float) -> str:

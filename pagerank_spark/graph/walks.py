@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions import portable_hash60
+from pagerank_spark.graph.loop import Pins
 
 
 def random_walks(edges: DataFrame, steps: int = 4) -> DataFrame:
@@ -37,66 +38,65 @@ def random_walks(edges: DataFrame, steps: int = 4) -> DataFrame:
     # and the degree agg `steps` times (exchange reuse dedupes only
     # the shuffle BELOW the window — the sort+window above it re-runs
     # per reference). An eager checkpoint makes every step read the
-    # one materialization. The returned lazy frame reads these pins,
-    # so their lifetime is the caller's (GC-released).
-    adj = (
-        edges.select(
-            "src", "dst", (F.row_number().over(w) - 1).alias("idx")
-        )
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-    # the distinct sources are exactly deg's keys — no extra pass
-    state = deg.select(
-        F.col("src").alias("start"),
-        F.col("src").alias("cur"),
-        F.col("src").cast("string").alias("path"),
-        F.lit(1).alias("walk_len"),
-    )
-    for t in range(1, steps + 1):
-        pick = F.pmod(
-            portable_hash60(
-                F.concat(F.col("cur").cast("string"), F.lit(f"#{t}"))
+    # one materialization.
+    with Pins() as pins:
+        adj = pins.truncate(
+            edges.select(
+                "src", "dst", (F.row_number().over(w) - 1).alias("idx")
             ),
-            F.col("deg"),
+            eager=True,
         )
-        step = (
-            state.join(deg, state["cur"] == deg["src"], "left")
-            .withColumn("__pick", pick)
-            .drop("src", "deg")
+        deg = pins.truncate(
+            edges.groupBy("src").agg(F.count("*").alias("deg")), eager=True
         )
-        step = (
-            step.join(
-                adj,
-                (step["cur"] == adj["src"]) & (step["__pick"] == adj["idx"]),
-                "left",
+        # the distinct sources are exactly deg's keys — no extra pass
+        state = deg.select(
+            F.col("src").alias("start"),
+            F.col("src").alias("cur"),
+            F.col("src").cast("string").alias("path"),
+            F.lit(1).alias("walk_len"),
+        )
+        for t in range(1, steps + 1):
+            pick = F.pmod(
+                portable_hash60(
+                    F.concat(F.col("cur").cast("string"), F.lit(f"#{t}"))
+                ),
+                F.col("deg"),
             )
-            .select(
-                "start",
-                F.col("dst").alias("cur"),
-                F.when(
-                    F.col("dst").isNotNull(),
-                    F.concat(
-                        F.col("path"),
-                        F.lit("->"),
-                        F.col("dst").cast("string"),
-                    ),
-                )
-                .otherwise(F.col("path"))
-                .alias("path"),
-                F.when(
-                    F.col("dst").isNotNull(), F.col("walk_len") + 1
-                )
-                .otherwise(F.col("walk_len"))
-                .alias("walk_len"),
+            step = (
+                state.join(deg, state["cur"] == deg["src"], "left")
+                .withColumn("__pick", pick)
+                .drop("src", "deg")
             )
-        )
-        state = step
-    return state.select("start", "path", F.col("walk_len").cast("int").alias("walk_len"))
+            state = (
+                step.join(
+                    adj,
+                    (step["cur"] == adj["src"]) & (step["__pick"] == adj["idx"]),
+                    "left",
+                )
+                .select(
+                    "start",
+                    F.col("dst").alias("cur"),
+                    F.when(
+                        F.col("dst").isNotNull(),
+                        F.concat(
+                            F.col("path"),
+                            F.lit("->"),
+                            F.col("dst").cast("string"),
+                        ),
+                    )
+                    .otherwise(F.col("path"))
+                    .alias("path"),
+                    F.when(
+                        F.col("dst").isNotNull(), F.col("walk_len") + 1
+                    )
+                    .otherwise(F.col("walk_len"))
+                    .alias("walk_len"),
+                )
+            )
+        return pins.keep(state.select(
+            "start", "path", F.col("walk_len").cast("int").alias("walk_len")
+        ))
 
 
 def node2vec_walks(
@@ -182,7 +182,6 @@ def _node2vec_steps(
     edges: DataFrame, steps: int, p: float, q: float, bcs: bool
 ) -> DataFrame:
     from pagerank_spark.graph.components import _bc
-    from pagerank_spark.graph.loop import Pins
 
     # r15 optimization (§5: reused AND expensive to recompute): the
     # per-step eager checkpoints split the walk into one job per step,

@@ -182,10 +182,8 @@ def logreg_train(
     # repartitioned rows would silently re-add a per-round exchange
     # of the big feature relation — the co-partitioning this pin
     # exists to establish.
-    # Lazy (r15): the readers are sequential driver actions (the
-    # n_rows count, then the repartition-pin materializations). The
-    # physical plan of a lazy checkpoint is compiled at creation, so
-    # the loop-conf flip below cannot re-shape it.
+    # The physical plan of a lazy checkpoint is compiled at creation,
+    # so the loop-conf flip below cannot re-shape it.
     # Run the rounds under the engine's shared small-loop conf (the
     # SVD/SGNS/node2vec discipline, a no-op above the 64M-row cut):
     # with AQE on, every tiny per-round job re-plans its stages and

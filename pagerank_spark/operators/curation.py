@@ -19,6 +19,7 @@ from pagerank_spark.session import local_relation
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions import portable_hash60
+from pagerank_spark.graph.loop import Pins
 
 MIX_PRECISION = 1_000_000
 
@@ -577,56 +578,56 @@ def mixture_order(
             )
         ).cast("long"),
     ).otherwise(F.col("__stride"))
-    keyed = (
-        local.join(F.broadcast(offs), on=[source_col, "__blk"])
-        .join(F.broadcast(wdf), on=source_col, how="left")
-        .select(
-            F.col(id_col),
-            F.col(source_col),
-            ((F.col("__off") + F.col("__r")) * stride).alias("__k"),
+    with Pins() as pins:
+        keyed = pins.truncate(
+            local.join(F.broadcast(offs), on=[source_col, "__blk"])
+            .join(F.broadcast(wdf), on=source_col, how="left")
+            .select(
+                F.col(id_col),
+                F.col(source_col),
+                ((F.col("__off") + F.col("__r")) * stride).alias("__k"),
+            )
         )
-        .localCheckpoint(eager=False)
-    )
-    # global rank over the integer key: slice the measured key range
-    kmax = keyed.agg(F.max("__k").alias("m")).collect()[0]["m"]
-    if kmax is None:
-        return df.select(
-            F.col(id_col),
-            F.col(source_col),
-            # cast: the non-empty path emits BIGINT positions; the
-            # empty relation must carry the SAME schema or downstream
-            # unions/writers break on INT vs BIGINT (r10 ADVICE).
-            F.lit(0).cast("long").alias(out_col),
-        ).limit(0)
-    kspan = max(1, -(-(int(kmax) + 1) // blocks))
-    kb = keyed.withColumn(
-        "__kblk", F.floor(F.col("__k") / F.lit(kspan)).cast("long")
-    )
-    local2_w = Window.partitionBy("__kblk").orderBy(
-        "__k", source_col, id_col
-    )
-    tot_w = Window.orderBy("__kblk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs2 = (
-        kb.groupBy("__kblk")
-        .agg(F.count("*").alias("__n"))
-        .select(
-            "__kblk",
-            F.coalesce(F.sum("__n").over(tot_w), F.lit(0))
-            .cast("long")
-            .alias("__off2"),
+        # global rank over the integer key: slice the measured key range
+        kmax = keyed.agg(F.max("__k").alias("m")).collect()[0]["m"]
+        if kmax is None:
+            return df.select(
+                F.col(id_col),
+                F.col(source_col),
+                # cast: the non-empty path emits BIGINT positions; the
+                # empty relation must carry the SAME schema or downstream
+                # unions/writers break on INT vs BIGINT (r10 ADVICE).
+                F.lit(0).cast("long").alias(out_col),
+            ).limit(0)
+        kspan = max(1, -(-(int(kmax) + 1) // blocks))
+        kb = keyed.withColumn(
+            "__kblk", F.floor(F.col("__k") / F.lit(kspan)).cast("long")
         )
-    )
-    return (
-        kb.withColumn("__r2", F.row_number().over(local2_w).cast("long"))
-        .join(F.broadcast(offs2), on="__kblk")
-        .select(
-            F.col(id_col),
-            F.col(source_col),
-            (F.col("__off2") + F.col("__r2") - 1).alias(out_col),
+        local2_w = Window.partitionBy("__kblk").orderBy(
+            "__k", source_col, id_col
         )
-    )
+        tot_w = Window.orderBy("__kblk").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        offs2 = (
+            kb.groupBy("__kblk")
+            .agg(F.count("*").alias("__n"))
+            .select(
+                "__kblk",
+                F.coalesce(F.sum("__n").over(tot_w), F.lit(0))
+                .cast("long")
+                .alias("__off2"),
+            )
+        )
+        return pins.keep(
+            kb.withColumn("__r2", F.row_number().over(local2_w).cast("long"))
+            .join(F.broadcast(offs2), on="__kblk")
+            .select(
+                F.col(id_col),
+                F.col(source_col),
+                (F.col("__off2") + F.col("__r2") - 1).alias(out_col),
+            )
+        )
 
 
 def sample_weighted(

@@ -28,6 +28,7 @@ from pagerank_spark.session import local_relation
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions import HASH_PRIME, portable_hash60, word_tokens
+from pagerank_spark.graph.loop import Pins
 
 # Fixed universal-hash family for MinHash (deterministic across runs and
 # engines). 16 hashes → 4 bands × 4 rows: catches Jaccard ≳ 0.5 pairs.
@@ -609,34 +610,35 @@ def neardup_clusters(
     (min-id representative) either way.
     """
     pairs = minhash_neardup_pairs(df, id_col, text_col, n=n, threshold=threshold)
-    # Materialize the (tiny) pair list once before clustering:
-    # both strategies re-read the edge input, and without this cut each
-    # re-read would recompute the full shingle→signature→verify
-    # pipeline — measured 2× the whole operator's cost at sf0.1.
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint(eager=True)
-    comp = _components_adaptive(edges)
     ids = df.select(F.col(id_col))
-    canon = (
-        ids.join(comp, ids[id_col] == comp["node"], "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("component", F.col(id_col)).alias("canonical_id"),
+    with Pins() as pins:
+        # Materialize the (tiny) pair list once before clustering:
+        # both strategies re-read the edge input, and without this cut
+        # each re-read would recompute the full shingle→signature→verify
+        # pipeline — measured 2× the whole operator's cost at sf0.1.
+        edges = pins.truncate(pairs.select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        ), eager=True)
+        comp = _components_adaptive(edges)
+        canon = (
+            ids.join(comp, ids[id_col] == comp["node"], "left")
+            .select(
+                F.col(id_col),
+                F.coalesce("component", F.col(id_col)).alias("canonical_id"),
+            )
         )
-    )
-    sizes = canon.groupBy(F.col("canonical_id").alias("__c")).agg(
-        F.count("*").alias("cluster_size")
-    )
-    return (
-        canon.join(sizes, canon["canonical_id"] == sizes["__c"])
-        .select(
-            id_col,
-            "canonical_id",
-            "cluster_size",
-            (F.col(id_col) == F.col("canonical_id")).alias("is_kept"),
+        sizes = canon.groupBy(F.col("canonical_id").alias("__c")).agg(
+            F.count("*").alias("cluster_size")
         )
-    )
+        return pins.keep(
+            canon.join(sizes, canon["canonical_id"] == sizes["__c"])
+            .select(
+                id_col,
+                "canonical_id",
+                "cluster_size",
+                (F.col(id_col) == F.col("canonical_id")).alias("is_kept"),
+            )
+        )
 
 
 def dup_span_coverage(
@@ -889,28 +891,31 @@ def er_resolve(
     unchanged; the canonical map then joins back broadcastable.
     """
     pairs = fuzzy_blocked_pairs(df, col, max_dist=max_dist, block=block)
-    edges = pairs.select(
-        F.col("name_a").alias("src"), F.col("name_b").alias("dst")
-    ).localCheckpoint(eager=True)
-    comp = _components_adaptive(edges)
     names = (
         df.select(F.col(col).alias("name"))
         .where(F.col("name").isNotNull())
         .distinct()
     )
-    canon = names.join(comp, names["name"] == comp["node"], "left").select(
-        "name",
-        F.coalesce("component", F.col("name")).alias("canonical_name"),
-    )
-    sizes = canon.groupBy(F.col("canonical_name").alias("__c")).agg(
-        F.count("*").alias("cluster_size")
-    )
-    return canon.join(sizes, canon["canonical_name"] == sizes["__c"]).select(
-        "name",
-        "canonical_name",
-        "cluster_size",
-        (F.col("name") == F.col("canonical_name")).alias("is_canonical"),
-    )
+    with Pins() as pins:
+        edges = pins.truncate(pairs.select(
+            F.col("name_a").alias("src"), F.col("name_b").alias("dst")
+        ), eager=True)
+        comp = _components_adaptive(edges)
+        canon = names.join(comp, names["name"] == comp["node"], "left").select(
+            "name",
+            F.coalesce("component", F.col("name")).alias("canonical_name"),
+        )
+        sizes = canon.groupBy(F.col("canonical_name").alias("__c")).agg(
+            F.count("*").alias("cluster_size")
+        )
+        return pins.keep(
+            canon.join(sizes, canon["canonical_name"] == sizes["__c"]).select(
+                "name",
+                "canonical_name",
+                "cluster_size",
+                (F.col("name") == F.col("canonical_name")).alias("is_canonical"),
+            )
+        )
 
 
 def sorted_neighborhood_pairs(

@@ -21,6 +21,7 @@ from pagerank_spark.session import local_relation
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions import dot, l2_norm
+from pagerank_spark.graph.loop import Pins
 
 
 def _as_double(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
@@ -1191,21 +1192,19 @@ def ann_ivf_persisted(
     """
     codebook = spark.read.parquet(f"{root}/codebook")
     v = F.col(vec_col).cast("array<double>")
-    q_assigned = _assign_nearest(
-        queries.select(F.col(id_col).alias("id"), v.alias("vec")),
-        codebook,
-        n_probe,
-    ).select(
-        F.col("id").alias("query_id"),
-        F.col("vec").alias("query_vec"),
-        l2_norm(F.col("vec")).alias("query_norm"),
-        "cid",
-    ).persist()
-    # try/finally: a failure in the probed-cid collect, list scan, or
-    # eager checkpoint must still release the pinned assignment — a
-    # query service calling this per request cannot leak one cached
-    # relation per failed probe.
-    try:
+    with Pins() as pins:
+        q_assigned = pins.hold(
+            _assign_nearest(
+                queries.select(F.col(id_col).alias("id"), v.alias("vec")),
+                codebook,
+                n_probe,
+            ).select(
+                F.col("id").alias("query_id"),
+                F.col("vec").alias("query_vec"),
+                l2_norm(F.col("vec")).alias("query_norm"),
+                "cid",
+            )
+        )
         probed = sorted(
             r["cid"] for r in q_assigned.select("cid").distinct().collect()
         )
@@ -1230,14 +1229,12 @@ def ann_ivf_persisted(
         )
         # materialize the bounded top-k eagerly so the cached query
         # assignment can be released before returning
-        return (
+        return pins.keep(pins.truncate(
             scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", "nb_id", "cos", "rank")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        q_assigned.unpersist()
+            .select("query_id", "nb_id", "cos", "rank"),
+            eager=True,
+        ))
 
 
 def rrf_fuse(

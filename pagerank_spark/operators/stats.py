@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pagerank_spark.graph.loop import Pins
+
 
 def _hash60(expr) -> F.Column:
     """Portable 60-bit md5 hash of a string column — same family as
@@ -367,84 +369,83 @@ def spearman_corr(
     # lands in a joint cell) and materializes the pin in the same job,
     # so the corpus is scanned exactly once and every downstream plan
     # analyzes a leaf instead of re-deriving the corpus subtree.
-    joint = (
-        base.groupBy("x", "y")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    b = joint.agg(
-        F.min("x").alias("xlo"),
-        F.max("x").alias("xhi"),
-        F.min("y").alias("ylo"),
-        F.max("y").alias("yhi"),
-    ).collect()[0]
-    if b["xlo"] is None:
-        return spark.sql(
-            "SELECT CAST(NULL AS DOUBLE) AS rho_spearman, "
-            "CAST(NULL AS BIGINT) AS n_rows"
+    with Pins() as pins:
+        joint = pins.truncate(
+            base.groupBy("x", "y").agg(F.count("*").alias("c"))
         )
-
-    def value_ranks(col: str, lo: float, hi: float) -> DataFrame:
-        span = (hi - lo) / blocks
-        if span > 0.0:
-            blk = F.least(
-                F.lit(blocks - 1),
-                F.floor((F.col(col) - F.lit(lo)) / F.lit(span)),
+        b = joint.agg(
+            F.min("x").alias("xlo"),
+            F.max("x").alias("xhi"),
+            F.min("y").alias("ylo"),
+            F.max("y").alias("yhi"),
+        ).collect()[0]
+        if b["xlo"] is None:
+            return spark.sql(
+                "SELECT CAST(NULL AS DOUBLE) AS rho_spearman, "
+                "CAST(NULL AS BIGINT) AS n_rows"
             )
-        else:  # constant column: one block
-            blk = F.lit(0)
-        local_w = (
-            Window.partitionBy("__blk")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+        def value_ranks(col: str, lo: float, hi: float) -> DataFrame:
+            span = (hi - lo) / blocks
+            if span > 0.0:
+                blk = F.least(
+                    F.lit(blocks - 1),
+                    F.floor((F.col(col) - F.lit(lo)) / F.lit(span)),
+                )
+            else:  # constant column: one block
+                blk = F.lit(0)
+            local_w = (
+                Window.partitionBy("__blk")
+                .orderBy(col)
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            marg = (
+                joint.groupBy(col)
+                .agg(F.sum("c").alias("cnt"))
+                .withColumn("__blk", blk)
+            )
+            local = marg.withColumn("__cum", F.sum("cnt").over(local_w))
+            tot_w = Window.orderBy("__blk").rowsBetween(
+                Window.unboundedPreceding, -1
+            )
+            offsets = (
+                local.groupBy("__blk")
+                .agg(F.sum("cnt").alias("__tot"))
+                .select(
+                    "__blk",
+                    F.coalesce(F.sum("__tot").over(tot_w), F.lit(0)).alias(
+                        "__off"
+                    ),
+                )
+            )
+            return local.join(F.broadcast(offsets), on="__blk").select(
+                col,
+                (
+                    F.col("__off") + F.col("__cum") - (F.col("cnt") - 1) / 2.0
+                ).alias(f"r_{col}"),
+            )
+
+        n_rel = joint.agg(F.sum("c").cast("double").alias("n"))
+        cells = (
+            joint.join(value_ranks("x", b["xlo"], b["xhi"]), on="x")
+            .join(value_ranks("y", b["ylo"], b["yhi"]), on="y")
+            .crossJoin(F.broadcast(n_rel))
         )
-        marg = (
-            joint.groupBy(col)
-            .agg(F.sum("c").alias("cnt"))
-            .withColumn("__blk", blk)
-        )
-        local = marg.withColumn("__cum", F.sum("cnt").over(local_w))
-        tot_w = Window.orderBy("__blk").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = (
-            local.groupBy("__blk")
-            .agg(F.sum("cnt").alias("__tot"))
-            .select(
-                "__blk",
-                F.coalesce(F.sum("__tot").over(tot_w), F.lit(0)).alias(
-                    "__off"
+        c = F.col("c").cast("double")
+        rx = F.col("r_x") - (F.col("n") + 1.0) / 2.0
+        ry = F.col("r_y") - (F.col("n") + 1.0) / 2.0
+        return pins.keep(cells.agg(
+            F.round(
+                # try_divide: zero variance (constant column) -> NULL rho,
+                # not an ANSI DIVIDE_BY_ZERO error
+                F.try_divide(
+                    F.sum(c * rx * ry),
+                    F.sqrt(F.sum(c * rx * rx) * F.sum(c * ry * ry)),
                 ),
-            )
-        )
-        return local.join(F.broadcast(offsets), on="__blk").select(
-            col,
-            (
-                F.col("__off") + F.col("__cum") - (F.col("cnt") - 1) / 2.0
-            ).alias(f"r_{col}"),
-        )
-
-    n_rel = joint.agg(F.sum("c").cast("double").alias("n"))
-    cells = (
-        joint.join(value_ranks("x", b["xlo"], b["xhi"]), on="x")
-        .join(value_ranks("y", b["ylo"], b["yhi"]), on="y")
-        .crossJoin(F.broadcast(n_rel))
-    )
-    c = F.col("c").cast("double")
-    rx = F.col("r_x") - (F.col("n") + 1.0) / 2.0
-    ry = F.col("r_y") - (F.col("n") + 1.0) / 2.0
-    return cells.agg(
-        F.round(
-            # try_divide: zero variance (constant column) -> NULL rho,
-            # not an ANSI DIVIDE_BY_ZERO error
-            F.try_divide(
-                F.sum(c * rx * ry),
-                F.sqrt(F.sum(c * rx * rx) * F.sum(c * ry * ry)),
-            ),
-            6,
-        ).alias("rho_spearman"),
-        F.max("n").cast("long").alias("n_rows"),
-    )
+                6,
+            ).alias("rho_spearman"),
+            F.max("n").cast("long").alias("n_rows"),
+        ))
 
 
 def chi2_independence(
@@ -721,60 +722,59 @@ def percentile_rank(
     if blocks is None:
         blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
     v = F.col(value_col).cast("double")
-    # lazy checkpoint (r15, the spearman_corr rationale): the min/max
-    # collect below materializes the distinct-value relation, so the
-    # rank pipeline's three references read a leaf instead of
-    # re-deriving the corpus aggregation in the output job
-    marg = (
-        df.where(v.isNotNull())
-        .groupBy(v.alias("__v"))
-        .agg(F.count("*").alias("__cnt"))
-        .localCheckpoint(eager=False)
-    )
-    b = marg.agg(F.min("__v").alias("lo"), F.max("__v").alias("hi")).collect()[0]
-    if b["lo"] is None:
-        return df.withColumn(out_col, F.lit(None).cast("double"))
-    span = (float(b["hi"]) - float(b["lo"])) / blocks
-    if span > 0.0:
-        blk = F.least(
-            F.lit(blocks - 1),
-            F.floor((F.col("__v") - F.lit(float(b["lo"]))) / F.lit(span)),
+    # the spearman_corr pin (r15): the rank pipeline's three references
+    # read a leaf instead of re-deriving the corpus aggregation
+    with Pins() as pins:
+        marg = pins.truncate(
+            df.where(v.isNotNull())
+            .groupBy(v.alias("__v"))
+            .agg(F.count("*").alias("__cnt"))
         )
-    else:
-        blk = F.lit(0)
-    local_w = (
-        Window.partitionBy("__blk")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = marg.withColumn("__blk", blk).withColumn(
-        "__cum", F.sum("__cnt").over(local_w)
-    )
-    tot_w = Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        local.groupBy("__blk")
-        .agg(F.sum("__cnt").alias("__tot"))
-        .select(
-            "__blk",
-            F.coalesce(F.sum("__tot").over(tot_w), F.lit(0)).alias("__off"),
+        b = marg.agg(F.min("__v").alias("lo"), F.max("__v").alias("hi")).collect()[0]
+        if b["lo"] is None:
+            return df.withColumn(out_col, F.lit(None).cast("double"))
+        span = (float(b["hi"]) - float(b["lo"])) / blocks
+        if span > 0.0:
+            blk = F.least(
+                F.lit(blocks - 1),
+                F.floor((F.col("__v") - F.lit(float(b["lo"]))) / F.lit(span)),
+            )
+        else:
+            blk = F.lit(0)
+        local_w = (
+            Window.partitionBy("__blk")
+            .orderBy("__v")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-    )
-    n_rel = marg.agg(F.sum("__cnt").cast("double").alias("__n"))
-    ranked = (
-        local.join(F.broadcast(offsets), on="__blk")
-        .crossJoin(F.broadcast(n_rel))
-        .select(
-            "__v",
-            F.round(
-                (
-                    F.col("__off")
-                    + F.col("__cum")
-                    - (F.col("__cnt") - 1) / 2.0
-                    - 0.5
-                )
-                / F.col("__n"),
-                6,
-            ).alias(out_col),
+        local = marg.withColumn("__blk", blk).withColumn(
+            "__cum", F.sum("__cnt").over(local_w)
         )
-    )
-    return df.join(ranked, v.eqNullSafe(F.col("__v")), "left").drop("__v")
+        tot_w = Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
+        offsets = (
+            local.groupBy("__blk")
+            .agg(F.sum("__cnt").alias("__tot"))
+            .select(
+                "__blk",
+                F.coalesce(F.sum("__tot").over(tot_w), F.lit(0)).alias("__off"),
+            )
+        )
+        n_rel = marg.agg(F.sum("__cnt").cast("double").alias("__n"))
+        ranked = (
+            local.join(F.broadcast(offsets), on="__blk")
+            .crossJoin(F.broadcast(n_rel))
+            .select(
+                "__v",
+                F.round(
+                    (
+                        F.col("__off")
+                        + F.col("__cum")
+                        - (F.col("__cnt") - 1) / 2.0
+                        - 0.5
+                    )
+                    / F.col("__n"),
+                    6,
+                ).alias(out_col),
+            )
+        )
+        out = df.join(ranked, v.eqNullSafe(F.col("__v")), "left")
+        return pins.keep(out.drop("__v"))

@@ -24,6 +24,7 @@ from pagerank_spark.session import local_relation
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions import portable_hash60, word_tokens
+from pagerank_spark.graph.loop import Pins
 
 LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "a"],
@@ -544,7 +545,8 @@ def bpe_train(
     the plan is re-materialized per round (localCheckpoint) so
     lineage stays O(1) across merges like the PageRank loop.
     """
-    rows, _ = _bpe_loop(df, merges, text_col)
+    with Pins() as pins:
+        rows, _ = _bpe_loop(pins, df, merges, text_col)
     return local_relation(df.sparkSession, 
         rows,
         "round INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT",
@@ -552,10 +554,11 @@ def bpe_train(
 
 
 def _bpe_loop(
-    df: DataFrame, merges: int, text_col: str
+    pins: Pins, df: DataFrame, merges: int, text_col: str
 ) -> tuple[list[tuple], DataFrame]:
     """The shared BPE training loop: returns (merge rows, the final
-    (word, freq, syms) vocabulary DataFrame). See ``bpe_train``."""
+    (word, freq, syms) vocabulary DataFrame, a projection of the last
+    round's checkpoint). See ``bpe_train``."""
     if merges < 1:
         raise ValueError(f"bpe_train: merges must be >= 1, got {merges}")
     toks = df.select(
@@ -571,11 +574,10 @@ def _bpe_loop(
         toks.groupBy("word")
         .agg(F.count("*").alias("freq"))
         .select("word", "freq", chars.alias("syms"))
-        .localCheckpoint(eager=False)
     )
-    spark = df.sparkSession
     out_rows = []
     for rnd in range(1, merges + 1):
+        words = pins.truncate(words)
         pairs = F.when(
             F.size("syms") >= 2,
             F.transform(
@@ -594,6 +596,7 @@ def _bpe_loop(
             .limit(1)
             .collect()
         )
+        pins.sweep(words)  # the collect materialized this round's words
         if not best:
             raise ValueError(
                 f"bpe_train: no adjacent pairs left at round {rnd}"
@@ -614,9 +617,7 @@ def _bpe_loop(
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        words = words.select(
-            "word", "freq", folded.alias("syms")
-        ).localCheckpoint(eager=False)
+        words = words.select("word", "freq", folded.alias("syms"))
     return out_rows, words
 
 
@@ -643,26 +644,27 @@ def bpe_segment_stats(
     text is touched exactly twice (once to build the vocab, once to
     encode), never once per merge round.
     """
-    _, vocab = _bpe_loop(df, merges, text_col)
     doc_words = df.select(
         F.col(id_col),
         F.explode(
             F.filter(word_tokens(text_col), lambda x: x != "")
         ).alias("word"),
     )
-    seg = vocab.select("word", F.size("syms").alias("__ntok"))
-    return (
-        doc_words.join(seg, on="word")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum(F.length("word")).alias("n_chars"),
-            F.sum("__ntok").alias("n_tokens"),
-            (
-                F.sum(F.length("word")) / F.sum("__ntok")
-            ).alias("chars_per_token"),
+    with Pins() as pins:
+        _, vocab = _bpe_loop(pins, df, merges, text_col)
+        seg = vocab.select("word", F.size("syms").alias("__ntok"))
+        return pins.keep(
+            doc_words.join(seg, on="word")
+            .groupBy(id_col)
+            .agg(
+                F.count("*").alias("n_words"),
+                F.sum(F.length("word")).alias("n_chars"),
+                F.sum("__ntok").alias("n_tokens"),
+                (
+                    F.sum(F.length("word")) / F.sum("__ntok")
+                ).alias("chars_per_token"),
+            )
         )
-    )
 
 
 def token_entropy(

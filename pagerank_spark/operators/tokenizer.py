@@ -150,11 +150,6 @@ def unigram_lm_train(
         vocab = _scalar_fold(selected, total0).select(
             "piece", (F.col("wf") / F.col("__t")).alias("prob")
         )
-        # The eager-vs-lazy rule of graph/loop.py: the seed and every
-        # NON-final round are read next by one sequential consumer (the
-        # following round's broadcast build), so they are lazy; the
-        # FINAL vocabulary is read by the prune below from three plan
-        # branches, so it is eager.
         vocab = pins.truncate(vocab)
 
         # ---- EM rounds --------------------------------------------------
@@ -169,8 +164,6 @@ def unigram_lm_train(
             )
 
         # ---- prune ------------------------------------------------------
-        # the returned frame reads the final vocabulary: the caller's
-        pins.keep(vocab)
         keep = (
             vocab.orderBy(F.desc("prob"), F.asc("piece"))
             .limit(vocab_size)
@@ -182,9 +175,9 @@ def unigram_lm_train(
             .join(vocab, on="piece")
         )
         totalp = keep.agg(F.sum("prob").alias("__t"))
-        return _scalar_fold(keep, totalp).select(
+        return pins.keep(_scalar_fold(keep, totalp).select(
             "piece", (F.col("prob") / F.col("__t")).alias("prob")
-        )
+        ))
 
 
 def _lattice_arrays(edges_col, n, L):

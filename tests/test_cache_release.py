@@ -22,6 +22,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
+
 
 def _storage_entries(spark) -> int:
     return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -362,11 +364,13 @@ def _op(name):
     from pagerank_spark.graph.components import (
         betweenness_centrality,
         connected_components,
+        ktruss,
+        maximal_independent_set,
         shortest_paths,
         strongly_connected_components,
     )
     from pagerank_spark.graph.pagerank import hits, katz_centrality, pagerank
-    from pagerank_spark.graph.walks import node2vec_walks
+    from pagerank_spark.graph.walks import node2vec_walks, random_walks
 
     return {
         "pagerank": lambda e, s: pagerank(e).ranks,
@@ -380,6 +384,9 @@ def _op(name):
         "scc": lambda e, s: strongly_connected_components(e),
         "betweenness": lambda e, s: betweenness_centrality(e, s),
         "node2vec": lambda e, s: node2vec_walks(e),
+        "random-walks": lambda e, s: random_walks(e),
+        "ktruss": lambda e, s: ktruss(e, k=2),
+        "mis": lambda e, s: maximal_independent_set(e),
     }[name]
 
 
@@ -399,6 +406,12 @@ def _op(name):
         # the returned frame is an eager checkpoint
         ("betweenness", 1),
         ("node2vec", 1),
+        # lazy returned frames: the checkpoints their plans read — the
+        # adjacency and degree cuts; the one inner round's survivors;
+        # both live relations of rounds 1 and 2 (round 3's are unread)
+        ("random-walks", 2),
+        ("ktruss", 1),
+        ("mis", 4),
     ],
 )
 def test_operator_release_is_deterministic(spark, name, held):
@@ -415,6 +428,94 @@ def test_operator_release_is_deterministic(spark, name, held):
     assert len(_persistent_ids(spark) - base) == held
     Pins().release(result)
     assert _persistent_ids(spark) - base == set()
+
+
+@pytest.fixture(scope="module")
+def ivf_root(spark, tmp_path_factory):
+    from pagerank_spark.operators.similarity import build_ivf_index
+
+    root = str(tmp_path_factory.mktemp("ivf") / "index")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    build_ivf_index(emb.where(F.col("vec_id") % 5 != 0), root)
+    return root
+
+
+def _table_op(name, spark, root):
+    from pagerank_spark.operators.dedup import neardup_clusters
+    from pagerank_spark.operators.similarity import ann_ivf_persisted
+    from pagerank_spark.operators.stats import spearman_corr
+    from pagerank_spark.operators.text import bpe_train
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    queries = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").where(
+        F.col("vec_id") % 5 == 0
+    )
+    return {
+        "bpe-train": lambda: bpe_train(docs, merges=3),
+        "neardup-clusters": lambda: neardup_clusters(
+            docs, "doc_id", "text", n=1, threshold=0.9
+        ),
+        "spearman": lambda: spearman_corr(docs, "n_chars", "doc_id"),
+        "ann-ivf-persisted": lambda: ann_ivf_persisted(
+            spark, root, queries.limit(10), k=5
+        ),
+    }[name]()
+
+
+@pytest.mark.parametrize(
+    "name, held",
+    [
+        # a driver-built relation: nothing pinned outlives the call
+        ("bpe-train", 0),
+        # the pair list goes to the driver's union-find: the returned
+        # frame reads no checkpoint
+        ("neardup-clusters", 0),
+        # the joint-count checkpoint the returned moments read
+        ("spearman", 1),
+        # the returned top-k is an eager checkpoint
+        ("ann-ivf-persisted", 1),
+    ],
+)
+def test_table_operator_release_is_deterministic(spark, ivf_root, name, held):
+    """The same contract on the document/vector operators."""
+    from pagerank_spark.graph.loop import Pins
+
+    base = _persistent_ids(spark)
+    result = _table_op(name, spark, ivf_root)
+    assert result.count() > 0
+    assert len(_persistent_ids(spark) - base) == held
+    Pins().release(result)
+    assert _persistent_ids(spark) - base == set()
+
+
+def test_no_pin_calls_outside_loop_module():
+    """Every pin and release in the package goes through the owner in
+    graph/loop.py: no other module calls a DataFrame's
+    persist/cache/checkpoint/localCheckpoint/unpersist. Calls on an
+    owner (``pins``, ``loop``) are the owner's own methods."""
+    import ast
+    import pathlib
+
+    import pagerank_spark
+
+    pkg = pathlib.Path(pagerank_spark.__file__).parent
+    banned = {"persist", "cache", "checkpoint", "localCheckpoint", "unpersist"}
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "graph/loop.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned
+                and not (
+                    isinstance(node.func.value, ast.Name)
+                    and node.func.value.id in {"pins", "loop"}
+                )
+            ):
+                found.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert found == []
 
 
 def test_trainers_tune_false_matches_and_releases(spark):

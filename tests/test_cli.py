@@ -19,10 +19,15 @@ def _write_edges(tmp_path):
     return str(p)
 
 
+def _storage(spark) -> set[int]:
+    return {x.id() for x in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def test_cli_end_to_end(tmp_path, spark, capsys):
     edges = _write_edges(tmp_path)
     out = tmp_path / "result.txt"
     csv_dir = tmp_path / "edges_csv"
+    before = _storage(spark)
     rc = main(
         [
             edges,
@@ -34,6 +39,10 @@ def test_cli_end_to_end(tmp_path, spark, capsys):
         spark=spark,
     )
     assert rc == 0
+    # a caller-supplied session gets back no pin of the run: not the
+    # edge cache, the ranks or the checkpoints either of them read
+    # (a subset: the collector may free other tests' leftovers meanwhile)
+    assert _storage(spark) <= before
 
     captured = capsys.readouterr().out
     assert "duplicate edges: 1" in captured

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pagerank_spark.graph.components import aggregate_messages, connected_components
+from pagerank_spark.graph.loop import Pins
 
 
 def _union_find(edges):
@@ -585,7 +586,7 @@ def test_auto_hybrid_falls_back_to_star_on_chains(spark):
     rows = comp.collect()
     assert len(rows) == 200
     assert all(r["component"] == 0 for r in rows)
-    comp.unpersist()
+    Pins().release(comp)
     # explicit label with a tight budget must raise on the same graph
     import pytest as _pt
 

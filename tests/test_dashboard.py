@@ -10,12 +10,43 @@ import pytest
 from pagerank_spark.dashboard import build_dashboard_payload, to_dot
 
 
+_EDGES = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (5, 1), (2, 4)]
+
+
 @pytest.fixture(scope="module")
-def payload(spark, tmp_path_factory):
-    edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (5, 1), (2, 4)]
+def edge_path(tmp_path_factory):
     path = tmp_path_factory.mktemp("dash") / "edges.txt"
-    path.write_text("".join(f"{s}\t{d}\n" for s, d in edges))
-    return build_dashboard_payload(spark, str(path), k=3, chart_limit=4)
+    path.write_text("".join(f"{s}\t{d}\n" for s, d in _EDGES))
+    return str(path)
+
+
+@pytest.fixture(scope="module")
+def payload(spark, edge_path):
+    return build_dashboard_payload(spark, edge_path, k=3, chart_limit=4)
+
+
+def test_subgraph_reads_no_checkpoint(spark, edge_path, monkeypatch):
+    """The induced subgraph joins the edges with the k-node set built
+    from the collected top rows, so its plan reads neither the ranks
+    nor the loop checkpoint behind them; the payload is the one the
+    ranks-fed subgraph produced."""
+    import pagerank_spark.dashboard as dash
+    from pagerank_spark.operators.relational import induced_subgraph
+
+    plans = []
+
+    def spy(edges, nodes):
+        sub = induced_subgraph(edges, nodes)
+        plans.append(sub._jdf.queryExecution().optimizedPlan().toString())
+        return sub
+
+    monkeypatch.setattr(dash, "induced_subgraph", spy)
+    p = dash.build_dashboard_payload(spark, edge_path, k=3, chart_limit=4)
+    assert len(plans) == 1 and "LogicalRDD" not in plans[0]
+    assert [page for page, _ in p.top] == [1, 3, 2]
+    assert p.subgraph_edges == [(1, 2), (1, 3), (2, 3), (3, 1)]
+    assert [page for page, _ in p.chart_scores] == [1, 3, 2, 4]
+    assert (p.n_edges, p.iterations) == (7, 23)
 
 
 def test_payload_counts_and_topk(payload):

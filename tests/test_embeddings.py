@@ -20,6 +20,7 @@ from pagerank_spark.graph.embeddings import (
     ppmi_svd_embeddings,
     svd_topk,
 )
+from pagerank_spark.graph.loop import Pins
 
 # a fixed 6×5 positive matrix whose three row-blocks have strongly
 # separated scales (σ ≈ 12 / 5.5 / 2.6): power iteration's angle error
@@ -55,7 +56,7 @@ def svd40(spark):
     try:
         return v.collect(), lams
     finally:
-        v.unpersist()
+        Pins().release(v)
 
 
 def test_svd_topk_matches_numpy(svd40):
@@ -103,7 +104,7 @@ def test_embeddings_match_numpy_usigma_half(spark):
     try:
         got = {(r["node"], r["dim"]): r["value"] for r in emb.collect()}
     finally:
-        emb.unpersist()
+        Pins().release(emb)
     for k in range(2):
         want = u_np[:, k] * math.sqrt(s_np[k])
         have = np.array([got[(i, k)] for i in range(6)])
@@ -131,7 +132,7 @@ def test_embedding_geometry_separates_clusters(spark):
             for r in embedding_vectors(emb).collect()
         }
     finally:
-        emb.unpersist()
+        Pins().release(emb)
 
     def cos(a, b):
         num = sum(x * y for x, y in zip(a, b))
@@ -158,7 +159,7 @@ def test_embedding_vectors_feed_ann(spark):
         out = ann_topk_bruteforce(vecs, q, k=3)
         assert out.count() == 3
     finally:
-        emb.unpersist()
+        Pins().release(emb)
 
 
 def _hash60(s: str) -> int:
@@ -391,7 +392,7 @@ def test_svd_delta_stopping_matches_fixed_rounds(spark, svd40):
         for a, b in zip(lams_delta, lams_fixed):
             assert a == pytest.approx(b, rel=1e-12)
     finally:
-        v_delta.unpersist()
+        Pins().release(v_delta)
 
 
 def test_sgns_warm_start_continuation_exact(spark):

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pagerank_spark.graph.loop import VertexLoop, loop_conf
+from pagerank_spark.graph.loop import Pins, VertexLoop, loop_conf
 
 
 def _confs(spark) -> tuple[str, str]:
@@ -33,19 +33,19 @@ def _small_graph(spark):
 def _pagerank(edges, tune):
     from pagerank_spark.graph.pagerank import pagerank
 
-    pagerank(edges, max_iterations=3, tune_aqe=tune).ranks.unpersist()
+    Pins().release(pagerank(edges, max_iterations=3, tune_aqe=tune).ranks)
 
 
 def _hits(edges, tune):
     from pagerank_spark.graph.pagerank import hits
 
-    hits(edges, max_iterations=3).unpersist()
+    Pins().release(hits(edges, max_iterations=3))
 
 
 def _katz(edges, tune):
     from pagerank_spark.graph.pagerank import katz_centrality
 
-    katz_centrality(edges, max_iterations=3, mode="loop").unpersist()
+    Pins().release(katz_centrality(edges, max_iterations=3, mode="loop"))
 
 
 def _cc(edges, tune):

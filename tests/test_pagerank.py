@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pagerank_spark.graph import compare_teleports, pagerank, top_k
+from pagerank_spark.graph.loop import Pins
 from pagerank_spark.io import read_edge_list
 
 from tests.conftest import RESOURCES, WIKIDATA
@@ -32,7 +33,7 @@ def _assert_matches_oracle(spark, edges, beta=0.85):
         assert got_d[node] == pytest.approx(score, abs=1e-9), node
     assert got.iterations == want_iters
     assert sum(got_d.values()) == pytest.approx(1.0, abs=1e-9)
-    got.ranks.unpersist()
+    Pins().release(got.ranks)
 
 
 class TestGolden:
@@ -49,7 +50,7 @@ class TestGolden:
         edges = read_edge_list(spark, WIKIDATA)
         res = pagerank(edges, beta=0.85, delta=1e-5)
         yield res
-        res.ranks.unpersist()
+        Pins().release(res.ranks)
 
     def test_top100_order_and_scores(self, result, golden):
         top = top_k(result.ranks, 100).collect()
@@ -77,7 +78,7 @@ class TestProperties:
         res = pagerank(_edges_df(spark, edges))
         for node, rank in _ranks_dict(res).items():
             assert rank == pytest.approx(1.0 / n, abs=1e-9)
-        res.ranks.unpersist()
+        Pins().release(res.ranks)
 
     def test_star_in_center_max(self, spark):
         edges = [(i, 0) for i in range(1, 8)]
@@ -85,7 +86,7 @@ class TestProperties:
         d = _ranks_dict(res)
         assert d[0] == max(d.values())
         assert sum(d.values()) == pytest.approx(1.0, abs=1e-9)
-        res.ranks.unpersist()
+        Pins().release(res.ranks)
 
     def test_star_in_matches_oracle(self, spark):
         _assert_matches_oracle(spark, [(i, 0) for i in range(1, 8)])
@@ -159,7 +160,7 @@ class TestProperties:
         assert got.iterations == want_iters
         for node, score in want.items():
             assert got_d[node] == pytest.approx(score, abs=1e-9), node
-        got.ranks.unpersist()
+        Pins().release(got.ranks)
 
     def test_reliable_checkpoint_mode(self, spark, tmp_path):
         import os
@@ -240,8 +241,8 @@ class TestWarmStart:
         assert set(cd) == set(wd)
         for node in cd:
             assert wd[node] == pytest.approx(cd[node], abs=1e-6)
-        cold.ranks.unpersist()
-        warm.ranks.unpersist()
+        Pins().release(cold.ranks)
+        Pins().release(warm.ranks)
 
     def test_warm_start_after_delta_matches_cold(self, spark):
         rng = random.Random(9)
@@ -264,9 +265,9 @@ class TestWarmStart:
         assert total == pytest.approx(1.0, abs=1e-9)
         for node in cd:
             assert wd[node] == pytest.approx(cd[node], abs=1e-5)
-        prev.ranks.unpersist()
-        cold.ranks.unpersist()
-        warm.ranks.unpersist()
+        Pins().release(prev.ranks)
+        Pins().release(cold.ranks)
+        Pins().release(warm.ranks)
 
 
 def test_auto_strategy_tiers(spark):
@@ -288,7 +289,7 @@ def test_auto_strategy_tiers(spark):
     a = {r["node"]: round(r["rank"], 9) for r in res.ranks.collect()}
     b = {r["node"]: round(r["rank"], 9) for r in res2.ranks.collect()}
     assert a == b
-    res.ranks.unpersist(), res2.ranks.unpersist()
+    Pins().release(res.ranks, res2.ranks)
 
 
 def test_hits_hand_graph(spark):
@@ -299,7 +300,7 @@ def test_hits_hand_graph(spark):
     e = _edges_df(spark, [(1, 4), (2, 4), (3, 4), (4, 5)])
     res = hits(e, iterations=2)
     out = {r["node"]: r for r in res.collect()}
-    res.unpersist()
+    Pins().release(res)
     assert len(out) == 5
     import pytest as _pt
 
@@ -354,7 +355,7 @@ def test_hits_loop_matches_oracle(spark):
     for node in nodes:
         assert got[node]["hub"] == pytest.approx(hub[node], abs=1e-12)
         assert got[node]["auth"] == pytest.approx(auth[node], abs=1e-12)
-    loop.unpersist()
+    Pins().release(loop)
 
 
 def test_hits_loop_converges(spark):
@@ -369,7 +370,7 @@ def test_hits_loop_converges(spark):
     assert sum(r["auth"] for r in got.values()) == pytest.approx(1.0)
     assert got[4]["auth"] == max(r["auth"] for r in got.values())
     assert got[1]["hub"] == pytest.approx(got[2]["hub"], abs=1e-12)
-    out.unpersist()
+    Pins().release(out)
 
 
 def test_katz_loop_matches_dag_and_converges(spark):
@@ -387,14 +388,14 @@ def test_katz_loop_matches_dag_and_converges(spark):
     assert set(got) == set(dag)
     for node in dag:
         assert got[node] == pytest.approx(dag[node], abs=1e-12)
-    loop.unpersist()
+    Pins().release(loop)
     # Convergence mode: the truncated series approaches the closed
     # form on a chain, where the geometric tail vanishes below delta.
     chain = _edges_df(spark, [(1, 2), (2, 3)])
     conv = katz_centrality(chain, alpha=0.1, delta=1e-10)
     vals = {r["node"]: r["katz"] for r in conv.collect()}
     assert vals[3] == pytest.approx(1.0 + 0.1 * (1.0 + 0.1), abs=1e-9)
-    conv.unpersist()
+    Pins().release(conv)
 
 
 def test_fixed_k_builders_run_no_job(spark):

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pagerank_spark.graph.loop import Pins
 from tests.test_oracle_parity import ENTRY, plan
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -898,5 +899,4 @@ def test_logreg_training_round_plan(spark):
         ]
         assert len(hash_exchanges) <= 1, exchanges
     finally:
-        xb.unpersist()
-        lab.unpersist()
+        Pins().release(xb, lab)
