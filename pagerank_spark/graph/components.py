@@ -5,9 +5,14 @@ specializes: attach vertex state to edge endpoints, send an expression
 along each edge, aggregate at the destination. ``connected_components``
 builds min-label propagation on top of it — the standard iterative
 algorithm (converges in graph-diameter rounds), with the same
-persist/checkpoint/one-job-per-iteration discipline as the PageRank loop
-(``pagerank.py``), so it scales the same way: per round, one shuffle on
-the message key plus one scalar convergence collect.
+persist/checkpoint discipline as the PageRank loop (``pagerank.py``),
+so it scales the same way: per round, one shuffle on the message key
+plus one scalar convergence collect, and the broadcast's own job when
+the state side is broadcast.
+
+Every per-round state join here plans its vertex-sized side with
+``state_side`` (graph/loop.py), each call site with its own row
+estimate, bounded by the edge count the wrappers already compute.
 """
 
 from __future__ import annotations
@@ -15,20 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.graph.loop import Pins, VertexLoop, loop_conf
+from pagerank_spark.graph.loop import Pins, VertexLoop, loop_conf, state_side
 from pagerank_spark.graph.pagerank import vertices
-
-# Below this bound on the loop's STATE rows (vertex-table-sized; the
-# wrappers bound it by the edge count they already compute), the
-# per-round state joins broadcast instead of shuffling — the same cut
-# the PageRank loop applies via broadcast_vertex_limit (~5M rows ≈
-# 80 MB hashed). With AQE off inside the loop tuning, Catalyst has no
-# runtime sizes for the derived per-round intermediates and would
-# default the joins to sort-merge, shuffling the big edge side every
-# round; the explicit hint keeps the only per-round exchange the
-# message aggregation itself. Above the bound the hint is withheld
-# and the joins shuffle — correct at cluster scale.
-BROADCAST_STATE_ROW_LIMIT = 5_000_000
 
 # connected_components auto mode: label-propagation round budget before
 # falling back to star contraction. Real web/social graphs propagate
@@ -39,33 +32,31 @@ BROADCAST_STATE_ROW_LIMIT = 5_000_000
 LABEL_FALLBACK_ROUNDS = 30
 
 
-def _bc(df: DataFrame, broadcast_state: bool) -> DataFrame:
-    return F.broadcast(df) if broadcast_state else df
-
-
 def aggregate_messages(
     edges: DataFrame,
     vertex_state: DataFrame,
     msg: Column,
     agg: Column,
-    broadcast_state: bool = False,
+    state_rows: int | None = None,
 ) -> DataFrame:
     """One message round: for each edge, evaluate ``msg`` over the edge
     row joined with the source's state (columns of ``vertex_state``
     except ``node``), then aggregate ``agg`` per destination.
 
     Returns (node, msg_agg) for destinations that received ≥1 message.
-    ``broadcast_state`` pins the state side of the join as a broadcast
-    (callers gate it on ``BROADCAST_STATE_ROW_LIMIT``); otherwise the
-    join broadcasts or shuffles per Catalyst's choice. The aggregate
-    partial-combines map-side either way.
+    Given ``state_rows``, the state side is planned by ``state_side``
+    on that estimate; otherwise the join broadcasts or shuffles per
+    Catalyst's choice. The aggregate partial-combines map-side either
+    way.
     """
     src_state = vertex_state.select(
         F.col("node").alias("src"),
         *[c for c in vertex_state.columns if c != "node"],
     )
+    if state_rows is not None:
+        src_state = state_side(src_state, state_rows, "src")
     return (
-        edges.join(_bc(src_state, broadcast_state), on="src")
+        edges.join(src_state, on="src")
         .select(F.col("dst").alias("node"), msg.alias("__msg"))
         .groupBy("node")
         .agg(agg.alias("msg_agg"))
@@ -162,25 +153,24 @@ def connected_components(
         raise ValueError(f"unknown algorithm: {algorithm!r}")
     spark = edges.sparkSession
     approx = 2 * edges.count()
-    small = approx <= BROADCAST_STATE_ROW_LIMIT
     with loop_conf(spark, approx, enabled=tune):
         if algorithm == "auto":
             budget = min(LABEL_FALLBACK_ROUNDS, max_iterations)
             try:
-                return _cc_rounds(edges, budget, checkpoint_every, small)
+                return _cc_rounds(edges, budget, checkpoint_every, approx)
             except RuntimeError:
                 # label budget exhausted: high-diameter component —
                 # restart with the diameter-independent contraction
-                return _star_rounds(edges, max_iterations, small)
+                return _star_rounds(edges, max_iterations, approx)
         if algorithm == "star":
-            return _star_rounds(edges, max_iterations, small)
-        return _cc_rounds(edges, max_iterations, checkpoint_every, small)
+            return _star_rounds(edges, max_iterations, approx)
+        return _cc_rounds(edges, max_iterations, checkpoint_every, approx)
 
 
 def _star_rounds(
     edges: DataFrame,
     max_iterations: int,
-    broadcast_state: bool,
+    rows: int,
 ) -> DataFrame:
     """Alternating large-star/small-star (Kiveris et al.): contract the
     edge list toward a star forest where every node points at its
@@ -224,7 +214,7 @@ def _star_rounds(
             )
             big = pins.truncate(
                 sym.where(F.col("dst") > F.col("src"))
-                .join(_bc(mn, broadcast_state), on="src")
+                .join(state_side(mn, rows, "src"), on="src")
                 .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
                 .where(F.col("src") != F.col("dst"))
                 .distinct(),
@@ -233,7 +223,7 @@ def _star_rounds(
             # small-star over the (child → smaller parent) list.
             pm = big.groupBy("src").agg(F.min("dst").alias("m"))
             small_edges = pins.truncate(
-                big.join(_bc(pm, broadcast_state), on="src")
+                big.join(state_side(pm, rows, "src"), on="src")
                 .where(F.col("dst") != F.col("m"))
                 .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
                 .unionAll(pm.select(F.col("src"), F.col("m").alias("dst")))
@@ -277,7 +267,7 @@ def _cc_rounds(
     edges: DataFrame,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool,
+    rows: int,
 ) -> DataFrame:
     with VertexLoop(checkpoint_every=checkpoint_every) as loop:
         und = loop.hold(
@@ -298,7 +288,7 @@ def _cc_rounds(
                 state,
                 msg=F.col("comp"),
                 agg=F.min("__msg"),
-                broadcast_state=broadcast_state,
+                state_rows=rows,
             )
             # NOTE on pointer jumping: measured twice, rejected twice.
             # (a) Small graphs (sf0.01): halves iterations (30 → 14) but
@@ -315,7 +305,7 @@ def _cc_rounds(
             # labels.
             new_state = (
                 state.select("node", F.col("comp").alias("old_comp"))
-                .join(_bc(nbr_min, broadcast_state), on="node", how="left")
+                .join(state_side(nbr_min, rows, "node"), on="node", how="left")
                 .select(
                     "node",
                     "old_comp",
@@ -393,7 +383,7 @@ def shortest_paths(
             sources,
             max_iterations,
             checkpoint_every,
-            broadcast_state=2 * ec <= BROADCAST_STATE_ROW_LIMIT,
+            rows=2 * ec,
         )
 
 
@@ -402,7 +392,7 @@ def _sp_rounds(
     sources: DataFrame,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool,
+    rows: int,
 ) -> DataFrame:
     # The frontier variant of the shared loop (graph/loop.py): each
     # generation is tracked BEFORE its materializing count, and a
@@ -429,11 +419,11 @@ def _sp_rounds(
                 frontier,
                 msg=F.col("dist") + 1,
                 agg=F.min("__msg"),
-                broadcast_state=broadcast_state,
+                state_rows=rows,
             )
             new_frontier = loop.truncate(
                 msgs.join(
-                    _bc(reached, broadcast_state), on="node", how="left_anti"
+                    state_side(reached, rows, "node"), on="node", how="left_anti"
                 ).select("node", F.col("msg_agg").alias("dist"))
             )
             n_new = new_frontier.count()
@@ -485,9 +475,7 @@ def multi_source_shortest_paths(
             seeds,
             max_iterations,
             checkpoint_every,
-            broadcast_state=(
-                2 * ec * n_seeds <= BROADCAST_STATE_ROW_LIMIT
-            ),
+            rows=2 * ec * n_seeds,
         )
 
 
@@ -496,7 +484,7 @@ def _multi_sp_rounds(
     seeds: DataFrame,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool,
+    rows: int,
 ) -> DataFrame:
     # (seed, node)-keyed frontier variant of the shared loop — the
     # same defer-one-round-late lifecycle as _sp_rounds
@@ -515,11 +503,12 @@ def _multi_sp_rounds(
             iteration += 1
             msgs = (
                 e.join(
-                    _bc(
+                    state_side(
                         frontier.select(
                             F.col("node").alias("src"), "seed", "dist"
                         ),
-                        broadcast_state,
+                        rows,
+                        "src",
                     ),
                     on="src",
                 )
@@ -533,7 +522,9 @@ def _multi_sp_rounds(
             )
             new_frontier = loop.truncate(
                 msgs.join(
-                    _bc(reached.select("seed", "node"), broadcast_state),
+                    state_side(
+                        reached.select("seed", "node"), rows, "seed", "node"
+                    ),
                     on=["seed", "node"],
                     how="left_anti",
                 )
@@ -611,12 +602,12 @@ def label_propagation(
         return _label_prop_rounds(
             edges,
             n_iterations,
-            broadcast_state=approx <= BROADCAST_STATE_ROW_LIMIT,
+            rows=approx,
         )
 
 
 def _label_prop_rounds(
-    edges: DataFrame, n_iterations: int, broadcast_state: bool
+    edges: DataFrame, n_iterations: int, rows: int
 ) -> DataFrame:
     # Fixed-round variant of the shared loop: no per-round scalar, so
     # each cut is EAGER (graph/loop.py), and the adjacency is the one
@@ -634,9 +625,10 @@ def _label_prop_rounds(
         for i in range(1, n_iterations + 1):
             counts = (
                 adj.join(
-                    _bc(
+                    state_side(
                         labels.select(F.col("node").alias("src"), "label"),
-                        broadcast_state,
+                        rows,
+                        "src",
                     ),
                     on="src",
                 )
@@ -658,7 +650,7 @@ def _label_prop_rounds(
             )
             labels = (
                 labels.select("node", "label")
-                .join(_bc(picked, broadcast_state), on="node", how="left")
+                .join(state_side(picked, rows, "node"), on="node", how="left")
                 .select(
                     "node",
                     F.coalesce("new_label", "label").alias("label"),
@@ -739,7 +731,7 @@ def weighted_shortest_paths(
             weight_col,
             max_iterations,
             checkpoint_every,
-            broadcast_state=2 * ec <= BROADCAST_STATE_ROW_LIMIT,
+            rows=2 * ec,
         )
 
 
@@ -749,7 +741,7 @@ def _weighted_sp_rounds(
     weight_col: str,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool,
+    rows: int,
 ) -> DataFrame:
     # See _sp_rounds: the frontier variant of the shared loop — a
     # lazily checkpointed ``dist`` materializes in the NEXT round's
@@ -769,9 +761,10 @@ def _weighted_sp_rounds(
             iteration += 1
             msgs = (
                 e.join(
-                    _bc(
+                    state_side(
                         frontier.select(F.col("node").alias("src"), "dist"),
-                        broadcast_state,
+                        rows,
+                        "src",
                     ),
                     on="src",
                 )
@@ -783,7 +776,7 @@ def _weighted_sp_rounds(
                 .agg(F.min("cand").alias("cand"))
             )
             improved = loop.truncate(
-                msgs.join(_bc(dist, broadcast_state), on="node", how="left")
+                msgs.join(state_side(dist, rows, "node"), on="node", how="left")
                 .where(
                     F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
                 )
@@ -982,7 +975,7 @@ def _min_label_rounds(
     edges: DataFrame,
     nodes: DataFrame,
     max_iterations: int,
-    broadcast_state: bool,
+    rows: int,
 ) -> DataFrame:
     """Directed min-label propagation to fixpoint: for each node, the
     minimum node id among its ancestors (nodes that can reach it,
@@ -996,11 +989,11 @@ def _min_label_rounds(
             iteration += 1
             nbr = aggregate_messages(
                 edges, state.select("node", "lab"), msg=F.col("lab"),
-                agg=F.min("__msg"), broadcast_state=broadcast_state,
+                agg=F.min("__msg"), state_rows=rows,
             )
             new_state = (
                 state.select("node", F.col("lab").alias("old"))
-                .join(_bc(nbr, broadcast_state), on="node", how="left")
+                .join(state_side(nbr, rows, "node"), on="node", how="left")
                 .select(
                     "node",
                     "old",
@@ -1062,7 +1055,7 @@ def strongly_connected_components(
             edges,
             max_rounds,
             max_label_iterations,
-            broadcast_state=2 * ec <= BROADCAST_STATE_ROW_LIMIT,
+            rows=2 * ec,
         )
 
 
@@ -1070,7 +1063,7 @@ def _scc_rounds(
     edges: DataFrame,
     max_rounds: int,
     max_label_iterations: int,
-    broadcast_state: bool,
+    rows: int,
 ) -> DataFrame:
     # Each round's pins are released once the next round's
     # replacements have materialized; the settled pieces live until
@@ -1087,7 +1080,7 @@ def _scc_rounds(
                     residual_edges,
                     residual_nodes,
                     max_label_iterations,
-                    broadcast_state,
+                    rows,
                 )
             )
             bwd = pins.adopt(
@@ -1097,7 +1090,7 @@ def _scc_rounds(
                     ),
                     residual_nodes,
                     max_label_iterations,
-                    broadcast_state,
+                    rows,
                 )
             )
             both = fwd.withColumnRenamed("lab", "f").join(
@@ -1114,13 +1107,11 @@ def _scc_rounds(
                 both.where(F.col("f") != F.col("b")).select("node"),
                 eager=True,
             )
-            keep_src = _bc(
-                next_nodes.select(F.col("node").alias("src")),
-                broadcast_state,
+            keep_src = state_side(
+                next_nodes.select(F.col("node").alias("src")), rows, "src"
             )
-            keep_dst = _bc(
-                next_nodes.select(F.col("node").alias("dst")),
-                broadcast_state,
+            keep_dst = state_side(
+                next_nodes.select(F.col("node").alias("dst")), rows, "dst"
             )
             next_edges = pins.hold(
                 pins.truncate(
@@ -1369,7 +1360,7 @@ def betweenness_centrality(
             seeds,
             max_iterations,
             checkpoint_every,
-            broadcast_state=(2 * ec * n_seeds <= BROADCAST_STATE_ROW_LIMIT),
+            rows=2 * ec * n_seeds,
             n_seeds=n_seeds,
             scaled=scaled,
         )
@@ -1380,7 +1371,7 @@ def _betweenness_rounds(
     seeds: DataFrame,
     max_iterations: int,
     checkpoint_every: int,
-    broadcast_state: bool,
+    rows: int,
     n_seeds: int,
     scaled: bool,
 ) -> DataFrame:
@@ -1405,11 +1396,12 @@ def _betweenness_rounds(
             iteration += 1
             msgs = (
                 e.join(
-                    _bc(
+                    state_side(
                         frontier.select(
                             F.col("node").alias("src"), "seed", "dist", "sigma"
                         ),
-                        broadcast_state,
+                        rows,
+                        "src",
                     ),
                     on="src",
                 )
@@ -1429,7 +1421,9 @@ def _betweenness_rounds(
             )
             new_frontier = loop.truncate(
                 msgs.join(
-                    _bc(reached.select("seed", "node"), broadcast_state),
+                    state_side(
+                        reached.select("seed", "node"), rows, "seed", "node"
+                    ),
                     on=["seed", "node"],
                     how="left_anti",
                 )
@@ -1481,12 +1475,14 @@ def _betweenness_rounds(
             )
             if delta_prev is not None:
                 w = w.join(
-                    _bc(
+                    state_side(
                         delta_prev.select(
                             "seed", F.col("node").alias("dst"),
                             F.col("delta").alias("delta_w"),
                         ),
-                        broadcast_state,
+                        rows,
+                        "seed",
+                        "dst",
                     ),
                     on=["seed", "dst"],
                     how="left",
@@ -1497,7 +1493,7 @@ def _betweenness_rounds(
                 "seed", "node", F.col("sigma").alias("sigma_v")
             )
             contrib = (
-                e.join(_bc(w, broadcast_state), on="dst")
+                e.join(state_side(w, rows, "dst"), on="dst")
                 .select(
                     "seed",
                     F.col("src").alias("node"),
@@ -1507,7 +1503,7 @@ def _betweenness_rounds(
                 )
                 # inner join against level d-1 keeps only shortest-path
                 # DAG edges and attaches the predecessor's sigma
-                .join(_bc(v, broadcast_state), on=["seed", "node"])
+                .join(state_side(v, rows, "seed", "node"), on=["seed", "node"])
                 .groupBy("seed", "node")
                 .agg(F.sum(F.col("sigma_v") * F.col("ratio")).alias("delta"))
             )

@@ -9,17 +9,21 @@ Each idiom lives here once, so a fix lands once:
   ``spark.sql.shuffle.partitions``, both restored on exit) and the
   measurements behind it;
 - ``plan_size_bytes``: Catalyst's size estimate of a plan, read
-  without running a job.
+  without running a job;
+- ``state_side``: the state side of a loop's per-round join,
+  broadcast or co-partitioned by one size cut.
 
 PageRank, Katz, HITS, connected components, shortest paths, and label
 propagation are all the same loop wearing different algebra: cached
-edge layouts, a size-gated broadcast-or-copartitioned state join, a
-vertex-sized state whose lineage is cut by a checkpoint on a cadence,
-and exactly ONE driver scalar per round (the aggregation that also
-materializes the round's pin). Each algorithm keeps its message
-algebra in its own loop body; the pins belong to the owner, opened as
-``with VertexLoop(...) as loop:`` (or ``with Pins() as pins:`` for a
-loop without a cadence). It gives each pin one of three lifetimes:
+edge layouts, a size-gated broadcast-or-copartitioned state join
+(``state_side``), a vertex-sized state whose lineage is cut by a
+checkpoint on a cadence, and exactly ONE driver scalar per round (the
+aggregation that also materializes the round's pin; a broadcast state
+side runs one more job of its own, the broadcast's collect). Each
+algorithm keeps its message algebra in its own loop body; the pins
+belong to the owner, opened as ``with VertexLoop(...) as loop:`` (or
+``with Pins() as pins:`` for a loop without a cadence). It gives each
+pin one of three lifetimes:
 
 - the scope (``hold``): edge layouts, vertex sets, feature pins;
 - a generation (``persist``, ``truncate``): the loop state, released
@@ -51,6 +55,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 AQE_KEY = "spark.sql.adaptive.enabled"
@@ -62,6 +67,13 @@ PARTS_KEY = "spark.sql.shuffle.partitions"
 SMALL_LOOP_EDGE_LIMIT = 64_000_000
 LOOP_ROWS_PER_PARTITION = 2_000_000
 LOOP_PARTS_FLOOR = 4
+
+# ``state_side``'s cut on the rows of a loop's state side. Measured on
+# PageRank (synthetic hash-mixed graphs, 6 fixed iterations, local[32]):
+# broadcast wins 6.1 vs 8.2 s at 200k vertices, is within noise at
+# 1-2M, and collapses by 3M (40.3 vs 16.7 s, the per-round collect and
+# rebroadcast dominating; ``scale_probe.py`` reproduces the 3M point).
+BROADCAST_STATE_ROW_LIMIT = 2_000_000
 
 
 @contextmanager
@@ -135,6 +147,32 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         )
     except Exception:
         return None
+
+
+def state_strategy(rows: int) -> str:
+    """The branch ``state_side`` takes for a state side of ``rows``
+    rows: "broadcast" at or below ``BROADCAST_STATE_ROW_LIMIT``,
+    "shuffle" above."""
+    return "broadcast" if rows <= BROADCAST_STATE_ROW_LIMIT else "shuffle"
+
+
+def state_side(df: DataFrame, rows: int, *keys: str) -> DataFrame:
+    """``df``, the vertex-sized side of a loop's per-round join on
+    ``keys``, planned by the one size rule (``state_strategy``, with
+    each caller's own estimate of its ``rows``).
+
+    Broadcast: the state is hinted as the broadcast build side, so
+    the edge side never moves. Without the hint, Catalyst sizes a
+    checkpointed state by its origin stats and can broadcast the
+    EDGES instead, every round. Shuffle: the state is co-partitioned
+    on ``keys`` at the session's shuffle partitions (the loop's,
+    inside ``loop_conf``), aligned with an edge cache partitioned the
+    same way, and hinted as the shuffled-hash build side; an unhinted
+    repartition still lets Catalyst plan a broadcast over it.
+    """
+    if state_strategy(rows) == "broadcast":
+        return F.broadcast(df)
+    return df.repartition(*keys).hint("shuffle_hash")
 
 
 def checkpoint_reset_stats(df: DataFrame) -> DataFrame:

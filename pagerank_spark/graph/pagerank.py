@@ -23,7 +23,8 @@ along deduplicated dst sets while dividing by the duplicate-counting
 degree (``pageRank.py:102-110``) — its literal ``s = sum(new_rank.
 values())`` picks that up automatically, and so does m_eff here. ``m``
 is folded into the single per-iteration aggregation, so each iteration
-runs exactly ONE Spark job.
+runs ONE aggregation job, plus the broadcast's own job when the rank
+vector is broadcast (below).
 (The float value of ``s`` differs from the reference's literal
 ``sum(dict.values())`` only by summation rounding, orders of magnitude
 below the 1e-9 golden-score tolerance; verified against the golden
@@ -39,11 +40,11 @@ Scale design (the part that matters at 100 TB):
   cached — the analogue of the reference's block-stripe structure
   (``pageRank.py:96-113``), which Spark replaces with a hash-partitioned
   shuffle exchange; no custom block structure is needed (SURVEY §4 X1/X2).
-- The per-iteration rank vector joins the edge table either by
-  **broadcast** (rank vector fits in executor memory) or by
-  **co-partitioned shuffle join** (``strategy="shuffle"``): edges are
-  pre-partitioned by ``src`` once outside the loop, so each iteration
-  shuffles only the (much smaller) rank vector, never the edge table.
+- The per-iteration rank vector joins the edge table by the engine's
+  one state-join rule (graph/loop.py ``state_side``): **broadcast** up
+  to ``BROADCAST_STATE_ROW_LIMIT`` vertices, **co-partitioned shuffled
+  hash join** above it. Edges are pre-partitioned by ``src`` once
+  outside the loop, so neither branch ever moves the edge table.
 - Contributions aggregate map-side first (partial hash agg) before the
   exchange on ``dst``; AQE skew-join splitting covers hub-vertex skew.
 - One tiny driver-side scalar row per iteration (L1 norm + dangling
@@ -75,11 +76,11 @@ with ``dm`` the mass on dangling vertices (skipped when b = 0):
 It runs in two shapes. ``_fixed_k`` unrolls k rounds into one lazy DAG
 (per-round scalars ride broadcast one-row joins, nothing collects):
 the declared fixed-k queries and their SQL twins. ``_iterate`` is the
-checkpointed loop body (cached edge layout, one job per round, an L1
-stop), shared by ``pagerank`` and Katz's loop; there the per-edge term
-``c·x[u]·w(u,v)`` and the per-round constant ``(a + b·dm)·s`` come in
-as data. HITS alternates A and Aᵀ with a normalization per half-step,
-so it keeps its own loop.
+checkpointed loop body (cached edge layout, one aggregation job per
+round, an L1 stop), shared by ``pagerank`` and Katz's loop; there the
+per-edge term ``c·x[u]·w(u,v)`` and the per-round constant
+``(a + b·dm)·s`` come in as data. HITS alternates A and Aᵀ with a
+normalization per half-step, so it keeps its own loop.
 """
 
 from __future__ import annotations
@@ -96,18 +97,14 @@ from pagerank_spark.graph.loop import (
     VertexLoop,
     loop_conf,
     plan_size_bytes,
+    state_side,
+    state_strategy,
 )
 
-# Below this vertex count the co-partitioned shuffle join beats the
-# broadcast join even though the rank vector trivially fits in memory:
-# the per-iteration cost of broadcast is a driver collect + rebroadcast
-# round trip, which at tiny sizes exceeds shuffling the rank vector
-# through the (tuned, ~4-partition) exchange. Measured, 6 fixed
-# iterations, best-of-2, local[32]: tuned shuffle wins at 10k vertices
-# (1.8s vs 3.3s), 30k (4.5 vs 5.7), 80k (2.5 vs 3.7) and WikiData's 7k
-# (4.3 vs 4.7); broadcast wins again by 200k (6.1 vs 8.2 — the collect
-# amortizes, and the SMJ's per-iteration edge-side sort grows with E).
+# ``loop_conf`` gates (vertex rows) of the loops: HITS and Katz tune
+# only tiny graphs, PageRank up to 2M vertices.
 TINY_VERTEX_LIMIT = 100_000
+PAGERANK_TUNE_VERTEX_LIMIT = 2_000_000
 
 # Setup-phase tuning gate (``loop_conf`` on bytes): the setup
 # aggregations run tuned when Catalyst's size estimate of the edge plan
@@ -127,7 +124,7 @@ class PageRankResult:
     ranks: DataFrame  # (node BIGINT, rank DOUBLE), sums to 1
     iterations: int
     l1_trajectory: list[float]
-    strategy: str = "broadcast"  # the join strategy the loop ran with
+    strategy: str = "broadcast"  # the state_side branch the loop took
 
     def top(self, k: int = 100) -> DataFrame:
         return top_k(self.ranks, k)
@@ -170,8 +167,6 @@ def pagerank(
     delta: float = 1e-5,
     max_iterations: int = 200,
     checkpoint_every: int | None = None,
-    strategy: str = "auto",
-    broadcast_vertex_limit: int = 2_000_000,
     edge_semantics: str = "bag",
     reliable_checkpoint: bool | str = "auto",
     tune_aqe: bool = True,
@@ -188,18 +183,11 @@ def pagerank(
     the uniform share, departed ones are dropped, then ranks rescale to
     sum 1), costing one extra setup aggregation.
 
-    ``strategy``: "broadcast" joins the rank vector to edges as a broadcast
-    hash join; "shuffle" co-partitions both sides on ``src``; "auto" is
-    three MEASURED tiers (synthetic hash-mixed graphs, 6 fixed
-    iterations, local[32]): tuned co-partitioned shuffle below
-    ``TINY_VERTEX_LIMIT`` (100k — broadcast's per-iteration driver
-    collect round trip costs more than the tiny rank exchange: 1.8 vs
-    3.3s at 10k vertices, 2.5 vs 3.7s at 80k), broadcast from there to
-    ``broadcast_vertex_limit`` (broadcast wins 6.1 vs 8.2s at 200k, is
-    within noise at 1-2M, and collapses by 3M — 40.3 vs 16.7s, the
-    collect + rebroadcast dominating), and shuffle again above. Beyond
-    the cut, shuffle co-partitioning is also the only plan that
-    survives a cluster whose rank vector exceeds executor memory.
+    The rank vector joins the edges by ``state_side``'s one size rule
+    (graph/loop.py): broadcast up to ``BROADCAST_STATE_ROW_LIMIT``
+    vertices, a co-partitioned shuffled hash join above it, the only
+    plan that survives a cluster whose rank vector exceeds executor
+    memory. ``result.strategy`` names the branch taken.
 
     ``edge_semantics``: "bag" (default) lets every duplicate edge
     occurrence contribute; "reference" pins the reference's multigraph
@@ -256,25 +244,15 @@ def pagerank(
         ):
             deg, state, counts = _setup(edges, edge_semantics, loop)
         n = counts["n"]
+        strategy = state_strategy(n)
         if n == 0:
             empty = state.withColumn("rank", F.lit(0.0)).select(
                 "node", "rank"
             )
             return PageRankResult(empty, 0, [], strategy)
 
-        if strategy == "auto":
-            if n <= TINY_VERTEX_LIMIT:
-                # Tiny tier: co-partitioned shuffle — broadcast's
-                # per-iteration driver collect costs more than the tiny
-                # rank exchange (see TINY_VERTEX_LIMIT measurements).
-                strategy = "shuffle"
-            elif n <= broadcast_vertex_limit:
-                strategy = "broadcast"
-            else:
-                strategy = "shuffle"
-
         with loop_conf(
-            spark, n, enabled=tune_aqe, limit=broadcast_vertex_limit
+            spark, n, enabled=tune_aqe, limit=PAGERANK_TUNE_VERTEX_LIMIT
         ) as loop_parts:
             # Loop-invariant: edges decorated with the source's
             # out-degree (reference builds this once too — M_block_list
@@ -285,17 +263,13 @@ def pagerank(
             contributing = (
                 edges.distinct() if edge_semantics == "reference" else edges
             )
-            edge_deg = contributing.join(
-                deg.select("src", "deg"), on="src", how="inner"
+            # Partitioned by src at the loop's sizing, so a
+            # co-partitioned rank side reuses this cached exchange.
+            edge_deg = loop.hold(
+                contributing.join(
+                    deg.select("src", "deg"), on="src", how="inner"
+                ).repartition(loop_parts, "src")
             )
-            if strategy == "shuffle":
-                # Pre-partition by src so each iteration's rank join
-                # shuffles only the rank vector, reusing this cached
-                # exchange for the edge side. Tuned small graphs use the
-                # loop's partition sizing so every per-iteration
-                # exchange (rank side, contribs agg) aligns.
-                edge_deg = edge_deg.repartition(loop_parts, "src")
-            edge_deg = loop.hold(edge_deg)
 
             if init_ranks is None:
                 state = state.withColumn("rank", F.lit(1.0 / n))
@@ -331,8 +305,7 @@ def pagerank(
                         ).otherwise(0.0)
                     )
                 },
-                strategy=strategy,
-                parts=loop_parts,
+                rows=n,
                 delta=delta,
                 max_iterations=max_iterations,
             )
@@ -426,8 +399,7 @@ def _iterate(
     contrib: Column,
     const: Callable[[Row | dict | None], float],
     metrics: dict[str, Column],
-    strategy: str,
-    parts: int,
+    rows: int,
     delta: float,
     max_iterations: int,
 ) -> tuple[DataFrame, int, list[float]]:
@@ -443,12 +415,12 @@ def _iterate(
     evaluated over ``edges`` joined to the sources' ``(src, value)``;
     ``const`` maps the previous round's metrics row (``row`` before the
     first round) to this round's scalar; ``metrics`` are extra
-    aggregates of the round's ONE job, beside ``l1``. ``strategy``
-    "broadcast" hints the source side, anything else repartitions it
-    to ``parts`` on ``src``, aligned with a ``src``-partitioned edge
-    layout so only the vertex-sized side moves. Lineage is truncated
-    by ``loop`` (graph/loop.py ``VertexLoop.advance``): the lazy
-    checkpoint materializes inside the round's one aggregation.
+    aggregates of the round's ONE aggregation job, beside ``l1``. The
+    source side is planned by ``state_side`` on ``rows``, its size
+    estimate; a broadcast side adds the broadcast's own job per round.
+    Lineage is truncated by ``loop`` (graph/loop.py
+    ``VertexLoop.advance``): the lazy checkpoint materializes inside
+    the round's aggregation.
 
     Returns ``(state, rounds run, L1 per round)``.
     """
@@ -457,11 +429,10 @@ def _iterate(
     iteration = 0
     while iteration < max_iterations:
         iteration += 1
-        side = state.where(senders).select(F.col("node").alias("src"), value)
-        side = (
-            F.broadcast(side)
-            if strategy == "broadcast"
-            else side.repartition(parts, "src")
+        side = state_side(
+            state.where(senders).select(F.col("node").alias("src"), value),
+            rows,
+            "src",
         )
         # One equi-join + partial-agg group-sum, then a left join back
         # to the full vertex set so in-edge-less vertices keep the
@@ -781,13 +752,12 @@ def _hits_loop(
 
     Join strategy: HITS joins edges on BOTH ends (src for the
     authority step, dst for the hub step), so the loop caches TWO
-    pre-partitioned edge layouts and aligns the vertex-sized state to
-    each — every per-round exchange moves only the state vector, never
-    the edge table (without this, Catalyst sees the checkpointed state
-    with unknown stats and broadcasts the EDGES each half-step — fine
-    at 10 MB, fatal at cluster scale). The 2× edge cache is the price
-    of zero per-round edge movement; a memory-tight cluster can keep
-    one layout and accept one edge shuffle per round.
+    pre-partitioned edge layouts, and each half-step plans its
+    vertex-sized side with ``state_side`` (broadcast, or co-partitioned
+    with that half-step's layout) — no per-round exchange moves the
+    edge table. The 2× edge cache is the price of zero per-round edge
+    movement above the cut; a memory-tight cluster can keep one layout
+    and accept one edge shuffle per round.
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst")
@@ -805,8 +775,15 @@ def _hits_loop(
         with loop_conf(spark, n, limit=TINY_VERTEX_LIMIT) as parts:
             e_src = loop.hold(e.repartition(parts, "src"))
             e_dst = loop.hold(e.repartition(parts, "dst"))
+            # the initial state at the loop's width, so every round's
+            # join back to it runs at ``parts``
+            state = verts.repartition(parts, "node").select(
+                "node",
+                F.lit(1.0 / n).alias("hub"),
+                F.lit(1.0 / n).alias("auth"),
+            )
             return _hits_iterate(
-                loop, e_src, e_dst, verts, n, parts, max_iterations, delta
+                loop, e_src, e_dst, state, n, max_iterations, delta
             )
 
 
@@ -814,9 +791,8 @@ def _hits_iterate(
     loop: VertexLoop,
     e_src: DataFrame,
     e_dst: DataFrame,
-    verts: DataFrame,
+    state: DataFrame,
     n: int,
-    parts: int,
     max_iterations: int,
     delta: float,
 ) -> DataFrame:
@@ -827,36 +803,6 @@ def _hits_iterate(
         s = F.col(col)
         return F.when(F.coalesce(s, F.lit(0.0)) == 0.0, 1.0).otherwise(s)
 
-    # r15 optimization (§3.1): below the engine's broadcast-state cut
-    # the planner broadcasts the vertex-sized state side of each
-    # half-step join ANYWAY (the checkpointed state keeps small origin
-    # stats), so the explicit co-partitioning repartition executed as
-    # a dead Exchange UNDER the BroadcastExchange — two wasted
-    # state shuffles per round. Hint the broadcast explicitly and skip
-    # the repartition when state is small; above the cut keep the
-    # repartition that aligns the state to the cached edge layouts
-    # (the zero-edge-movement property the loop exists for). The
-    # no-broadcast alternative (autoBroadcastJoinThreshold=-1 +
-    # shuffled-hash, PageRank's tiny tier) was A/B-measured SLOWER
-    # here (9.0/10.4 s vs 6.9/8.1 s at sf0.1 k=10): HITS joins the
-    # 600k-row edge relation on BOTH ends, so the forced-shuffle form
-    # re-exchanges contributions every half-step while the 4096-row
-    # broadcast build is nearly free.
-    from pagerank_spark.graph.components import (
-        BROADCAST_STATE_ROW_LIMIT,
-        _bc,
-    )
-
-    bcs = n <= BROADCAST_STATE_ROW_LIMIT
-
-    def _align(df: DataFrame, key: str) -> DataFrame:
-        return _bc(df, True) if bcs else df.repartition(parts, key)
-
-    state = verts.select(
-        "node",
-        F.lit(1.0 / n).alias("hub"),
-        F.lit(1.0 / n).alias("auth"),
-    )
     # HITS is the TWO-half-step variant of the shared loop: each round
     # truncates lineage twice (after the authority and hub steps), and
     # the per-round scalar is conditional on delta — so it uses the
@@ -866,9 +812,8 @@ def _hits_iterate(
         iteration += 1
         contrib_a = (
             e_src.join(
-                _align(
-                    state.select(F.col("node").alias("src"), "hub"),
-                    "src",
+                state_side(
+                    state.select(F.col("node").alias("src"), "hub"), n, "src"
                 ),
                 on="src",
             )
@@ -893,8 +838,8 @@ def _hits_iterate(
         s_a = F.broadcast(mid.agg(F.sum("va").alias("__sa")))
         contrib_h = (
             e_dst.join(
-                _align(
-                    mid.select(F.col("node").alias("dst"), "va"), "dst"
+                state_side(
+                    mid.select(F.col("node").alias("dst"), "va"), n, "dst"
                 ),
                 on="dst",
             )
@@ -1021,15 +966,14 @@ def _katz_loop(
     max_iterations: int,
 ) -> DataFrame:
     """Convergence-loop Katz on the shared loop body (``_iterate``):
-    cached SRC-PARTITIONED edges (per-round exchanges move only the
-    vertex-sized state, never the edge table — Catalyst would
-    otherwise broadcast the edges each round, since the checkpointed
-    state has unknown stats), per round ONE job (edge join + partial
-    agg + the L1 scalar, materializing the lazy localCheckpoint),
-    lineage truncated every round; small graphs get the PageRank
-    loop's AQE-off + vertex-sized partition tuning. delta=-inf →
-    exactly ``max_iterations`` rounds, matching the unrolled DAG up to
-    float summation order."""
+    cached SRC-PARTITIONED edges, the state side planned by
+    ``state_side`` (neither branch moves the edge table), per round
+    ONE aggregation job (edge join + partial agg + the L1 scalar,
+    materializing the lazy localCheckpoint) plus the broadcast's own
+    job on the broadcast branch, lineage truncated every round; small
+    graphs get the PageRank loop's AQE-off + vertex-sized partition
+    tuning. delta=-inf → exactly ``max_iterations`` rounds, matching
+    the unrolled DAG up to float summation order."""
     spark = edges.sparkSession
     base = edges.select("src", "dst")
     with VertexLoop() as loop:
@@ -1043,15 +987,17 @@ def _katz_loop(
             state, _, _ = _iterate(
                 loop,
                 e,
-                verts.select("node", F.lit(0.0).alias("katz")),
+                # at the loop's width, like HITS's initial state
+                verts.repartition(parts, "node").select(
+                    "node", F.lit(0.0).alias("katz")
+                ),
                 None,
                 value="katz",
                 senders=F.lit(True),
                 contrib=F.lit(alpha) * F.col("katz"),
                 const=lambda _: 1.0,
                 metrics={},
-                strategy="shuffle",
-                parts=parts,
+                rows=n,
                 delta=delta,
                 max_iterations=max_iterations,
             )

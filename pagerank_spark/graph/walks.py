@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pagerank_spark.functions import portable_hash60
-from pagerank_spark.graph.loop import Pins
+from pagerank_spark.graph.loop import Pins, state_side
 
 
 def random_walks(edges: DataFrame, steps: int = 4) -> DataFrame:
@@ -137,12 +137,13 @@ def node2vec_walks(
     distinct edge set, and a per-WALK bounded window for the running
     sum (partition = one walk's ≤ out-degree candidate rows — never a
     global window). The second-order bias costs exactly the one extra
-    membership join node2vec's definition demands. Below the engine's
-    broadcast-state cut the frontier-side relations (walk state, the
-    chosen-next relation, the distinct edge set) broadcast into the
-    joins and the loop runs under the shared small-loop shuffle conf —
-    the same size-gated treatment every VertexLoop-family loop gets;
-    ``N2V_AB_r12.json``: 1.59× at sf0.1, value-identical.
+    membership join node2vec's definition demands. The frontier-side
+    relations (walk state, the chosen-next relation, the distinct edge
+    set) join by the engine's one state-join rule (graph/loop.py
+    ``state_side``, on twice the edge count), and the loop runs under
+    the shared small-loop shuffle conf — the same size-gated treatment
+    every VertexLoop-family loop gets; ``N2V_AB_r12.json`` (the
+    broadcast branch): 1.59× at sf0.1, value-identical.
     """
     if steps < 1:
         raise ValueError(f"node2vec_walks: steps must be >= 1, got {steps}")
@@ -168,21 +169,17 @@ def node2vec_walks(
                     "valid but not guaranteed hash-reproducible across "
                     "engines"
                 )
-    from pagerank_spark.graph.components import BROADCAST_STATE_ROW_LIMIT
     from pagerank_spark.graph.loop import loop_conf
 
     spark = edges.sparkSession
     ec = edges.count()
-    bcs = 2 * ec <= BROADCAST_STATE_ROW_LIMIT
     with loop_conf(spark, ec, enabled=tune):
-        return _node2vec_steps(edges, steps, p, q, bcs)
+        return _node2vec_steps(edges, steps, p, q, 2 * ec)
 
 
 def _node2vec_steps(
-    edges: DataFrame, steps: int, p: float, q: float, bcs: bool
+    edges: DataFrame, steps: int, p: float, q: float, rows: int
 ) -> DataFrame:
-    from pagerank_spark.graph.components import _bc
-
     # r15 optimization (§5: reused AND expensive to recompute): the
     # per-step eager checkpoints split the walk into one job per step,
     # so the static relations below — the indexed adjacency (a window
@@ -231,12 +228,13 @@ def _node2vec_steps(
             F.col("deg"),
         )
         state = (
-            _bc(state, bcs).join(deg, state["cur"] == deg["src"], "inner")
+            state_side(state, rows, "cur")
+            .join(deg, state["cur"] == deg["src"], "inner")
             .withColumn("__pick", pick1)
             .drop("src", "deg")
         )
         state = (
-            _bc(state, bcs).join(
+            state_side(state, rows, "cur").join(
                 adj,
                 (state["cur"] == adj["src"]) & (state["__pick"] == adj["idx"]),
             )
@@ -297,13 +295,13 @@ def _node2vec_steps(
             )
         )
         for t in range(2, steps + 1):
-            cand = _bc(state, bcs).join(
+            cand = state_side(state, rows, "cur").join(
                 adj.select(
                     F.col("src").alias("__asrc"), "dst", "idx"
                 ),
                 state["cur"] == F.col("__asrc"),
             ).join(
-                _bc(eset, bcs),
+                state_side(eset, rows, "p_src", "p_dst"),
                 (F.col("p_src") == F.col("prev"))
                 & (F.col("p_dst") == F.col("dst")),
                 "left",
@@ -340,7 +338,9 @@ def _node2vec_steps(
                 .agg(F.min_by("dst", "idx").alias("__nxt"))
             )
             state = (
-                state.join(_bc(chosen, bcs), on="start", how="left")
+                state.join(
+                    state_side(chosen, rows, "start"), on="start", how="left"
+                )
                 .select(
                     "start",
                     F.when(F.col("__nxt").isNotNull(), F.col("cur"))

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Scale probe: run the iterative engines on a synthetic graph ~100×
 the sf0.1 fixture to exercise the CLUSTER code paths the fixtures are
-too small to reach — the shuffle-strategy PageRank join (rank vector
-too big to broadcast is simulated by forcing ``strategy="shuffle"``),
-the non-broadcast state joins in connected components (the 5M-row
-``BROADCAST_STATE_ROW_LIMIT`` gate is exceeded naturally), and AQE
-skew handling under a deliberate hub vertex.
+too small to reach — the co-partitioned PageRank state join against
+a forced broadcast (each forced by patching the one state-join cut,
+``graph/loop.py`` ``BROADCAST_STATE_ROW_LIMIT``), the non-broadcast
+state joins in connected components and HITS (the 2M-row cut is
+exceeded naturally), and AQE skew handling under a deliberate hub
+vertex.
 
 The graph is deterministic (hash-mixed ids, no RNG): E edges over V
 vertices, ~1% of destinations redirected to vertex 0 to create the
@@ -31,11 +32,29 @@ EDGES = int(os.environ.get("SPARK_GRAFT_PROBE_EDGES", 10_000_000))
 VERTICES = int(os.environ.get("SPARK_GRAFT_PROBE_VERTICES", 3_000_000))
 
 
+def _pagerank_forced(e, strategy: str):
+    """6 fixed PageRank iterations with the state join forced to
+    ``strategy`` by patching the one cut, restored afterwards."""
+    from pagerank_spark.graph import loop
+    from pagerank_spark.graph.pagerank import pagerank
+
+    before = loop.BROADCAST_STATE_ROW_LIMIT
+    loop.BROADCAST_STATE_ROW_LIMIT = (
+        float("inf") if strategy == "broadcast" else 0
+    )
+    try:
+        res = pagerank(e, delta=0.0, max_iterations=6)
+    finally:
+        loop.BROADCAST_STATE_ROW_LIMIT = before
+    assert res.strategy == strategy, res.strategy
+    return res
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
     from pagerank_spark.graph.components import connected_components
-    from pagerank_spark.graph.pagerank import pagerank, top_k
+    from pagerank_spark.graph.pagerank import top_k
     from pagerank_spark.session import get_spark
 
     spark = get_spark(app_name="scale-probe")
@@ -74,19 +93,17 @@ def main() -> None:
 
     results: dict[str, float] = {}
 
-    # Forced broadcast: above the auto cut (2M vertices) this is the
-    # path the engine would NOT choose — measured here so the
-    # crossover stays justified round over round.
+    # Forced broadcast: above the cut (2M vertices) this is the path
+    # the engine would NOT choose — measured here so the crossover
+    # stays justified round over round.
     t0 = time.perf_counter()
-    res_b = pagerank(
-        e, delta=0.0, max_iterations=6, strategy="broadcast"
-    )
+    res_b = _pagerank_forced(e, "broadcast")
     top_b = top_k(res_b.ranks, 10).collect()
     results["pagerank_broadcast_6it"] = round(time.perf_counter() - t0, 2)
     res_b.ranks.unpersist()
 
     t0 = time.perf_counter()
-    res_s = pagerank(e, delta=0.0, max_iterations=6, strategy="shuffle")
+    res_s = _pagerank_forced(e, "shuffle")
     top_s = top_k(res_s.ranks, 10).collect()
     results["pagerank_shuffle_6it"] = round(time.perf_counter() - t0, 2)
     res_s.ranks.unpersist()
@@ -100,8 +117,8 @@ def main() -> None:
     assert pages_b == pages_s, f"strategy divergence: {pages_b} {pages_s}"
     assert pages_b[0][0] == 0, "hub vertex should rank first"
 
-    # Connected components above the broadcast-state gate (2*E >> 5M):
-    # the per-round state joins run as shuffles, the cluster plan.
+    # Connected components above the state-join cut (2*E >> 2M): the
+    # per-round state joins run co-partitioned, the cluster plan.
     t0 = time.perf_counter()
     comp = connected_components(e, max_iterations=40)
     n_comp = comp.select("component").distinct().count()
@@ -109,8 +126,9 @@ def main() -> None:
     comp.unpersist()
 
     # HITS convergence loop ABOVE the small-graph tuning gate
-    # (3M vertices >> TINY_VERTEX_LIMIT): exercises the round-8 loop
-    # shape at cluster size — dual pre-partitioned edge caches,
+    # (3M vertices >> TINY_VERTEX_LIMIT) and the state-join cut:
+    # exercises the loop shape at cluster size — dual pre-partitioned
+    # edge caches joined by the co-partitioned state,
     # plan-side broadcast normalization scalars, zero per-round driver
     # actions for fixed k. k=4 keeps the probe bounded; the cost is
     # ~linear in k (every round is the same two join+agg jobs).

@@ -5,7 +5,9 @@ The iterative operators run their loops with AQE off and a loop-sized
 loop's per-round hook (``VertexLoop.advance``, or ``VertexLoop.truncate``
 for HITS), so a refactor that moves a flip, or drops it, fails here.
 The conftest session runs AQE on with 8 shuffle partitions; a small
-graph's loop runs at the floor of 4.
+graph's loop runs at the floor of 4, and no hash exchange in a round's
+plan is wider than that (state built before the conf scope would join
+back at the session's width every round).
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pagerank_spark.graph.loop import Pins, VertexLoop, loop_conf
+from tests.round_plans import record_round_plans
 
 
 def _confs(spark) -> tuple[str, str]:
@@ -70,6 +73,7 @@ def _cc(edges, tune):
 )
 def test_loop_runs_under_decided_confs(spark, monkeypatch, run, hook, tune):
     session = _confs(spark)
+    rounds = record_round_plans(monkeypatch, spark)
     seen: list[tuple[str, str]] = []
     original = getattr(VertexLoop, hook)
 
@@ -83,6 +87,7 @@ def test_loop_runs_under_decided_confs(spark, monkeypatch, run, hook, tune):
     expected = ("false", "4") if tune else session
     assert set(seen) == {expected}
     assert _confs(spark) == session
+    assert [f["wide"] for f in rounds if f["wide"]] == []
 
 
 @pytest.mark.parametrize(

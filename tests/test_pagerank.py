@@ -127,6 +127,7 @@ class TestProperties:
         )
         assert res.iterations == 0
         assert res.ranks.count() == 0
+        assert res.strategy == "broadcast"
 
     def test_self_loop_only(self, spark):
         _assert_matches_oracle(spark, [(1, 1), (1, 2)])
@@ -202,12 +203,20 @@ class TestProperties:
             # of the session: put the prior setting (none) back.
             getattr(sc._jsc.sc(), "checkpointDir_$eq")(prior)
 
-    def test_shuffle_strategy_same_result(self, spark):
+    def test_shuffle_strategy_same_result(self, spark, monkeypatch):
+        # Limit 0 pushes the same graph across the one cut: the shuffled
+        # state join must give the broadcast join's ranks.
+        from pagerank_spark.graph import loop as loop_module
+
         edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (5, 1)]
-        a = _ranks_dict(pagerank(_edges_df(spark, edges), strategy="broadcast"))
-        b = _ranks_dict(pagerank(_edges_df(spark, edges), strategy="shuffle"))
-        for node, rank in a.items():
-            assert b[node] == pytest.approx(rank, abs=1e-12)
+        a = pagerank(_edges_df(spark, edges))
+        monkeypatch.setattr(loop_module, "BROADCAST_STATE_ROW_LIMIT", 0)
+        b = pagerank(_edges_df(spark, edges))
+        assert (a.strategy, b.strategy) == ("broadcast", "shuffle")
+        a_d, b_d = _ranks_dict(a), _ranks_dict(b)
+        for node, rank in a_d.items():
+            assert b_d[node] == pytest.approx(rank, abs=1e-12)
+        Pins().release(a.ranks, b.ranks)
 
 
 class TestCompareTeleports:
@@ -270,22 +279,92 @@ class TestWarmStart:
         Pins().release(warm.ranks)
 
 
-def test_auto_strategy_tiers(spark):
-    # Tiny graphs run the co-partitioned shuffle loop (broadcast's
-    # per-iteration driver collect costs more than the rank exchange);
-    # forcing a tiny broadcast_vertex_limit pushes the same graph to
-    # shuffle via the big-graph tier too.
-    edges = [(i, (i * 7) % 50) for i in range(200)]
-    res = pagerank(_edges_df(spark, edges), delta=0.0, max_iterations=2)
-    assert res.strategy == "shuffle"
-    res2 = pagerank(
-        _edges_df(spark, edges),
-        delta=0.0,
-        max_iterations=2,
-        strategy="broadcast",
+def _pagerank_run(e):
+    res = pagerank(e, delta=0.0, max_iterations=3)
+    return res.ranks, res.strategy
+
+
+def _katz_run(e):
+    from pagerank_spark.graph.pagerank import katz_centrality
+
+    return katz_centrality(e, iterations=3, mode="loop"), None
+
+
+def _hits_run(e):
+    from pagerank_spark.graph.pagerank import hits
+
+    return hits(e, iterations=3), None
+
+
+def _cc_run(e):
+    from pagerank_spark.graph.components import connected_components
+
+    return connected_components(e, algorithm="label"), None
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_pagerank_run, _katz_run, _hits_run, _cc_run],
+    ids=["pagerank", "katz", "hits", "cc"],
+)
+def test_state_join_plans_follow_the_cut(spark, monkeypatch, run):
+    # Every round plans the join ``state_side`` names, on both sides of
+    # the one cut (``loop.BROADCAST_STATE_ROW_LIMIT``): below it the
+    # state is the broadcast build side and the edge cache never rides
+    # a broadcast; at limit 0 the state is a shuffled-hash build side
+    # and nothing is hash-broadcast (HITS's one-row normalization
+    # scalars still ride a broadcast cross join). Both plans compute
+    # the same values.
+    from pagerank_spark.graph import loop as loop_module
+    from tests.round_plans import record_round_plans
+
+    edges = _edges_df(
+        spark,
+        [(i, (i * 7 + 3) % 40) for i in range(40)]
+        + [(i, (i * 3 + 1) % 40) for i in range(0, 40, 3)]
+        + [(50, 51), (51, 52)],
     )
-    assert res2.strategy == "broadcast"
-    # The two tiers agree value-for-value (9dp — summation order).
+    rounds = record_round_plans(monkeypatch, spark)
+    values = {}
+    for strategy, limit in (
+        ("broadcast", loop_module.BROADCAST_STATE_ROW_LIMIT),
+        ("shuffle", 0),
+    ):
+        monkeypatch.setattr(loop_module, "BROADCAST_STATE_ROW_LIMIT", limit)
+        rounds.clear()
+        out, reported = run(edges)
+        values[strategy] = {r[0]: tuple(r[1:]) for r in out.collect()}
+        Pins().release(out)
+        assert rounds
+        for facts in rounds:
+            assert not facts["edge_broadcast"], (strategy, facts)
+            if strategy == "broadcast":
+                assert "BroadcastHashJoin" in facts["joins"], facts
+                assert facts["state_broadcast"], facts
+            else:
+                assert "ShuffledHashJoin" in facts["joins"], facts
+                assert "BroadcastHashJoin" not in facts["joins"], facts
+                assert not facts["state_broadcast"], facts
+        assert reported in (None, strategy)
+    a, b = values["broadcast"], values["shuffle"]
+    assert a.keys() == b.keys()
+    for node, row in a.items():
+        assert b[node] == pytest.approx(row, abs=1e-12), node
+
+
+def test_auto_strategy_tiers(spark, monkeypatch):
+    # One cut on the vertex count: a graph at or below
+    # ``BROADCAST_STATE_ROW_LIMIT`` takes the broadcast branch, one
+    # vertex above it the shuffle branch, and both agree (9dp).
+    from pagerank_spark.graph import loop as loop_module
+
+    edges = [(i, (i * 7) % 50) for i in range(200)]  # 200 vertices
+    monkeypatch.setattr(loop_module, "BROADCAST_STATE_ROW_LIMIT", 200)
+    res = pagerank(_edges_df(spark, edges), delta=0.0, max_iterations=2)
+    assert res.strategy == "broadcast"
+    monkeypatch.setattr(loop_module, "BROADCAST_STATE_ROW_LIMIT", 199)
+    res2 = pagerank(_edges_df(spark, edges), delta=0.0, max_iterations=2)
+    assert res2.strategy == "shuffle"
     a = {r["node"]: round(r["rank"], 9) for r in res.ranks.collect()}
     b = {r["node"]: round(r["rank"], 9) for r in res2.ranks.collect()}
     assert a == b
