@@ -251,11 +251,7 @@ def q15_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine loop, hash-checked against a pure-SQL twin of the same algebra
     (analytic dangling-mass correction included)."""
     res = pagerank(
-        _edges(spark, sf_dir),
-        beta=0.85,
-        delta=0.0,
-        max_iterations=2,
-        tune_aqe=False,
+        _edges(spark, sf_dir), beta=0.85, delta=0.0, max_iterations=2
     )
     out = res.ranks.select("node", F.round("rank", 9).alias("rank"))
     return out
@@ -627,7 +623,6 @@ def q33_compare_teleports(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=20,
         delta=0.0,
         max_iterations=2,
-        tune_aqe=False,
     )
     return out.select(
         F.col("position").cast("long").alias("position"),
@@ -2012,16 +2007,9 @@ def q106_warmstart_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-step SQL power-iteration expansion; ``warm_iters`` ASSERTS the
     warm loop executed exactly 1 iteration (the oracle pins it to 1)."""
     e = _edges(spark, sf_dir)
-    cold = pagerank(
-        e, beta=0.85, delta=0.0, max_iterations=2, tune_aqe=False
-    )
+    cold = pagerank(e, beta=0.85, delta=0.0, max_iterations=2)
     warm = pagerank(
-        e,
-        beta=0.85,
-        delta=0.0,
-        max_iterations=1,
-        init_ranks=cold.ranks,
-        tune_aqe=False,
+        e, beta=0.85, delta=0.0, max_iterations=1, init_ranks=cold.ranks
     )
     return warm.ranks.select(
         "node",
@@ -6078,7 +6066,7 @@ def q269_ppl_quality_bands(
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full PageRank (β=0.85, δ=1e-5) on the sf0.001 derived
     edge graph, top-100 (page, score)."""
-    res = pagerank(_edges(spark, "/root/testdata/sf0.001"), tune_aqe=False)
+    res = pagerank(_edges(spark, "/root/testdata/sf0.001"))
     return top_k(res.ranks, 100)
 
 

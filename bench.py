@@ -417,7 +417,7 @@ def main() -> None:
     # same rationale).
     for _ in range(max(passes, 1)):
         t0 = time.perf_counter()
-        res = pagerank(entry_mod._edges(spark, SF_DIR), tune_aqe=True)
+        res = pagerank(entry_mod._edges(spark, SF_DIR))
         top = top_k(res.ranks, 100).collect()
         elapsed = round(time.perf_counter() - t0, 3)
         timings["pagerank_full"] = min(

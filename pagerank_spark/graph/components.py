@@ -106,7 +106,6 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     checkpoint_every: int = 1,
-    tune: bool = True,
     algorithm: str = "auto",
 ) -> DataFrame:
     """Undirected connected components: (node, component) where
@@ -144,27 +143,27 @@ def connected_components(
 
     Small-graph loops run under ``loop_conf`` (AQE off,
     right-sized shuffle) — the same measured tuning the PageRank loop
-    applies; a no-op above ``SMALL_LOOP_EDGE_LIMIT`` edges. Pass
-    ``tune=False`` (mirroring ``pagerank(tune_aqe=False)``) in sessions
-    shared with concurrent queries: the tuning flips session-global
-    confs for the duration of the loop.
+    applies; a no-op above ``SMALL_LOOP_EDGE_LIMIT`` edges.
     """
     if algorithm not in ("auto", "label", "star"):
         raise ValueError(f"unknown algorithm: {algorithm!r}")
-    spark = edges.sparkSession
     approx = 2 * edges.count()
-    with loop_conf(spark, approx, enabled=tune):
+    with loop_conf(approx, edges) as (scope, edges):
         if algorithm == "auto":
             budget = min(LABEL_FALLBACK_ROUNDS, max_iterations)
             try:
-                return _cc_rounds(edges, budget, checkpoint_every, approx)
+                return scope.out(
+                    _cc_rounds(edges, budget, checkpoint_every, approx)
+                )
             except RuntimeError:
                 # label budget exhausted: high-diameter component —
                 # restart with the diameter-independent contraction
-                return _star_rounds(edges, max_iterations, approx)
+                return scope.out(_star_rounds(edges, max_iterations, approx))
         if algorithm == "star":
-            return _star_rounds(edges, max_iterations, approx)
-        return _cc_rounds(edges, max_iterations, checkpoint_every, approx)
+            return scope.out(_star_rounds(edges, max_iterations, approx))
+        return scope.out(
+            _cc_rounds(edges, max_iterations, checkpoint_every, approx)
+        )
 
 
 def _star_rounds(
@@ -357,7 +356,6 @@ def shortest_paths(
     sources: DataFrame,
     max_iterations: int = 30,
     checkpoint_every: int = 1,
-    tune: bool = True,
 ) -> DataFrame:
     """Directed BFS hop distances from a source set: (node, dist) for
     every node reachable within ``max_iterations`` hops.
@@ -372,18 +370,14 @@ def shortest_paths(
     ``dst``, one anti join against the reached set. The reached set's
     union lineage is checkpoint-truncated on the same cadence as the
     other iterative loops. Small graphs run under
-    ``loop_conf`` (AQE off, right-sized shuffle);
-    ``tune=False`` opts out for shared sessions.
+    ``loop_conf`` (AQE off, right-sized shuffle).
     """
-    spark = edges.sparkSession
     ec = edges.count()
-    with loop_conf(spark, ec, enabled=tune):
-        return _sp_rounds(
-            edges,
-            sources,
-            max_iterations,
-            checkpoint_every,
-            rows=2 * ec,
+    with loop_conf(ec, edges, sources) as (scope, edges, sources):
+        return scope.out(
+            _sp_rounds(
+                edges, sources, max_iterations, checkpoint_every, rows=2 * ec
+            )
         )
 
 
@@ -449,7 +443,6 @@ def multi_source_shortest_paths(
     seeds: DataFrame,
     max_iterations: int = 30,
     checkpoint_every: int = 1,
-    tune: bool = True,
 ) -> DataFrame:
     """Labeled multi-source BFS: hop distances from EVERY seed
     independently — ``(seed, node, dist)`` for each (seed, node) pair
@@ -466,16 +459,14 @@ def multi_source_shortest_paths(
     is |seeds| × reached-nodes — the broadcast-vs-shuffle cut
     accounts for the multiplier.
     """
-    spark = edges.sparkSession
     ec = edges.count()
     n_seeds = max(1, seeds.select("node").distinct().count())
-    with loop_conf(spark, ec, enabled=tune):
-        return _multi_sp_rounds(
-            edges,
-            seeds,
-            max_iterations,
-            checkpoint_every,
-            rows=2 * ec * n_seeds,
+    with loop_conf(ec, edges, seeds) as (scope, edges, seeds):
+        return scope.out(
+            _multi_sp_rounds(
+                edges, seeds, max_iterations, checkpoint_every,
+                rows=2 * ec * n_seeds,
+            )
         )
 
 
@@ -549,7 +540,6 @@ def harmonic_centrality(
     edges: DataFrame,
     seeds: DataFrame,
     max_iterations: int = 30,
-    tune: bool = True,
 ) -> DataFrame:
     """Out-harmonic centrality of each seed over the directed graph:
     ``C(s) = Σ_{v ≠ s reachable} 1 / d(s, v)`` — well-defined on
@@ -559,7 +549,7 @@ def harmonic_centrality(
     landmark sample for the standard approximate all-nodes variant.
     """
     d = multi_source_shortest_paths(
-        edges, seeds, max_iterations=max_iterations, tune=tune
+        edges, seeds, max_iterations=max_iterations
     )
     return (
         d.where(F.col("dist") > 0)
@@ -573,9 +563,7 @@ def harmonic_centrality(
     )
 
 
-def label_propagation(
-    edges: DataFrame, n_iterations: int = 2, tune: bool = True
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iterations: int = 2) -> DataFrame:
     """Synchronous label propagation (community detection): (node, label).
 
     Extension tier — the reference has no community detection; this is
@@ -593,17 +581,11 @@ def label_propagation(
     distinct neighbor-label count, never global). Lineage is truncated
     like the other iterative loops; the final labels are
     materialized (eager localCheckpoint) INSIDE the tuning context so
-    the loop actually executes under the tuned confs. ``tune=False``
-    opts out for shared sessions.
+    the loop actually executes under the tuned confs.
     """
-    spark = edges.sparkSession
     approx = 2 * edges.count()
-    with loop_conf(spark, approx, enabled=tune):
-        return _label_prop_rounds(
-            edges,
-            n_iterations,
-            rows=approx,
-        )
+    with loop_conf(approx, edges) as (scope, edges):
+        return scope.out(_label_prop_rounds(edges, n_iterations, rows=approx))
 
 
 def _label_prop_rounds(
@@ -705,7 +687,6 @@ def weighted_shortest_paths(
     weight_col: str = "w",
     max_iterations: int = 20,
     checkpoint_every: int = 1,
-    tune: bool = True,
 ) -> DataFrame:
     """Frontier Bellman-Ford: minimum-cost distances from a source set
     over positively weighted directed edges — (node, dist).
@@ -719,19 +700,15 @@ def weighted_shortest_paths(
     the round it improved). Per round: one shuffle join on ``src``
     sized by the frontier, one partial-combined min-agg on ``dst``, one
     join against the distance table to keep strict improvements.
-    Small graphs run under ``loop_conf``; ``tune=False``
-    opts out for shared sessions.
+    Small graphs run under ``loop_conf``.
     """
-    spark = edges.sparkSession
     ec = edges.count()
-    with loop_conf(spark, ec, enabled=tune):
-        return _weighted_sp_rounds(
-            edges,
-            sources,
-            weight_col,
-            max_iterations,
-            checkpoint_every,
-            rows=2 * ec,
+    with loop_conf(ec, edges, sources) as (scope, edges, sources):
+        return scope.out(
+            _weighted_sp_rounds(
+                edges, sources, weight_col, max_iterations,
+                checkpoint_every, rows=2 * ec,
+            )
         )
 
 
@@ -1031,7 +1008,6 @@ def strongly_connected_components(
     edges: DataFrame,
     max_rounds: int = 60,
     max_label_iterations: int = 30,
-    tune: bool = True,
 ) -> DataFrame:
     """Strongly connected components by forward/backward min-pivot
     peeling: (node, component) with component = min node id in the SCC.
@@ -1045,17 +1021,12 @@ def strongly_connected_components(
     (Fleischer et al.'s divide-and-conquer reachability idea) driven by
     label propagation instead of recursion — every step is a shuffle
     join + partial-agg, nothing driver-side but the scalar change
-    counts. ``tune=False`` opts out of the session-conf tuning for
-    shared sessions.
+    counts.
     """
-    spark = edges.sparkSession
     ec = edges.count()
-    with loop_conf(spark, ec, enabled=tune):
-        return _scc_rounds(
-            edges,
-            max_rounds,
-            max_label_iterations,
-            rows=2 * ec,
+    with loop_conf(ec, edges) as (scope, edges):
+        return scope.out(
+            _scc_rounds(edges, max_rounds, max_label_iterations, rows=2 * ec)
         )
 
 
@@ -1308,7 +1279,6 @@ def betweenness_centrality(
     seeds: DataFrame,
     max_iterations: int = 30,
     checkpoint_every: int = 1,
-    tune: bool = True,
     scaled: bool = True,
 ) -> DataFrame:
     """Approximate betweenness centrality: sampled Brandes over the
@@ -1351,18 +1321,14 @@ def betweenness_centrality(
     No global windows, no collects beyond one scalar per round plus
     the max-depth scalar between phases.
     """
-    spark = edges.sparkSession
     ec = edges.count()
     n_seeds = max(1, seeds.select("node").distinct().count())
-    with loop_conf(spark, ec, enabled=tune):
-        return _betweenness_rounds(
-            edges,
-            seeds,
-            max_iterations,
-            checkpoint_every,
-            rows=2 * ec * n_seeds,
-            n_seeds=n_seeds,
-            scaled=scaled,
+    with loop_conf(ec, edges, seeds) as (scope, edges, seeds):
+        return scope.out(
+            _betweenness_rounds(
+                edges, seeds, max_iterations, checkpoint_every,
+                rows=2 * ec * n_seeds, n_seeds=n_seeds, scaled=scaled,
+            )
         )
 
 

@@ -81,7 +81,6 @@ def svd_topk(
     col_col: str = "context",
     value_col: str = "ppmi",
     round_dp: int = 9,
-    tune: bool = True,
 ) -> tuple[DataFrame, list[float]]:
     """Top-``rank`` right singular vectors of the sparse ``matrix``
     relation by projection-deflated power iteration on ``MᵀM``.
@@ -110,8 +109,8 @@ def svd_topk(
 
     Only ``rank`` scalars are collected; all vectors stay distributed.
 
-    ``tune`` runs the iteration under the engine's shared small-loop
-    conf (``loop_conf``): below the 64M-row cut the
+    The iteration runs under the engine's shared small-loop conf
+    (``loop_conf``): below the 64M-row cut the
     matvec/projection shuffles are sized to nnz(M) and AQE is
     disabled — the per-round relations are nnz- and vocab-sized, so
     default session partitioning pays pure scheduler overhead per
@@ -136,7 +135,6 @@ def svd_topk(
     )
     from pagerank_spark.graph.loop import Pins, loop_conf
 
-    spark = matrix.sparkSession
     with Pins() as pins:
         if _prepared:
             m = matrix
@@ -156,28 +154,14 @@ def svd_topk(
                 )
             )
 
-        def big_matvec(v: DataFrame) -> DataFrame:
-            """y = Mᵀ(M v): two sparse joins, two partial-combined aggs."""
-            t = (
-                m.join(v.select(F.col("node").alias("c"), "x"), on="c")
-                .groupBy("r")
-                .agg(F.sum(F.col("w") * F.col("x")).alias("t"))
-            )
-            return (
-                m.join(t, on="r")
-                .groupBy("c")
-                .agg(F.sum(F.col("w") * F.col("t")).alias("y"))
-                .select(F.col("c").alias("node"), "y")
-            )
-
         nnz = m.count()  # materialize the pin before the loop reuses it
         nctx = m.select("c").distinct().count()
         if nctx == 0:
             raise ValueError("svd_topk: matrix has no positive entries")
         init = 1.0 / math.sqrt(float(nctx))
-        with loop_conf(spark, nnz, enabled=tune):
+        with loop_conf(nnz, m) as (scope, m):
             comps = _svd_loop(
-                pins, m, rank, iterations, init, round_dp, big_matvec,
+                pins, m, rank, iterations, init, round_dp,
                 delta=delta, iterations_out=iterations_out,
             )
         out = None
@@ -189,11 +173,29 @@ def svd_topk(
         # lazy persist: every component is checkpoint-rooted (no
         # lineage into the m pin), so materialization can ride the
         # caller's first action instead of a dedicated count job
-        return pins.keep(pins.persist(out)), [lam for _, lam in comps]
+        return (
+            pins.keep(pins.persist(scope.out(out))),
+            [lam for _, lam in comps],
+        )
+
+
+def _big_matvec(m: DataFrame, v: DataFrame) -> DataFrame:
+    """y = Mᵀ(M v): two sparse joins, two partial-combined aggs."""
+    t = (
+        m.join(v.select(F.col("node").alias("c"), "x"), on="c")
+        .groupBy("r")
+        .agg(F.sum(F.col("w") * F.col("x")).alias("t"))
+    )
+    return (
+        m.join(t, on="r")
+        .groupBy("c")
+        .agg(F.sum(F.col("w") * F.col("t")).alias("y"))
+        .select(F.col("c").alias("node"), "y")
+    )
 
 
 def _svd_loop(
-    pins, m, rank, iterations, init, round_dp, big_matvec,
+    pins, m, rank, iterations, init, round_dp,
     delta=None, iterations_out=None,
 ):
     """The component loop proper — runs under svd_topk's loop conf.
@@ -238,7 +240,7 @@ def _svd_loop(
             # Lazy (r15): it deleted the dedicated checkpoint job each
             # iteration paid (~0.2 s/job driver floor × rank ×
             # iterations).
-            yc = pins.truncate(big_matvec(v))
+            yc = pins.truncate(_big_matvec(m, v))
             if factors_u is not None:
                 # all k dots in ONE pass over the cached y
                 # (classical GS)
@@ -351,7 +353,6 @@ def ppmi_svd_embeddings(
     col_col: str = "context",
     value_col: str = "ppmi",
     round_dp: int = 9,
-    tune: bool = True,
 ) -> DataFrame:
     """Train node embeddings from a PPMI relation: factorize with
     :func:`svd_topk`, then emit the Levy–Goldberg ``U·Σ^½`` rows as a
@@ -412,7 +413,6 @@ def ppmi_svd_embeddings(
             col_col="c",
             value_col="w",
             round_dp=round_dp,
-            tune=tune,
         )
         pins.adopt(v)
         out = None
@@ -531,7 +531,6 @@ def sgns_train(
     lr: float | None = None,
     neg_k: int = 2,
     round_dp: int = 9,
-    tune: bool = True,
     init: tuple[DataFrame, DataFrame] | None = None,
 ) -> SgnsResult:
     """Skip-gram with negative sampling — the LEARNED counterpart to
@@ -666,7 +665,6 @@ def sgns_train(
             )
         )
 
-        spark = pairs.sparkSession
         n_ex = ex.count()  # materialize the pin
         # the example relation is a leaf now: the pair pin's last
         # reader has run
@@ -676,7 +674,7 @@ def sgns_train(
         mass = float(ex.agg(F.sum("m")).collect()[0][0])
         if lr is None:
             lr = 0.1 * mass  # O(1) steps against the mean loss
-        with loop_conf(spark, n_ex * dim, enabled=tune):
+        with loop_conf(n_ex * dim, ex, *(init or ())) as (scope, ex, *init):
 
             def _start_plan(
                 nodes: DataFrame, tag: str, prior
@@ -695,7 +693,7 @@ def sgns_train(
                     ).unionByName(start)
                 return start
 
-            iu, iv = init if init is not None else (None, None)
+            iu, iv = init or (None, None)
             # r14 optimization: U and V ride ONE side-tagged state
             # relation, so each round pays a single update-checkpoint
             # job (and init a single one) instead of two — the joins
@@ -837,5 +835,6 @@ def sgns_train(
         # the returned u and v read the final state: the caller's
         pins.keep(state)
         return SgnsResult(
-            u=u, v=v, rounds=rounds, example_mass=mass, lr=lr
+            u=scope.out(u), v=scope.out(v), rounds=rounds,
+            example_mass=mass, lr=lr,
         )

@@ -6,8 +6,7 @@ Each idiom lives here once, so a fix lands once:
 - ``VertexLoop``: a ``Pins`` that also runs the per-round cadence of
   the message-passing vertex loops;
 - ``loop_conf``: the small-loop conf scope (AQE off, loop-sized
-  ``spark.sql.shuffle.partitions``, both restored on exit) and the
-  measurements behind it;
+  ``spark.sql.shuffle.partitions``) and the measurements behind it;
 - ``plan_size_bytes``: Catalyst's size estimate of a plan, read
   without running a job;
 - ``state_side``: the state side of a loop's per-round join,
@@ -42,6 +41,13 @@ pinned until both the Python and the JVM frame are garbage-collected.
 Generations are tracked BEFORE the action that materializes them, so a
 failed job cannot strand a fresh pin outside the owner.
 
+A loop's confs go on a session of its own, never on the caller's:
+``loop_conf`` decides them and sets them on a clone of the caller's
+session (``conf_session``, the package's one writer of a session
+conf). The operator's input frames move onto the clone on the way in
+and the frame it returns moves back on the way out (``rehome``), so
+the caller's session stays as the caller left it while the loop runs.
+
 Eager or lazy checkpoint, the one rule: LAZY when the next reader is
 one sequential action (the checkpoint then materializes inside it, with
 no job of its own); EAGER when several plan branches read the pin,
@@ -51,9 +57,12 @@ materializes it before the pins it reads are released.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
+from dataclasses import dataclass
 
+from pyspark.rdd import RDD
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -75,27 +84,53 @@ LOOP_PARTS_FLOOR = 4
 # rebroadcast dominating; ``scale_probe.py`` reproduces the 3M point).
 BROADCAST_STATE_ROW_LIMIT = 2_000_000
 
+_TO_DF_LOCK = threading.Lock()
+
+
+@dataclass(frozen=True)
+class LoopScope:
+    """The session a ``loop_conf`` scope runs on (``spark``: the
+    caller's own, or a clone carrying the loop's confs) and the
+    partition count its exchanges should use."""
+
+    caller: SparkSession
+    spark: SparkSession
+    parts: int
+
+    def out(self, df: DataFrame) -> DataFrame:
+        """``df`` on the caller's session: the frame an operator
+        returns."""
+        return rehome(df, self.caller)
+
 
 @contextmanager
 def loop_conf(
-    spark: SparkSession,
     size: int | None,
-    *,
-    enabled: bool = True,
+    *frames: DataFrame,
     limit: int = SMALL_LOOP_EDGE_LIMIT,
     per_part: int = LOOP_ROWS_PER_PARTITION,
-) -> Iterator[int]:
+) -> Iterator[tuple]:
     """Run a small iterative job with AQE off and the shuffle sized to
-    it; yield the partition count its exchanges should use.
+    it, on a session of its own: yields ``(scope, *frames)``, a
+    ``LoopScope`` and the operator's input ``frames`` moved onto
+    ``scope.spark``. The first frame's session is the caller's.
 
-    When ``enabled`` and ``size`` (rows, or bytes with a byte
-    ``per_part``) is at most ``limit``, sets
-    ``spark.sql.adaptive.enabled=false`` and
-    ``spark.sql.shuffle.partitions`` to ``max(LOOP_PARTS_FLOOR,
-    min(session, ceil(size / per_part)))`` and restores both in
-    ``finally``, so a failed job cannot leave the session tuned.
-    Otherwise (disabled, unknown size, or above the limit) it touches
-    nothing and yields the session's own partition count.
+    When ``size`` (rows, or bytes with a byte ``per_part``) is at most
+    ``limit``, ``scope.spark`` is a clone of the caller's session
+    (``conf_session``) with ``spark.sql.adaptive.enabled=false`` and
+    ``spark.sql.shuffle.partitions`` at ``max(LOOP_PARTS_FLOOR,
+    min(caller's, ceil(size / per_part)))``, which ``scope.parts``
+    yields. Otherwise (unknown size, above the limit, or no clone
+    bridge) ``scope.spark`` is the caller's session at its own
+    partition count, and only frames of another session move.
+
+    The caller's session is never written, so a query planned on it
+    while the loop runs keeps its own confs. The rule inside the
+    scope: every frame a loop reads comes from ``scope.spark``, either
+    moved in as one of ``frames`` or built there
+    (``scope.spark.range``, ``local_relation(scope.spark, ...)``); a
+    join plans under the confs of its left side's session, whatever
+    the right side's. The operator returns ``scope.out(result)``.
 
     Why, measured on the PageRank loop over WikiData (7k vertices):
 
@@ -114,26 +149,62 @@ def loop_conf(
       op medians of 6 interleaved rounds): tuned 3.24 s, AQE on with
       4 partitions 3.95 s, AQE off with 32 partitions 6.54 s, untuned
       6.61 s — the partition count, not AQE, carries most of the win.
-
-    These are session-global flips: safe for a dedicated job session,
-    not for one shared with concurrent queries: operators with a
-    ``tune``/``tune_aqe`` flag pass it as ``enabled``.
     """
-    parts_before = spark.conf.get(PARTS_KEY)
-    if not enabled or size is None or size > limit:
-        yield int(parts_before)
-        return
-    aqe_before = spark.conf.get(AQE_KEY)
-    parts = max(
-        LOOP_PARTS_FLOOR, min(int(parts_before), -(-size // per_part))
+    spark = frames[0].sparkSession
+    scope = LoopScope(spark, spark, int(spark.conf.get(PARTS_KEY)))
+    if size is not None and size <= limit:
+        parts = max(LOOP_PARTS_FLOOR, min(scope.parts, -(-size // per_part)))
+        try:
+            clone = conf_session(
+                spark, {AQE_KEY: "false", PARTS_KEY: str(parts)}
+            )
+            frames = tuple(rehome(df, clone) for df in frames)
+            scope = LoopScope(spark, clone, parts)
+        except Exception:  # no clone bridge (Spark Connect, API drift)
+            pass
+    yield (scope, *(rehome(df, scope.spark) for df in frames))
+
+
+def conf_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with ``confs`` set on it: the one writer of
+    a session conf in the package, and it writes only sessions it made.
+
+    ``cloneSession`` keeps the caller's runtime confs (``newSession``
+    drops them), temp views and UDFs, and shares its cache and
+    SparkContext. Raises where the bridge is unavailable (Spark
+    Connect, API drift).
+    """
+    # the wrapper's constructor rebinds ``RDD.toDF`` to the new session;
+    # the lock keeps concurrent clones from restoring each other's
+    with _TO_DF_LOCK:
+        to_df = RDD.toDF
+        clone = SparkSession(
+            spark.sparkContext, spark._jsparkSession.cloneSession()
+        )
+        RDD.toDF = to_df
+    for key, value in confs.items():
+        clone.conf.set(key, value)
+    return clone
+
+
+def rehome(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of ``spark``, planned and run under
+    ``spark``'s confs (``df`` itself when it is one already). The plan
+    moves as analyzed, so a checkpoint-rooted frame stays rooted in its
+    ``LogicalRDD`` and a persisted one still reads its cache; the
+    checkpoints a release of ``df`` frees move with it."""
+    if df.sparkSession is spark:
+        return df
+    out = DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, df._jdf.logicalPlan()
+        ),
+        spark,
     )
-    spark.conf.set(AQE_KEY, "false")
-    spark.conf.set(PARTS_KEY, str(parts))
-    try:
-        yield parts
-    finally:
-        spark.conf.set(AQE_KEY, aqe_before)
-        spark.conf.set(PARTS_KEY, parts_before)
+    for attr in ("_pagerank_spark_reads", "_pagerank_spark_ckpt_jrdd"):
+        if hasattr(df, attr):
+            setattr(out, attr, getattr(df, attr))
+    return out
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -165,8 +236,8 @@ def state_side(df: DataFrame, rows: int, *keys: str) -> DataFrame:
     the edge side never moves. Without the hint, Catalyst sizes a
     checkpointed state by its origin stats and can broadcast the
     EDGES instead, every round. Shuffle: the state is co-partitioned
-    on ``keys`` at the session's shuffle partitions (the loop's,
-    inside ``loop_conf``), aligned with an edge cache partitioned the
+    on ``keys`` at the session's shuffle partitions (the loop's, on
+    a ``loop_conf`` session), aligned with an edge cache partitioned the
     same way, and hinted as the shuffled-hash build side; an unhinted
     repartition still lets Catalyst plan a broadcast over it.
     """

@@ -97,6 +97,7 @@ from pagerank_spark.graph.loop import (
     VertexLoop,
     loop_conf,
     plan_size_bytes,
+    rehome,
     state_side,
     state_strategy,
 )
@@ -169,7 +170,6 @@ def pagerank(
     checkpoint_every: int | None = None,
     edge_semantics: str = "bag",
     reliable_checkpoint: bool | str = "auto",
-    tune_aqe: bool = True,
     init_ranks: DataFrame | None = None,
 ) -> PageRankResult:
     """Power iteration with dangling-mass renormalization (G1-G4).
@@ -228,32 +228,30 @@ def pagerank(
     with VertexLoop(
         checkpoint_every=checkpoint_every, reliable=reliable_checkpoint
     ) as loop:
-        # Two small-loop conf scopes (``loop_conf``; tune_aqe=False opts
-        # out in a session shared with concurrent queries). The vertex
-        # count isn't known before setup, so the setup scope is gated on
+        # Two small-loop conf scopes (``loop_conf``). The vertex count
+        # isn't known before setup, so the setup scope is gated on
         # Catalyst's size estimate of the edge plan (no job); the loop
         # scope is then decided from the exact vertex count, so a
         # big-vertex graph loops with AQE's skew handling even when the
         # estimate was small.
         with loop_conf(
-            spark,
-            plan_size_bytes(edges) if tune_aqe else None,
-            enabled=tune_aqe,
+            plan_size_bytes(edges),
+            edges,
             limit=SETUP_TUNE_SIZE_BYTES,
             per_part=SETUP_BYTES_PER_PARTITION,
-        ):
-            deg, state, counts = _setup(edges, edge_semantics, loop)
+        ) as (setup, setup_edges):
+            deg, state, counts = _setup(setup_edges, edge_semantics, loop)
         n = counts["n"]
         strategy = state_strategy(n)
         if n == 0:
             empty = state.withColumn("rank", F.lit(0.0)).select(
                 "node", "rank"
             )
-            return PageRankResult(empty, 0, [], strategy)
+            return PageRankResult(setup.out(empty), 0, [], strategy)
 
         with loop_conf(
-            spark, n, enabled=tune_aqe, limit=PAGERANK_TUNE_VERTEX_LIMIT
-        ) as loop_parts:
+            n, edges, deg, state, limit=PAGERANK_TUNE_VERTEX_LIMIT
+        ) as (scope, edges, deg, state):
             # Loop-invariant: edges decorated with the source's
             # out-degree (reference builds this once too — M_block_list
             # at pageRank.py:159). Built INSIDE the loop scope: it
@@ -268,7 +266,7 @@ def pagerank(
             edge_deg = loop.hold(
                 contributing.join(
                     deg.select("src", "deg"), on="src", how="inner"
-                ).repartition(loop_parts, "src")
+                ).repartition(scope.parts, "src")
             )
 
             if init_ranks is None:
@@ -310,7 +308,9 @@ def pagerank(
                 max_iterations=max_iterations,
             )
             final = loop.result(state.select("node", "rank"))
-            return PageRankResult(final, iterations, trajectory, strategy)
+            return PageRankResult(
+                scope.out(final), iterations, trajectory, strategy
+            )
 
 
 def _setup(
@@ -365,7 +365,9 @@ def _warm_start(
     # a generation: released at the loop's first checkpoint sweep
     warm = loop.persist(
         state.join(
-            init_ranks.select("node", F.col("rank").alias("__r0")),
+            rehome(init_ranks, state.sparkSession).select(
+                "node", F.col("rank").alias("__r0")
+            ),
             on="node",
             how="left",
         ).select(
@@ -475,7 +477,6 @@ def compare_teleports(
     betas: tuple[float, ...] = (0.80, 0.85, 0.90),
     delta: float = 1e-5,
     k: int = 100,
-    tune_aqe: bool = True,
     max_iterations: int | None = None,
 ) -> DataFrame:
     """G5 parameter sweep (reference README-only ``compare_teleports``).
@@ -498,9 +499,7 @@ def compare_teleports(
     out = None
     with Pins() as pins:
         for beta in betas:
-            res = pagerank(
-                edges, beta=beta, delta=delta, tune_aqe=tune_aqe, **kwargs
-            )
+            res = pagerank(edges, beta=beta, delta=delta, **kwargs)
             # k rows, cut from the ranks: the returned frame is read
             # after the ranks' pins are released
             t = pins.truncate(
@@ -759,7 +758,6 @@ def _hits_loop(
     movement above the cut; a memory-tight cluster can keep one layout
     and accept one edge shuffle per round.
     """
-    spark = edges.sparkSession
     e = edges.select("src", "dst")
     with VertexLoop() as loop:
         verts = loop.hold(vertices(e))
@@ -772,18 +770,22 @@ def _hits_loop(
         # coalescing re-plans every round (breaking reuse of the cached
         # edge partitioning) and the session's shuffle sizing is far
         # too wide for a small graph's vertex-sized exchanges.
-        with loop_conf(spark, n, limit=TINY_VERTEX_LIMIT) as parts:
-            e_src = loop.hold(e.repartition(parts, "src"))
-            e_dst = loop.hold(e.repartition(parts, "dst"))
+        with loop_conf(n, e, verts, limit=TINY_VERTEX_LIMIT) as (
+            scope, e, verts
+        ):
+            e_src = loop.hold(e.repartition(scope.parts, "src"))
+            e_dst = loop.hold(e.repartition(scope.parts, "dst"))
             # the initial state at the loop's width, so every round's
-            # join back to it runs at ``parts``
-            state = verts.repartition(parts, "node").select(
+            # join back to it runs at ``scope.parts``
+            state = verts.repartition(scope.parts, "node").select(
                 "node",
                 F.lit(1.0 / n).alias("hub"),
                 F.lit(1.0 / n).alias("auth"),
             )
-            return _hits_iterate(
-                loop, e_src, e_dst, state, n, max_iterations, delta
+            return scope.out(
+                _hits_iterate(
+                    loop, e_src, e_dst, state, n, max_iterations, delta
+                )
             )
 
 
@@ -974,21 +976,20 @@ def _katz_loop(
     graphs get the PageRank loop's AQE-off + vertex-sized partition
     tuning. delta=-inf → exactly ``max_iterations`` rounds, matching
     the unrolled DAG up to float summation order."""
-    spark = edges.sparkSession
     base = edges.select("src", "dst")
     with VertexLoop() as loop:
         verts = loop.hold(vertices(base))
         n = verts.count()
         # an empty graph runs untuned
-        with loop_conf(
-            spark, n, enabled=n > 0, limit=TINY_VERTEX_LIMIT
-        ) as parts:
-            e = loop.hold(base.repartition(parts, "src"))
+        with loop_conf(n or None, base, verts, limit=TINY_VERTEX_LIMIT) as (
+            scope, base, verts
+        ):
+            e = loop.hold(base.repartition(scope.parts, "src"))
             state, _, _ = _iterate(
                 loop,
                 e,
                 # at the loop's width, like HITS's initial state
-                verts.repartition(parts, "node").select(
+                verts.repartition(scope.parts, "node").select(
                     "node", F.lit(0.0).alias("katz")
                 ),
                 None,
@@ -1001,4 +1002,4 @@ def _katz_loop(
                 delta=delta,
                 max_iterations=max_iterations,
             )
-            return loop.result(state)
+            return scope.out(loop.result(state))

@@ -104,7 +104,6 @@ def node2vec_walks(
     steps: int = 4,
     p: float = 1.0,
     q: float = 1.0,
-    tune: bool = True,
     strict_parity: bool = False,
 ) -> DataFrame:
     """node2vec biased walks (Grover & Leskovec 2016): like
@@ -171,10 +170,9 @@ def node2vec_walks(
                 )
     from pagerank_spark.graph.loop import loop_conf
 
-    spark = edges.sparkSession
     ec = edges.count()
-    with loop_conf(spark, ec, enabled=tune):
-        return _node2vec_steps(edges, steps, p, q, 2 * ec)
+    with loop_conf(ec, edges) as (scope, edges):
+        return scope.out(_node2vec_steps(edges, steps, p, q, 2 * ec))
 
 
 def _node2vec_steps(

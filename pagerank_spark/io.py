@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from pagerank_spark.graph.loop import conf_session, rehome
+
 EDGE_SCHEMA = StructType(
     [
         StructField("src", LongType(), nullable=False),
@@ -83,26 +85,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     division would lose precision at 2^63-scale nanos).
     """
     if name == "events":
-        # The conf flip is scoped: nanosAsLong is read at ANALYSIS time
-        # (schema resolution), so forcing eager analysis inside the
-        # try/finally lets the session-global flag be restored before
-        # returning — later parquet reads in the same session see
-        # timestamps as timestamps again.
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        before = spark.conf.get(key, None)
+        # nanosAsLong is read at ANALYSIS time (schema resolution), so
+        # the read is analyzed on a clone carrying it and then moved to
+        # the caller's session, whose confs stay untouched. Without the
+        # clone bridge the read takes the caller's own setting.
         try:
-            spark.conf.set(key, "true")
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            if dict(df.dtypes).get("ts") == "bigint":
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-                )
-        finally:
-            if before is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, before)
-        return df
+            reader = conf_session(
+                spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+            )
+        except Exception:  # Spark Connect, API drift
+            reader = spark
+        df = reader.read.parquet(f"{sf_dir}/{name}.parquet")
+        if dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        return rehome(df, spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

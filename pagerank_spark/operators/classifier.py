@@ -130,16 +130,14 @@ def logreg_train(
     l2: float = 0.0,
     tol: float | None = None,
     track_loss: bool = False,
-    tune: bool = True,
 ) -> LogRegResult:
     """Full-batch logistic-regression GD over a sparse feature relation.
 
     ``features``: ``(id_col, feature_index, feature_value)`` long form
     (feature_hash / hashed_token_features output). ``labels``:
     ``(id_col, label_col)`` with labels in {0, 1} (numeric or boolean).
-    ``tune`` runs the rounds under the engine's shared small-loop conf
-    (a session-global AQE/partition flip, restored on exit) — pass
-    ``tune=False`` in sessions shared with concurrent queries.
+    The rounds run under the engine's shared small-loop conf
+    (``loop_conf``).
 
     Per round ONE action (the gradient collect) whose plan is: broadcast
     the current weights into a margin sum per doc (co-partitioned
@@ -152,7 +150,6 @@ def logreg_train(
     """
     if rounds < 1:
         raise ValueError(f"logreg_train: rounds >= 1, got {rounds}")
-    spark = features.sparkSession
     y = F.col(label_col).cast("double")
     lab = labels.select(F.col(id_col), y.alias("__y"))
 
@@ -183,7 +180,7 @@ def logreg_train(
     # of the big feature relation — the co-partitioning this pin
     # exists to establish.
     # The physical plan of a lazy checkpoint is compiled at creation,
-    # so the loop-conf flip below cannot re-shape it.
+    # so the loop conf below cannot re-shape it.
     # Run the rounds under the engine's shared small-loop conf (the
     # SVD/SGNS/node2vec discipline, a no-op above the 64M-row cut):
     # with AQE on, every tiny per-round job re-plans its stages and
@@ -199,32 +196,31 @@ def logreg_train(
         xb_ck = pins.truncate(xb)
         lab_ck = pins.truncate(lab)
         n_rows = xb_ck.count()
-        # ``tune=False`` opts shared-session callers out of the
-        # session-global AQE/partition flip (r14 ADVICE — mirrors
-        # node2vec_walks(tune=) / pagerank(tune_aqe=))
-        with loop_conf(spark, n_rows, enabled=tune) as shuffle_p:
-            xb = pins.hold(xb_ck.repartition(shuffle_p, id_col))
-            lab = pins.hold(lab_ck.repartition(shuffle_p, id_col))
+        with loop_conf(n_rows, xb_ck, lab_ck) as (scope, xb_ck, lab_ck):
+            xb = pins.hold(xb_ck.repartition(scope.parts, id_col))
+            lab = pins.hold(lab_ck.repartition(scope.parts, id_col))
             n = float(lab.count())
             xb.count()  # materialize the pin before the rounds start
             return _logreg_rounds(
-                spark, xb, lab, n,
+                scope, xb, lab, n,
                 id_col=id_col, rounds=rounds, lr=lr, l2=l2, tol=tol,
                 track_loss=track_loss,
             )
 
 
 def _logreg_rounds(
-    spark, xb, lab, n, *, id_col, rounds, lr, l2, tol, track_loss
+    scope, xb, lab, n, *, id_col, rounds, lr, l2, tol, track_loss
 ) -> LogRegResult:
     """The GD rounds proper — runs under logreg_train's loop conf;
-    pins are caller-owned."""
+    pins are caller-owned. The weights return on the caller's
+    session."""
     w: dict[int, float] = {}  # zero-init: absent index == 0.0
     losses: list[float] = []
     it = 0
     for it in range(1, rounds + 1):
         if w:
-            wdf = local_relation(spark, 
+            wdf = local_relation(
+                scope.spark,
                 [(int(k), float(v)) for k, v in w.items()],
                 "feature_index long, __w double",
             )
@@ -284,7 +280,8 @@ def _logreg_rounds(
         if tol is not None and max_step < tol:
             break
 
-    wdf = local_relation(spark,
+    wdf = local_relation(
+        scope.caller,
         sorted((int(k), float(v)) for k, v in w.items()),
         "feature_index long, weight double",
     )
@@ -349,7 +346,6 @@ def softmax_train(
     rounds: int = 20,
     lr: float = 0.5,
     track_loss: bool = False,
-    tune: bool = True,
 ) -> SoftmaxResult:
     """Full-batch SOFTMAX (multinomial) regression over a sparse
     feature relation — the multiclass extension of :func:`logreg_train`
@@ -359,8 +355,6 @@ def softmax_train(
     ``labels``: ``(id_col, label_col)`` with arbitrary (string) class
     labels; the class index is their SORTED order — deterministic, so
     a fixed-round run unrolls into SQL (the q262 oracle twin).
-    ``tune`` as in :func:`logreg_train` (``False`` for shared
-    sessions).
 
     Per round ONE action: broadcast the (K·dim)-sized weight relation
     into per-(doc, class) margin sums (co-partitioned groupBy), apply
@@ -425,29 +419,31 @@ def softmax_train(
         xb_ck = pins.truncate(xb)
         lab_ck = pins.truncate(lab)
         n_rows = xb_ck.count()
-        with loop_conf(spark, n_rows, enabled=tune) as shuffle_p:
-            xb = pins.hold(xb_ck.repartition(shuffle_p, id_col))
-            lab = pins.hold(lab_ck.repartition(shuffle_p, id_col))
+        with loop_conf(n_rows, xb_ck, lab_ck) as (scope, xb_ck, lab_ck):
+            xb = pins.hold(xb_ck.repartition(scope.parts, id_col))
+            lab = pins.hold(lab_ck.repartition(scope.parts, id_col))
             n = float(lab.count())
             xb.count()
             return _softmax_rounds(
-                spark, xb, lab, n,
+                scope, xb, lab, n,
                 id_col=id_col, rounds=rounds, lr=lr, kk=kk,
                 classes=classes, track_loss=track_loss,
             )
 
 
 def _softmax_rounds(
-    spark, xb, lab, n, *, id_col, rounds, lr, kk, classes, track_loss
+    scope, xb, lab, n, *, id_col, rounds, lr, kk, classes, track_loss
 ) -> "SoftmaxResult":
     """The GD rounds proper — runs under softmax_train's loop conf;
-    pins are caller-owned."""
+    pins are caller-owned. The weights return on the caller's
+    session."""
     w: dict[tuple[int, int], float] = {}  # (class, feature) -> w
     losses: list[float] = []
     it = 0
     for it in range(1, rounds + 1):
         if w:
-            wdf = local_relation(spark, 
+            wdf = local_relation(
+                scope.spark,
                 [
                     (int(k), int(j), float(v))
                     for (k, j), v in w.items()
@@ -518,7 +514,8 @@ def _softmax_rounds(
             new_w[key] = new_w.get(key, 0.0) - lr * row["__g"]
         w = new_w
 
-    wdf = local_relation(spark, 
+    wdf = local_relation(
+        scope.caller,
         sorted(
             (int(k), int(j), float(v)) for (k, j), v in w.items()
         ),

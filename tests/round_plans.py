@@ -3,7 +3,8 @@
 ``record_round_plans`` wraps ``VertexLoop.advance`` and
 ``VertexLoop.truncate`` (the per-round hooks: HITS truncates each
 half-step, the other loops advance) so each call records the facts of
-the plan the round is about to run, under the confs in force then.
+the plan the round is about to run, under the confs of the round's own
+session.
 An edge cache is an ``InMemoryTableScan`` leaf with both ``src`` and
 ``dst`` columns; no loop's vertex state has both.
 """
@@ -71,7 +72,7 @@ def plan_facts(plan, parts: int) -> dict:
     return facts
 
 
-def record_round_plans(monkeypatch, spark) -> list[dict]:
+def record_round_plans(monkeypatch) -> list[dict]:
     """Patch the round hooks; the returned list fills with one
     ``plan_facts`` record per hook call."""
     rounds: list[dict] = []
@@ -80,7 +81,8 @@ def record_round_plans(monkeypatch, spark) -> list[dict]:
 
         def recording(self, df, *args, _original=original, **kwargs):
             plan = df._jdf.queryExecution().executedPlan()
-            rounds.append(plan_facts(plan, int(spark.conf.get(PARTS_KEY))))
+            parts = int(df.sparkSession.conf.get(PARTS_KEY))
+            rounds.append(plan_facts(plan, parts))
             return _original(self, df, *args, **kwargs)
 
         monkeypatch.setattr(VertexLoop, hook, recording)

@@ -68,8 +68,8 @@ def _loop_confs(spark) -> tuple[str, str]:
 
 
 def _expect_failure_then_drain(spark, fn):
-    """The failed call releases its pins AND restores the session's
-    loop confs (AQE flag, shuffle partitions)."""
+    """The failed call releases its pins AND leaves the session's loop
+    confs (AQE flag, shuffle partitions) as they were."""
     baseline = _storage_entries(spark)
     confs = _loop_confs(spark)
     with pytest.raises(Exception, match="poisoned edge"):
@@ -488,18 +488,15 @@ def test_table_operator_release_is_deterministic(spark, ivf_root, name, held):
     assert _persistent_ids(spark) - base == set()
 
 
-def test_no_pin_calls_outside_loop_module():
-    """Every pin and release in the package goes through the owner in
-    graph/loop.py: no other module calls a DataFrame's
-    persist/cache/checkpoint/localCheckpoint/unpersist. Calls on an
-    owner (``pins``, ``loop``) are the owner's own methods."""
+def _calls_outside_loop_module(matches) -> list[str]:
+    """``path:line`` of every call in ``pagerank_spark/`` outside
+    graph/loop.py whose ``ast.Attribute`` callee ``matches``."""
     import ast
     import pathlib
 
     import pagerank_spark
 
     pkg = pathlib.Path(pagerank_spark.__file__).parent
-    banned = {"persist", "cache", "checkpoint", "localCheckpoint", "unpersist"}
     found = []
     for path in sorted(pkg.rglob("*.py")):
         if path.relative_to(pkg).as_posix() == "graph/loop.py":
@@ -508,25 +505,61 @@ def test_no_pin_calls_outside_loop_module():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in banned
-                and not (
-                    isinstance(node.func.value, ast.Name)
-                    and node.func.value.id in {"pins", "loop"}
-                )
+                and matches(node.func)
             ):
                 found.append(f"{path.relative_to(pkg)}:{node.lineno}")
-    assert found == []
+    return found
 
 
-def test_trainers_tune_false_matches_and_releases(spark):
-    """r15 (r14 ADVICE): tune=False skips the session-global conf flip
-    but trains identical weights; both trainers release their eager
-    feature/label checkpoints in the finally path."""
+def test_no_pin_calls_outside_loop_module():
+    """Every pin and release in the package goes through the owner in
+    graph/loop.py: no other module calls a DataFrame's
+    persist/cache/checkpoint/localCheckpoint/unpersist. Calls on an
+    owner (``pins``, ``loop``) are the owner's own methods."""
+    import ast
+
+    banned = {"persist", "cache", "checkpoint", "localCheckpoint", "unpersist"}
+    assert _calls_outside_loop_module(
+        lambda f: f.attr in banned
+        and not (isinstance(f.value, ast.Name) and f.value.id in {"pins", "loop"})
+    ) == []
+
+
+def test_no_conf_writes_outside_loop_module():
+    """No module but graph/loop.py writes a session conf: no
+    ``.conf.set(`` or ``.conf.unset(`` anywhere else in the package.
+    graph/loop.py writes only the clones it makes (``conf_session``),
+    so an operator never changes its caller's session."""
+    import ast
+
+    assert _calls_outside_loop_module(
+        lambda f: f.attr in {"set", "unset"}
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "conf"
+    ) == []
+
+
+def test_trainers_tune_false_matches_and_releases(spark, monkeypatch):
+    """The trainers leave the caller's session as it is, during the
+    call (read at every pin they take) and after it, and train the
+    same weights on a session without the clone bridge, which runs
+    them untuned; both release their eager feature/label checkpoints
+    in the finally path."""
+    from pagerank_spark.graph import loop as loop_module
+    from pagerank_spark.graph.loop import Pins
     from pagerank_spark.operators.classifier import (
         logreg_train,
         softmax_train,
     )
 
+    confs, seen = _loop_confs(spark), []
+    hold = Pins.hold
+
+    def recording(self, df):
+        seen.append(_loop_confs(spark))
+        return hold(self, df)
+
+    monkeypatch.setattr(Pins, "hold", recording)
     jsc = spark.sparkContext._jsc
     feats = spark.createDataFrame(
         [(i, int(i % 3), float((i % 5) - 2)) for i in range(30)],
@@ -535,7 +568,6 @@ def test_trainers_tune_false_matches_and_releases(spark):
     labels = spark.createDataFrame(
         [(i, int(i % 2)) for i in range(30)], "doc_id long, y int"
     )
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     base = set(jsc.getPersistentRDDs().keys())
     w_tuned = {
         (r["feature_index"],): r["weight"]
@@ -546,16 +578,20 @@ def test_trainers_tune_false_matches_and_releases(spark):
     # other tests is not this test's business)
     assert set(jsc.getPersistentRDDs().keys()) <= base
     base = set(jsc.getPersistentRDDs().keys())
+    slabels = labels.selectExpr("doc_id", "CAST(y AS STRING) AS label")
+    softmax_train(feats, slabels, rounds=2)
+    assert set(jsc.getPersistentRDDs().keys()) <= base
+
+    def no_bridge(*args):
+        raise RuntimeError("no clone bridge")
+
+    monkeypatch.setattr(loop_module, "conf_session", no_bridge)
+    base = set(jsc.getPersistentRDDs().keys())
     w_plain = {
         (r["feature_index"],): r["weight"]
-        for r in logreg_train(
-            feats, labels, rounds=3, tune=False
-        ).weights.collect()
+        for r in logreg_train(feats, labels, rounds=3).weights.collect()
     }
     assert w_tuned == w_plain
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert set(jsc.getPersistentRDDs().keys()) <= base
-    base = set(jsc.getPersistentRDDs().keys())
-    slabels = labels.selectExpr("doc_id", "CAST(y AS STRING) AS label")
-    softmax_train(feats, slabels, rounds=2, tune=False)
-    assert set(jsc.getPersistentRDDs().keys()) <= base
+    assert seen and set(seen) == {confs}
+    assert _loop_confs(spark) == confs

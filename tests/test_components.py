@@ -423,42 +423,57 @@ def test_label_propagation_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a"}
 
 
-def test_graph_apis_tune_false_same_result(spark):
-    # tune=False must skip the session-conf flips and still produce
-    # identical results; confs must be untouched afterwards.
+def test_graph_apis_tune_false_same_result(spark, monkeypatch):
+    # The graph loops leave the caller's session as it is, during the
+    # call (read from every round) and after it, and give the same
+    # result on a session without the clone bridge, which runs them
+    # untuned.
+    from pagerank_spark.graph import loop as loop_module
     from pagerank_spark.graph.components import (
         connected_components,
         label_propagation,
         shortest_paths,
     )
 
+    def confs():
+        return (
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.conf.get("spark.sql.adaptive.enabled"),
+        )
+
+    before, seen = confs(), []
+    for name in ("advance", "truncate"):
+        hook = getattr(loop_module.VertexLoop, name)
+
+        def recording(self, *args, _hook=hook, **kwargs):
+            seen.append(confs())
+            return _hook(self, *args, **kwargs)
+
+        monkeypatch.setattr(loop_module.VertexLoop, name, recording)
+
     edges = [(1, 2), (2, 3), (5, 6), (3, 1)]
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions")
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-
     cc_t = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    cc_f = {
-        r["node"]: r["component"]
-        for r in connected_components(df, tune=False).collect()
-    }
-    assert cc_t == cc_f
 
     lp_f = {
         r["node"]: r["label"]
-        for r in label_propagation(df, n_iterations=2, tune=False).collect()
+        for r in label_propagation(df, n_iterations=2).collect()
     }
     assert lp_f == _lp_oracle(edges, 2)
 
     src = spark.createDataFrame([(1,)], "node LONG")
-    sp_f = {
-        r["node"]: r["dist"]
-        for r in shortest_paths(df, src, tune=False).collect()
-    }
+    sp_f = {r["node"]: r["dist"] for r in shortest_paths(df, src).collect()}
     assert sp_f == {1: 0, 2: 1, 3: 2}
 
-    assert spark.conf.get("spark.sql.shuffle.partitions") == parts_before
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
+    def no_bridge(*args):
+        raise RuntimeError("no clone bridge")
+
+    monkeypatch.setattr(loop_module, "conf_session", no_bridge)
+    cc_f = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert cc_t == cc_f
+
+    assert seen and set(seen) == {before}
+    assert confs() == before
 
 
 def test_star_cc_matches_label_cc(spark):

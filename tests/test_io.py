@@ -204,3 +204,42 @@ def test_xml_roundtrip_with_schema(spark, tmp_path):
     assert got == want
     # inference path also reads it
     assert read_xml(spark, path, row_tag="doc").count() == 3
+
+
+def test_load_events_leaves_the_callers_nanos_conf(
+    spark, monkeypatch, tmp_path
+):
+    # An ``events.ts`` written as parquet TIMESTAMP(NANOS) is analyzed
+    # on a clone carrying nanosAsLong, so the caller's session never
+    # holds the key, during the call or after it; ``ts`` comes back as
+    # a timestamp at the file's microseconds.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameReader
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    nanos = [1_704_067_200_123_456_789, 1_704_067_201_000_000_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    seen = []
+    parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **options):
+        seen.append(spark.conf.get(key, None))
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    ev = pio.load_table(spark, str(tmp_path), "events")
+    assert seen == [None]
+    assert spark.conf.get(key, None) is None
+    assert ev.sparkSession is spark
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    got = ev.orderBy("event_id").select(F.unix_micros("ts").alias("us"))
+    assert [r["us"] for r in got.collect()] == [v // 1000 for v in nanos]

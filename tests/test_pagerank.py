@@ -236,14 +236,10 @@ class TestWarmStart:
         edges = [
             (rng.randrange(200), rng.randrange(200)) for _ in range(800)
         ]
-        cold = pagerank(_edges_df(spark, edges), tune_aqe=False)
+        cold = pagerank(_edges_df(spark, edges))
         # Restarting from the converged vector: first L1 is already under
         # delta, so the loop stops immediately with the same ranks.
-        warm = pagerank(
-            _edges_df(spark, edges),
-            tune_aqe=False,
-            init_ranks=cold.ranks,
-        )
+        warm = pagerank(_edges_df(spark, edges), init_ranks=cold.ranks)
         assert warm.iterations < cold.iterations
         assert warm.iterations <= 2
         cd, wd = _ranks_dict(cold), _ranks_dict(warm)
@@ -258,15 +254,11 @@ class TestWarmStart:
         edges = [
             (rng.randrange(150), rng.randrange(150)) for _ in range(600)
         ]
-        prev = pagerank(_edges_df(spark, edges), tune_aqe=False)
+        prev = pagerank(_edges_df(spark, edges))
         # graph delta: a few new edges, including a brand-new vertex 999
         delta_edges = edges + [(999, 3), (3, 999), (1, 2), (7, 11)]
-        cold = pagerank(_edges_df(spark, delta_edges), tune_aqe=False)
-        warm = pagerank(
-            _edges_df(spark, delta_edges),
-            tune_aqe=False,
-            init_ranks=prev.ranks,
-        )
+        cold = pagerank(_edges_df(spark, delta_edges))
+        warm = pagerank(_edges_df(spark, delta_edges), init_ranks=prev.ranks)
         assert warm.iterations <= cold.iterations
         cd, wd = _ranks_dict(cold), _ranks_dict(warm)
         assert set(cd) == set(wd)
@@ -324,7 +316,7 @@ def test_state_join_plans_follow_the_cut(spark, monkeypatch, run):
         + [(i, (i * 3 + 1) % 40) for i in range(0, 40, 3)]
         + [(50, 51), (51, 52)],
     )
-    rounds = record_round_plans(monkeypatch, spark)
+    rounds = record_round_plans(monkeypatch)
     values = {}
     for strategy, limit in (
         ("broadcast", loop_module.BROADCAST_STATE_ROW_LIMIT),
